@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every registered query at the target scale factor
   * and prints one JSON line `{"metric":"total",...,"queries":{...}}`.
   *
-  * Timing action (round 9+): [[ProbeMaterialize.checksum]] — every output
+  * Timing action (round 9+): [[Harness.checksum]] — every output
   * row and column is forced through an xxhash64 fold, so the measured time
   * is the TRUE cost of computing the full result. Rounds ≤8 timed
   * `df.count()`, which lets Catalyst prune computed columns out of
@@ -42,54 +42,23 @@ object Bench {
     "q_join_shuffle", "q_multi_join", "q_scalar_date", "q_agg_distinct",
     "q_stream_daily_counts", "q_stream_user_counts")
 
+  /** Bench's overrides of the [[Harness.session]] policy — `graft.Probe`
+    * runs under the same ones, so a probe timing is a bench timing. */
+  private[graft] val sessionOverrides = Map(
+    // the timing action (Harness.checksum) is order-independent by
+    // construction, so the pair queries' presentation sort — a
+    // Verify/oracle determinism artifact — buys nothing here; clearing
+    // the flag keeps quadratic-output pair rows parallel instead of
+    // serializing the largest sf1 rows onto one core (r13 verdict #1)
+    "spark.graft.pairPresentationSort" -> "false")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional subset (comma-separated names) — scaling probes time the
     // expensive queries at large derived SFs without paying for all 100+
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // streaming checkpoints on tmpfs (JVM-unique dir, see Scratch):
-      // keeps the offset/commit/state fsync path off the shared disk, so
-      // streaming timings measure the engine, not disk-queue contention
-      .config("spark.sql.streaming.checkpointLocation",
-        Scratch.streamingCheckpointBase())
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      // unload terminated queries' state-store providers promptly (default
-      // 60 s) — a 100+-query run otherwise carries every prior streaming
-      // query's state maps on heap for most of the bench
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "10s")
-      // the timing action (ProbeMaterialize.checksum) is order-independent
-      // by construction, so the pair queries' presentation sort — a
-      // Verify/oracle determinism artifact — buys nothing here; clearing
-      // the flag keeps quadratic-output pair rows parallel instead of
-      // serializing the largest sf1 rows onto one core (r13 verdict #1)
-      .config("spark.graft.pairPresentationSort", "false")
-      // SPARK_GRAFT_INGEST_BUCKETED=1 flips the _ingest queries' persisted
-      // stores to the bucketed managed-table layout (the cluster
-      // deployment's plan) for A/B ledger rows; default stays the portable
-      // path-addressed parquet
-      .config("spark.graft.ingestBucketed",
-        Seq("1", "true").contains(sys.env
-          .getOrElse("SPARK_GRAFT_INGEST_BUCKETED", "false").toLowerCase)
-          .toString)
-      // localCheckpoint blocks (dup-collapse cluster frames etc.) release
-      // only when the owning RDD is GC'd on the driver and ContextCleaner
-      // notices; its periodic-GC default is 30 MINUTES — longer than the
-      // whole bench — so ~10 checkpointing queries × 2 runs accumulate
-      // pinned MEMORY_AND_DISK blocks until a mid-run memory cliff
-      // (observed: a 1 s query spiking to 36 s under block-eviction
-      // pressure). A 1-minute periodic GC keeps the block store drained.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus, sessionOverrides)
     // schema preflight BEFORE any timing: an unhandled corpus drift must
     // fail the bench loudly, not ship a round of corrupted numbers (r6)
     Tables.preflight(spark, sfDir)
@@ -111,7 +80,7 @@ object Bench {
         : (String, Double, Boolean) = {
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
-        val ok = try { ProbeMaterialize.checksum(fn(spark, sfDir)); true } catch {
+        val ok = try { Harness.checksum(fn(spark, sfDir)); true } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
         }

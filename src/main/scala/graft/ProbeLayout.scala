@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Layout probe (like [[ProbeStreamJoin]]/[[ScaleData]]): prove at probe
+/** Layout probe (like [[ProbeSkew]]/[[ScaleData]]): prove at probe
   * scale that the [[graft.sources.Layouts]] writers turn the daily/backfill
   * queries into pruned reads — the difference between scanning a table and
   * scanning a day at 100 TB.
@@ -45,15 +45,8 @@ object ProbeLayout {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val work = if (args.length > 1) args(1) else "target/layouts"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // leaf metrics readable
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus,
+      Map("spark.sql.adaptive.enabled" -> "false")) // leaf metrics readable
 
     val ev = Tables.load(spark, sfDir, "events")
     val flatDir = s"$work/events_flat"

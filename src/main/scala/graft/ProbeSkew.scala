@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -50,17 +50,7 @@ object ProbeSkew {
     require(aspects.subsetOf(knownAspects),
       s"unknown aspects ${aspects -- knownAspects} — known: " +
         knownAspects.toSeq.sorted.mkString(","))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     Tables.preflight(spark, dir)
 
     val docs = Tables.load(spark, dir, "documents")
@@ -84,8 +74,8 @@ object ProbeSkew {
     }
 
     def check(label: String, engine: DataFrame, closed: DataFrame): Unit = {
-      val e = timed(label)(ProbeMaterialize.checksum(engine))
-      val c = ProbeMaterialize.checksum(closed)
+      val e = timed(label)(Harness.checksum(engine))
+      val c = Harness.checksum(closed)
       require(e == c, s"$label checksum mismatch: engine $e != closed-form $c")
       println(s"[skew] $label OK: ${e._1} rows, checksum ${e._2}")
     }
@@ -178,8 +168,8 @@ object ProbeSkew {
         .select(operators.PipelineOps.domainOfUrl(col("url")).as("domain"))
         .groupBy(col("domain"))
         .agg(least(count(lit(1)), lit(k.toLong)).as("n"))
-      val e = ProbeMaterialize.checksum(kept)
-      val c = ProbeMaterialize.checksum(closed)
+      val e = Harness.checksum(kept)
+      val c = Harness.checksum(closed)
       require(e == c, s"caps keep-size mismatch: engine $e != closed-form $c")
       println(s"[skew] caps OK: ${e._1} domains, hot domain capped at $k")
     }

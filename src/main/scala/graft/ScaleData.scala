@@ -72,19 +72,14 @@ object ScaleData {
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
     val skewPct = if (args.length > 4) args(4).toInt else 0
     require(skewPct >= 0 && skewPct < 100, s"skewPct in [0,100): $skewPct")
-    val spark = SparkSession.builder()
-      // FIXED default width: derived-parquet part-file layout follows the
-      // generating session's parallelism, and layout sets scan split
-      // counts downstream — two corpora generated at different widths
-      // bench differently on scan-bound queries (measured, r11 sf1
-      // refresh). Override consciously, and record it next to the
-      // artifact if you do.
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // FIXED default width: derived-parquet part-file layout follows the
+    // generating session's parallelism, and layout sets scan split counts
+    // downstream — two corpora generated at different widths bench
+    // differently on scan-bound queries (measured, r11 sf1 refresh).
+    // Override SPARK_GRAFT_CPUS consciously, and record it next to the
+    // artifact if you do; shuffle width stays 32 either way.
+    val spark = Harness.session(Harness.cpusOr(32),
+      Map("spark.sql.shuffle.partitions" -> "32"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def replicate(name: String)(shift: (DataFrame, Int) => DataFrame): Unit = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -20,22 +19,8 @@ object Verify {
     // query names — dump/check just the matching subset while iterating
     val nameFilter: String => Boolean =
       if (args.length > 2) args(2).r.unanchored.matches(_) else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val workers = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // tmpfs checkpoint base, JVM-unique (see Scratch) — same rationale
-      // as Bench: streaming fsyncs measure the engine, not the disk queue
-      .config("spark.sql.streaming.checkpointLocation",
-        Scratch.streamingCheckpointBase())
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // schema preflight BEFORE any query runs: refuse to write a
     // correctness dump from a mis-read corpus (round-6 lesson)
     Tables.preflight(spark, sfDir)

@@ -190,7 +190,7 @@ object Dedup {
     // default true). `Verify` keeps the default — the oracle diff hashes a
     // written parquet file, so the deterministic global order stays load-
     // bearing there — but `Bench`'s timing action is
-    // [[graft.ProbeMaterialize.checksum]], which is order-independent BY
+    // [[graft.Harness.checksum]], which is order-independent BY
     // CONSTRUCTION (count + bit_xor + wrapping sum of row hashes), so
     // Bench clears the flag and the pair rows keep their natural
     // parallelism instead of serializing onto one core (the r13 sf1 stage
@@ -361,8 +361,6 @@ object Dedup {
         .select(col("src").as("id"), col("label"))
       val nextPlan = msgs.unionByName(labels.select(col("id"), col("label")))
         .groupBy(col("id")).agg(min(col("label")).as("label"))
-      if (iter == 0 && sys.env.contains("GRAFT_CC_EXPLAIN"))
-        nextPlan.explain("formatted")
       val (next, m2) = IterConverge.checkpointWithMetrics(nextPlan, lMetrics)
       // a null sum (decimal overflow, needs >1e19 label mass) must fail
       // loudly: two consecutive overflowed rounds would otherwise compare
@@ -376,8 +374,7 @@ object Dedup {
       iter += 1
     }
     edges.unpersist(false)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-labelprop] converged after $iter iterations")
+    graft.StructuredLog.info("cc_converged", "algo" -> "labelprop", "rounds" -> iter)
     labels
   }
 
@@ -438,8 +435,6 @@ object Dedup {
       val smallPlan = canon(nb2.join(mins2, "c").filter(col("n") < col("c"))
         .select(col("n").as("u"), col("m").as("v"))
         .unionByName(mins2.select(col("c").as("u"), col("m").as("v"))))
-      if (iter == 0 && sys.env.contains("GRAFT_CC_EXPLAIN"))
-        smallPlan.explain("formatted")
       val (small, m2) = IterConverge.checkpointWithMetrics(smallPlan, eMetrics)
       // exact fixpoint confirmation stays the two except().isEmpty probes:
       // r15 tried fusing them into one union+groupBy symmetric-difference
@@ -455,8 +450,7 @@ object Dedup {
       m = m2
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-lss] converged after $iter iterations")
+    graft.StructuredLog.info("cc_converged", "algo" -> "lss", "rounds" -> iter)
     // converged: every edge is (component-min u, member v); the minima
     // themselves re-enter as their own label
     edges.select(col("v").as("id"), col("u").as("label"))

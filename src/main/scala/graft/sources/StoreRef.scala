@@ -7,7 +7,8 @@ package graft.sources
   * the admission joins plan with no store-side exchange
   * ([[Layouts.writeBucketed]]). Consumers resolve a ref to frames and are
   * otherwise layout-agnostic; the harness flips layouts with
-  * `spark.graft.ingestBucketed` (see `graft.Bench`).
+  * `spark.graft.ingestBucketed` (A/B: `graft.Probe time <queries>
+  * spark.graft.ingestBucketed=true`).
   */
 sealed trait StoreRef
 object StoreRef {

@@ -272,10 +272,10 @@ object Streams {
     * `fs.setTimes` stamps (1 s apart, far above any filesystem mtime
     * granularity) pin down. If the slices ever arrived out of event-time
     * order, earlier-range rows would fall below the advanced watermark and
-    * be silently dropped — which is why [[graft.ProbeStreamJoin]] asserts
-    * joined-rows equality against the batch join at probe scale, and
-    * `WatermarkSpec` does the same at test SF: a Spark file-ordering
-    * change surfaces as a loud count mismatch, not silent loss.
+    * be silently dropped — which is why `WatermarkSpec` asserts equality
+    * with the batch join for the inner and left-outer forms, through
+    * both the memory and the parquet sink: a Spark file-ordering change
+    * surfaces as a loud mismatch, not silent loss.
     *
     * The cache key includes the source file's (mtime, length), so a corpus
     * regenerated in place within one JVM gets fresh slices, not stale

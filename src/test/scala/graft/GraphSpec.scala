@@ -183,10 +183,21 @@ class GraphSpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
     def toMapOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lp = toMapOf(Dedup.connectedComponents(pairs)
-      .select(col("id"), col("label")))
-    val lss = toMapOf(Dedup.connectedComponentsLss(pairs)
-      .select(col("id"), col("label")))
+    // each call reports its convergence once, as a structured event
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = (_: String, l: String) => synchronized {
+      if (l.startsWith("event=cc_converged")) events += l: Unit
+    }
+    StructuredLog.addListener(listener)
+    val (lp, lss) = try {
+      (toMapOf(Dedup.connectedComponents(pairs).select(col("id"), col("label"))),
+        toMapOf(Dedup.connectedComponentsLss(pairs).select(col("id"), col("label"))))
+    } finally StructuredLog.removeListener(listener)
+    assert(events.map(_.split(" ")(1)) == Seq("algo=labelprop", "algo=lss"),
+      events.toString)
+    // the 21-node chain needs many label-propagation rounds
+    assert(events.forall(_.split(" ")(2).stripPrefix("rounds=").toInt > 1),
+      events.toString)
     assert(lss == lp, s"lss=$lss\nlp=$lp")
     assert(lss(119L) == 100L && lss(6L) == 1L && lss(53L) == 50L &&
       lss(201L) == 200L)

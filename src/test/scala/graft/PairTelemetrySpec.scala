@@ -38,11 +38,11 @@ class PairTelemetrySpec extends SparkSpec {
   test("pairPresentationSort=false preserves the multiset and drops the 1-partition sort") {
     val name = "q_cosine_pairs"
     val sorted = Queries.all(name)(spark, sfDir)
-    val sortedSum = ProbeMaterialize.checksum(sorted)
+    val sortedSum = Harness.checksum(sorted)
     spark.conf.set("spark.graft.pairPresentationSort", "false")
     try {
       val bare = Queries.all(name)(spark, sfDir)
-      assert(ProbeMaterialize.checksum(bare) == sortedSum,
+      assert(Harness.checksum(bare) == sortedSum,
         s"$name: checksum diverges between sort modes")
       // differential: the query body may carry scalar-aggregate single-
       // partition exchanges of its own — the bypass must remove exactly

@@ -7,17 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * dominates test wall-time otherwise). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", // static conf — must be set here
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      .getOrCreate()
+    val s = Harness.session(4, Map(
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" -> // static conf — must be set here
+        java.nio.file.Files.createTempDirectory("graft_wh").toString))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -52,6 +52,22 @@ class StreamSinkSpec extends SparkSpec {
     assert(viaFile == viaMemory,
       s"sink forms diverge: ${(viaFile diff viaMemory).size} extra, " +
         s"${(viaMemory diff viaFile).size} missing")
+    // the bucket cap is not engaged at this scale, so the streamed bucket
+    // state must find exactly the batch pipeline's verified pairs
+    val batch = operators.Dedup.minhashNearDupPairs(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(viaFile.size == batch.size && viaFile.map(p => (p._1, p._2)) == batch,
+      s"streamed ${viaFile.size} pairs vs batch ${batch.size}")
+  }
+
+  test("doc-clean stream: parquet-sink production form equals memory-sink form") {
+    val out = Files.createTempDirectory("graft_sclean_out").toString
+    val ckpt = Files.createTempDirectory("graft_sclean_ckpt").toString
+    val viaFile = Harness.checksum(streaming.Streams
+      .docCleanStreamToParquet(spark, sfDir, s"$out/clean", s"$ckpt/q"))
+    val viaMemory = Harness.checksum(streaming.Streams.docCleanStream(spark, sfDir))
+    assert(viaMemory._1 > 0, "no document passed the length filter — vacuous")
+    assert(viaFile == viaMemory, s"file sink $viaFile != memory sink $viaMemory")
   }
 
   test("compacted-state view: latest wins, replay and full-reprocess converge") {

@@ -157,14 +157,18 @@ class WatermarkSpec extends SparkSpec {
   }
 
   test("stream-stream join: file-sink (production) form equals the memory-sink form") {
-    val out = Files.createTempDirectory("graft_ssj_out").toString
-    val ckpt = Files.createTempDirectory("graft_ssj_ckpt").toString
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val viaFile = rows(streaming.Streams.purchaseAttributionToParquet(
-      spark, sfDir, s"$out/pairs", s"$ckpt/q"))
-    val viaMemory = rows(streaming.Streams.purchaseAttribution(spark, sfDir))
-    assert(viaFile.nonEmpty && viaFile == viaMemory)
+    Seq(false -> streaming.Streams.purchaseAttribution _,
+      true -> streaming.Streams.purchaseAttributionOuter _).foreach {
+      case (leftOuter, memoryForm) =>
+        val out = Files.createTempDirectory("graft_ssj_out").toString
+        val ckpt = Files.createTempDirectory("graft_ssj_ckpt").toString
+        val viaFile = rows(streaming.Streams.purchaseAttributionToParquet(
+          spark, sfDir, s"$out/pairs", s"$ckpt/q", leftOuter = leftOuter))
+        val viaMemory = rows(memoryForm(spark, sfDir))
+        assert(viaFile.nonEmpty && viaFile == viaMemory, s"leftOuter=$leftOuter")
+    }
   }
 
   test("windowed dedup: within-window dups collapse, beyond-window dups re-admit") {
