@@ -62,8 +62,9 @@ object Bench {
     // schema preflight BEFORE any timing: an unhandled corpus drift must
     // fail the bench loudly, not ship a round of corrupted numbers (r6)
     Tables.preflight(spark, sfDir)
-    // warm-up: session/codegen/parquet-footer costs land here, not on q1
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
+    // warm-up: session and codegen costs land here, not on q1 (the
+    // footers were read, once per table, by the preflight)
+    Tables.load(spark, sfDir, "nation").count()
     // benign by shape: the registry's only unpartitioned windows are
     // post-aggregation bounded frames (≤|zones| rank rows, ≤poolK RRF
     // rows — PlanAuditSpec's hot-partition sweep), so any WindowExec

@@ -25,7 +25,9 @@ import graft.sources.{JdbcConfig, JdbcSink}
   *
   * Driver-side guards mirror the reference (D1/D3/D4,
   * `calculate_daily_transactions.py:91-103`): empty input raises; an empty
-  * day still writes a 0-count row with a warning.
+  * day still writes a 0-count row with a warning. `daily_transactions`
+  * counts its day once and writes that row from the driver, so the input
+  * emptiness check runs only when the count is 0.
   *
   * Resilience mirrors the reference's Airflow layer
   * (`daily_transactions_dag.py:30-31,58-65`): [[pollForInput]] is the
@@ -145,14 +147,17 @@ object JobRunner {
     val events = Tables.load(spark, dataDir, "events")
     StructuredLog.info("stage_read", "job" -> job, "source" -> dataDir,
       "process_date" -> processDate)
-    if (events.isEmpty) // D1 (df.isEmpty, not the reference's rdd.isEmpty)
-      throw new IllegalStateException(s"no input rows under $dataDir")
+    def requireInput(): Unit =
+      if (events.isEmpty) // D1 (df.isEmpty, not the reference's rdd.isEmpty)
+        throw new IllegalStateException(s"no input rows under $dataDir")
 
     val result: DataFrame = job match {
       case "daily_transactions" =>
-        val r = DailyTransactions.dayCount(events, "ts", processDate)
-          .withColumn("calculated_at", current_timestamp())
-        val n = r.head().getLong(1) // D2/D3
+        // the day's one row, computed once and written from the driver
+        // (the reference counts once and writes a driver-built row)
+        val row = DailyTransactions.dayCount(events, "ts", processDate).head()
+        val n = row.getLong(1) // D2/D3
+        if (n == 0) requireInput() // an empty input also counts 0
         if (n < 0) throw new IllegalStateException(s"negative count $n")
         if (n == 0) { // D5: structured slf4j, not stderr
           log.warn(s"no rows for $processDate, writing 0")
@@ -160,8 +165,10 @@ object JobRunner {
             "process_date" -> processDate, "count" -> 0)
         }
         StructuredLog.info("stage_validate", "job" -> job, "count" -> n)
-        r
+        spark.createDataFrame(java.util.List.of(row), row.schema)
+          .withColumn("calculated_at", current_timestamp())
       case "top_zones" =>
+        requireInput()
         TopZones.topZones(events, "ts", "user_id", processDate, 5)
           .withColumn("calculated_at", current_timestamp())
       case other => throw new IllegalArgumentException(s"unknown job $other")

@@ -63,7 +63,7 @@ object Probe {
     val spark = Harness.session(Harness.cpus, Bench.sessionOverrides ++ cmd.overrides)
     try {
       Tables.preflight(spark, cmd.sfDir)
-      spark.read.parquet(s"${cmd.sfDir}/nation.parquet").count()
+      Tables.load(spark, cmd.sfDir, "nation").count()
       cmd.mode match {
         case "time" => time(spark, cmd)
         case "stages" => cmd.queries.foreach(stages(spark, _, cmd.sfDir))

@@ -2,15 +2,28 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Uniform loader for the driver corpus (TESTDATA.md):
   * `region nation customer supplier part orders lineitem events documents
   * embeddings`, one parquet file (or directory) per table under the
   * scale-factor dir.
   *
-  * Scale note: these are plain `spark.read.parquet` scans — Catalyst column
-  * pruning + predicate pushdown apply; at cluster scale the same call reads a
+  * Scale note: these are plain parquet scans — Catalyst column pruning +
+  * predicate pushdown apply; at cluster scale the same call reads a
   * partitioned directory tree and gets partition pruning for free.
+  *
+  * Footer cache: a parquet read without a schema launches a one-task Spark
+  * job to infer it from the footer. Every corpus read goes through
+  * [[readRaw]], which infers each table once per session and reads with
+  * `spark.read.schema(cached)` after that — no inference job. The cache
+  * stores exactly what `spark.read.parquet(path).schema` returned, keyed
+  * by the qualified path, the `FileStatus` length and modification time,
+  * and the values of the session confs parquet inference reads, so a
+  * replaced file (a regenerated corpus) is inferred again. A status with
+  * modification time 0 (object-store directories) is never cached, and a
+  * missing path falls through to the plain read and its usual error. The
+  * cache is held weakly per `SparkSession`: a new session starts empty.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -32,7 +45,65 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     ensureOptimizerRule(spark)
-    loadRaw(spark, sfDir, name)
+    normalize(name, readRaw(spark, sfDir, name))
+  }
+
+  /** The table's footer schema before normalization, from the session's
+    * cache (see [[readRaw]]). */
+  private[graft] def rawSchema(spark: SparkSession, sfDir: String, name: String): StructType =
+    readRaw(spark, sfDir, name).schema
+
+  /** Inferred footer schemas per session; the inner key is [[footerKey]]. */
+  private val footers =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[String, StructType]]()
+
+  /** Session confs that Spark's parquet schema inference reads: a cached
+    * schema serves only reads made under the same values. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema", "spark.sql.caseSensitive")
+
+  /** Qualified path, length, modification time and [[inferenceConfs]];
+    * `None` (do not cache) for a missing path or a modification time of 0. */
+  private def footerKey(spark: SparkSession, p: String): Option[String] = {
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = try Some(fs.getFileStatus(hp))
+      catch { case _: java.io.FileNotFoundException => None }
+    st.filter(_.getModificationTime != 0).map { s =>
+      (Seq(s.getPath.toString, s.getLen, s.getModificationTime) ++
+        inferenceConfs.map(spark.conf.getOption(_).orNull)).mkString("|")
+    }
+  }
+
+  /** The one corpus read: the raw table with the session's cached footer
+    * schema, inferring (one Spark job) only on a cache miss. */
+  private def readRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    if (name == "events")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val p = path(sfDir, name)
+    footerKey(spark, p) match {
+      case None => spark.read.parquet(p)
+      case Some(key) =>
+        val cache = footers.synchronized(footers.computeIfAbsent(spark,
+          _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]()))
+        Option(cache.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(p)
+          case None =>
+            val df = spark.read.parquet(p)
+            cache.put(key, df.schema)
+            df
+        }
+    }
+  }
+
+  /** Post-load form of a raw table: the normalization both [[load]] and
+    * [[preflightTable]] apply. */
+  private def normalize(name: String, raw: DataFrame): DataFrame = name match {
+    case "events" => normalizeTs(raw, "ts")
+    case "embeddings" => normalizeEmbedding(raw, "embedding")
+    case _ => raw
   }
 
   /** `events.ts` has shipped in three physical representations across
@@ -147,9 +218,12 @@ object Tables {
     * record exactly which corpus generation they ran against. */
   def preflightTable(spark: SparkSession, sfDir: String, name: String): Option[String] = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path(sfDir, name)).schema
+    ensureOptimizerRule(spark)
+    // one read: the footer schema and the post-load schema of the same frame
+    val rawDf = readRaw(spark, sfDir, name)
+    val raw = rawDf.schema
     val rawStr = raw.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
-    val got = load(spark, sfDir, name).schema.fields.toSeq
+    val got = normalize(name, rawDf).schema.fields.toSeq
       .map(f => f.name -> typeClass(f.dataType))
     val gotStr = got.map { case (n, c) => s"$n:$c" }.mkString(",")
     val fp = java.security.MessageDigest.getInstance("MD5")
@@ -198,14 +272,5 @@ object Tables {
       StructuredLog.error("corpus_schema_drift", "tables" -> problems.size)
       throw new IllegalStateException(msg)
     }
-  }
-
-  private def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
-    case "events" =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(spark.read.parquet(path(sfDir, name)), "ts")
-    case "embeddings" =>
-      normalizeEmbedding(spark.read.parquet(path(sfDir, name)), "embedding")
-    case _ => spark.read.parquet(path(sfDir, name))
   }
 }

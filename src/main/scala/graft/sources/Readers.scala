@@ -88,8 +88,9 @@ object Readers {
                   canonical: StructType): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     paths.map { p =>
-      val present = spark.read.parquet(p).schema.fieldNames.toSet
-      spark.read.parquet(p).select(canonical.fields.toSeq.map { f =>
+      val df = spark.read.parquet(p)
+      val present = df.schema.fieldNames.toSet
+      df.select(canonical.fields.toSeq.map { f =>
         if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }: _*)

@@ -61,11 +61,11 @@ object Streams {
   }
 
   /** File-source stream over events with `ts` normalized to TimestampType
-    * regardless of the corpus's physical representation (footer-driven, see
-    * [[eventSchema]]). */
+    * regardless of the corpus's physical representation (driven by the
+    * session's cached footer, `graft.Tables.rawSchema`; see [[eventSchema]]). */
   private[streaming] def eventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType = graft.Tables.rawSchema(spark, dir, "events")("ts").dataType
     // file source requires a directory; select just the events file via glob
     graft.Tables.normalizeTs(
       spark.readStream
@@ -1450,7 +1450,7 @@ object Streams {
     * join degrades to per-batch shuffles — at which point pre-bucketing
     * the dim on the join key is the fix. */
   def enrichedSegmentCounts(spark: SparkSession, dir: String): DataFrame = {
-    val dim = spark.read.parquet(graft.Tables.path(dir, "customer"))
+    val dim = graft.Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
     val agg = eventStream(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))

@@ -74,6 +74,42 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
+  test("JobRunner D1: empty input raises and leaves the sink as it was") {
+    import spark.implicits._
+    val empty = java.nio.file.Files.createTempDirectory("graft_noinput").toString
+    Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(Tables.path(empty, "events"))
+    val out = java.nio.file.Files.createTempDirectory("graft_d1").toString
+    JobRunner.run(spark, "daily_transactions", LocalDate.parse("2024-01-16"),
+      sfDir, out, "daily_transaction")
+    val before = spark.read.parquet(s"$out/daily_transaction").collect().toSeq
+    for (job <- Seq("daily_transactions", "top_zones"))
+      intercept[IllegalStateException] {
+        JobRunner.run(spark, job, LocalDate.parse("2024-01-16"),
+          empty, out, "daily_transaction")
+      }
+    assert(spark.read.parquet(s"$out/daily_transaction").collect().toSeq == before)
+  }
+
+  test("JobRunner D3: an empty day writes one 0-count row and warns once") {
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = (_: String, l: String) => synchronized {
+      if (l.startsWith("event=empty_day")) events += l: Unit
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft_d3").toString
+    StructuredLog.addListener(listener)
+    try JobRunner.run(spark, "daily_transactions", LocalDate.parse("2030-01-02"),
+      sfDir, out, "daily_transaction")
+    finally StructuredLog.removeListener(listener)
+    val rows = spark.read.parquet(s"$out/daily_transaction").collect()
+    assert(rows.length == 1)
+    assert(rows.head.getAs[java.sql.Date]("transaction_date") ==
+      java.sql.Date.valueOf("2030-01-01"))
+    assert(rows.head.getAs[Long]("total_transactions") == 0L)
+    assert(events.size == 1, events.mkString("\n"))
+  }
+
   test("JobRunner end-to-end: both pipelines into parquet and jdbc sinks") {
     val out = java.nio.file.Files.createTempDirectory("graft_runner").toString
     JobRunner.run(spark, "daily_transactions", LocalDate.parse("2024-01-16"),
@@ -82,6 +118,16 @@ class JdbcSinkSpec extends SparkSpec {
     assert(daily.count() == 1)
     assert(daily.columns.toSeq ==
       Seq("transaction_date", "total_transactions", "calculated_at"))
+
+    // daily into jdbc appends one row per run (the reference's mode)
+    for (runs <- 1 to 2) {
+      JobRunner.run(spark, "daily_transactions", LocalDate.parse("2024-01-16"),
+        sfDir, conf.url, "daily_transaction_runs")
+      val sunk = spark.read.jdbc(conf.url, "daily_transaction_runs", conf.connProps)
+      assert(sunk.count() == runs)
+      assert(sunk.select("total_transactions").distinct().collect().toSeq ==
+        daily.select("total_transactions").collect().toSeq)
+    }
 
     JobRunner.run(spark, "top_zones", LocalDate.parse("2024-01-21"),
       sfDir, conf.url, "daily_topfive_taxi_zone")

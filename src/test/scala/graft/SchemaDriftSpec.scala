@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 import graft.sources.Readers
@@ -16,6 +19,37 @@ class SchemaDriftSpec extends SparkSpec {
     StructField("PULocationID", LongType),
     StructField("trip_miles", DoubleType),
     StructField("airport_fee", DoubleType)))
+
+  /** Spark jobs `body` launches, counted by a SparkListener on its job
+    * group. The listener bus is asynchronous; a marker job run after `body`
+    * is delivered after all of body's events, so waiting for it drains
+    * them. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group-marker" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 
   test("readDrifted reconciles int→long, float→double, and missing columns") {
     val dir = Files.createTempDirectory("graft_drift").toString
@@ -101,6 +135,19 @@ class SchemaDriftSpec extends SparkSpec {
     assert(lines.size == Tables.names.size, lines.mkString("\n"))
     assert(lines.forall(l => l.contains("footer=") && l.contains("fingerprint=")),
       lines.mkString("\n"))
+    // footer once per session: on a fresh corpus, preflight infers each
+    // table's schema with one job and every later load launches none
+    val dir = Files.createTempDirectory("graft_footer").toString
+    val tables = Seq("nation", "events", "embeddings")
+    tables.foreach(t =>
+      Files.copy(Paths.get(Tables.path(sfDir, t)), Paths.get(Tables.path(dir, t))))
+    tables.foreach(t =>
+      assert(jobsOf(Tables.preflightTable(spark, dir, t)) == 1, t))
+    tables.foreach { t =>
+      assert(jobsOf(Tables.load(spark, dir, t).schema) == 0, t)
+      assert(Tables.load(spark, dir, t).schema ==
+        Tables.load(spark, sfDir, t).schema, t)
+    }
   }
 
   test("preflight fails loudly on unhandled drift, passes handled drift") {
@@ -112,11 +159,15 @@ class SchemaDriftSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val diff = Tables.preflightTable(spark, dir, "events")
     assert(diff.isDefined && diff.get.contains("events"), diff.toString)
+    assert(jobsOf(Tables.load(spark, dir, "events").schema) == 0)
     // HANDLED: ts as epoch-nano long (normalizeTs absorbs it) must pass
     Seq((1L, 1704067200000000000L, 7L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    assert(Tables.preflightTable(spark, dir, "events").isEmpty)
+    // the replaced file is inferred again (one job), not served stale
+    assert(jobsOf(assert(Tables.preflightTable(spark, dir, "events").isEmpty)) == 1)
+    assert(Tables.load(spark, dir, "events").schema("props").dataType == StringType)
+    assert(Tables.rawSchema(spark, dir, "events")("ts").dataType == LongType)
     // UNHANDLED: embeddings as array<string> — normalizeEmbedding's cast
     // would silently null every element; the raw-footer gate must catch it
     Seq((1L, Array("a", "b"), 0))
