@@ -303,16 +303,17 @@ object Dedup {
     * aggregate) and converges in O(component diameter) rounds — near-dup
     * clusters are shallow (chains of a few edits), so 3-4 rounds in
     * practice; pathological long-chain graphs would want the
-    * large-star/small-star variant instead. `localCheckpoint` cuts the
-    * lineage each round so the plan does not grow with iterations (at
-    * cluster scale use a persisted checkpoint dir for fault tolerance).
+    * large-star/small-star variant instead (a label that must travel 30
+    * or more hops hits `Fixpoint.MaxRounds` and throws). `localCheckpoint`
+    * cuts the lineage each round so the plan does not grow with
+    * iterations (at cluster scale use a persisted checkpoint dir for fault
+    * tolerance).
     *
     * This is the step that turns PAIRS into a dedup decision: jaccard is
     * not transitive, so keep-smallest-of-each-pair can drop both docs of a
     * chain a-b-c; one keeper PER COMPONENT is the sound policy. */
-  private[graft] def connectedComponents(pairs: DataFrame,
-                                         maxIters: Int = 20): DataFrame = {
-    // convergence rides the per-round checkpoint job (r14, IterConverge):
+  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
+    // convergence rides the per-round checkpoint job (r14, Fixpoint):
     // labels are min-propagated over a FIXED id set — each id's label is
     // non-increasing, so the label multiset is unchanged iff sum(label)
     // is unchanged. That makes (count, decimal sum) an EXACT convergence
@@ -340,42 +341,20 @@ object Dedup {
     // (a defaultParallelism width would mismatch on clusters where
     // spark.sql.shuffle.partitions is tuned higher — the r14 ADVICE).
     import org.apache.spark.sql.types.DecimalType
-    val lMetrics = Seq(count(lit(1)).as("n"),
-      sum(col("label").cast(DecimalType(38, 0))).as("s"))
     val np = pairs.sparkSession.sessionState.conf.numShufflePartitions
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .repartition(np, col("dst"))
       .persist()
-    var (labels, m) = IterConverge.checkpointWithMetrics(
-      edges.select(col("dst").as("id")).distinct()
-        .withColumn("label", col("id")), lMetrics)
-    require(m("n").asInstanceOf[Long] == 0L || m("s") != null,
-      "connectedComponents: decimal label-sum overflowed — the convergence " +
-        "certificate would compare nulls; widen the metric before trusting it")
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
+    try Fixpoint.run("connectedComponents",
+        edges.select(col("dst").as("id")).distinct().withColumn("label", col("id")),
+        cert = Seq(sum(col("label").cast(DecimalType(38, 0))).as("s"))) { labels =>
       val msgs = edges
         .join(labels.withColumnRenamed("id", "dst"), "dst")
         .select(col("src").as("id"), col("label"))
-      val nextPlan = msgs.unionByName(labels.select(col("id"), col("label")))
+      msgs.unionByName(labels.select(col("id"), col("label")))
         .groupBy(col("id")).agg(min(col("label")).as("label"))
-      val (next, m2) = IterConverge.checkpointWithMetrics(nextPlan, lMetrics)
-      // a null sum (decimal overflow, needs >1e19 label mass) must fail
-      // loudly: two consecutive overflowed rounds would otherwise compare
-      // null == null and declare convergence spuriously (r14 ADVICE)
-      require(m2("n").asInstanceOf[Long] == 0L || m2("s") != null,
-        "connectedComponents: decimal label-sum overflowed — the " +
-          "convergence certificate would compare nulls")
-      done = m2 == m
-      labels = next
-      m = m2
-      iter += 1
-    }
-    edges.unpersist(false)
-    graft.StructuredLog.info("cc_converged", "algo" -> "labelprop", "rounds" -> iter)
-    labels
+    } finally edges.unpersist(false)
   }
 
   /** Connected components via alternating large-star / small-star
@@ -391,12 +370,11 @@ object Dedup {
     *     onto that minimum (flattens toward a star).
     * At fixpoint the edge set IS the component assignment — one
     * (component-min, member) star per component. Each phase is one
-    * groupBy-min + one join, both hash-shuffled on node id; the
-    * convergence probe here is an exact set equality (two anti-join
-    * emptiness checks) — at cluster scale you'd cheapen it to a
-    * count+checksum comparison. */
-  private[graft] def connectedComponentsLss(pairs: DataFrame,
-                                            maxIters: Int = 30): DataFrame = {
+    * groupBy-min + one join, both hash-shuffled on node id. Convergence is
+    * exact set equality, gated by a (count, hash-sum, hash-xor) triple
+    * observed during each round's checkpoint: only a round whose triple
+    * matches the previous one pays the two anti-join emptiness checks. */
+  private[graft] def connectedComponentsLss(pairs: DataFrame): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
@@ -404,26 +382,27 @@ object Dedup {
     def bothWays(e: DataFrame): DataFrame =
       e.select(col("u").as("c"), col("v").as("n"))
         .unionByName(e.select(col("v").as("c"), col("u").as("n")))
-    // convergence rides the per-round checkpoint job (r14, IterConverge):
+    // convergence rides the per-round checkpoint job (r14, Fixpoint):
     // the canonical edge set's (count, hash-sum, hash-xor) triple is
     // computed for free during each round's checkpoint materialization.
-    // Differing triples PROVE the sets differ (sound: equal sets give
-    // equal metrics), so the common not-yet-converged round pays ZERO
-    // convergence actions — where it previously paid two
-    // `except(...).isEmpty` jobs (each two shuffles + a driver
-    // round-trip). Matching triples trigger the same exact
-    // symmetric-difference confirmation as before, which now runs ONCE
-    // per call (at the fixpoint) instead of twice per round — convergence
-    // is still decided by exact set equality, never by the hash.
+    // Differing triples PROVE the sets differ, so the common
+    // not-yet-converged round pays ZERO convergence actions. Matching
+    // triples trigger the exact confirmation, which stays the two
+    // except().isEmpty probes: r15 tried fusing them into one
+    // union+groupBy symmetric-difference job and the interleaved A/B came
+    // back WORSE (clusters_lss 3.8 → 4.4 s, joint 6.4 → 7.3 s min-of-4) —
+    // except() over these tiny checkpointed frames plans as BROADCAST
+    // anti-joins with no exchange at all, while the fused form forces a
+    // real shuffle. Convergence is still decided by exact set equality,
+    // never by the hash.
     import org.apache.spark.sql.types.DecimalType
-    val eMetrics = Seq(count(lit(1)).as("n"),
-      sum(xxhash64(col("u"), col("v")).cast(DecimalType(38, 0))).as("s"),
-      expr("bit_xor(xxhash64(u, v))").as("x"))
-    var (edges, m) = IterConverge.checkpointWithMetrics(
-      canon(pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))), eMetrics)
-    var iter = 0
-    var done = m("n") == 0L
-    while (!done && iter < maxIters) {
+    val edges = Fixpoint.run("connectedComponentsLss",
+        canon(pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))),
+        cert = Seq(
+          sum(xxhash64(col("u"), col("v")).cast(DecimalType(38, 0))).as("s"),
+          expr("bit_xor(xxhash64(u, v))").as("x")),
+        confirm = (prev, next) =>
+          next.except(prev).isEmpty && prev.except(next).isEmpty) { edges =>
       val nb = bothWays(edges)
       val mins = nb.groupBy(col("c")).agg(min(col("n")).as("mn"))
         .select(col("c"), least(col("c"), col("mn")).as("m"))
@@ -432,25 +411,10 @@ object Dedup {
       val nb2 = bothWays(large)
       val mins2 = nb2.groupBy(col("c")).agg(min(col("n")).as("mn"))
         .select(col("c"), least(col("c"), col("mn")).as("m"))
-      val smallPlan = canon(nb2.join(mins2, "c").filter(col("n") < col("c"))
+      canon(nb2.join(mins2, "c").filter(col("n") < col("c"))
         .select(col("n").as("u"), col("m").as("v"))
         .unionByName(mins2.select(col("c").as("u"), col("m").as("v"))))
-      val (small, m2) = IterConverge.checkpointWithMetrics(smallPlan, eMetrics)
-      // exact fixpoint confirmation stays the two except().isEmpty probes:
-      // r15 tried fusing them into one union+groupBy symmetric-difference
-      // job and the interleaved A/B came back WORSE (clusters_lss
-      // 3.8 → 4.4 s, joint 6.4 → 7.3 s min-of-4) — except() over these
-      // tiny checkpointed frames plans as BROADCAST anti-joins with no
-      // exchange at all, while the fused form forces a real shuffle. The
-      // triple gate already makes non-converged rounds free; this runs
-      // once per call, at the fixpoint.
-      done = m2 == m &&
-        small.except(edges).isEmpty && edges.except(small).isEmpty
-      edges = small
-      m = m2
-      iter += 1
     }
-    graft.StructuredLog.info("cc_converged", "algo" -> "lss", "rounds" -> iter)
     // converged: every edge is (component-min u, member v); the minima
     // themselves re-enter as their own label
     edges.select(col("v").as("id"), col("u").as("label"))

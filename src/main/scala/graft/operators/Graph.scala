@@ -257,30 +257,19 @@ object Graph {
     * peel cascade (≤ graph diameter), not O(n); the fixpoint check is
     * an edge count — removals-only makes count equality a correct
     * convergence test. */
-  def kCore(pairs: DataFrame, k: Int, maxIters: Int = 30): DataFrame = {
-    // the per-round edge count rides the checkpoint job (r14,
-    // IterConverge) instead of a separate count() action — removals-only
-    // peeling makes count equality an exact fixpoint test either way
-    val nMetric = Seq(count(lit(1)).as("n"))
-    var (edges, m) = IterConverge.checkpointWithMetrics(canonPairs(pairs), nMetric)
-    var n = m("n").asInstanceOf[Long]
-    var it = 0
-    var done = n == 0L
-    while (!done && it < maxIters) {
+  def kCore(pairs: DataFrame, k: Int): DataFrame = {
+    // the per-round edge count rides the checkpoint job (r14, Fixpoint)
+    // instead of a separate count() action — removals-only peeling makes
+    // count equality an exact fixpoint test
+    val edges = Fixpoint.run("kCore", canonPairs(pairs)) { edges =>
       val deg = edges.select(col("a").as("id"))
         .unionByName(edges.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select(col("id"))
-      val (pruned, m2) = IterConverge.checkpointWithMetrics(edges
+      edges
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi"), nMetric)
-      val n2 = m2("n").asInstanceOf[Long]
-      done = n2 == n || n2 == 0L
-      edges = pruned; n = n2; it += 1
+        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
     }
-    if (!done) throw new IllegalStateException(
-      s"kCore: no fixpoint after $maxIters peel rounds ($n edges remain); " +
-        "raise maxIters — returning a partial peel would be silently wrong")
     edges.select(col("a").as("doc_id")).unionByName(edges.select(col("b").as("doc_id")))
       .groupBy("doc_id").agg(count(lit(1)).as("core_deg"))
   }
@@ -303,7 +292,7 @@ object Graph {
     * the same closed form over the surviving neighborhood. Each round
     * shuffles |E_rep| quotient edges — independent of duplication
     * factor — vs Θ(Σ m_i²) raw. */
-  def docKCore(docsDf: DataFrame, k: Int, maxIters: Int = 30): DataFrame = {
+  def docKCore(docsDf: DataFrame, k: Int): DataFrame = {
     val base = docsDf.select(col("doc_id"), col("text"))
       .filter(size(split(col("text"), " ")) >= 3)
     val groups = base.groupBy(col("text"))
@@ -314,35 +303,25 @@ object Graph {
     var edges = canonPairs(
       Dedup.minhashRepPairs(reps).select(col("doc_a"), col("doc_b")))
       .localCheckpoint()
-    var nodes = groups.select(col("gid"), col("m"))
-    var n = nodes.count()
-    var it = 0
-    var done = n == 0L
     // the surviving-group count rides keep's checkpoint job (r14,
-    // IterConverge) instead of a separate count() action per peel round
-    val nMetric = Seq(count(lit(1)).as("n"))
-    while (!done && it < maxIters) {
+    // Fixpoint) instead of a separate count() action per peel round;
+    // removals-only peeling makes count equality an exact fixpoint test
+    val nodes = Fixpoint.run("docKCore", groups.select(col("gid"), col("m"))) { nodes =>
+      // edges between surviving groups only (round 1: every group). After
+      // the last round the edges still span the previous round's groups,
+      // which at the fixpoint are the same groups (or none survive)
+      edges = edges
+        .join(nodes.select(col("gid").as("a")), Seq("a"), "left_semi")
+        .join(nodes.select(col("gid").as("b")), Seq("b"), "left_semi")
+        .localCheckpoint()
       val nbW = edges.select(col("a").as("gid"), col("b").as("j"))
         .unionByName(edges.select(col("b").as("gid"), col("a").as("j")))
         .join(nodes.select(col("gid").as("j"), col("m").as("mj")), "j")
         .groupBy(col("gid")).agg(sum(col("mj")).as("nbsum"))
-      val (keep, m2) = IterConverge.checkpointWithMetrics(
-        nodes.join(nbW, Seq("gid"), "left")
-          .filter(col("m") - 1 + coalesce(col("nbsum"), lit(0L)) >= k)
-          .select(col("gid"), col("m")), nMetric)
-      val pruned = edges
-        .join(keep.select(col("gid").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("gid").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      val n2 = m2("n").asInstanceOf[Long]
-      done = n2 == n || n2 == 0L
-      nodes = keep; edges = pruned; n = n2; it += 1
+      nodes.join(nbW, Seq("gid"), "left")
+        .filter(col("m") - 1 + coalesce(col("nbsum"), lit(0L)) >= k)
+        .select(col("gid"), col("m"))
     }
-    if (!done) throw new IllegalStateException(
-      s"docKCore: no fixpoint after $maxIters peel rounds ($n groups remain); " +
-        "raise maxIters — returning a partial peel would be silently wrong")
-    graft.StructuredLog.info("kcore_converged",
-      "rounds" -> it, "surviving_groups" -> n)
     val nbFinal = edges.select(col("a").as("gid"), col("b").as("j"))
       .unionByName(edges.select(col("b").as("gid"), col("a").as("j")))
       .join(nodes.select(col("gid").as("j"), col("m").as("mj")), "j")

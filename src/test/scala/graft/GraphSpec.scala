@@ -183,21 +183,27 @@ class GraphSpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
     def toMapOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // each call reports its convergence once, as a structured event
-    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    // each call reports every round, then its convergence once, as
+    // structured events
+    val events = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
     val listener = (_: String, l: String) => synchronized {
-      if (l.startsWith("event=cc_converged")) events += l: Unit
+      if (l.startsWith("event=fixpoint_")) events += l.split(" ")
+        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap: Unit
     }
     StructuredLog.addListener(listener)
     val (lp, lss) = try {
       (toMapOf(Dedup.connectedComponents(pairs).select(col("id"), col("label"))),
         toMapOf(Dedup.connectedComponentsLss(pairs).select(col("id"), col("label"))))
     } finally StructuredLog.removeListener(listener)
-    assert(events.map(_.split(" ")(1)) == Seq("algo=labelprop", "algo=lss"),
-      events.toString)
+    val converged = events.filter(_("event") == "fixpoint_converged")
+    assert(converged.map(_("op")) ==
+      Seq("connectedComponents", "connectedComponentsLss"), events.toString)
     // the 21-node chain needs many label-propagation rounds
-    assert(events.forall(_.split(" ")(2).stripPrefix("rounds=").toInt > 1),
-      events.toString)
+    assert(converged.forall(_("rounds").toInt > 1), events.toString)
+    // one fixpoint_round event per round of each call, numbered 1..rounds
+    for (c <- converged) assert(events
+      .filter(e => e("event") == "fixpoint_round" && e("op") == c("op"))
+      .map(_("round").toInt) == (1 to c("rounds").toInt), events.toString)
     assert(lss == lp, s"lss=$lss\nlp=$lp")
     assert(lss(119L) == 100L && lss(6L) == 1L && lss(53L) == 50L &&
       lss(201L) == 200L)

@@ -1,0 +1,103 @@
+package graft.operators
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.{SparkSpec, StructuredLog}
+
+/** The shared fixpoint loop: its stop rule, round cap, null guard and
+  * events, and the four operators that run through it. */
+class FixpointSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** `fixpoint_*` events emitted while `body` runs, as key→value maps. */
+  private def eventsOf[T](body: => T): (Either[Throwable, T], Seq[Map[String, String]]) = {
+    val events = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+    val listener = (_: String, l: String) => synchronized {
+      if (l.startsWith("event=fixpoint_")) events += l.split(" ")
+        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap: Unit
+    }
+    StructuredLog.addListener(listener)
+    val out = try Right(body) catch { case t: Throwable => Left(t) }
+    finally StructuredLog.removeListener(listener)
+    (out, events.toSeq)
+  }
+
+  // a 40-node path: its minimum label must travel 39 hops, past the cap
+  private def path(from: Long = 0L) =
+    (from until from + 39L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+
+  test("label propagation fails at the round cap on a 40-node path; LSS labels it one component") {
+    val (lp, lpEvents) = eventsOf(Dedup.connectedComponents(path()))
+    val err = lp.swap.getOrElse(fail(s"returned a partial labelling: $lp"))
+    assert(err.isInstanceOf[IllegalStateException], err)
+    assert(err.getMessage.contains("connectedComponents") &&
+      err.getMessage.contains(s"${Fixpoint.MaxRounds} rounds"), err.getMessage)
+    assert(lpEvents.count(_("event") == "fixpoint_round") == Fixpoint.MaxRounds)
+    assert(!lpEvents.exists(_("event") == "fixpoint_converged"), lpEvents)
+
+    val lss = Dedup.connectedComponentsLss(path()).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
+    assert(lss == (0L until 40L).map(_ -> 0L).toMap, lss.toString)
+  }
+
+  test("label propagation releases its cached edge list when it throws") {
+    def persisted = spark.sparkContext.getPersistentRDDs
+    val before = persisted.keySet
+    // a path of its own: an edge list still cached from an earlier call on
+    // the same input would be reused instead of registered anew
+    intercept[IllegalStateException](Dedup.connectedComponents(path(1000L)))
+    // every round's localCheckpoint also registers its (lineage-only) RDD
+    // until it is garbage-collected; the cached edge list must be gone
+    val leaked = persisted.filter { case (id, rdd) =>
+      !before.contains(id) && !rdd.isCheckpointed }
+    assert(leaked.isEmpty, leaked.values.map(_.toDebugString).mkString("\n"))
+  }
+
+  test("a null certificate over a non-empty frame fails loudly") {
+    val nullCert = Seq(max(lit(null).cast("long")).as("c"))
+    val err = intercept[IllegalStateException](
+      Fixpoint.run("nullCert", spark.range(3).toDF(), nullCert)(identity))
+    assert(err.getMessage.contains("nullCert") && err.getMessage.contains("'c'"),
+      err.getMessage)
+    // over an empty frame the same certificate is null by definition: no
+    // rounds run and the empty frame is the fixpoint
+    val (empty, events) = eventsOf(
+      Fixpoint.run("nullCertEmpty", spark.range(0).toDF(), nullCert)(identity))
+    assert(empty.toOption.get.isEmpty)
+    assert(events.map(e => e("event") -> e("rounds")) ==
+      Seq("fixpoint_converged" -> "0"), events)
+  }
+
+  test("equal certificates converge only once the exact confirmation holds") {
+    // rotating {0,1,2} keeps (count, sum) fixed every round while the rows
+    // change; a never-true confirmation must run into the cap
+    val rotate = (df: DataFrame) => df.select(((col("id") + 1) % 3).as("id"))
+    val cert = Seq(sum(col("id")).as("s"))
+    val (capped, events) = eventsOf(Fixpoint.run("rotate", spark.range(3).toDF(),
+      cert, confirm = (_, _) => false)(rotate))
+    assert(capped.left.toOption.exists(_.getMessage.contains("rotate")), capped)
+    assert(events.map(_("round").toInt) == (1 to Fixpoint.MaxRounds), events)
+    // an identity step reproduces its input: equal certificates, the exact
+    // set-equality confirmation holds, and the loop stops after one round
+    val (same, sameEvents) = eventsOf(Fixpoint.run("identity", spark.range(3).toDF(),
+      cert, confirm = (a, b) => a.except(b).isEmpty && b.except(a).isEmpty)(identity))
+    assert(same.toOption.get.as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(sameEvents.last == Map("event" -> "fixpoint_converged",
+      "op" -> "identity", "rounds" -> "1"), sameEvents)
+  }
+
+  test("empty input to every fixpoint operator is empty after 0 rounds") {
+    val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val (out, events) = eventsOf(Seq(
+      Dedup.connectedComponents(pairs), Dedup.connectedComponentsLss(pairs),
+      Graph.kCore(pairs, 2), Graph.docKCore(docs, 2)).map(_.isEmpty))
+    assert(out == Right(Seq(true, true, true, true)), out)
+    assert(events.map(e => (e("event"), e("op"), e("rounds"))) == Seq(
+      ("fixpoint_converged", "connectedComponents", "0"),
+      ("fixpoint_converged", "connectedComponentsLss", "0"),
+      ("fixpoint_converged", "kCore", "0"),
+      ("fixpoint_converged", "docKCore", "0")), events)
+  }
+}
