@@ -33,9 +33,12 @@ object Verify {
     val errors = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val futures = SparkEntry.queries.toSeq.filter(t => nameFilter(t._1)).map { case (name, fn) =>
       Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          System.err.println(f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           errors.put(name, Option(e.getMessage).getOrElse(e.getClass.getName))
         }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -373,7 +373,15 @@ object Dedup {
     * groupBy-min + one join, both hash-shuffled on node id. Convergence is
     * exact set equality, gated by a (count, hash-sum, hash-xor) triple
     * observed during each round's checkpoint: only a round whose triple
-    * matches the previous one pays the two anti-join emptiness checks. */
+    * matches the previous one pays the two anti-join emptiness checks.
+    *
+    * Local finish: once the canonical edge set fits the broadcast budget
+    * (16 B per edge against `spark.sql.autoBroadcastJoinThreshold`, 655k
+    * edges at the 10 MB default), `Fixpoint` collects it and [[lssStars]]
+    * computes the same star set on the driver — the rounds left are pure
+    * per-job overhead on a state that small. At scale the rounds run until
+    * clique collapse shrinks the edge set under the budget; a threshold of
+    * -1 runs every round distributed. */
   private[graft] def connectedComponentsLss(pairs: DataFrame): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .filter(col("u") =!= col("v"))
@@ -402,7 +410,8 @@ object Dedup {
           sum(xxhash64(col("u"), col("v")).cast(DecimalType(38, 0))).as("s"),
           expr("bit_xor(xxhash64(u, v))").as("x")),
         confirm = (prev, next) =>
-          next.except(prev).isEmpty && prev.except(next).isEmpty) { edges =>
+          next.except(prev).isEmpty && prev.except(next).isEmpty,
+        local = Some(lssStars)) { edges =>
       val nb = bothWays(edges)
       val mins = nb.groupBy(col("c")).agg(min(col("n")).as("mn"))
         .select(col("c"), least(col("c"), col("mn")).as("m"))
@@ -419,6 +428,35 @@ object Dedup {
     // themselves re-enter as their own label
     edges.select(col("v").as("id"), col("u").as("label"))
       .unionByName(edges.select(col("u").as("id"), col("u").as("label")).distinct())
+  }
+
+  /** The set large-star/small-star converges to, from an in-memory edge
+    * list of (u, v) longs: (min C, v) for every member v ≠ min C of every
+    * component C. Union-find over primitive arrays — sorted distinct ids,
+    * int parents, each union rooted at the smaller index (so a root is its
+    * component's minimum id), path halving — so an edge set at the
+    * broadcast budget stays a few tens of MB on the driver. */
+  private def lssStars(edges: Array[Row]): Seq[Row] = {
+    val ids = new Array[Long](2 * edges.length)
+    for (i <- edges.indices) {
+      ids(2 * i) = edges(i).getLong(0)
+      ids(2 * i + 1) = edges(i).getLong(1)
+    }
+    java.util.Arrays.sort(ids)
+    var k = 0
+    for (id <- ids if k == 0 || id != ids(k - 1)) { ids(k) = id; k += 1 }
+    val parent = Array.tabulate(k)(identity)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    def idx(id: Long) = java.util.Arrays.binarySearch(ids, 0, k, id)
+    for (e <- edges) {
+      val (a, b) = (find(idx(e.getLong(0))), find(idx(e.getLong(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    (0 until k).filter(i => find(i) != i).map(i => Row(ids(find(i)), ids(i)))
   }
 
   /** Near-dup clusters over the text-identity quotient graph, components

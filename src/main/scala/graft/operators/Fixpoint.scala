@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The one fixpoint loop of the iterative operators: connected components
@@ -26,6 +28,16 @@ import org.apache.spark.sql.functions.{count, lit}
   * A null metric over a non-empty frame (a decimal sum overflow) fails
   * loudly: two null rounds would otherwise compare equal and "converge".
   *
+  * Local finish: a caller that can compute the fixpoint of a state in
+  * driver memory passes `local`. Once a checkpointed state's estimated
+  * size (`n` × the schema's `defaultSize`) fits
+  * `spark.sql.autoBroadcastJoinThreshold`, the loop collects it, applies
+  * `local`, and returns the result as a local frame — what Spark would
+  * broadcast, the loop may collect. At sf0.1 a round on a few hundred rows
+  * costs seconds of per-job overhead and no compute; at scale the loop runs
+  * as before until its state shrinks under the budget. A threshold of -1
+  * turns the local finish off, as it turns broadcasts off.
+  *
   * `localCheckpoint` does not survive executor loss; at cluster scale a
   * reliable checkpoint directory would replace it here, in one place. */
 private[operators] object Fixpoint {
@@ -38,11 +50,15 @@ private[operators] object Fixpoint {
     * fixpoint frame. Every state, `init` included, is localCheckpointed with
     * `count` observed as `n` next to the `cert` columns. The loop stops when
     * a state is empty, or when a round's metrics equal the previous round's
-    * and `confirm(prev, next)` holds. Emits one `fixpoint_round` event per
-    * round (`op`, `round`, `rows`, `ms`) and one `fixpoint_converged` event
-    * (`op`, `rounds`); empty input converges after 0 rounds. */
+    * and `confirm(prev, next)` holds, or — with `local` — as soon as a
+    * non-empty state fits the broadcast budget, and `local` of its rows is
+    * returned instead. Emits one `fixpoint_round` event per round (`op`,
+    * `round`, `rows`, `ms`) and one `fixpoint_converged` event (`op`,
+    * `rounds`, `local`, and on a local finish the collected `rows` and its
+    * `ms`); empty input converges after 0 rounds. */
   def run(op: String, init: DataFrame, cert: Seq[Column] = Nil,
-          confirm: (DataFrame, DataFrame) => Boolean = (_, _) => true)
+          confirm: (DataFrame, DataFrame) => Boolean = (_, _) => true,
+          local: Option[Array[Row] => Seq[Row]] = None)
          (step: DataFrame => DataFrame): DataFrame = {
     val metrics = count(lit(1)).as("n") +: cert
     def checkpoint(df: DataFrame): (DataFrame, Map[String, Any]) = {
@@ -57,7 +73,10 @@ private[operators] object Fixpoint {
     var (state, m) = checkpoint(init)
     var round = 0
     var done = m("n") == 0L
-    while (!done && round < MaxRounds) {
+    val budget = init.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    def fits = !done && local.isDefined && budget > 0 &&
+      m("n").asInstanceOf[Long] * state.schema.defaultSize <= budget
+    while (!done && !fits && round < MaxRounds) {
       val t0 = System.nanoTime()
       val (next, m2) = checkpoint(step(state))
       done = m2("n") == 0L || (m2 == m && confirm(state, next))
@@ -67,10 +86,20 @@ private[operators] object Fixpoint {
       graft.StructuredLog.info("fixpoint_round", "op" -> op, "round" -> round,
         "rows" -> m("n"), "ms" -> (System.nanoTime() - t0) / 1000000)
     }
-    if (!done) throw new IllegalStateException(
-      s"$op: no fixpoint after $MaxRounds rounds (${m("n")} rows remain); " +
-        "returning a partial result would be silently wrong")
-    graft.StructuredLog.info("fixpoint_converged", "op" -> op, "rounds" -> round)
-    state
+    if (fits) {
+      val t0 = System.nanoTime()
+      val out = init.sparkSession.createDataFrame(
+        local.get(state.collect()).asJava, state.schema)
+      graft.StructuredLog.info("fixpoint_converged", "op" -> op, "rounds" -> round,
+        "local" -> true, "rows" -> m("n"), "ms" -> (System.nanoTime() - t0) / 1000000)
+      out
+    } else {
+      if (!done) throw new IllegalStateException(
+        s"$op: no fixpoint after $MaxRounds rounds (${m("n")} rows remain); " +
+          "returning a partial result would be silently wrong")
+      graft.StructuredLog.info("fixpoint_converged", "op" -> op, "rounds" -> round,
+        "local" -> false)
+      state
+    }
   }
 }

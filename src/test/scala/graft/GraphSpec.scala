@@ -190,14 +190,17 @@ class GraphSpec extends SparkSpec {
       if (l.startsWith("event=fixpoint_")) events += l.split(" ")
         .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap: Unit
     }
+    def lssOf = toMapOf(Dedup.connectedComponentsLss(pairs).select(col("id"), col("label")))
     StructuredLog.addListener(listener)
-    val (lp, lss) = try {
-      (toMapOf(Dedup.connectedComponents(pairs).select(col("id"), col("label"))),
-        toMapOf(Dedup.connectedComponentsLss(pairs).select(col("id"), col("label"))))
+    // broadcasts off: the fixture would fit the budget and finish on the
+    // driver before any round — this half covers the distributed rounds
+    val (lp, lss) = try withoutBroadcast {
+      (toMapOf(Dedup.connectedComponents(pairs).select(col("id"), col("label"))), lssOf)
     } finally StructuredLog.removeListener(listener)
     val converged = events.filter(_("event") == "fixpoint_converged")
     assert(converged.map(_("op")) ==
       Seq("connectedComponents", "connectedComponentsLss"), events.toString)
+    assert(converged.forall(_("local") == "false"), events.toString)
     // the 21-node chain needs many label-propagation rounds
     assert(converged.forall(_("rounds").toInt > 1), events.toString)
     // one fixpoint_round event per round of each call, numbered 1..rounds
@@ -207,6 +210,44 @@ class GraphSpec extends SparkSpec {
     assert(lss == lp, s"lss=$lss\nlp=$lp")
     assert(lss(119L) == 100L && lss(6L) == 1L && lss(53L) == 50L &&
       lss(201L) == 200L)
+    // the same fixture under the default budget: its 32 edges fit, so the
+    // initial state is collected and finished on the driver, with no round
+    events.clear()
+    StructuredLog.addListener(listener)
+    val local = try lssOf finally StructuredLog.removeListener(listener)
+    assert(events.map(e => (e("event"), e("rounds"), e("local"), e("rows"))) ==
+      Seq(("fixpoint_converged", "0", "true", "32")), events.toString)
+    assert(local == lp, s"local=$local\nlp=$lp")
+  }
+
+  test("lss local finish equals the distributed rounds and label propagation on random graphs") {
+    import graft.operators.Dedup
+    def toMapOf(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("label")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (seed <- 1 to 20) {
+      val rnd = new scala.util.Random(seed)
+      // 3-5 groups of distinct sparse ids; edges only inside a group, so
+      // the graph has several components (a group may split further)
+      val groups = Seq.fill(3 + rnd.nextInt(3))(
+        Seq.fill(2 + rnd.nextInt(7))(rnd.nextLong() & ((1L << 40) - 1)).distinct)
+      val edges = groups.flatMap { g =>
+        val es = Seq.fill(1 + rnd.nextInt(2 * g.size))(
+          (g(rnd.nextInt(g.size)), g(rnd.nextInt(g.size))))
+        // duplicate pairs, reversed pairs and self-loops
+        es ++ es.take(2) ++ es.takeRight(2).map(_.swap) ++ Seq((g.head, g.head))
+      }
+      val pairs = rnd.shuffle(edges).toDF("doc_a", "doc_b")
+      val local = toMapOf(Dedup.connectedComponentsLss(pairs))
+      val (rounds, lp) = withoutBroadcast(
+        (toMapOf(Dedup.connectedComponentsLss(pairs)), toMapOf(Dedup.connectedComponents(pairs))))
+      // LSS drops self-loops; label propagation keeps a node whose only
+      // edge is a self-loop as its own singleton component
+      val sizes = lp.values.groupBy(identity).map { case (l, ls) => l -> ls.size }
+      val lpNonSingleton = lp.filter { case (_, l) => sizes(l) > 1 }
+      assert(local == rounds, s"seed $seed: local=$local\nrounds=$rounds")
+      assert(local == lpNonSingleton, s"seed $seed: local=$local\nlp=$lp")
+    }
   }
 
   test("quotient lss clusters equal plain lss clusters under dup texts") {

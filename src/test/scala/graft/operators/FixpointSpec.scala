@@ -7,7 +7,7 @@ import graft.{SparkSpec, StructuredLog}
 
 /** The shared fixpoint loop: its stop rule, round cap, null guard and
   * events, and the four operators that run through it. */
-class FixpointSpec extends SparkSpec {
+class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
   import spark.implicits._
 
   /** `fixpoint_*` events emitted while `body` runs, as key→value maps. */
@@ -36,9 +36,49 @@ class FixpointSpec extends SparkSpec {
     assert(lpEvents.count(_("event") == "fixpoint_round") == Fixpoint.MaxRounds)
     assert(!lpEvents.exists(_("event") == "fixpoint_converged"), lpEvents)
 
-    val lss = Dedup.connectedComponentsLss(path()).collect()
+    def lssOf = Dedup.connectedComponentsLss(path()).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
-    assert(lss == (0L until 40L).map(_ -> 0L).toMap, lss.toString)
+    val (lss, lssEvents) = eventsOf(lssOf)
+    assert(lss == Right((0L until 40L).map(_ -> 0L).toMap), lss.toString)
+    assert(lssEvents.last("local") == "true", lssEvents)
+    // the distributed rounds, with the local finish off
+    val (rounds, roundsEvents) = eventsOf(withoutBroadcast(lssOf))
+    assert(rounds == lss, rounds.toString)
+    assert(roundsEvents.last("local") == "false" &&
+      roundsEvents.last("rounds").toInt >= 1, roundsEvents)
+  }
+
+  /** LSS's `fixpoint_converged` event under a broadcast budget of `budget`. */
+  private def lssConverged(pairs: DataFrame, budget: Long) = {
+    val (out, events) = eventsOf(withConf(
+      "spark.sql.autoBroadcastJoinThreshold", budget.toString)(
+      Dedup.connectedComponentsLss(pairs).collect()))
+    assert(out.isRight, out)
+    events.filter(_("event") == "fixpoint_converged").loneElement
+  }
+
+  // a canonical edge is two longs: 16 bytes against the budget
+  private val EdgeBytes = 16L
+
+  test("lss finishes locally exactly when its edge set fits the broadcast budget") {
+    // every state of a connected 40-node graph holds >= 39 edges, so a
+    // budget one byte short of 39 edges never fits: the rounds run to the
+    // fixpoint
+    val over = lssConverged(path(), 39 * EdgeBytes - 1)
+    assert(over("local") == "false" && over("rounds").toInt >= 1, over)
+    // at exactly 39 edges the initial state fits: no round at all
+    val under = lssConverged(path(), 39 * EdgeBytes)
+    assert(under("local") == "true" && under("rounds") == "0" && under("rows") == "39", under)
+    // a clique K_m (m(m-1)/2 edges) collapses to its (m-1)-edge star in one
+    // round; a budget between the two finishes locally after that round
+    val m = 8
+    val clique = (for (a <- 0 until m; b <- a + 1 until m) yield (a.toLong, b.toLong))
+      .toDF("doc_a", "doc_b")
+    val k = lssConverged(clique, EdgeBytes * m * (m - 1) / 2 - 1)
+    assert(k("local") == "true" && k("rounds") == "1" && k("rows") == (m - 1).toString, k)
+    // -1 turns the local finish off with broadcasts
+    val off = lssConverged(clique, -1)
+    assert(off("local") == "false", off)
   }
 
   test("label propagation releases its cached edge list when it throws") {
@@ -84,7 +124,7 @@ class FixpointSpec extends SparkSpec {
       cert, confirm = (a, b) => a.except(b).isEmpty && b.except(a).isEmpty)(identity))
     assert(same.toOption.get.as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
     assert(sameEvents.last == Map("event" -> "fixpoint_converged",
-      "op" -> "identity", "rounds" -> "1"), sameEvents)
+      "op" -> "identity", "rounds" -> "1", "local" -> "false"), sameEvents)
   }
 
   test("empty input to every fixpoint operator is empty after 0 rounds") {
