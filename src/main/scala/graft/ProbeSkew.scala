@@ -102,7 +102,7 @@ object ProbeSkew {
       check("ingest", SparkEntry.queries("q_multimodal_ingest")(spark, dir), closed)
     }
 
-    // joint: LSS label propagation with a class that is hot in EVERY
+    // joint: LSS components with a class that is hot in EVERY
     // modality at once — arithmetic twin runs the identical quotient/
     // edge/LSS/label structure on residue keys instead of decoded
     // fingerprints (equal by the pinned bijections)

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * skewPct > 0 plants the ADVERSARIAL-SKEW block the uniform replication
   * above cannot produce: real crawls have mega-classes (one blank image /
   * silence clip / boilerplate page duplicated billions of times), and the
-  * hot-class paths — ingest class facts, joint-class label propagation,
+  * hot-class paths — ingest class facts, joint-class components,
   * member-pair expansions, per-domain caps — never see one on the mod-
   * rotated corpora. The block is `skewPct` percent of the final document
   * count, every row of which shares

@@ -297,71 +297,18 @@ object Dedup {
     cross.unionByName(within)
   }
 
-  /** Connected components over a pair set via iterative min-label
-    * propagation: every node adopts the minimum label among itself and its
-    * neighbors until fixpoint. Each iteration is one shuffle (join +
-    * aggregate) and converges in O(component diameter) rounds — near-dup
-    * clusters are shallow (chains of a few edits), so 3-4 rounds in
-    * practice; pathological long-chain graphs would want the
-    * large-star/small-star variant instead (a label that must travel 30
-    * or more hops hits `Fixpoint.MaxRounds` and throws). `localCheckpoint`
-    * cuts the lineage each round so the plan does not grow with
-    * iterations (at cluster scale use a persisted checkpoint dir for fault
-    * tolerance).
+  /** Connected components of a pair set (doc_a, doc_b) → (id, label):
+    * exactly one row per id of a non-self-loop pair, labelled with its
+    * component's minimum id (the minimum labels itself). A pair (x, x)
+    * adds nothing, so an id whose only pair is a self-loop has no row.
     *
     * This is the step that turns PAIRS into a dedup decision: jaccard is
     * not transitive, so keep-smallest-of-each-pair can drop both docs of a
-    * chain a-b-c; one keeper PER COMPONENT is the sound policy. */
-  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
-    // convergence rides the per-round checkpoint job (r14, Fixpoint):
-    // labels are min-propagated over a FIXED id set — each id's label is
-    // non-increasing, so the label multiset is unchanged iff sum(label)
-    // is unchanged. That makes (count, decimal sum) an EXACT convergence
-    // certificate computed for free during the checkpoint materialization,
-    // replacing the per-round comparison-join + isEmpty action (one full
-    // driver round-trip and its AQE stage chain per iteration).
-    //
-    // r15 round shape (guide §2.4 "remove shuffles outright"): one shuffle
-    // per round, the information-theoretic floor for label propagation —
-    // messages must move from the neighbor's key to the receiver's key.
-    //  - the symmetrized edge list is hash-partitioned on `dst` ONCE and
-    //    kept resident (persist, not localCheckpoint: a checkpointed
-    //    frame scans as ExistingRDD with UNKNOWN partitioning, so every
-    //    round re-shuffled the edges; a cached frame reports its
-    //    HashPartitioning and the per-round message join consumes it
-    //    co-partitioned with zero edge exchange);
-    //  - next labels = min over (own label ∪ neighbor labels) as ONE
-    //    union + groupBy — algebraically identical to the old
-    //    join-nbr + left_outer + least chain (labels carries every id
-    //    exactly once, so least(own, min(nbrs)) == min over the union),
-    //    but 1 exchange instead of 3 per round (measured 4.45 → 2.85 s
-    //    on q_dedup_semantic at sf0.1).
-    // The repartition width is pinned to numShufflePartitions so the
-    // per-round label exchange lands co-partitioned with the cache
-    // (a defaultParallelism width would mismatch on clusters where
-    // spark.sql.shuffle.partitions is tuned higher — the r14 ADVICE).
-    import org.apache.spark.sql.types.DecimalType
-    val np = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(np, col("dst"))
-      .persist()
-    try Fixpoint.run("connectedComponents",
-        edges.select(col("dst").as("id")).distinct().withColumn("label", col("id")),
-        cert = Seq(sum(col("label").cast(DecimalType(38, 0))).as("s"))) { labels =>
-      val msgs = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("label"))
-      msgs.unionByName(labels.select(col("id"), col("label")))
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-    } finally edges.unpersist(false)
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the skew-resistant scale path next to [[connectedComponents]]'s
-    * plain label propagation. Label propagation needs O(diameter) rounds
-    * and every round shuffles the full label set; large-star/small-star
+    * chain a-b-c; one keeper PER COMPONENT is the sound policy.
+    *
+    * Alternating large-star / small-star (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"): where label propagation needs
+    * O(diameter) rounds that each shuffle the full label set, this
     * converges in O(log² n) rounds on ANY graph shape (long chains
     * included) and each round touches only the shrinking edge set:
     *   large-star: every node points its larger neighbors at its
@@ -764,7 +711,7 @@ object Dedup {
     // keeper) and component size. Jaccard is not transitive, so this, not
     // per-pair keep-smallest, is the sound dedup decision.
     "q_dedup_clusters" -> ((s, dir) => {
-      val labels = connectedComponents(minhashNearDupPairs(s, dir))
+      val labels = connectedComponentsLss(minhashNearDupPairs(s, dir))
       val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, "label")
         .select(col("id").as("doc_id"), col("label").as("cluster_rep"),
@@ -772,10 +719,10 @@ object Dedup {
         .orderBy(col("doc_id"))
     }),
 
-    // Same clustering contract, computed by large-star/small-star over the
-    // text-identity quotient graph — the O(log² n)-round, long-chain-safe,
-    // replication-invariant scale path. Must produce byte-identical
-    // clusters to the label-propagation query (both share the
+    // Same clustering contract, computed over the text-identity quotient
+    // graph — the replication-invariant scale path. Must produce
+    // byte-identical clusters to q_dedup_clusters, which runs the same
+    // components over the member-level pair set (both share the
     // recursive-SQL transitive-closure oracle).
     "q_dedup_clusters_lss" -> ((s, dir) =>
       docNearDupClustersLss(docs(s, dir)).orderBy(col("doc_id"))),
@@ -1173,9 +1120,9 @@ object Dedup {
     * election and sizes all computed per DISTINCT embedding, re-expanded
     * in closed form — never over member-level pairs.
     *
-    * The previous shape ran label propagation over the member-expanded
-    * pair set, which on a dup-heavy corpus is Θ(Σ mᵢ·mⱼ) edges for work
-    * the quotient does on one edge per rep pair. Soundness: members of an
+    * Components over the member-expanded pair set would take, on a
+    * dup-heavy corpus, Θ(Σ mᵢ·mⱼ) edges for work the quotient does on one
+    * edge per rep pair. Soundness: members of an
     * exact-dup group share the embedding, hence the norm and every cosine
     * relation, so (a) a group joins a component iff its rep does; (b) a
     * group with m ≥ 2 whose self-cosine passes the threshold is a
@@ -1197,7 +1144,7 @@ object Dedup {
           .stripMargin).as("norm"),
       (round(Sketches.cosineSim(col("embedding"), col("embedding")), 6) >= 0.45)
         .as("self_conn"))
-    val labels = connectedComponents(
+    val labels = connectedComponentsLss(
       repPairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
     val gl = g.join(labels.withColumnRenamed("id", "rep"), Seq("rep"), "left_outer")
       .withColumn("label", coalesce(col("label"),
@@ -1659,9 +1606,9 @@ object Dedup {
         |LEFT JOIN h ON h.new_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin,
     // transitive closure of the exact pair set via recursive min-label
-    // reachability — the ground truth for BOTH distributed clusterings
-    // (label propagation and large-star/small-star must agree with it
-    // and therefore with each other)
+    // reachability — the ground truth for BOTH clusterings (plain and
+    // text-identity quotient components must agree with it and therefore
+    // with each other)
     "q_dedup_clusters" -> clustersOracleSql,
     "q_dedup_clusters_lss" -> clustersOracleSql,
     // simhash banding (pigeonhole-deterministic to hamming 15) + exact

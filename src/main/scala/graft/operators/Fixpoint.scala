@@ -6,11 +6,10 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The one fixpoint loop of the iterative operators: connected components
-  * by label propagation and by large-star/small-star (`Dedup`), and the two
-  * k-core peels (`Graph`). Each caller supplies only its step, its
-  * certificate columns and, where the certificate is not exact, an exact
-  * confirmation; the loop owns the checkpoint, the stop rule, the round cap
-  * and the per-round events.
+  * by large-star/small-star (`Dedup`) and the two k-core peels (`Graph`).
+  * Each caller supplies only its step, its certificate columns and, where
+  * the certificate is not exact, an exact confirmation; the loop owns the
+  * checkpoint, the stop rule, the round cap and the per-round events.
   *
   * Convergence rides each round's `localCheckpoint` job (r14, guide §2.4
   * "remove shuffles outright" applied to ACTIONS): every round already pays

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Iterative graph analytics over the near-duplicate graph — the step
-  * beyond connected components ([[Dedup.connectedComponents]]): PageRank
+  * beyond connected components ([[Dedup.connectedComponentsLss]]): PageRank
   * centrality on the similarity graph ranks cluster members by how
   * embedded they are (a hub shared by many near-dups scores high; a
   * leaf edit scores low), which is a principled "pick the canonical
@@ -34,8 +34,8 @@ object Graph {
     * (src < dst pairs; both directions materialize internally). The pair
     * plan is localCheckpoint'd first — it feeds deg plus one join per
     * iteration, and without the lineage cut Catalyst would re-evaluate
-    * the (expensive) candidate-generation subtree k+1 times (the
-    * [[Dedup.connectedComponents]] discipline). */
+    * the (expensive) candidate-generation subtree k+1 times (the cut
+    * [[Fixpoint]] makes every round). */
   def pageRank(pairs: DataFrame, k: Int): DataFrame = {
     val p = pairs.localCheckpoint()
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))

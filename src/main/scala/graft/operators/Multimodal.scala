@@ -901,12 +901,12 @@ object Multimodal {
     // component policy from the text family applies unchanged). Components
     // run over raster-class REPRESENTATIVES only (a class is internally
     // connected at distance 0, so a class joins a component iff its rep
-    // does); min-label propagation makes the component label the smallest
-    // rep, which IS the smallest member doc_id — the keeper. One row per
-    // doc: (doc_id, keeper_doc_id, cluster_size).
+    // does); the component label is the smallest rep, which IS the
+    // smallest member doc_id — the keeper. One row per doc: (doc_id,
+    // keeper_doc_id, cluster_size).
     "q_multimodal_perceptual_clusters" -> ((s, dir) => {
       val (clusters, repPairs) = perceptualParts(s, dir)
-      val labels = Dedup.connectedComponents(
+      val labels = Dedup.connectedComponentsLss(
         repPairs.select(col("doc_a"), col("doc_b")))
       clusters
         .join(labels.withColumnRenamed("id", "rep"), Seq("rep"), "left_outer")

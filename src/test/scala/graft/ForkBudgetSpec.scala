@@ -19,7 +19,9 @@ package graft
   * both measurements, and the FileContext manager's per-stat exec makes
   * its count two orders of magnitude larger — a 4× separation threshold
   * is safe against any plausible background. An absolute ceiling on the
-  * Nio side pins the batch floor itself.
+  * Nio side pins the batch floor itself; the Nio query runs twice and the
+  * smaller count is asserted, so one burst of ambient forks during one
+  * run cannot fail the guard.
   */
 class ForkBudgetSpec extends SparkSpec {
 
@@ -50,15 +52,16 @@ class ForkBudgetSpec extends SparkSpec {
       "/proc/stat unavailable on this platform")
     assert(spark.conf.get(managerKey) == Scratch.localCheckpointFileManager,
       "test session must ship the Nio manager")
+    def forksOf(): Long = { val n0 = forksNow(); runStream(); forksNow() - n0 }
     runStream() // warm-up: classloading/codegen forks land here
-    val n0 = forksNow(); runStream()
-    val nioForks = forksNow() - n0
+    // ambient forks can only ADD to the system-wide counter, so the
+    // smaller of two Nio readings is the tighter one
+    val nioRuns = Seq(forksOf(), forksOf())
+    val nioForks = nioRuns.min
     spark.conf.set(managerKey, fileContextManager)
-    val defForks = try {
-      val d0 = forksNow(); runStream()
-      forksNow() - d0
-    } finally spark.conf.set(managerKey, Scratch.localCheckpointFileManager)
-    info(s"forks: nio=$nioForks fileContext=$defForks")
+    val defForks = try forksOf()
+      finally spark.conf.set(managerKey, Scratch.localCheckpointFileManager)
+    info(s"forks: nio=${nioRuns.mkString("/")} (min $nioForks) fileContext=$defForks")
     assert(defForks > nioForks * 4 && defForks > 400,
       s"guard lost its teeth: the FileContext manager should fork per " +
         s"stat (nio=$nioForks, fileContext=$defForks) — if this fails " +

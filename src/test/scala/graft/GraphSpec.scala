@@ -195,7 +195,8 @@ class GraphSpec extends SparkSpec {
     // broadcasts off: the fixture would fit the budget and finish on the
     // driver before any round — this half covers the distributed rounds
     val (lp, lss) = try withoutBroadcast {
-      (toMapOf(Dedup.connectedComponents(pairs).select(col("id"), col("label"))), lssOf)
+      (toMapOf(operators.LabelPropagation.connectedComponents(pairs)
+        .select(col("id"), col("label"))), lssOf)
     } finally StructuredLog.removeListener(listener)
     val converged = events.filter(_("event") == "fixpoint_converged")
     assert(converged.map(_("op")) ==
@@ -222,9 +223,16 @@ class GraphSpec extends SparkSpec {
 
   test("lss local finish equals the distributed rounds and label propagation on random graphs") {
     import graft.operators.Dedup
-    def toMapOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("id"), col("label")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the (id, label) rows as a map, once there is exactly one row per id:
+    // the clustering queries join on this frame, and a map comparison
+    // alone would hide a duplicated row
+    def toMapOf(df: org.apache.spark.sql.DataFrame, what: String) = {
+      val rows = df.select(col("id"), col("label")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      val m = rows.toMap
+      assert(rows.length == m.size, s"$what: more than one row per id: ${rows.sorted.toSeq}")
+      m
+    }
     for (seed <- 1 to 20) {
       val rnd = new scala.util.Random(seed)
       // 3-5 groups of distinct sparse ids; edges only inside a group, so
@@ -238,9 +246,10 @@ class GraphSpec extends SparkSpec {
         es ++ es.take(2) ++ es.takeRight(2).map(_.swap) ++ Seq((g.head, g.head))
       }
       val pairs = rnd.shuffle(edges).toDF("doc_a", "doc_b")
-      val local = toMapOf(Dedup.connectedComponentsLss(pairs))
+      val local = toMapOf(Dedup.connectedComponentsLss(pairs), s"seed $seed local")
       val (rounds, lp) = withoutBroadcast(
-        (toMapOf(Dedup.connectedComponentsLss(pairs)), toMapOf(Dedup.connectedComponents(pairs))))
+        (toMapOf(Dedup.connectedComponentsLss(pairs), s"seed $seed rounds"),
+          toMapOf(operators.LabelPropagation.connectedComponents(pairs), s"seed $seed lp")))
       // LSS drops self-loops; label propagation keeps a node whose only
       // edge is a self-loop as its own singleton component
       val sizes = lp.values.groupBy(identity).map { case (l, ls) => l -> ls.size }

@@ -237,7 +237,7 @@ class MultimodalSpec extends SparkSpec {
       .select(col("doc_id").as("doc_a"), col("mmin").as("doc_b"))
     val nd = operators.Dedup.minhashNearDupPairsOf(d)
       .select(col("doc_a"), col("doc_b"))
-    val labels = operators.Dedup
+    val labels = operators.LabelPropagation
       .connectedComponents(textStar.unionByName(imgStar)
         .unionByName(modStar(35)).unionByName(modStar(348)).unionByName(nd))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -269,7 +269,7 @@ class MultimodalSpec extends SparkSpec {
     // pairs plus the text edges must equal the joint-perceptual clusters
     val ndImg = Queries.all("q_multimodal_perceptual")(spark, sfDir)
       .select(col("doc_a"), col("doc_b"))
-    val labels = operators.Dedup
+    val labels = operators.LabelPropagation
       .connectedComponents(textStar.unionByName(ndText).unionByName(ndImg))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = Queries.all("q_dedup_joint_perceptual")(spark, sfDir)
@@ -295,7 +295,7 @@ class MultimodalSpec extends SparkSpec {
     val nd = operators.Dedup.minhashNearDupPairsOf(d)
       .filter(col("doc_a") % 96 === col("doc_b") % 96)
       .select(col("doc_a"), col("doc_b"))
-    val labels = operators.Dedup
+    val labels = operators.LabelPropagation
       .connectedComponents(jointStar.unionByName(nd))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = Queries.all("q_dedup_joint_both")(spark, sfDir)
@@ -554,7 +554,7 @@ class MultimodalSpec extends SparkSpec {
       .unionByName(star(col("doc_id") % 348))
       .unionByName(operators.Dedup.minhashNearDupPairsOf(store)
         .select(col("doc_a"), col("doc_b")))
-    val storeLabels = operators.Dedup.connectedComponents(storeEdges)
+    val storeLabels = operators.LabelPropagation.connectedComponents(storeEdges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val storeIds = store.select("doc_id").collect().map(_.getLong(0))
     val storeKeeps = storeIds.map(id => storeLabels.getOrElse(id, id)).toSet

@@ -248,12 +248,12 @@ class PipelineOpsSpec extends SparkSpec {
     // star 1-3, 2-3 plus pair 10-11: per-pair "drop doc_b" keeps {1,2,10}
     // — but 1 and 2 are transitively similar via 3; components keep {1,10}
     val pairs = Seq((1L, 3L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val labels = operators.Dedup.connectedComponents(pairs)
+    val labels = operators.Dedup.connectedComponentsLss(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // long chain converges too (diameter > 1 iteration's reach)
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val chainLabels = operators.Dedup.connectedComponents(chain)
+    val chainLabels = operators.Dedup.connectedComponentsLss(chain)
       .collect().map(_.getLong(1)).toSet
     assert(chainLabels == Set(1L))
   }

@@ -530,7 +530,7 @@ class PipelineSpec extends SparkSpec {
         """round(sqrt(aggregate(embedding, cast(0.0 as double),
           |  (acc, x) -> acc + cast(x as double) * cast(x as double))), 6)"""
           .stripMargin).as("norm"))
-      val labels = Dedup.connectedComponents(pairs)
+      val labels = operators.LabelPropagation.connectedComponents(pairs)
       val memb = norms.join(labels, norms("vec_id") === labels("id"), "left_outer")
         .select($"vec_id", coalesce($"label", $"vec_id").as("label"), $"norm")
       val keep = memb.groupBy($"label").agg(

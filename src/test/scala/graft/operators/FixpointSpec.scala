@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSpec, StructuredLog}
 
 /** The shared fixpoint loop: its stop rule, round cap, null guard and
-  * events, and the four operators that run through it. */
+  * events, and the operators that run through it — the three in src/main
+  * and the label-propagation reference ([[LabelPropagation]]). */
 class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
   import spark.implicits._
 
@@ -28,7 +29,7 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
     (from until from + 39L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
 
   test("label propagation fails at the round cap on a 40-node path; LSS labels it one component") {
-    val (lp, lpEvents) = eventsOf(Dedup.connectedComponents(path()))
+    val (lp, lpEvents) = eventsOf(LabelPropagation.connectedComponents(path()))
     val err = lp.swap.getOrElse(fail(s"returned a partial labelling: $lp"))
     assert(err.isInstanceOf[IllegalStateException], err)
     assert(err.getMessage.contains("connectedComponents") &&
@@ -86,7 +87,7 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
     val before = persisted.keySet
     // a path of its own: an edge list still cached from an earlier call on
     // the same input would be reused instead of registered anew
-    intercept[IllegalStateException](Dedup.connectedComponents(path(1000L)))
+    intercept[IllegalStateException](LabelPropagation.connectedComponents(path(1000L)))
     // every round's localCheckpoint also registers its (lineage-only) RDD
     // until it is garbage-collected; the cached edge list must be gone
     val leaked = persisted.filter { case (id, rdd) =>
@@ -131,7 +132,7 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
     val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val (out, events) = eventsOf(Seq(
-      Dedup.connectedComponents(pairs), Dedup.connectedComponentsLss(pairs),
+      LabelPropagation.connectedComponents(pairs), Dedup.connectedComponentsLss(pairs),
       Graph.kCore(pairs, 2), Graph.docKCore(docs, 2)).map(_.isEmpty))
     assert(out == Right(Seq(true, true, true, true)), out)
     assert(events.map(e => (e("event"), e("op"), e("rounds"))) == Seq(
