@@ -6,15 +6,31 @@ package graft
   * now carries the commit SHA and a UTC timestamp so artifacts are
   * distinguishable and auditable without archaeology.
   *
-  * The SHA comes from reading `.git/HEAD` directly (no subprocess — the
-  * mains must work under any launcher): detached HEAD is the SHA itself,
-  * a symbolic ref resolves through `refs/...` or `packed-refs`. A missing
-  * or unreadable git dir degrades to "unknown", never an exception. */
+  * The SHA is the one the build wrote into the classpath resource
+  * `graft/commit` at compile time, so a snapshotted class dir
+  * (`GRAFT_CLASSES=<dir> tools/run.sh ...`) reports the commit it was built
+  * from wherever it runs. Without that resource it comes from reading
+  * `.git/HEAD` directly (no subprocess — the mains must work under any
+  * launcher): detached HEAD is the SHA itself, a symbolic ref resolves
+  * through `refs/...` or `packed-refs`. A missing or unreadable git dir
+  * degrades to "unknown", never an exception. */
 object RunMeta {
   def utcNow(): String =
     java.time.Instant.now().toString
 
-  def commitSha(repoRoot: String = "."): String = try {
+  def commitSha(repoRoot: String = "."): String =
+    builtFrom.getOrElse(gitSha(repoRoot))
+
+  /** The commit in the build's `graft/commit` resource, if it names one. */
+  private def builtFrom: Option[String] = try {
+    Option(getClass.getResourceAsStream("/graft/commit")).map { in =>
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
+      finally in.close()
+    }.filter(sha => sha.nonEmpty && sha != "unknown")
+  } catch { case _: Exception => None }
+
+  /** The commit `.git` under `repoRoot` has checked out, or "unknown". */
+  private[graft] def gitSha(repoRoot: String): String = try {
     val git = java.nio.file.Paths.get(repoRoot, ".git")
     if (!java.nio.file.Files.isDirectory(git)) "unknown"
     else {

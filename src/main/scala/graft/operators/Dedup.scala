@@ -358,7 +358,7 @@ object Dedup {
           expr("bit_xor(xxhash64(u, v))").as("x")),
         confirm = (prev, next) =>
           next.except(prev).isEmpty && prev.except(next).isEmpty,
-        local = Some(lssStars)) { edges =>
+        local = Some((edges, _) => lssStars(edges))) { edges =>
       val nb = bothWays(edges)
       val mins = nb.groupBy(col("c")).agg(min(col("n")).as("mn"))
         .select(col("c"), least(col("c"), col("mn")).as("m"))

@@ -5,11 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions.{count, lit}
 
-/** The one fixpoint loop of the iterative operators: connected components
-  * by large-star/small-star (`Dedup`) and the two k-core peels (`Graph`).
-  * Each caller supplies only its step, its certificate columns and, where
-  * the certificate is not exact, an exact confirmation; the loop owns the
-  * checkpoint, the stop rule, the round cap and the per-round events.
+/** The one loop of the iterative operators: connected components by
+  * large-star/small-star (`Dedup`), the two k-core peels and PageRank
+  * (`Graph`). Each caller supplies only its step and either a fixed round
+  * count (PageRank) or its certificate columns and, where the certificate
+  * is not exact, an exact confirmation; the loop owns the checkpoint, the
+  * stop rule, the round cap, the local finish and the per-round events.
   *
   * Convergence rides each round's `localCheckpoint` job (r14, guide §2.4
   * "remove shuffles outright" applied to ACTIONS): every round already pays
@@ -18,6 +19,10 @@ import org.apache.spark.sql.functions.{count, lit}
   * `except(...).isEmpty` actions. Each eliminated action is a driver
   * round-trip plus its own AQE stage chain — at sf0.1 the q_dedup_joint
   * family spent more wall in these checks than in all its task compute.
+  * The same per-round checkpoint keeps a fixed-rounds plan linear in the
+  * round count: a step that reads its state twice (PageRank's rank feeds
+  * both the contributions and the update) would otherwise double its plan
+  * every round.
   *
   * Soundness contract: observe metrics are exact aggregates of the
   * materialized rows, so equal frames ALWAYS produce equal metrics, and
@@ -27,9 +32,10 @@ import org.apache.spark.sql.functions.{count, lit}
   * A null metric over a non-empty frame (a decimal sum overflow) fails
   * loudly: two null rounds would otherwise compare equal and "converge".
   *
-  * Local finish: a caller that can compute the fixpoint of a state in
+  * Local finish: a caller that can compute its result from a state in
   * driver memory passes `local`. Once a checkpointed state's estimated
-  * size (`n` × the schema's `defaultSize`) fits
+  * size (`n` × the schema's `defaultSize`, plus the `localBytes` the
+  * finish collects besides the state) fits
   * `spark.sql.autoBroadcastJoinThreshold`, the loop collects it, applies
   * `local`, and returns the result as a local frame — what Spark would
   * broadcast, the loop may collect. At sf0.1 a round on a few hundred rows
@@ -41,23 +47,28 @@ import org.apache.spark.sql.functions.{count, lit}
   * reliable checkpoint directory would replace it here, in one place. */
 private[operators] object Fixpoint {
 
-  /** Round cap for every operator. Reaching it without a confirmed fixpoint
-    * throws: a partial propagation or peel would be silently wrong. */
+  /** Round cap of every run to a fixpoint. Reaching it without a confirmed
+    * fixpoint throws: a partial propagation or peel would be silently wrong. */
   val MaxRounds = 30
 
-  /** Iterate `step` from `init` to its fixpoint and return the (checkpointed)
-    * fixpoint frame. Every state, `init` included, is localCheckpointed with
-    * `count` observed as `n` next to the `cert` columns. The loop stops when
-    * a state is empty, or when a round's metrics equal the previous round's
-    * and `confirm(prev, next)` holds, or — with `local` — as soon as a
-    * non-empty state fits the broadcast budget, and `local` of its rows is
-    * returned instead. Emits one `fixpoint_round` event per round (`op`,
-    * `round`, `rows`, `ms`) and one `fixpoint_converged` event (`op`,
-    * `rounds`, `local`, and on a local finish the collected `rows` and its
-    * `ms`); empty input converges after 0 rounds. */
+  /** Iterate `step` from `init` and return the last (checkpointed) state.
+    * Every state, `init` included, is localCheckpointed with `count`
+    * observed as `n` next to the `cert` columns. Without `rounds` the loop
+    * runs to the fixpoint: it stops when a round's metrics equal the
+    * previous round's and `confirm(prev, next)` holds. With `rounds = Some(k)`
+    * it runs exactly `k` rounds and consults neither `cert` nor `confirm`.
+    * Either way it stops early at an empty state (every caller's step maps
+    * the empty frame to itself), and — with `local` — as soon as a
+    * non-empty state fits the broadcast budget: `local(rows, r)` of its
+    * rows, after the `r` rounds run so far, is returned instead. Emits one
+    * `fixpoint_round` event per round (`op`, `round`, `rows`, `ms`) and one
+    * `fixpoint_converged` event (`op`, `rounds`, `local`, and on a local
+    * finish the collected `rows` and its `ms`); empty input converges after
+    * 0 rounds. */
   def run(op: String, init: DataFrame, cert: Seq[Column] = Nil,
           confirm: (DataFrame, DataFrame) => Boolean = (_, _) => true,
-          local: Option[Array[Row] => Seq[Row]] = None)
+          rounds: Option[Int] = None,
+          local: Option[(Array[Row], Int) => Seq[Row]] = None, localBytes: Long = 0L)
          (step: DataFrame => DataFrame): DataFrame = {
     val metrics = count(lit(1)).as("n") +: cert
     def checkpoint(df: DataFrame): (DataFrame, Map[String, Any]) = {
@@ -71,24 +82,25 @@ private[operators] object Fixpoint {
     }
     var (state, m) = checkpoint(init)
     var round = 0
-    var done = m("n") == 0L
+    var done = m("n") == 0L || rounds.contains(0)
     val budget = init.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     def fits = !done && local.isDefined && budget > 0 &&
-      m("n").asInstanceOf[Long] * state.schema.defaultSize <= budget
-    while (!done && !fits && round < MaxRounds) {
+      m("n").asInstanceOf[Long] * state.schema.defaultSize + localBytes <= budget
+    while (!done && !fits && round < rounds.getOrElse(MaxRounds)) {
       val t0 = System.nanoTime()
       val (next, m2) = checkpoint(step(state))
-      done = m2("n") == 0L || (m2 == m && confirm(state, next))
+      round += 1
+      done = m2("n") == 0L || rounds.contains(round) ||
+        (rounds.isEmpty && m2 == m && confirm(state, next))
       state = next
       m = m2
-      round += 1
       graft.StructuredLog.info("fixpoint_round", "op" -> op, "round" -> round,
         "rows" -> m("n"), "ms" -> (System.nanoTime() - t0) / 1000000)
     }
     if (fits) {
       val t0 = System.nanoTime()
       val out = init.sparkSession.createDataFrame(
-        local.get(state.collect()).asJava, state.schema)
+        local.get(state.collect(), round).asJava, state.schema)
       graft.StructuredLog.info("fixpoint_converged", "op" -> op, "rounds" -> round,
         "local" -> true, "rows" -> m("n"), "ms" -> (System.nanoTime() - t0) / 1000000)
       out

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -11,13 +11,19 @@ import org.apache.spark.sql.types.DecimalType
   * leaf edit scores low), which is a principled "pick the canonical
   * variant" signal alongside SemDeDup's max-norm heuristic.
   *
-  * Scale design: classic distributed PageRank — each iteration is one
-  * join (rank × out-edges) + one aggregate (sum contributions per
-  * destination), both shuffling on the node id, so K iterations cost K
-  * bounded shuffles over |E| rows. No driver-side collection; the node
-  * count enters as a one-row broadcast. Iterations are FIXED (k=3), not
-  * run-to-convergence: the result is a deterministic dataflow any engine
-  * can replay — which is also what makes it oracle-checkable.
+  * Scale design: classic distributed PageRank — each round is one join
+  * (rank × out-edges) + one aggregate (sum contributions per destination),
+  * both shuffling on the node id, so K rounds cost K bounded shuffles over
+  * |E| rows; the rounds run through [[Fixpoint]] with a fixed round count,
+  * whose per-round checkpoint keeps the plan linear in K. What Spark would
+  * broadcast, the loop may collect: once the ranked class graph (its rows ×
+  * the row's `defaultSize`, plus 16 B per directed edge) fits
+  * `spark.sql.autoBroadcastJoinThreshold`, the class graph is collected and
+  * the rounds run in driver memory with the same arithmetic
+  * ([[pageRankRounds]]); a threshold of -1 keeps every round distributed.
+  * Iterations are FIXED (k=3), not run-to-convergence: the result is a
+  * deterministic dataflow any engine can replay — which is also what makes
+  * it oracle-checkable.
   *
   * Cross-engine exactness discipline (the q_lm_score/q_ewma playbook):
   * every per-edge contribution is rounded to 12 dp and summed as
@@ -30,38 +36,6 @@ object Graph {
 
   private val damping = 0.85
 
-  /** K fixed PageRank iterations over an undirected edge list
-    * (src < dst pairs; both directions materialize internally). The pair
-    * plan is localCheckpoint'd first — it feeds deg plus one join per
-    * iteration, and without the lineage cut Catalyst would re-evaluate
-    * the (expensive) candidate-generation subtree k+1 times (the cut
-    * [[Fixpoint]] makes every round). */
-  def pageRank(pairs: DataFrame, k: Int): DataFrame = {
-    val p = pairs.localCheckpoint()
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val deg = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg"))
-    val n = deg.agg(count(lit(1)).as("n"))
-    var pr = deg.crossJoin(n)
-      .select(col("id"), col("deg"), col("n"),
-        round(lit(1.0) / col("n"), 12).as("pr"))
-    for (_ <- 1 to k) {
-      val contribs = pr
-        .join(edges, col("id") === col("src"))
-        .select(col("dst"),
-          round(col("pr") / col("deg"), 12).cast(DecimalType(28, 12)).as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      pr = pr.join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"), col("deg"), col("n"),
-          round(lit(1 - damping) / col("n") +
-            lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 12)
-            .as("pr"))
-    }
-    pr.select(col("id").as("doc_id"), col("deg").cast("long").as("degree"),
-      col("pr").as("pagerank"))
-  }
-
   /** PageRank over the near-dup graph of a (doc_id, text) corpus, computed
     * on the TEXT-IDENTITY QUOTIENT (the docTriangleCounts/docKCore
     * discipline). Members of an exact-dup class have identical
@@ -70,10 +44,11 @@ object Graph {
     * multiplicity weights and only the final output expands to members.
     * The expanded form's per-iteration join shuffles |E| rows where |E| is
     * quadratic in replication (914M directed edges on the 1000× probe
-    * corpus — the per-doc [[pageRank]] exhausted shuffle disk there);
-    * here every exchange is linear in distinct texts.
+    * corpus — the per-doc form exhausted shuffle disk there); here every
+    * exchange is linear in distinct texts.
     *
-    * Bit-exactness with [[pageRank]] over the expanded pair set (law in
+    * Bit-exactness with per-doc PageRank over the expanded pair set (the
+    * oracle the specs keep, and the q_pagerank oracle SQL; law in
     * GraphSpec): a member of class C receives (m_C − 1) copies of C's
     * per-edge contribution c_C plus m_D copies of c_D per neighbor class
     * D. The per-doc form sums those copies as DECIMAL(28,12); here the
@@ -89,51 +64,109 @@ object Graph {
         sort_array(collect_list(col("doc_id"))).as("members"))
       .localCheckpoint()
     val reps = clusters.select(col("gid").as("doc_id"), col("text"))
-    val repPairs = Dedup.minhashRepPairs(reps)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val eDir = repPairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(repPairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val eDir = Dedup.minhashRepPairs(reps)
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
     // a class is an intra-clique iff its copies would pair in the expanded
     // graph — the exact within-class condition of minhashNearDupPairsOf
-    val intra = clusters
-      .withColumn("clique",
-        col("m") >= 2 && size(split(col("text"), " ")) >= 3 &&
-          Sketches.jaccardShingles(col("text"), col("text"), 3) >= 0.8)
-      .select(col("gid"), col("m"), col("members"), col("clique"))
-    val nbm = eDir
-      .join(clusters.select(col("gid").as("src"), col("m").as("msrc")), "src")
+    val nodes = clusters.select(col("gid"), col("m"), col("members"),
+      (col("m") >= 2 && size(split(col("text"), " ")) >= 3 &&
+        Sketches.jaccardShingles(col("text"), col("text"), 3) >= 0.8).as("clique"))
+    classPageRank(nodes, eDir, k).repartition(np)
+      .select(explode(col("members")).as("doc_id"),
+        col("deg").cast("long").as("degree"), col("pr").as("pagerank"))
+  }
+
+  /** [[docPageRank]]'s class-level iteration: `k` PageRank rounds over a
+    * class graph, run through [[Fixpoint]] as op `docPageRank`. `nodes`
+    * holds one row per class — `gid`, its multiplicity `m`, whether its
+    * members pair with each other (`clique`), and any columns to pass
+    * through; `edges` holds the directed class edges (`src`, `dst`), both
+    * directions of each. A class of degree 0 drops out. Returns the nodes'
+    * columns plus `deg`, `n` (the expanded node count) and `pr`.
+    *
+    * The edge list is checkpointed once, its row count observed on that
+    * job: the local finish's budget is the state's rows × `defaultSize`
+    * plus that count × 16 B, and within it the finish collects the edges
+    * and runs every round left in driver memory. */
+  private[graft] def classPageRank(nodes: DataFrame, edges: DataFrame, k: Int): DataFrame = {
+    val edgeCount = Observation()
+    val e = edges.select(col("src"), col("dst"))
+      .observe(edgeCount, count(lit(1)).as("n")).localCheckpoint()
+    val nbm = e
+      .join(nodes.select(col("gid").as("src"), col("m").as("msrc")), "src")
       .groupBy(col("dst").as("gid")).agg(sum(col("msrc")).as("nbm"))
-    val nodes = intra.join(nbm, Seq("gid"), "left")
+    val ranked = nodes.join(nbm, Seq("gid"), "left")
       .withColumn("deg",
         when(col("clique"), col("m") - 1).otherwise(lit(0L)) +
           coalesce(col("nbm"), lit(0L)))
+      .drop("nbm")
       .filter(col("deg") > 0)
-    val n = nodes.agg(sum(col("m")).as("n"))
-    var pr = nodes.crossJoin(broadcast(n))
-      .select(col("gid"), col("m"), col("members"), col("clique"), col("deg"),
-        col("n"), round(lit(1.0) / col("n"), 12).as("pr"))
-    for (_ <- 1 to k) {
+    val n = ranked.agg(sum(col("m")).as("n"))
+    val init = ranked.crossJoin(broadcast(n))
+      .withColumn("pr", round(lit(1.0) / col("n"), 12))
+    Fixpoint.run("docPageRank", init, rounds = Some(k),
+        local = Some((state, done) => pageRankRounds(state, e.collect(), k - done)),
+        localBytes = edgeCount.get("n").asInstanceOf[Long] * e.schema.defaultSize) { pr =>
       val c = pr.withColumn("c",
         round(col("pr") / col("deg"), 12).cast(DecimalType(13, 12)))
       val inter = c
         .select(col("gid").as("src"),
           (col("c") * col("m").cast(DecimalType(12, 0))).as("w"))
-        .join(eDir, "src")
+        .join(e, "src")
         .groupBy(col("dst")).agg(sum(col("w")).as("si"))
-      pr = c.join(inter, col("gid") === col("dst"), "left")
-        .select(col("gid"), col("m"), col("members"), col("clique"),
-          col("deg"), col("n"),
+      c.join(inter, col("gid") === col("dst"), "left")
+        .withColumn("pr",
           round(lit(1 - damping) / col("n") + lit(damping) *
             (when(col("clique"),
               col("c") * (col("m") - 1).cast(DecimalType(12, 0)))
               .otherwise(lit(BigDecimal(0)).cast(DecimalType(26, 12))) +
               coalesce(col("si"), lit(BigDecimal(0)).cast(DecimalType(36, 12))))
-              .cast("double"), 12)
-            .as("pr"))
+              .cast("double"), 12))
+        .select(pr.columns.map(col): _*)
     }
-    pr.repartition(np)
-      .select(explode(col("members")).as("doc_id"),
-        col("deg").cast("long").as("degree"), col("pr").as("pagerank"))
+  }
+
+  /** `rounds` rounds of [[classPageRank]] in driver memory, from its
+    * collected state rows and directed edge rows (src, dst), as plain
+    * arrays. Each step replays Spark's arithmetic bit for bit, so the rows
+    * equal the distributed rounds' (law in GraphSpec):
+    *   - `round(x, 12)` is HALF_UP on `BigDecimal(x)`, which Spark's
+    *     `RoundBase` builds through `Double.toString`;
+    *   - the `DECIMAL(13,12)` cast of `round(pr / deg, 12)` is the same
+    *     decimal, HALF_UP to scale 12;
+    *   - `c × m` is the exact `DECIMAL(13,12) × DECIMAL(12,0)` product, and
+    *     the per-destination sums are exact decimal sums, so their order
+    *     does not matter;
+    *   - the intra-clique term plus the inter-class sum becomes a double as
+    *     `Decimal.toDouble` does, through `BigDecimal.doubleValue`. */
+  private def pageRankRounds(state: Array[Row], edges: Array[Row], rounds: Int): Seq[Row] = {
+    import java.math.{BigDecimal => JDec, RoundingMode}
+    def dec12(x: Double) =
+      new JDec(java.lang.Double.toString(x)).setScale(12, RoundingMode.HALF_UP)
+    def round12(x: Double) = dec12(x).doubleValue
+    val rows = state.sortBy(_.getAs[Long]("gid"))
+    val ids = rows.map(_.getAs[Long]("gid"))
+    val m = rows.map(_.getAs[Long]("m"))
+    val deg = rows.map(_.getAs[Long]("deg"))
+    val clique = rows.map(_.getAs[Boolean]("clique"))
+    val n = rows.head.getAs[Long]("n").toDouble
+    def idx(id: Long) = java.util.Arrays.binarySearch(ids, id)
+    val src = edges.map(r => idx(r.getLong(0)))
+    val dst = edges.map(r => idx(r.getLong(1)))
+    def step(pr: Array[Double]): Array[Double] = {
+      val c = Array.tabulate(ids.length)(i => dec12(round12(pr(i) / deg(i))))
+      val s = Array.tabulate(ids.length)(i =>
+        if (clique(i)) c(i).multiply(JDec.valueOf(m(i) - 1)) else JDec.ZERO)
+      for (j <- src.indices)
+        s(dst(j)) = s(dst(j)).add(c(src(j)).multiply(JDec.valueOf(m(src(j)))))
+      s.map(x => round12((1 - damping) / n + damping * x.doubleValue))
+    }
+    val pr = (1 to rounds).foldLeft(rows.map(_.getAs[Double]("pr")))((p, _) => step(p))
+    val iPr = rows.head.fieldIndex("pr")
+    rows.indices.map(i => Row.fromSeq(rows(i).toSeq.updated(iPr, pr(i))))
   }
 
   /** Per-node triangle counts over an undirected edge list — the local
@@ -337,8 +370,9 @@ object Graph {
     // PageRank over the exact near-dup graph (≥0.8 jaccard pair set, the
     // q_dedup_minhash_lsh semantics), computed on the text-identity
     // quotient graph with multiplicity-weighted iterations — bit-identical
-    // to pageRank over the expanded pair set (law in GraphSpec), linear in
-    // distinct texts where the expanded form is quadratic in replication
+    // to per-doc PageRank over the expanded pair set (law in GraphSpec),
+    // linear in distinct texts where the expanded form is quadratic in
+    // replication
     "q_pagerank" -> ((s, dir) =>
       docPageRank(graft.Tables.load(s, dir, "documents"), 3)
         .orderBy(col("doc_id"))),

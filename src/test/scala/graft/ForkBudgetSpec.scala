@@ -21,7 +21,11 @@ package graft
   * is safe against any plausible background. An absolute ceiling on the
   * Nio side pins the batch floor itself; the Nio query runs twice and the
   * smaller count is asserted, so one burst of ambient forks during one
-  * run cannot fail the guard.
+  * run cannot fail the guard. The ceiling (100) sits ~4× above the
+  * measured floor (22-24 forks) and below the chmod-per-file layer alone
+  * (a Nio manager that creates its files through Hadoop's
+  * `RawLocalFileSystem` read 167-193), so it catches that regression on
+  * its own, without the differential.
   */
 class ForkBudgetSpec extends SparkSpec {
 
@@ -67,7 +71,7 @@ class ForkBudgetSpec extends SparkSpec {
         s"stat (nio=$nioForks, fileContext=$defForks) — if this fails " +
         s"because defForks collapsed, the runtime gained a fork-free " +
         s"default and this guard can retire")
-    assert(nioForks < 200,
+    assert(nioForks < 100,
       s"fork budget exceeded under NioCheckpointFileManager: $nioForks " +
         s"processes created during one streaming query — a write path " +
         s"is exec'ing per file again")

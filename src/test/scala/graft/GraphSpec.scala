@@ -17,7 +17,7 @@ class GraphSpec extends SparkSpec {
     //   degree: 2:2, others 1. Node 2 must outrank 1/3; 4/5 sit at the
     //   two-clique fixed point pr = 1/5 exactly (regular component).
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val pr = Graph.pageRank(pairs, 3).collect()
+    val pr = operators.PlainPageRank.pageRank(pairs, 3).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(pr.keySet == Set(1L, 2L, 3L, 4L, 5L))
     // undirected graph, no dangling mass: ranks stay a distribution
@@ -92,19 +92,94 @@ class GraphSpec extends SparkSpec {
       7L -> (1 to 20).map(i => s"z$i").mkString(" ")).toDF("doc_id", "text")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val quot = Graph.docPageRank(docs, 3).collect().map(key).sortBy(_._1).toSeq
-    val plain = Graph.pageRank(
-      Dedup.minhashNearDupPairsOf(docs).select("doc_a", "doc_b"), 3)
-      .collect().map(key).sortBy(_._1).toSeq
-    assert(quot == plain, s"quot=$quot\nplain=$plain")
-    assert(quot.map(_._1) == (1L to 6L) && !quot.exists(_._1 == 7L))
-    // corpus-level bit-equality too (the real query's input)
-    val qQuot = Queries.all("q_pagerank")(spark, sfDir)
-      .collect().map(key).sortBy(_._1).toSeq
-    val qPlain = Graph.pageRank(
-      Dedup.minhashNearDupPairs(spark, sfDir).select("doc_a", "doc_b"), 3)
-      .collect().map(key).sortBy(_._1).toSeq
-    assert(qQuot == qPlain)
+    // under the default budget the class graph is ranked on the driver;
+    // with broadcasts off every round runs distributed
+    for (distributed <- Seq(false, true)) {
+      def under[T](body: => T) = if (distributed) withoutBroadcast(body) else body
+      val what = if (distributed) "distributed rounds" else "driver rounds"
+      under {
+        val quot = Graph.docPageRank(docs, 3).collect().map(key).sortBy(_._1).toSeq
+        val plain = operators.PlainPageRank.pageRank(
+          Dedup.minhashNearDupPairsOf(docs).select("doc_a", "doc_b"), 3)
+          .collect().map(key).sortBy(_._1).toSeq
+        assert(quot == plain, s"$what: quot=$quot\nplain=$plain")
+        assert(quot.map(_._1) == (1L to 6L) && !quot.exists(_._1 == 7L), what)
+        // corpus-level bit-equality too (the real query's input)
+        val qQuot = Queries.all("q_pagerank")(spark, sfDir)
+          .collect().map(key).sortBy(_._1).toSeq
+        val qPlain = operators.PlainPageRank.pageRank(
+          Dedup.minhashNearDupPairs(spark, sfDir).select("doc_a", "doc_b"), 3)
+          .collect().map(key).sortBy(_._1).toSeq
+        assert(qQuot == qPlain, what)
+      }
+    }
+  }
+
+  test("pagerank driver rounds equal the distributed rounds bit-for-bit on random class graphs") {
+    // the converged event of every docPageRank call, as key→value maps
+    val converged = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+    val listener = (_: String, l: String) => synchronized {
+      if (l.startsWith("event=fixpoint_converged op=docPageRank ")) converged += l
+        .split(" ").map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap: Unit
+    }
+    def ranksOf(nodes: org.apache.spark.sql.DataFrame,
+                edges: org.apache.spark.sql.DataFrame, k: Int) = {
+      converged.clear()
+      StructuredLog.addListener(listener)
+      val rows = try Graph.classPageRank(nodes, edges, k)
+        .select("gid", "m", "members", "deg", "pr").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3),
+          r.getDouble(4))).sortBy(_._1).toSeq
+      finally StructuredLog.removeListener(listener)
+      (rows, converged.toSeq)
+    }
+    for (seed <- 1 to 20) {
+      val rnd = new scala.util.Random(seed)
+      val ids = Seq.fill(8 + rnd.nextInt(10))(rnd.nextLong() & ((1L << 40) - 1)).distinct
+      // (gid, m, clique, members): multiplicities 1-4, a class of m >= 2 is
+      // a clique or not; ids(1) is a non-clique class of 3 and ids(2) a
+      // clique of 3, so both occur on every seed
+      val classes = ids.zipWithIndex.map { case (id, i) =>
+        val m = if (i == 1 || i == 2) 3L else 1L + rnd.nextInt(4)
+        (id, m, i == 2 || (i != 1 && m >= 2 && rnd.nextBoolean()), Seq(id))
+      }
+      // a clique class with no edge, ranked on its clique alone, and a
+      // non-clique class with no edge, of degree 0, which drops out. The
+      // clique's size pads the expanded node count n to the next total at
+      // which 0.15 / n is a finite decimal (3·2^a·5^b or 2^a·5^b), so the
+      // rank updates land on exact 12-dp rounding ties — where HALF_UP, the
+      // exact decimal sums and every double step decide the last digit
+      def strip(x: Long): Long =
+        if (x % 2 == 0) strip(x / 2) else if (x % 5 == 0) strip(x / 5) else x
+      val others = classes.map(_._2).sum
+      val n = Iterator.iterate(others + 2)(_ + 1).find(t => Set(1L, 3L)(strip(t))).get
+      val cliqueOnly = (1L << 41, n - others, true, Seq(1L << 41))
+      val lone = ((1L << 41) + 1, 2L, false, Seq((1L << 41) + 1))
+      val nodes = rnd.shuffle(classes :+ cliqueOnly :+ lone)
+        .toDF("gid", "m", "clique", "members")
+      // ids.head is a hub adjacent to every other class; the rest are
+      // random distinct pairs, each in both directions
+      val und = (ids.tail.map(ids.head -> _) ++ Seq.fill(ids.size)(
+        (ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size)))))
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => (a min b, a max b) }.distinct
+      val edges = rnd.shuffle(und ++ und.map(_.swap)).toDF("src", "dst")
+      val k = 2 + seed % 3
+      val (local, localEvents) = ranksOf(nodes, edges, k)
+      val (rounds, roundsEvents) = withoutBroadcast(ranksOf(nodes, edges, k))
+      assert(local == rounds, s"seed $seed k $k: local=$local\nrounds=$rounds")
+      assert(localEvents.map(e => (e("local"), e("rounds"))) == Seq(("true", "0")),
+        s"seed $seed: $localEvents")
+      assert(roundsEvents.map(e => (e("local"), e("rounds"))) == Seq(("false", k.toString)),
+        s"seed $seed: $roundsEvents")
+      // the degree-0 class drops out; the clique-only class keeps its m - 1
+      assert(local.map(_._1) == (ids :+ cliqueOnly._1).sorted, s"seed $seed: $local")
+      assert(local.find(_._1 == cliqueOnly._1).map(_._4).contains(cliqueOnly._2 - 1))
+      // an undirected graph has no dangling mass: the expanded ranks stay
+      // a distribution
+      val mass = local.map { case (_, m, _, _, pr) => m * pr }.sum
+      assert(math.abs(mass - 1.0) < 1e-6, s"seed $seed: mass $mass")
+    }
   }
 
   test("kcore peels pendant cascades to the clique core (k=2, k=3)") {
@@ -300,8 +375,8 @@ class GraphSpec extends SparkSpec {
     val pairs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id").as("doc_a"),
         (col("doc_id") % 7 + 1000).as("doc_b")) // synthetic skewed graph
-    val a = Graph.pageRank(pairs, 3).orderBy("doc_id").collect().toSeq
-    val b = Graph.pageRank(pairs.repartition(13), 3)
+    val a = operators.PlainPageRank.pageRank(pairs, 3).orderBy("doc_id").collect().toSeq
+    val b = operators.PlainPageRank.pageRank(pairs.repartition(13), 3)
       .orderBy("doc_id").collect().toSeq
     assert(a == b)
   }

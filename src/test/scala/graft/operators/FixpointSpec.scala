@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, StructuredLog}
 
-/** The shared fixpoint loop: its stop rule, round cap, null guard and
-  * events, and the operators that run through it — the three in src/main
-  * and the label-propagation reference ([[LabelPropagation]]). */
+/** The shared fixpoint loop: its stop rule, round cap, fixed rounds, null
+  * guard, local finish and events, and the operators that run through it —
+  * the four in src/main and the label-propagation reference
+  * ([[LabelPropagation]]). */
 class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
   import spark.implicits._
 
@@ -82,6 +83,33 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
     assert(off("local") == "false", off)
   }
 
+  test("pagerank finishes on the driver exactly when its class graph fits the broadcast budget") {
+    // a path of 5 classes of multiplicity 2, none a clique: 5 state rows
+    // and 8 directed edges
+    val nodes = (1L to 5L).map(i => (i, 2L, false, Seq(i)))
+      .toDF("gid", "m", "clique", "members")
+    val edges = (1L to 4L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
+    // a state row is gid, m, members (one long), deg, n and pr at 8 B each
+    // plus the 1 B clique flag; a directed edge is two longs
+    val bytes = 5 * (6 * 8L + 1) + 8 * EdgeBytes
+    def ranked(budget: Long) = eventsOf(withConf(
+      "spark.sql.autoBroadcastJoinThreshold", budget.toString)(
+      Graph.classPageRank(nodes, edges, 3).select("gid", "pr").as[(Long, Double)]
+        .collect().sortBy(_._1).toSeq))
+    // one byte short: all three rounds run distributed, one event each
+    val (over, overEvents) = ranked(bytes - 1)
+    assert(overEvents.map(e => (e("event"), e.get("round"))) ==
+      (1 to 3).map(r => ("fixpoint_round", Some(r.toString))) :+
+        (("fixpoint_converged", None)), overEvents)
+    assert(overEvents.last("local") == "false" && overEvents.last("rounds") == "3", overEvents)
+    // at exactly the budget the initial state is collected: no round at all
+    val (under, underEvents) = ranked(bytes)
+    val converged = underEvents.loneElement
+    assert(converged("local") == "true" && converged("rounds") == "0" &&
+      converged("rows") == "5", converged)
+    assert(under == over && over.isRight, s"under=$under\nover=$over")
+  }
+
   test("label propagation releases its cached edge list when it throws") {
     def persisted = spark.sparkContext.getPersistentRDDs
     val before = persisted.keySet
@@ -133,12 +161,14 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val (out, events) = eventsOf(Seq(
       LabelPropagation.connectedComponents(pairs), Dedup.connectedComponentsLss(pairs),
-      Graph.kCore(pairs, 2), Graph.docKCore(docs, 2)).map(_.isEmpty))
-    assert(out == Right(Seq(true, true, true, true)), out)
+      Graph.kCore(pairs, 2), Graph.docKCore(docs, 2), Graph.docPageRank(docs, 3))
+      .map(_.isEmpty))
+    assert(out == Right(Seq(true, true, true, true, true)), out)
     assert(events.map(e => (e("event"), e("op"), e("rounds"))) == Seq(
       ("fixpoint_converged", "connectedComponents", "0"),
       ("fixpoint_converged", "connectedComponentsLss", "0"),
       ("fixpoint_converged", "kCore", "0"),
-      ("fixpoint_converged", "docKCore", "0")), events)
+      ("fixpoint_converged", "docKCore", "0"),
+      ("fixpoint_converged", "docPageRank", "0")), events)
   }
 }

@@ -4,7 +4,11 @@
 # JVM through `graft.Probe time` (which itself takes the min of 2 runs per
 # query and checks their checksums).
 # Usage:
-#   tools/ab.sh <classesA> <classesB> <queries> [sfDir] [rounds]
+#   tools/ab.sh <classesA> <classesB> <queries> [sfDir] [rounds] [k=v]...
+# Any k=v after the rounds is a session conf override passed to every run
+# (as `graft.Probe time` takes them), e.g.
+# spark.sql.autoBroadcastJoinThreshold=-1 to keep every fixpoint round
+# distributed; the sfDir and rounds must then be given.
 # Prints, per query, each side's min over its successful runs and the number
 # of samples behind it. Alternating order cancels slow host drift; per-query
 # min cancels JIT/GC noise between JVMs. A run that exits non-zero prints a
@@ -12,13 +16,14 @@
 set -u
 A="$1"; B="$2"; Q="$3"; N="${5:-3}"
 SF=(); [ -n "${4:-}" ] && SF=("$4")
+CONF=("${@:6}")
 samples=$(mktemp); trap 'rm -f "$samples"' EXIT
 failed=0
 for i in $(seq 1 "$N"); do
   sides="A B"; [ $((i % 2)) -eq 0 ] && sides="B A"
   for side in $sides; do
     if [ "$side" = A ]; then cls="$A"; else cls="$B"; fi
-    out=$(GRAFT_CLASSES="$cls" tools/run.sh graft.Probe time "$Q" "${SF[@]}" 2>/dev/null)
+    out=$(GRAFT_CLASSES="$cls" tools/run.sh graft.Probe time "$Q" "${SF[@]}" "${CONF[@]}" 2>/dev/null)
     rc=$?
     if [ "$rc" -ne 0 ]; then
       echo "FAILED side $side round $i (exit $rc, classes $cls)"
