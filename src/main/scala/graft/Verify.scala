@@ -11,7 +11,12 @@ import scala.concurrent.duration.Duration
   * bounded by the slowest queries instead of the sum — the per-query fixed
   * overheads (streaming micro-batch setup above all) overlap. All session
   * state touched by queries is safe under this: memory-sink names are
-  * uniquified, temp view names are per-query, conf sets are idempotent. */
+  * uniquified, temp view names are per-query, conf sets are idempotent.
+  *
+  * Queries are submitted longest first (LPT) from the committed table of
+  * last-run seconds, `graft/verify_seconds.txt`, and a name the table does
+  * not know goes first: a slow query that starts late would otherwise run
+  * on alone after the rest have drained. The order changes no result. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -31,7 +36,9 @@ object Verify {
     val pool = Executors.newFixedThreadPool(workers)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val errors = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val futures = SparkEntry.queries.toSeq.filter(t => nameFilter(t._1)).map { case (name, fn) =>
+    val start = System.nanoTime()
+    val queries = longestFirst(SparkEntry.queries.toSeq.filter(t => nameFilter(t._1)))
+    val futures = queries.map { case (name, fn) =>
       Future {
         val t0 = System.nanoTime()
         try {
@@ -46,6 +53,8 @@ object Verify {
     }
     futures.foreach(Await.ready(_, Duration.Inf))
     pool.shutdown()
+    System.err.println(f"[verify] dump phase ${(System.nanoTime() - start) / 1e9}%.1f s " +
+      s"(${futures.size} queries, $workers workers)")
     // A failed query must be LOUD in the artifact, not silently absent from
     // the correctness record (round 6: 27 queries vanished that way) —
     // errors.json names every failure and the summary line survives in logs.
@@ -73,5 +82,18 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** `queries` in descending order of their seconds in the last-run table,
+    * unknown names first (in their given order). */
+  private[graft] def longestFirst[T](queries: Seq[(String, T)]): Seq[(String, T)] = {
+    val seconds = Option(getClass.getResourceAsStream("/graft/verify_seconds.txt")).fold(
+      Map.empty[String, Double]) { in =>
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filterNot(_.startsWith("#")).map(_.split(" "))
+        .flatMap { case Array(q, s) => s.toDoubleOption.map(q -> _); case _ => None }.toMap
+      finally in.close()
+    }
+    queries.sortBy { case (name, _) => -seconds.getOrElse(name, Double.PositiveInfinity) }
   }
 }

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.Sketches
@@ -16,6 +19,15 @@ import graft.functions.Sketches
   * quadratic n-gram query is kept as the correctness baseline the LSH
   * variants are judged against (its own Scaladoc says so); at cluster scale
   * you run the LSH one.
+  *
+  * The near-dup graph operators — MinHash pairs, LSS clusters, and
+  * `Graph`'s PageRank, triangles and k-core — share one builder of the
+  * verified class graph ([[nearDupGraph]]). The broadcast-budget rule
+  * ("what Spark would broadcast, an operator may collect") applies to that
+  * RAW class graph: when its bound fits
+  * `spark.sql.autoBroadcastJoinThreshold`, the graph is collected once and
+  * the pairs, clusters and ranks finish on the driver; above it, or at -1,
+  * they run distributed from the builder's two checkpoints.
   */
 object Dedup {
   type Q = (SparkSession, String) => DataFrame
@@ -210,27 +222,8 @@ object Dedup {
   private[graft] def minhashNearDupPairs(s: SparkSession, dir: String): DataFrame =
     minhashNearDupPairsOf(docs(s, dir))
 
-  /** Same pipeline over an arbitrary (doc_id, text) frame — lets callers
-    * (e.g. the quotient-graph triangle census) run candidate generation
-    * over a collapsed representative set instead of the raw corpus.
-    *
-    * Exact-dup quotient FIRST (the [[embeddingLshPairs]] discipline,
-    * applied here after the 1000× probe): banding and jaccard
-    * verification run once per DISTINCT text; member pairs expand as the
-    * FINAL step, directly into the true output. The per-copy form's
-    * in-bucket C(n,2) expansion is quadratic in replication — on the
-    * 1000× probe corpus (exact-dup classes to ~1000 members) it emitted
-    * tens of billions of candidate rows pre-distinct and exhausted 70+ GB
-    * of shuffle disk. Intermediate volume here is linear in distinct
-    * texts; the pair OUTPUT stays quadratic in replication by pair
-    * semantics (the clusters form is the decision-scale path).
-    * Side effect: the bucket cap now counts distinct texts, not copies —
-    * strictly better recall under the same cap. */
   /** LSH candidate generation + exact-jaccard verification over a frame of
-    * DISTINCT-text representatives — the quotient core shared by
-    * [[minhashNearDupPairsOf]] and the quotient-graph operators
-    * (docPageRank / triangle census / k-core), which consume the verified
-    * rep pairs directly and never need the member expansion. */
+    * DISTINCT-text representatives — the rep edges of [[nearDupGraph]]. */
   private[graft] def minhashRepPairs(reps: DataFrame): DataFrame =
     minhashRepPairsCfg(reps, 4, 16)
 
@@ -255,13 +248,137 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  private[graft] def minhashNearDupPairsOf(d: DataFrame): DataFrame = {
-    val np = d.sparkSession.sparkContext.defaultParallelism
-    val clusters = d.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("rep"),
+  /** One exact-dup class of the near-dup graph in driver memory: its
+    * representative `gid` (the min doc_id), multiplicity `m`, sorted
+    * `members`, and the 3-shingle jaccard of its text with itself, which
+    * scores its within-class pairs. */
+  private[graft] final case class DupClass(gid: Long, m: Long, members: Array[Long],
+      jaccard: Double) {
+    /** Its copies pair with each other: the within-class pair condition. */
+    def clique: Boolean = m >= 2 && jaccard >= 0.8
+  }
+  /** A verified rep edge between two classes, by gid (`a` < `b`). */
+  private[graft] final case class RepEdge(a: Long, b: Long, jaccard: Double)
+  /** The touched classes (m ≥ 2, or an edge endpoint) and every rep edge,
+    * collected. */
+  private[graft] final case class LocalGraph(classes: Array[DupClass], edges: Array[RepEdge])
+
+  /** The verified near-dup class graph of a corpus, built once per call by
+    * [[nearDupGraph]]: `classes` (gid, m, members, text — one row per
+    * distinct text of ≥ 3 words) and `edges` (doc_a, doc_b, jaccard — the
+    * verified rep pairs between gids), both localCheckpointed, and `local`
+    * when the graph fits the broadcast budget. */
+  private[graft] final case class NearDupGraph(classes: DataFrame, edges: DataFrame,
+      local: Option[LocalGraph])
+
+  /** The text-identity quotient of a (doc_id, text) frame and its verified
+    * rep edges, shared by every near-dup graph operator (pairs, LSS
+    * clusters, PageRank, triangles, k-core). Identical texts have identical
+    * neighbourhoods in the near-dup graph, so banding and verification run
+    * once per distinct text and each operator expands members last.
+    *
+    * Two checkpoints: the class frame (docs with ≥ 3 words grouped by text;
+    * its job also observes `c2`, the classes with m ≥ 2, and `mm`, their
+    * Σ m) and the rep edges ([[minhashRepPairs]]; its job observes their
+    * count E). From those metrics, before anything is collected, the
+    * touched classes with their members are bounded by
+    *   E × the edge row's `defaultSize` + (2E + c2) × the class row's
+    *   `defaultSize` + (2E + mm) × 8 B,
+    * and when that fits the broadcast budget (and `collect` is set) the
+    * edges and the touched classes — with their within-class jaccard — are
+    * collected once, so the operators finish on the driver; at sf0.1 the
+    * graph is ~31 KB against the 10 MB default. Above the budget, or at -1,
+    * the operators run distributed from the same two checkpoints. One
+    * `neardup_graph` event per call reports `local`, `classes`, `edges`,
+    * `bytes` (the bound) and `ms`. */
+  private[graft] def nearDupGraph(d: DataFrame, collect: Boolean = true): NearDupGraph = {
+    val t0 = System.nanoTime()
+    val classObs = Observation()
+    val edgeObs = Observation()
+    val classes = d.filter(size(split(col("text"), " ")) >= 3)
+      .groupBy(col("text"))
+      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
         sort_array(collect_list(col("doc_id"))).as("members"))
-    val reps = clusters.select(col("rep").as("doc_id"), col("text"))
-    expandTextRepPairs(minhashRepPairs(reps), clusters, np)
+      .select(col("gid"), col("m"), col("members"), col("text"))
+      .observe(classObs, count(lit(1)).as("n"), count(when(col("m") >= 2, 1)).as("c2"),
+        coalesce(sum(when(col("m") >= 2, col("m"))), lit(0L)).as("mm"))
+      .localCheckpoint()
+    val edges = minhashRepPairs(classes.select(col("gid").as("doc_id"), col("text")))
+      .observe(edgeObs, count(lit(1)).as("e")).localCheckpoint()
+    val cm = classObs.get
+    val e = edgeObs.get("e").asInstanceOf[Long]
+    val (c2, mm) = (cm("c2").asInstanceOf[Long], cm("mm").asInstanceOf[Long])
+    val bytes = e * edges.schema.defaultSize +
+      (2 * e + c2) * classes.schema.defaultSize + (2 * e + mm) * 8
+    val local = if (!collect || !Fixpoint.fitsBroadcast(d.sparkSession, bytes)) None else {
+      val es = edges.collect().map(r => RepEdge(r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val ends = es.flatMap(x => Seq(x.a, x.b)).distinct.toSeq
+      val cs = classes.filter(col("m") >= 2 || col("gid").isInCollection(ends))
+        .select(col("gid"), col("m"), col("members"),
+          Sketches.jaccardShingles(col("text"), col("text"), 3))
+        .collect().map(r =>
+          DupClass(r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray, r.getDouble(3)))
+      Some(LocalGraph(cs, es))
+    }
+    graft.StructuredLog.info("neardup_graph", "local" -> local.isDefined,
+      "classes" -> cm("n"), "edges" -> e, "bytes" -> bytes,
+      "ms" -> (System.nanoTime() - t0) / 1000000)
+    NearDupGraph(classes, edges, local)
+  }
+
+  private val pairSchema = StructType(Seq(StructField("doc_a", LongType, nullable = false),
+    StructField("doc_b", LongType, nullable = false), StructField("jaccard", DoubleType)))
+
+  /** Near-dup pairs (doc_a < doc_b, jaccard) of an arbitrary (doc_id,
+    * text) frame, over its class graph ([[nearDupGraph]]).
+    *
+    * Exact-dup quotient FIRST (the [[embeddingLshPairs]] discipline,
+    * applied here after the 1000× probe): banding and jaccard
+    * verification run once per DISTINCT text; member pairs expand as the
+    * FINAL step, directly into the true output. The per-copy form's
+    * in-bucket C(n,2) expansion is quadratic in replication — on the
+    * 1000× probe corpus (exact-dup classes to ~1000 members) it emitted
+    * tens of billions of candidate rows pre-distinct and exhausted 70+ GB
+    * of shuffle disk. Intermediate volume here is linear in distinct
+    * texts; the pair OUTPUT stays quadratic in replication by pair
+    * semantics (the clusters form is the decision-scale path).
+    * Side effect: the bucket cap counts distinct texts, not copies —
+    * strictly better recall under the same cap.
+    *
+    * The pairs expand on the driver when the graph was collected and the
+    * exact output — Σ m_a·m_b cross pairs over the edges plus C(m, 2)
+    * within each clique class — fits the broadcast budget too; otherwise
+    * distributed from the graph's checkpoints ([[expandTextRepPairs]]). */
+  private[graft] def minhashNearDupPairsOf(d: DataFrame): DataFrame = {
+    val g = nearDupGraph(d)
+    val s = d.sparkSession
+    g.local.filter(l => Fixpoint.fitsBroadcast(s, pairCount(l) * pairSchema.defaultSize)) match {
+      case Some(l) => s.createDataFrame(localPairs(l).toSeq.asJava, pairSchema)
+      case None => expandTextRepPairs(g.edges, g.classes, s.sparkContext.defaultParallelism)
+    }
+  }
+
+  private def pairCount(l: LocalGraph): Long = {
+    val m = l.classes.map(c => c.gid -> c.m).toMap
+    l.edges.map(e => m(e.a) * m(e.b)).sum +
+      l.classes.filter(_.clique).map(c => c.m * (c.m - 1) / 2).sum
+  }
+
+  /** [[expandTextRepPairs]] on the driver: members × members of each rep
+    * edge as (least, greatest) with the edge's jaccard, then each clique
+    * class's internal pairs in member order. */
+  private def localPairs(l: LocalGraph): Iterator[Row] = {
+    val members = l.classes.map(c => c.gid -> c.members).toMap
+    val cross = l.edges.iterator.flatMap { e =>
+      for (a <- members(e.a).iterator; b <- members(e.b).iterator)
+        yield Row(math.min(a, b), math.max(a, b), e.jaccard)
+    }
+    val within = l.classes.iterator.filter(_.clique).flatMap { c =>
+      val ms = c.members
+      for (i <- ms.indices.iterator; j <- (i + 1 until ms.length).iterator)
+        yield Row(ms(i), ms(j), c.jaccard)
+    }
+    cross ++ within
   }
 
   /** Member expansion shared by the default and auto-banded pair forms:
@@ -274,8 +391,8 @@ object Dedup {
     // frames are tiny, so AQE would coalesce them to one partition and run
     // the member expansion single-core (the standing Generate lesson)
     val cross = repPairs
-      .join(clusters.select(col("rep").as("doc_a"), col("members").as("ms_a")), "doc_a")
-      .join(clusters.select(col("rep").as("doc_b"), col("members").as("ms_b")), "doc_b")
+      .join(clusters.select(col("gid").as("doc_a"), col("members").as("ms_a")), "doc_a")
+      .join(clusters.select(col("gid").as("doc_b"), col("members").as("ms_b")), "doc_b")
       .repartition(np)
       .select(col("jaccard"), explode(col("ms_a")).as("a"), col("ms_b"))
       .select(col("jaccard"), col("a"), explode(col("ms_b")).as("b"))
@@ -358,7 +475,8 @@ object Dedup {
           expr("bit_xor(xxhash64(u, v))").as("x")),
         confirm = (prev, next) =>
           next.except(prev).isEmpty && prev.except(next).isEmpty,
-        local = Some((edges, _) => lssStars(edges))) { edges =>
+        local = Some(edges => lssStars(edges.map(r => (r.getLong(0), r.getLong(1))))
+          .map { case (u, v) => Row(u, v) })) { edges =>
       val nb = bothWays(edges)
       val mins = nb.groupBy(col("c")).agg(min(col("n")).as("mn"))
         .select(col("c"), least(col("c"), col("mn")).as("m"))
@@ -378,16 +496,16 @@ object Dedup {
   }
 
   /** The set large-star/small-star converges to, from an in-memory edge
-    * list of (u, v) longs: (min C, v) for every member v ≠ min C of every
+    * list of (u, v) ids: (min C, v) for every member v ≠ min C of every
     * component C. Union-find over primitive arrays — sorted distinct ids,
     * int parents, each union rooted at the smaller index (so a root is its
     * component's minimum id), path halving — so an edge set at the
     * broadcast budget stays a few tens of MB on the driver. */
-  private def lssStars(edges: Array[Row]): Seq[Row] = {
+  private def lssStars(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
     val ids = new Array[Long](2 * edges.length)
     for (i <- edges.indices) {
-      ids(2 * i) = edges(i).getLong(0)
-      ids(2 * i + 1) = edges(i).getLong(1)
+      ids(2 * i) = edges(i)._1
+      ids(2 * i + 1) = edges(i)._2
     }
     java.util.Arrays.sort(ids)
     var k = 0
@@ -399,11 +517,11 @@ object Dedup {
       i
     }
     def idx(id: Long) = java.util.Arrays.binarySearch(ids, 0, k, id)
-    for (e <- edges) {
-      val (a, b) = (find(idx(e.getLong(0))), find(idx(e.getLong(1))))
+    for ((u, v) <- edges) {
+      val (a, b) = (find(idx(u)), find(idx(v)))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
-    (0 until k).filter(i => find(i) != i).map(i => Row(ids(find(i)), ids(i)))
+    (0 until k).filter(i => find(i) != i).map(i => (ids(find(i)), ids(i)))
   }
 
   /** Near-dup clusters over the text-identity quotient graph, components
@@ -414,35 +532,44 @@ object Dedup {
     * feeds Θ(Σ mᵢ²) clique edges into every LSS round — the 100× probe
     * measured 30.5 s for exactly that reason. Neighborhoods are
     * text-determined (every member has the same jaccard relations as its
-    * representative), so: collapse to one representative per distinct text
-    * (groupBy the text itself — no hash collisions), run candidate
-    * generation + LSS over the representative graph (edge set independent
-    * of duplication depth), and re-expand through the membership join.
+    * representative), so the components run over the class graph
+    * ([[nearDupGraph]]: one node per distinct text, edge set independent
+    * of duplication depth) and members expand last, from the class's own
+    * member list.
     *
-    * Re-expansion is closed-form: a doc's component is its group's
-    * component; a group with m ≥ 2 is clustered even with no cross-text
-    * edge (its own intra-group clique), labeled by its gid; cluster_rep =
+    * Re-expansion is closed-form: a doc's component is its class's
+    * component; a class with m ≥ 2 is clustered even with no cross-text
+    * edge (its own intra-class clique), labeled by its gid; cluster_rep =
     * component-min gid = min doc_id over the component's docs (each gid is
-    * its group's min); cluster_size = Σ m over the component's groups.
+    * its class's min); cluster_size = Σ m over the component's classes.
     * Texts under 3 words produce no shingles and thus no pairs — excluded,
-    * like the raw pipeline. Equality with plain LSS over the uncollapsed
-    * pair set is law-tested on a replicated corpus (`GraphSpec`). */
+    * like the raw pipeline. When the class graph was collected, [[lssStars]]
+    * labels it on the driver; otherwise LSS runs over the rep edges and the
+    * members expand with `explode`. Equality with plain LSS over the
+    * uncollapsed pair set is law-tested on a replicated corpus
+    * (`GraphSpec`). */
   def docNearDupClustersLss(docsDf: DataFrame): DataFrame = {
-    val base = docsDf.select(col("doc_id"), col("text"))
-      .filter(size(split(col("text"), " ")) >= 3)
-    val groups = base.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"))
-      .localCheckpoint() // feeds rep pair-gen, the label join, membership
-    val reps = groups.select(col("gid").as("doc_id"), col("text"))
-    val repLabels = connectedComponentsLss(minhashRepPairs(reps))
-    val g = groups
-      .join(repLabels.withColumnRenamed("id", "gid"), Seq("gid"), "left")
-      .filter(col("m") >= 2 || col("label").isNotNull)
-      .select(col("text"), coalesce(col("label"), col("gid")).as("label"), col("m"))
-    val sizes = g.groupBy(col("label")).agg(sum(col("m")).as("cluster_size"))
-    base.join(g.select(col("text"), col("label")), "text")
-      .join(sizes, "label")
-      .select(col("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
+    val g = nearDupGraph(docsDf.select(col("doc_id"), col("text")))
+    g.local match {
+      case Some(l) =>
+        val label = lssStars(l.edges.map(e => (e.a, e.b))).map(_.swap).toMap
+        val rep = l.classes.map(c => c.gid -> label.getOrElse(c.gid, c.gid)).toMap
+        val size = l.classes.groupMapReduce(c => rep(c.gid))(_.m)(_ + _)
+        val rows = for (c <- l.classes.toSeq; doc <- c.members)
+          yield Row(doc, rep(c.gid), size(rep(c.gid)))
+        docsDf.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+          StructField("doc_id", LongType, nullable = false),
+          StructField("cluster_rep", LongType), StructField("cluster_size", LongType))))
+      case None =>
+        val labels = connectedComponentsLss(g.edges)
+        val c = g.classes
+          .join(labels.withColumnRenamed("id", "gid"), Seq("gid"), "left")
+          .filter(col("m") >= 2 || col("label").isNotNull)
+          .select(col("members"), coalesce(col("label"), col("gid")).as("label"), col("m"))
+        c.join(c.groupBy(col("label")).agg(sum(col("m")).as("cluster_size")), "label")
+          .select(explode(col("members")).as("doc_id"), col("label").as("cluster_rep"),
+            col("cluster_size"))
+    }
   }
 
   /** (doc_id, idx, chunk, k_doc, k_idx): every 10-word chunk of every doc,
@@ -1416,9 +1543,9 @@ object Dedup {
       d: DataFrame): (DataFrame, LshBandConfig) = {
     val np = d.sparkSession.sparkContext.defaultParallelism
     val clusters = d.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("rep"),
+      .agg(min(col("doc_id")).as("gid"),
         sort_array(collect_list(col("doc_id"))).as("members"))
-    val reps = clusters.select(col("rep").as("doc_id"), col("text"))
+    val reps = clusters.select(col("gid").as("doc_id"), col("text"))
     val cfg = autoBandConfigMinhash(reps)
     (expandTextRepPairs(minhashRepPairsCfg(reps, cfg.r, cfg.b), clusters, np),
       cfg)

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The one loop of the iterative operators: connected components by
@@ -34,14 +34,14 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   * Local finish: a caller that can compute its result from a state in
   * driver memory passes `local`. Once a checkpointed state's estimated
-  * size (`n` × the schema's `defaultSize`, plus the `localBytes` the
-  * finish collects besides the state) fits
+  * size (`n` × the schema's `defaultSize`) fits
   * `spark.sql.autoBroadcastJoinThreshold`, the loop collects it, applies
   * `local`, and returns the result as a local frame — what Spark would
-  * broadcast, the loop may collect. At sf0.1 a round on a few hundred rows
-  * costs seconds of per-job overhead and no compute; at scale the loop runs
-  * as before until its state shrinks under the budget. A threshold of -1
-  * turns the local finish off, as it turns broadcasts off.
+  * broadcast, the loop may collect. Large-star/small-star is the one
+  * caller: PageRank and the near-dup operators apply the same rule one
+  * step earlier, to the raw class graph ([[Dedup.nearDupGraph]]), and
+  * reach the loop only above the budget. A threshold of -1 turns the local
+  * finish off, as it turns broadcasts off.
   *
   * `localCheckpoint` does not survive executor loss; at cluster scale a
   * reliable checkpoint directory would replace it here, in one place. */
@@ -51,6 +51,13 @@ private[operators] object Fixpoint {
     * fixpoint throws: a partial propagation or peel would be silently wrong. */
   val MaxRounds = 30
 
+  /** Whether `bytes` fits `spark.sql.autoBroadcastJoinThreshold` (never at
+    * -1): what Spark would broadcast, an operator may collect. */
+  def fitsBroadcast(s: SparkSession, bytes: Long): Boolean = {
+    val budget = s.sessionState.conf.autoBroadcastJoinThreshold
+    budget > 0 && bytes <= budget
+  }
+
   /** Iterate `step` from `init` and return the last (checkpointed) state.
     * Every state, `init` included, is localCheckpointed with `count`
     * observed as `n` next to the `cert` columns. Without `rounds` the loop
@@ -59,8 +66,8 @@ private[operators] object Fixpoint {
     * it runs exactly `k` rounds and consults neither `cert` nor `confirm`.
     * Either way it stops early at an empty state (every caller's step maps
     * the empty frame to itself), and — with `local` — as soon as a
-    * non-empty state fits the broadcast budget: `local(rows, r)` of its
-    * rows, after the `r` rounds run so far, is returned instead. Emits one
+    * non-empty state fits the broadcast budget: `local` of its rows is
+    * returned instead. Emits one
     * `fixpoint_round` event per round (`op`, `round`, `rows`, `ms`) and one
     * `fixpoint_converged` event (`op`, `rounds`, `local`, and on a local
     * finish the collected `rows` and its `ms`); empty input converges after
@@ -68,7 +75,7 @@ private[operators] object Fixpoint {
   def run(op: String, init: DataFrame, cert: Seq[Column] = Nil,
           confirm: (DataFrame, DataFrame) => Boolean = (_, _) => true,
           rounds: Option[Int] = None,
-          local: Option[(Array[Row], Int) => Seq[Row]] = None, localBytes: Long = 0L)
+          local: Option[Array[Row] => Seq[Row]] = None)
          (step: DataFrame => DataFrame): DataFrame = {
     val metrics = count(lit(1)).as("n") +: cert
     def checkpoint(df: DataFrame): (DataFrame, Map[String, Any]) = {
@@ -83,9 +90,8 @@ private[operators] object Fixpoint {
     var (state, m) = checkpoint(init)
     var round = 0
     var done = m("n") == 0L || rounds.contains(0)
-    val budget = init.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    def fits = !done && local.isDefined && budget > 0 &&
-      m("n").asInstanceOf[Long] * state.schema.defaultSize + localBytes <= budget
+    def fits = !done && local.isDefined &&
+      fitsBroadcast(init.sparkSession, m("n").asInstanceOf[Long] * state.schema.defaultSize)
     while (!done && !fits && round < rounds.getOrElse(MaxRounds)) {
       val t0 = System.nanoTime()
       val (next, m2) = checkpoint(step(state))
@@ -100,7 +106,7 @@ private[operators] object Fixpoint {
     if (fits) {
       val t0 = System.nanoTime()
       val out = init.sparkSession.createDataFrame(
-        local.get(state.collect(), round).asJava, state.schema)
+        local.get(state.collect()).asJava, state.schema)
       graft.StructuredLog.info("fixpoint_converged", "op" -> op, "rounds" -> round,
         "local" -> true, "rows" -> m("n"), "ms" -> (System.nanoTime() - t0) / 1000000)
       out

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructField, StructType}
+
+import graft.functions.Sketches
 
 /** Iterative graph analytics over the near-duplicate graph — the step
   * beyond connected components ([[Dedup.connectedComponentsLss]]): PageRank
@@ -16,11 +20,15 @@ import org.apache.spark.sql.types.DecimalType
   * both shuffling on the node id, so K rounds cost K bounded shuffles over
   * |E| rows; the rounds run through [[Fixpoint]] with a fixed round count,
   * whose per-round checkpoint keeps the plan linear in K. What Spark would
-  * broadcast, the loop may collect: once the ranked class graph (its rows ×
-  * the row's `defaultSize`, plus 16 B per directed edge) fits
-  * `spark.sql.autoBroadcastJoinThreshold`, the class graph is collected and
-  * the rounds run in driver memory with the same arithmetic
-  * ([[pageRankRounds]]); a threshold of -1 keeps every round distributed.
+  * broadcast, an operator may collect, and the rule applies to the RAW
+  * class graph: [[Dedup.nearDupGraph]] builds the classes and verified rep
+  * edges once per call and collects them when their bound fits
+  * `spark.sql.autoBroadcastJoinThreshold`. PageRank then computes degrees,
+  * the node count and every round on the driver with the same arithmetic
+  * ([[pageRankOnDriver]]) and never reaches the loop; above the budget, or
+  * at -1, every round runs distributed from the builder's checkpoints.
+  * Triangles and k-core take their classes and rep edges from the same
+  * builder and stay distributed.
   * Iterations are FIXED (k=3), not run-to-convergence: the result is a
   * deterministic dataflow any engine can replay — which is also what makes
   * it oracle-checkable.
@@ -37,8 +45,8 @@ object Graph {
   private val damping = 0.85
 
   /** PageRank over the near-dup graph of a (doc_id, text) corpus, computed
-    * on the TEXT-IDENTITY QUOTIENT (the docTriangleCounts/docKCore
-    * discipline). Members of an exact-dup class have identical
+    * on the TEXT-IDENTITY QUOTIENT ([[Dedup.nearDupGraph]], shared with the
+    * pairs, LSS clusters, triangles and k-core). Members of an exact-dup class have identical
     * neighborhoods in the expanded pair graph, hence identical degree and
     * rank — so every iteration runs on the class-level graph with
     * multiplicity weights and only the final output expands to members.
@@ -55,46 +63,48 @@ object Graph {
     * copy-sum is the exact decimal product c × m (DECIMAL(13,12) ×
     * DECIMAL(12,0) — sized so no precision loss, the q_embed_pca lesson),
     * and exact decimal sums are multiset-invariant, so both engines and
-    * both forms walk identical doubles through every round(·, 12). */
+    * both forms walk identical doubles through every round(·, 12).
+    *
+    * When the class graph fits the broadcast budget the ranks come from
+    * [[pageRankOnDriver]] as a local frame; otherwise from the distributed
+    * [[classPageRank]]. Both forms are bit-identical (law in GraphSpec). */
   private[graft] def docPageRank(d: DataFrame, k: Int): DataFrame = {
-    import graft.functions.Sketches
-    val np = d.sparkSession.sparkContext.defaultParallelism
-    val clusters = d.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-      .localCheckpoint()
-    val reps = clusters.select(col("gid").as("doc_id"), col("text"))
-    val eDir = Dedup.minhashRepPairs(reps)
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
-    // a class is an intra-clique iff its copies would pair in the expanded
-    // graph — the exact within-class condition of minhashNearDupPairsOf
-    val nodes = clusters.select(col("gid"), col("m"), col("members"),
-      (col("m") >= 2 && size(split(col("text"), " ")) >= 3 &&
-        Sketches.jaccardShingles(col("text"), col("text"), 3) >= 0.8).as("clique"))
-    classPageRank(nodes, eDir, k).repartition(np)
-      .select(explode(col("members")).as("doc_id"),
-        col("deg").cast("long").as("degree"), col("pr").as("pagerank"))
+    val g = Dedup.nearDupGraph(d.select(col("doc_id"), col("text")))
+    g.local match {
+      case Some(l) =>
+        val rows = for ((c, deg, pr) <- pageRankOnDriver(l.classes.toSeq, l.edges.toSeq, k);
+                        doc <- c.members) yield Row(doc, deg, pr)
+        d.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+          StructField("doc_id", LongType, nullable = false),
+          StructField("degree", LongType, nullable = false),
+          StructField("pagerank", DoubleType))))
+      case None =>
+        val eDir = g.edges
+          .select(explode(array(
+            struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+            struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+          .select(col("e.src"), col("e.dst"))
+        // a class is an intra-clique iff its copies would pair in the
+        // expanded graph — the within-class condition of DupClass.clique
+        val nodes = g.classes.select(col("gid"), col("m"), col("members"),
+          (col("m") >= 2 &&
+            Sketches.jaccardShingles(col("text"), col("text"), 3) >= 0.8).as("clique"))
+        classPageRank(nodes, eDir, k).repartition(d.sparkSession.sparkContext.defaultParallelism)
+          .select(explode(col("members")).as("doc_id"),
+            col("deg").cast("long").as("degree"), col("pr").as("pagerank"))
+    }
   }
 
-  /** [[docPageRank]]'s class-level iteration: `k` PageRank rounds over a
-    * class graph, run through [[Fixpoint]] as op `docPageRank`. `nodes`
-    * holds one row per class — `gid`, its multiplicity `m`, whether its
-    * members pair with each other (`clique`), and any columns to pass
-    * through; `edges` holds the directed class edges (`src`, `dst`), both
-    * directions of each. A class of degree 0 drops out. Returns the nodes'
-    * columns plus `deg`, `n` (the expanded node count) and `pr`.
-    *
-    * The edge list is checkpointed once, its row count observed on that
-    * job: the local finish's budget is the state's rows × `defaultSize`
-    * plus that count × 16 B, and within it the finish collects the edges
-    * and runs every round left in driver memory. */
+  /** [[docPageRank]]'s distributed class-level iteration: `k` PageRank
+    * rounds over a class graph, run through [[Fixpoint]] as op
+    * `docPageRank`. `nodes` holds one row per class — `gid`, its
+    * multiplicity `m`, whether its members pair with each other (`clique`),
+    * and any columns to pass through; `edges` holds the directed class
+    * edges (`src`, `dst`), both directions of each. A class of degree 0
+    * drops out. Returns the nodes' columns plus `deg`, `n` (the expanded
+    * node count) and `pr`. */
   private[graft] def classPageRank(nodes: DataFrame, edges: DataFrame, k: Int): DataFrame = {
-    val edgeCount = Observation()
     val e = edges.select(col("src"), col("dst"))
-      .observe(edgeCount, count(lit(1)).as("n")).localCheckpoint()
     val nbm = e
       .join(nodes.select(col("gid").as("src"), col("m").as("msrc")), "src")
       .groupBy(col("dst").as("gid")).agg(sum(col("msrc")).as("nbm"))
@@ -107,9 +117,7 @@ object Graph {
     val n = ranked.agg(sum(col("m")).as("n"))
     val init = ranked.crossJoin(broadcast(n))
       .withColumn("pr", round(lit(1.0) / col("n"), 12))
-    Fixpoint.run("docPageRank", init, rounds = Some(k),
-        local = Some((state, done) => pageRankRounds(state, e.collect(), k - done)),
-        localBytes = edgeCount.get("n").asInstanceOf[Long] * e.schema.defaultSize) { pr =>
+    Fixpoint.run("docPageRank", init, rounds = Some(k)) { pr =>
       val c = pr.withColumn("c",
         round(col("pr") / col("deg"), 12).cast(DecimalType(13, 12)))
       val inter = c
@@ -129,10 +137,11 @@ object Graph {
     }
   }
 
-  /** `rounds` rounds of [[classPageRank]] in driver memory, from its
-    * collected state rows and directed edge rows (src, dst), as plain
-    * arrays. Each step replays Spark's arithmetic bit for bit, so the rows
-    * equal the distributed rounds' (law in GraphSpec):
+  /** [[classPageRank]] in driver memory, a pure function of the collected
+    * class graph: each class with its degree — (m − 1 if its copies pair)
+    * plus Σ m over its neighbours — and its rank after `k` rounds; a class
+    * of degree 0 drops out. Each step replays Spark's arithmetic bit for
+    * bit, so the ranks equal the distributed rounds' (law in GraphSpec):
     *   - `round(x, 12)` is HALF_UP on `BigDecimal(x)`, which Spark's
     *     `RoundBase` builds through `Double.toString`;
     *   - the `DECIMAL(13,12)` cast of `round(pr / deg, 12)` is the same
@@ -142,31 +151,37 @@ object Graph {
     *     does not matter;
     *   - the intra-clique term plus the inter-class sum becomes a double as
     *     `Decimal.toDouble` does, through `BigDecimal.doubleValue`. */
-  private def pageRankRounds(state: Array[Row], edges: Array[Row], rounds: Int): Seq[Row] = {
+  private[graft] def pageRankOnDriver(classes: Seq[Dedup.DupClass],
+      edges: Seq[Dedup.RepEdge], k: Int): Seq[(Dedup.DupClass, Long, Double)] = {
     import java.math.{BigDecimal => JDec, RoundingMode}
     def dec12(x: Double) =
       new JDec(java.lang.Double.toString(x)).setScale(12, RoundingMode.HALF_UP)
     def round12(x: Double) = dec12(x).doubleValue
-    val rows = state.sortBy(_.getAs[Long]("gid"))
-    val ids = rows.map(_.getAs[Long]("gid"))
-    val m = rows.map(_.getAs[Long]("m"))
-    val deg = rows.map(_.getAs[Long]("deg"))
-    val clique = rows.map(_.getAs[Boolean]("clique"))
-    val n = rows.head.getAs[Long]("n").toDouble
+    val cs = classes.sortBy(_.gid).toArray
+    val ids = cs.map(_.gid)
+    val m = cs.map(_.m)
     def idx(id: Long) = java.util.Arrays.binarySearch(ids, id)
-    val src = edges.map(r => idx(r.getLong(0)))
-    val dst = edges.map(r => idx(r.getLong(1)))
+    val a = edges.map(e => idx(e.a)).toArray
+    val b = edges.map(e => idx(e.b)).toArray
+    val deg = cs.map(c => if (c.clique) c.m - 1 else 0L)
+    for (j <- a.indices) { deg(a(j)) += m(b(j)); deg(b(j)) += m(a(j)) }
+    val ranked = cs.indices.filter(deg(_) > 0)
+    val n = ranked.map(m).sum.toDouble
     def step(pr: Array[Double]): Array[Double] = {
-      val c = Array.tabulate(ids.length)(i => dec12(round12(pr(i) / deg(i))))
+      val c = Array.tabulate(ids.length)(i =>
+        if (deg(i) > 0) dec12(round12(pr(i) / deg(i))) else JDec.ZERO)
       val s = Array.tabulate(ids.length)(i =>
-        if (clique(i)) c(i).multiply(JDec.valueOf(m(i) - 1)) else JDec.ZERO)
-      for (j <- src.indices)
-        s(dst(j)) = s(dst(j)).add(c(src(j)).multiply(JDec.valueOf(m(src(j)))))
+        if (cs(i).clique) c(i).multiply(JDec.valueOf(m(i) - 1)) else JDec.ZERO)
+      for (j <- a.indices) {
+        s(b(j)) = s(b(j)).add(c(a(j)).multiply(JDec.valueOf(m(a(j)))))
+        s(a(j)) = s(a(j)).add(c(b(j)).multiply(JDec.valueOf(m(b(j)))))
+      }
       s.map(x => round12((1 - damping) / n + damping * x.doubleValue))
     }
-    val pr = (1 to rounds).foldLeft(rows.map(_.getAs[Double]("pr")))((p, _) => step(p))
-    val iPr = rows.head.fieldIndex("pr")
-    rows.indices.map(i => Row.fromSeq(rows(i).toSeq.updated(iPr, pr(i))))
+    if (ranked.isEmpty) Nil else {
+      val pr = (1 to k).foldLeft(Array.fill(ids.length)(round12(1.0 / n)))((p, _) => step(p))
+      ranked.map(i => (cs(i), deg(i), pr(i)))
+    }
   }
 
   /** Per-node triangle counts over an undirected edge list — the local
@@ -221,10 +236,10 @@ object Graph {
     * C(m,3) triangles: enumerating them explicitly is Θ(m³) PER GROUP
     * (the wedge join materializes every one), which is exactly the
     * replicated-corpus cliff the 100× probe exists to catch. Instead:
-    * quotient the graph by text identity (groupBy the text itself — no
-    * hash collisions), run candidate generation + the wedge join on the
-    * (small) representative graph, and re-expand per-member counts in
-    * closed form. For a member of group i with multiplicity m_i,
+    * take the class graph quotiented by text identity
+    * ([[Dedup.nearDupGraph]], always distributed here), run the wedge join
+    * on the (small) representative graph, and re-expand per-member counts
+    * in closed form over each class's member list. For a member of group i with multiplicity m_i,
     * neighbors N(i), and collapsed triangles T(i) at i:
     *   count = C(m_i−1, 2)                  (both partners own-group)
     *         + (m_i−1) · Σ_{j∈N(i)} m_j     (one own-group, one neighbor)
@@ -236,17 +251,9 @@ object Graph {
     * plain census (the oracle equality). All counts are exact integers;
     * the sums stay below 2^53 so the double path is lossless. */
   def docTriangleCounts(docsDf: DataFrame): DataFrame = {
-    val base = docsDf.select(col("doc_id"), col("text"))
-      .filter(size(split(col("text"), " ")) >= 3)
-    val groups = base.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"))
-      .localCheckpoint() // feeds membership, reps, and three weight joins
-    val membership = base.join(groups, "text").select(col("doc_id"), col("gid"))
-    val reps = groups.select(col("gid").as("doc_id"), col("text"))
-    val und = canonPairs(
-      Dedup.minhashRepPairs(reps).select(col("doc_a"), col("doc_b")))
-      .localCheckpoint()
-    val w = groups.select(col("gid"), col("m"))
+    val g = Dedup.nearDupGraph(docsDf.select(col("doc_id"), col("text")), collect = false)
+    val und = g.edges.select(col("doc_a").as("a"), col("doc_b").as("b"))
+    val w = g.classes.select(col("gid"), col("m"))
     val nb = und.select(col("a").as("i"), col("b").as("j"))
       .unionByName(und.select(col("b").as("i"), col("a").as("j")))
     val nbAgg = nb.join(w.select(col("gid").as("j"), col("m").as("mj")), "j")
@@ -270,9 +277,9 @@ object Graph {
           + (col("m") - 1) * coalesce(col("s1"), lit(0L))
           + coalesce(col("s2"), lit(0L))
           + coalesce(col("tsum"), lit(0L))).as("c"))
-    membership.join(perGroup, "gid")
-      .filter(col("c") > 0)
-      .select(col("doc_id"), col("c").cast("long").as("n_triangles"))
+    perGroup.filter(col("c") > 0)
+      .join(g.classes.select(col("gid"), col("members")), "gid")
+      .select(explode(col("members")).as("doc_id"), col("c").cast("long").as("n_triangles"))
   }
 
   /** k-core decomposition by iterative peeling: drop every node whose
@@ -311,9 +318,9 @@ object Graph {
     * duplicate-heavy crawl (the [[docTriangleCounts]] discipline, fourth
     * use). Identical texts are pairwise near-dups (jaccard 1), so an
     * m-copy group is an m-clique contributing Θ(m²) edges; peeling the
-    * raw graph re-shuffles all of them every round. Instead: quotient by
-    * text identity and peel the (small) representative graph with
-    * multiplicity-weighted degrees. Sound because degrees are
+    * raw graph re-shuffles all of them every round. Instead: peel the
+    * (small) class graph of [[Dedup.nearDupGraph]] (always distributed
+    * here) with multiplicity-weighted degrees. Sound because degrees are
     * text-determined — every member of group i has, in any
     * union-of-full-groups subgraph S, the identical degree
     *   d_i = (m_i − 1) + Σ_{j∈N(i)∩S} m_j
@@ -326,20 +333,12 @@ object Graph {
     * shuffles |E_rep| quotient edges — independent of duplication
     * factor — vs Θ(Σ m_i²) raw. */
   def docKCore(docsDf: DataFrame, k: Int): DataFrame = {
-    val base = docsDf.select(col("doc_id"), col("text"))
-      .filter(size(split(col("text"), " ")) >= 3)
-    val groups = base.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"))
-      .localCheckpoint() // feeds membership, reps, and every peel round
-    val membership = base.join(groups, "text").select(col("doc_id"), col("gid"))
-    val reps = groups.select(col("gid").as("doc_id"), col("text"))
-    var edges = canonPairs(
-      Dedup.minhashRepPairs(reps).select(col("doc_a"), col("doc_b")))
-      .localCheckpoint()
+    val g = Dedup.nearDupGraph(docsDf.select(col("doc_id"), col("text")), collect = false)
+    var edges = g.edges.select(col("doc_a").as("a"), col("doc_b").as("b"))
     // the surviving-group count rides keep's checkpoint job (r14,
     // Fixpoint) instead of a separate count() action per peel round;
     // removals-only peeling makes count equality an exact fixpoint test
-    val nodes = Fixpoint.run("docKCore", groups.select(col("gid"), col("m"))) { nodes =>
+    val nodes = Fixpoint.run("docKCore", g.classes.select(col("gid"), col("m"))) { nodes =>
       // edges between surviving groups only (round 1: every group). After
       // the last round the edges still span the previous round's groups,
       // which at the fixpoint are the same groups (or none survive)
@@ -362,8 +361,8 @@ object Graph {
     val perGroup = nodes.join(nbFinal, Seq("gid"), "left")
       .select(col("gid"),
         (col("m") - 1 + coalesce(col("nbsum"), lit(0L))).as("core_deg"))
-    membership.join(perGroup, "gid")
-      .select(col("doc_id"), col("core_deg").cast("long").as("core_deg"))
+    perGroup.join(g.classes.select(col("gid"), col("members")), "gid")
+      .select(explode(col("members")).as("doc_id"), col("core_deg").cast("long").as("core_deg"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -116,22 +116,12 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pagerank driver rounds equal the distributed rounds bit-for-bit on random class graphs") {
-    // the converged event of every docPageRank call, as key→value maps
+    import graft.operators.Dedup.{DupClass, RepEdge}
+    // the converged event of every distributed call, as key→value maps
     val converged = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
     val listener = (_: String, l: String) => synchronized {
       if (l.startsWith("event=fixpoint_converged op=docPageRank ")) converged += l
         .split(" ").map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap: Unit
-    }
-    def ranksOf(nodes: org.apache.spark.sql.DataFrame,
-                edges: org.apache.spark.sql.DataFrame, k: Int) = {
-      converged.clear()
-      StructuredLog.addListener(listener)
-      val rows = try Graph.classPageRank(nodes, edges, k)
-        .select("gid", "m", "members", "deg", "pr").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3),
-          r.getDouble(4))).sortBy(_._1).toSeq
-      finally StructuredLog.removeListener(listener)
-      (rows, converged.toSeq)
     }
     for (seed <- 1 to 20) {
       val rnd = new scala.util.Random(seed)
@@ -155,23 +145,34 @@ class GraphSpec extends SparkSpec {
       val n = Iterator.iterate(others + 2)(_ + 1).find(t => Set(1L, 3L)(strip(t))).get
       val cliqueOnly = (1L << 41, n - others, true, Seq(1L << 41))
       val lone = ((1L << 41) + 1, 2L, false, Seq((1L << 41) + 1))
-      val nodes = rnd.shuffle(classes :+ cliqueOnly :+ lone)
-        .toDF("gid", "m", "clique", "members")
+      val all = rnd.shuffle(classes :+ cliqueOnly :+ lone)
       // ids.head is a hub adjacent to every other class; the rest are
-      // random distinct pairs, each in both directions
+      // random distinct pairs
       val und = (ids.tail.map(ids.head -> _) ++ Seq.fill(ids.size)(
         (ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size)))))
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (a min b, a max b) }.distinct
-      val edges = rnd.shuffle(und ++ und.map(_.swap)).toDF("src", "dst")
       val k = 2 + seed % 3
-      val (local, localEvents) = ranksOf(nodes, edges, k)
-      val (rounds, roundsEvents) = withoutBroadcast(ranksOf(nodes, edges, k))
+      // the driver ranks the in-memory class graph: a clique class scores
+      // its within-class pairs at jaccard 1, a non-clique class of m >= 2
+      // below the 0.8 threshold
+      val local = Graph.pageRankOnDriver(
+        all.map { case (id, m, clique, ms) =>
+          DupClass(id, m, ms.toArray, if (clique) 1.0 else 0.5) },
+        und.map { case (a, b) => RepEdge(a, b, 0.9) }, k)
+        .map { case (c, deg, pr) => (c.gid, c.m, c.members.toSeq, deg, pr) }.sortBy(_._1)
+      // the distributed rounds take the directed edges, both ways
+      converged.clear()
+      StructuredLog.addListener(listener)
+      val rounds = try Graph.classPageRank(all.toDF("gid", "m", "clique", "members"),
+          rnd.shuffle(und ++ und.map(_.swap)).toDF("src", "dst"), k)
+        .select("gid", "m", "members", "deg", "pr").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3),
+          r.getDouble(4))).sortBy(_._1).toSeq
+      finally StructuredLog.removeListener(listener)
       assert(local == rounds, s"seed $seed k $k: local=$local\nrounds=$rounds")
-      assert(localEvents.map(e => (e("local"), e("rounds"))) == Seq(("true", "0")),
-        s"seed $seed: $localEvents")
-      assert(roundsEvents.map(e => (e("local"), e("rounds"))) == Seq(("false", k.toString)),
-        s"seed $seed: $roundsEvents")
+      assert(converged.map(e => (e("local"), e("rounds"))) == Seq(("false", k.toString)),
+        s"seed $seed: $converged")
       // the degree-0 class drops out; the clique-only class keeps its m - 1
       assert(local.map(_._1) == (ids :+ cliqueOnly._1).sorted, s"seed $seed: $local")
       assert(local.find(_._1 == cliqueOnly._1).map(_._4).contains(cliqueOnly._2 - 1))
@@ -180,6 +181,91 @@ class GraphSpec extends SparkSpec {
       val mass = local.map { case (_, m, _, _, pr) => m * pr }.sum
       assert(math.abs(mass - 1.0) < 1e-6, s"seed $seed: mass $mass")
     }
+  }
+
+  /** A corpus of near-dup families (a base text of 15-24 words and 1-3
+    * edits of it: one or two appended words, or a replaced last word — each
+    * within 0.8 of the base, edits not always within 0.8 of each other),
+    * texts under 3 words, an isolated exact-dup class and a singleton, each
+    * family or short text in 1-4 copies, under sparse shuffled doc ids. */
+  private def replicatedCorpus(seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    def words(n: Int) = Seq.fill(n)(s"t${rnd.nextInt(1000000)}")
+    val families = Seq.fill(2 + rnd.nextInt(3)) {
+      val base = words(15 + rnd.nextInt(10))
+      base +: Seq.fill(1 + rnd.nextInt(3))(rnd.nextInt(3) match {
+        case 0 => base ++ words(1)
+        case 1 => base ++ words(2)
+        case _ => base.init ++ words(1)
+      })
+    }.flatten ++ Seq.fill(2)(words(1 + rnd.nextInt(2)))
+    val copies = families.map(_.mkString(" ")).distinct
+      .flatMap(t => Seq.fill(1 + rnd.nextInt(4))(t)) ++
+      Seq.fill(2 + rnd.nextInt(3))(words(12).mkString(" ")) ++ Seq(words(12).mkString(" "))
+    val ids = (1 to copies.size).map(i => i * 7919L + rnd.nextInt(7919))
+    rnd.shuffle(copies).zip(ids).map { case (t, id) => (id, t) }.toDF("doc_id", "text")
+  }
+
+  test("near-dup driver finishes equal the distributed paths on dup-text and random replicated corpora") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    import graft.operators.Dedup
+    // pairs as a multiset, clusters as triples, PageRank rows with Double
+    // ==, and the three schemas, nullability included
+    def finishes(docs: org.apache.spark.sql.DataFrame) = {
+      val (p, c, r) = (Dedup.minhashNearDupPairsOf(docs), Dedup.docNearDupClustersLss(docs),
+        Graph.docPageRank(docs, 3))
+      (p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(p => (p._1, p._2)).toSeq,
+        c.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq,
+        r.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq,
+        Seq(p, c, r).map(_.schema))
+    }
+    // the `neardup_graph` events of `body`, one per builder call
+    val graphs = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+    val listener = (_: String, l: String) => graphs.synchronized {
+      if (l.startsWith("event=neardup_graph ")) graphs += l
+        .split(" ").map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap: Unit
+    }
+    def withGraphs[T](body: => T) = {
+      graphs.clear()
+      StructuredLog.addListener(listener)
+      val out = try body finally StructuredLog.removeListener(listener)
+      (out, graphs.toSeq)
+    }
+    // the dup-text fixture: a near-dup family of multiplicities 3/2/1, a
+    // singleton, an exact-dup pair and an exact-dup triple
+    val baseWords = (1 to 20).map(i => s"w$i").mkString(" ")
+    val (a, b, c) = (baseWords, baseWords + " extra", baseWords + " extra more")
+    val Seq(d, e, f) = Seq("z", "y", "x").map(p => (1 to 20).map(i => s"$p$i").mkString(" "))
+    val fixture = Seq(1L -> a, 2L -> a, 3L -> a, 4L -> b, 5L -> b, 6L -> c,
+      7L -> d, 8L -> e, 9L -> e, 10L -> f, 11L -> f, 12L -> f).toDF("doc_id", "text")
+    val (local, localGraphs) = withGraphs(finishes(fixture))
+    val (dist, distGraphs) = withGraphs(withoutBroadcast(finishes(fixture)))
+    assert(local == dist, s"fixture: local=$local\ndistributed=$dist")
+    // one event per builder call: collected by default, not at -1, the
+    // same graph either way
+    assert(localGraphs.map(_ - "ms") == Seq.fill(3)(Map("event" -> "neardup_graph",
+      "local" -> "true", "classes" -> "6", "edges" -> "3", "bytes" -> "640")), localGraphs)
+    assert(distGraphs.map(_ - "ms") == localGraphs.map(_ - "ms" + ("local" -> "false")),
+      distGraphs)
+    val (pairs, clusters, ranks, _) = local
+    // K6 on 1..6 plus the pair and the triple's internal pairs
+    assert(pairs.size == 15 + 1 + 3, pairs)
+    assert(clusters.map(_._2).distinct == Seq(1L, 8L, 10L), clusters)
+    assert(ranks.map(_._1) == (1L to 6L) ++ (8L to 12L), ranks)
+    // ten random replicated corpora, each mode's calls side by side
+    val corpora = (1 to 10).map(replicatedCorpus)
+    def all = Await.result(Future.traverse(corpora)(c => Future(finishes(c))), Duration.Inf)
+    val (locals, localEvents) = withGraphs(all)
+    val (dists, distEvents) = withGraphs(withoutBroadcast(all))
+    for (((l, r), seed) <- locals.zip(dists).zipWithIndex)
+      assert(l == r, s"seed ${seed + 1}: local=$l\ndistributed=$r")
+    assert(localEvents.size == 30 && localEvents.forall(_("local") == "true"), localEvents)
+    assert(distEvents.size == 30 && distEvents.forall(_("local") == "false"), distEvents)
+    // every corpus carries cross-text edges, not only exact-dup classes
+    assert(localEvents.forall(_("edges").toLong >= 2), localEvents)
   }
 
   test("kcore peels pendant cascades to the clique core (k=2, k=3)") {

@@ -8,15 +8,19 @@ import graft.{SparkSpec, StructuredLog}
 /** The shared fixpoint loop: its stop rule, round cap, fixed rounds, null
   * guard, local finish and events, and the operators that run through it —
   * the four in src/main and the label-propagation reference
-  * ([[LabelPropagation]]). */
+  * ([[LabelPropagation]]) — plus the broadcast-budget rule of the near-dup
+  * class graph ([[Dedup.nearDupGraph]]), which decides whether PageRank
+  * and the near-dup operators reach the loop at all. */
 class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
   import spark.implicits._
 
-  /** `fixpoint_*` events emitted while `body` runs, as key→value maps. */
-  private def eventsOf[T](body: => T): (Either[Throwable, T], Seq[Map[String, String]]) = {
+  /** `fixpoint_*` events (or those whose line starts with `prefix`)
+    * emitted while `body` runs, as key→value maps. */
+  private def eventsOf[T](body: => T, prefix: String = "event=fixpoint_")
+      : (Either[Throwable, T], Seq[Map[String, String]]) = {
     val events = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
     val listener = (_: String, l: String) => synchronized {
-      if (l.startsWith("event=fixpoint_")) events += l.split(" ")
+      if (l.startsWith(prefix)) events += l.split(" ")
         .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap: Unit
     }
     StructuredLog.addListener(listener)
@@ -83,31 +87,78 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
     assert(off("local") == "false", off)
   }
 
+  /** GraphSpec's dup-text fixture: a near-dup family a/b/c of
+    * multiplicities 3/2/1 (3 rep edges), a singleton, an exact-dup pair and
+    * an exact-dup triple. */
+  private lazy val dupTexts = {
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val Seq(d, e, f) = Seq("z", "y", "x").map(p => (1 to 20).map(i => s"$p$i").mkString(" "))
+    Seq(1L -> base, 2L -> base, 3L -> base, 4L -> s"$base extra", 5L -> s"$base extra",
+      6L -> s"$base extra more", 7L -> d, 8L -> e, 9L -> e, 10L -> f, 11L -> f, 12L -> f)
+      .toDF("doc_id", "text")
+  }
+
+  /** Every event of `body` (`neardup_graph` and `fixpoint_*` here) under a
+    * broadcast budget of `budget`. */
+  private def underBudget[T](budget: Long)(body: => T) = eventsOf(withConf(
+    "spark.sql.autoBroadcastJoinThreshold", budget.toString)(body),
+    prefix = "event=")
+
   test("pagerank finishes on the driver exactly when its class graph fits the broadcast budget") {
-    // a path of 5 classes of multiplicity 2, none a clique: 5 state rows
-    // and 8 directed edges
-    val nodes = (1L to 5L).map(i => (i, 2L, false, Seq(i)))
-      .toDF("gid", "m", "clique", "members")
-    val edges = (1L to 4L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
-    // a state row is gid, m, members (one long), deg, n and pr at 8 B each
-    // plus the 1 B clique flag; a directed edge is two longs
-    val bytes = 5 * (6 * 8L + 1) + 8 * EdgeBytes
-    def ranked(budget: Long) = eventsOf(withConf(
-      "spark.sql.autoBroadcastJoinThreshold", budget.toString)(
-      Graph.classPageRank(nodes, edges, 3).select("gid", "pr").as[(Long, Double)]
-        .collect().sortBy(_._1).toSeq))
-    // one byte short: all three rounds run distributed, one event each
+    // the bound of the touched classes: E edges of (doc_a, doc_b, jaccard)
+    // at 24 B; 2E + c2 class rows of (gid, m, members, text) at 8 + 8 + 8 +
+    // 20 B; 2E + mm members at 8 B. The fixture has E = 3 and four classes
+    // of m >= 2 with 10 members between them
+    val (e, c2, mm) = (3L, 4L, 10L)
+    val bytes = e * 24 + (2 * e + c2) * 44 + (2 * e + mm) * 8
+    def ranked(budget: Long) = underBudget(budget)(
+      Graph.docPageRank(dupTexts, 3).as[(Long, Long, Double)].collect().sortBy(_._1).toSeq)
+    def graph(events: Seq[Map[String, String]]) =
+      events.filter(_("event") == "neardup_graph").loneElement
+    // one byte short: the class graph stays distributed and all three
+    // rounds run through the loop, one event each
     val (over, overEvents) = ranked(bytes - 1)
-    assert(overEvents.map(e => (e("event"), e.get("round"))) ==
+    assert(graph(overEvents)("local") == "false" &&
+      graph(overEvents)("bytes") == bytes.toString, overEvents)
+    assert(overEvents.filter(_("event").startsWith("fixpoint_"))
+      .map(e => (e("event"), e.get("round"))) ==
       (1 to 3).map(r => ("fixpoint_round", Some(r.toString))) :+
         (("fixpoint_converged", None)), overEvents)
     assert(overEvents.last("local") == "false" && overEvents.last("rounds") == "3", overEvents)
-    // at exactly the budget the initial state is collected: no round at all
+    // at exactly the budget the class graph is collected and ranked on the
+    // driver: no round, no loop at all
     val (under, underEvents) = ranked(bytes)
-    val converged = underEvents.loneElement
-    assert(converged("local") == "true" && converged("rounds") == "0" &&
-      converged("rows") == "5", converged)
-    assert(under == over && over.isRight, s"under=$under\nover=$over")
+    assert(graph(underEvents) - "ms" == Map("event" -> "neardup_graph", "local" -> "true",
+      "classes" -> "6", "edges" -> "3", "bytes" -> bytes.toString), underEvents)
+    assert(underEvents.size == 1, underEvents)
+    assert(under == over && over.isRight && over.toOption.get.size == 11,
+      s"under=$under\nover=$over")
+  }
+
+  test("near-dup pairs expand on the driver only when their output fits the budget too") {
+    // 40 copies of one text and 5 of a near-dup edit: a class graph of
+    // one edge and two classes of m >= 2 (24 + 4 × 44 + 47 × 8 = 576 B),
+    // but 40 × 5 cross pairs and C(40, 2) + C(5, 2) within-class pairs at
+    // 24 B each
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val docs = ((1L to 40L).map(_ -> base) ++ (41L to 45L).map(_ -> s"$base extra"))
+      .toDF("doc_id", "text")
+    val (graphBytes, pairBytes) = (576L, (200L + 780 + 10) * 24)
+    def pairsOf(budget: Long) = underBudget(budget) {
+      val p = Dedup.minhashNearDupPairsOf(docs)
+      (p.isLocal, p.as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2)).toSeq)
+    }
+    val (fits, fitsEvents) = pairsOf(pairBytes)
+    val (graphOnly, graphOnlyEvents) = pairsOf(pairBytes - 1)
+    val (neither, neitherEvents) = pairsOf(graphBytes - 1)
+    assert(fitsEvents.map(e => (e("local"), e("bytes"))) == Seq(("true", "576")), fitsEvents)
+    assert(graphOnlyEvents.map(_("local")) == Seq("true"), graphOnlyEvents)
+    assert(neitherEvents.map(_("local")) == Seq("false"), neitherEvents)
+    // the driver expands only when the output fits; the rows never change
+    assert(fits.map(_._1) == Right(true) && graphOnly.map(_._1) == Right(false) &&
+      neither.map(_._1) == Right(false), (fits, graphOnly, neither))
+    assert(fits.map(_._2) == graphOnly.map(_._2) && fits.map(_._2) == neither.map(_._2))
+    assert(fits.toOption.get._2.size == 990)
   }
 
   test("label propagation releases its cached edge list when it throws") {
@@ -159,9 +210,11 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
   test("empty input to every fixpoint operator is empty after 0 rounds") {
     val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    // PageRank reaches the loop only when its class graph stays distributed
     val (out, events) = eventsOf(Seq(
       LabelPropagation.connectedComponents(pairs), Dedup.connectedComponentsLss(pairs),
-      Graph.kCore(pairs, 2), Graph.docKCore(docs, 2), Graph.docPageRank(docs, 3))
+      Graph.kCore(pairs, 2), Graph.docKCore(docs, 2),
+      withoutBroadcast(Graph.docPageRank(docs, 3)))
       .map(_.isEmpty))
     assert(out == Right(Seq(true, true, true, true, true)), out)
     assert(events.map(e => (e("event"), e("op"), e("rounds"))) == Seq(
@@ -170,5 +223,13 @@ class FixpointSpec extends SparkSpec with org.scalatest.LoneElement {
       ("fixpoint_converged", "kCore", "0"),
       ("fixpoint_converged", "docKCore", "0"),
       ("fixpoint_converged", "docPageRank", "0")), events)
+    // under the default budget the empty class graph is collected and each
+    // near-dup operator finishes on the driver, with no loop
+    val (local, localEvents) = eventsOf(Seq(Graph.docPageRank(docs, 3),
+      Dedup.docNearDupClustersLss(docs), Dedup.minhashNearDupPairsOf(docs))
+      .map(df => (df.isLocal, df.isEmpty)), prefix = "event=")
+    assert(local == Right(Seq.fill(3)((true, true))), local)
+    assert(localEvents.map(_ - "ms") == Seq.fill(3)(Map("event" -> "neardup_graph",
+      "local" -> "true", "classes" -> "0", "edges" -> "0", "bytes" -> "0")), localEvents)
   }
 }
