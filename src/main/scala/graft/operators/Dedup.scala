@@ -61,14 +61,30 @@ object Dedup {
     * pairs — would otherwise fail analysis. Each observe gets a unique
     * suffix; consumers match on the `graft.bucket_cap` prefix. */
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
-  /** Exchange width for the pair-expansion path: at least every local
-    * core, and never below the session's shuffle width (on a cluster
-    * where spark.sql.shuffle.partitions is tuned above defaultParallelism
-    * a bare defaultParallelism would UNDER-partition the expansion — the
-    * r14 ADVICE). */
-  private[graft] def pairWidth(df: DataFrame): Int =
-    math.max(df.sparkSession.sparkContext.defaultParallelism,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
+  /** The one exchange width: at least every local core, and never below
+    * the session's shuffle width (on a cluster where
+    * spark.sql.shuffle.partitions is tuned above defaultParallelism, a bare
+    * defaultParallelism would UNDER-partition — the r14 ADVICE). Every
+    * explicit-width exchange in the engine reads it: [[spread]]'s
+    * round-robin ones and the keyed ones of [[bucketPairs]] and
+    * [[explodeMemberPairs]]. */
+  private[graft] def width(s: SparkSession): Int =
+    math.max(s.sparkContext.defaultParallelism,
+      s.sessionState.conf.numShufflePartitions)
+
+  /** `df` round-robin repartitioned to [[width]], placed before a fan-out
+    * (explode, codec mapPartitions, per-row scoring). The frame below a
+    * fan-out is often SMALL IN BYTES — a post-groupBy class frame, a
+    * distinct pair set, an ids-only projection — so AQE coalesces its
+    * exchange's read side to one or a handful of partitions and the
+    * expensive work above it runs on that many cores (the standing
+    * AQE-coalesce lesson, measured at every call site as a single-task
+    * stage holding most of the query's wall). An explicit-width
+    * repartition is exempt from AQE coalescing, and round-robin survives
+    * where a key-based repartition on the upstream's own key would be
+    * eliminated as redundant. */
+  private[graft] def spread(df: DataFrame): DataFrame = df.repartition(width(df.sparkSession))
+
   private[graft] def bucketPairs(banded: DataFrame, keyCols: Seq[String],
       cap: Int = bucketCap, spread: Boolean = false): DataFrame = {
     // explicit-width keyed repartition instead of the groupBy's implicit
@@ -81,7 +97,7 @@ object Dedup {
     // (minhash/prefix/cosine/editdist/banding). Same key distribution,
     // same exchange count, deterministic output (xs0 is sorted before
     // the cap; pair order follows the sorted array)
-    banded.repartition(pairWidth(banded), keyCols.map(col): _*)
+    banded.repartition(width(banded.sparkSession), keyCols.map(col): _*)
       .groupBy(keyCols.map(col): _*)
       .agg(collect_list(col("doc_id")).as("xs0"))
       .filter(size(col("xs0")) >= 2)
@@ -117,7 +133,7 @@ object Dedup {
       // per-pair work is large — q_dedup_prefix's 122k jaccard
       // re-shinglings (8.0 → 3.1 s). Callers opt in when their
       // verification is broadcast-joined AND heavy per candidate.
-      .transform(p => if (spread) p.repartition(pairWidth(banded)) else p)
+      .transform(p => if (spread) Dedup.spread(p) else p)
   }
 
   /** Skew-safe within-class unordered pair expansion — the mega-class-
@@ -128,8 +144,8 @@ object Dedup {
     * ([[bucketPairs]]) but was an 11.8 s single-task tail (and 70% of
     * wall) on the r12 skew probe's 5.5k-member planted class — and an
     * outright OOM on a crawl-scale blank-image class. Two stages instead:
-    * posexplode to one row per (class, member) spread by an
-    * explicit-width repartition (AQE-coalesce-exempt), then each row
+    * posexplode to one row per (class, member) spread by a keyed
+    * repartition at [[width]] (AQE-coalesce-exempt), then each row
     * emits only its LATER partners via a codegen'd slice — per-task
     * arrays stay |class|-sized, and the shuffled bytes are output-order
     * (the pair form's true output is itself quadratic in the hot class;
@@ -141,13 +157,14 @@ object Dedup {
     * re-ran the perceptual codec scan and cost 2× more than it saved).
     * Pair (a, b) order follows array order, identical to idPairs over
     * the sorted member arrays every caller builds. All columns except
-    * `members` are carried through. */
+    * `members` are carried through. Its one caller is
+    * [[expandClassPairs]]. */
   private[graft] def explodeMemberPairs(df: DataFrame, members: String,
-      np: Int, aName: String, bName: String): DataFrame = {
+      aName: String, bName: String): DataFrame = {
     val carried = df.columns.filterNot(_ == members).map(col)
     df.select(carried :+ col(members) :+
         posexplode(col(members)).as(Seq("__pi", "__pa")): _*)
-      .repartition(np, col("__pa"))
+      .repartition(width(df.sparkSession), col("__pa"))
       // partners strictly after position __pi (0-based): slice is 1-based
       // and clamps past the array end
       .withColumn("__pb", explode(slice(col(members),
@@ -155,6 +172,39 @@ object Dedup {
       .drop(members, "__pi")
       .withColumnRenamed("__pa", aName)
       .withColumnRenamed("__pb", bName)
+  }
+
+  /** Rep pairs → member pairs: the one re-expansion of every quotiented
+    * pair operator (text, simhash, embedding, perceptual, prefix, edit
+    * distance, cosine), which find their pairs over exact-dup class
+    * representatives and expand to copies as the FINAL step, directly
+    * into the true output — never an intermediate blow-up.
+    *
+    *  - `repPairs`: (doc_a, doc_b, score columns…) over class reps;
+    *  - `members`: (rep, members) — every class's sorted member ids;
+    *  - `within`: (members, the same score columns) — only the classes
+    *    whose copies pair with each other, with the score their pairs
+    *    carry.
+    *
+    * Returns (doc_a, doc_b, score columns…): every copy of A × every copy
+    * of B as (least, greatest) with the rep pair's scores, plus each
+    * `within` class's internal pairs in member order
+    * ([[explodeMemberPairs]]). The joined rep-pair frame is [[spread]]
+    * before the |A|·|B| fan-out (the r9 sf10 probe ran a perceptual
+    * expansion single-core for 30+ min without it), and side A explodes
+    * before side B, so a row holds |B| ids, never |A|·|B| pairs. */
+  private[graft] def expandClassPairs(repPairs: DataFrame, members: DataFrame,
+      within: DataFrame): DataFrame = {
+    val scores = repPairs.columns.filterNot(Set("doc_a", "doc_b")).toSeq.map(col)
+    val cross = spread(repPairs
+        .join(members.select(col("rep").as("doc_a"), col("members").as("ms_a")), "doc_a")
+        .join(members.select(col("rep").as("doc_b"), col("members").as("ms_b")), "doc_b"))
+      .select(scores :+ explode(col("ms_a")).as("a") :+ col("ms_b"): _*)
+      .select(scores :+ col("a") :+ explode(col("ms_b")).as("b"): _*)
+      .select(least(col("a"), col("b")).as("doc_a") +:
+        greatest(col("a"), col("b")).as("doc_b") +: scores: _*)
+    cross.unionByName(explodeMemberPairs(within, "members", "doc_a", "doc_b")
+      .select(col("doc_a") +: col("doc_b") +: scores: _*))
   }
 
   /** MinHash-LSH candidate generation + exact-jaccard verification →
@@ -348,13 +398,14 @@ object Dedup {
     * The pairs expand on the driver when the graph was collected and the
     * exact output — Σ m_a·m_b cross pairs over the edges plus C(m, 2)
     * within each clique class — fits the broadcast budget too; otherwise
-    * distributed from the graph's checkpoints ([[expandTextRepPairs]]). */
+    * distributed from the graph's checkpoints ([[expandClassPairs]]). */
   private[graft] def minhashNearDupPairsOf(d: DataFrame): DataFrame = {
     val g = nearDupGraph(d)
     val s = d.sparkSession
     g.local.filter(l => Fixpoint.fitsBroadcast(s, pairCount(l) * pairSchema.defaultSize)) match {
       case Some(l) => s.createDataFrame(localPairs(l).toSeq.asJava, pairSchema)
-      case None => expandTextRepPairs(g.edges, g.classes, s.sparkContext.defaultParallelism)
+      case None => expandClassPairs(g.edges,
+        g.classes.select(col("gid").as("rep"), col("members")), textCliques(g.classes))
     }
   }
 
@@ -364,7 +415,7 @@ object Dedup {
       l.classes.filter(_.clique).map(c => c.m * (c.m - 1) / 2).sum
   }
 
-  /** [[expandTextRepPairs]] on the driver: members × members of each rep
+  /** [[expandClassPairs]] on the driver: members × members of each rep
     * edge as (least, greatest) with the edge's jaccard, then each clique
     * class's internal pairs in member order. */
   private def localPairs(l: LocalGraph): Iterator[Row] = {
@@ -381,38 +432,16 @@ object Dedup {
     cross ++ within
   }
 
-  /** Member expansion shared by the default and auto-banded pair forms:
-    * verified rep pairs expand over exact-dup class members (cross), and
-    * ≥2-member classes emit their internal pairs (within) — both directly
-    * into the true output, never an intermediate blow-up. */
-  private[graft] def expandTextRepPairs(repPairs: DataFrame,
-      clusters: DataFrame, np: Int): DataFrame = {
-    // round-robin repartitions before both fan-outs: the rep-pair / class
-    // frames are tiny, so AQE would coalesce them to one partition and run
-    // the member expansion single-core (the standing Generate lesson)
-    val cross = repPairs
-      .join(clusters.select(col("gid").as("doc_a"), col("members").as("ms_a")), "doc_a")
-      .join(clusters.select(col("gid").as("doc_b"), col("members").as("ms_b")), "doc_b")
-      .repartition(np)
-      .select(col("jaccard"), explode(col("ms_a")).as("a"), col("ms_b"))
-      .select(col("jaccard"), col("a"), explode(col("ms_b")).as("b"))
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"), col("jaccard"))
-    // within-class pairs: identical texts share every band, so the
-    // per-copy form paired them whenever they band at all (≥3 words);
-    // jaccard comes from the same expression on the identical texts
-    val within = explodeMemberPairs(
-        clusters
-          .filter(size(col("members")) >= 2 &&
-            size(split(col("text"), " ")) >= 3)
-          .withColumn("jaccard",
-            Sketches.jaccardShingles(col("text"), col("text"), 3))
-          .filter(col("jaccard") >= 0.8)
-          .select(col("members"), col("jaccard")),
-        "members", np, "doc_a", "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    cross.unionByName(within)
-  }
+  /** Text classes whose copies pair with each other, as
+    * [[expandClassPairs]]' `within` (members, jaccard): identical texts
+    * share every band, so the per-copy form paired them whenever they band
+    * at all (≥3 words); jaccard comes from the same expression on the
+    * identical texts. */
+  private def textCliques(classes: DataFrame): DataFrame = classes
+    .filter(size(col("members")) >= 2 && size(split(col("text"), " ")) >= 3)
+    .withColumn("jaccard", Sketches.jaccardShingles(col("text"), col("text"), 3))
+    .filter(col("jaccard") >= 0.8)
+    .select(col("members"), col("jaccard"))
 
   /** Connected components of a pair set (doc_a, doc_b) → (id, label):
     * exactly one row per id of a non-self-loop pair, labelled with its
@@ -870,7 +899,6 @@ object Dedup {
       // quadratic in replication); then explode the band INDEX (Generate
       // is a projection-collapse barrier → simhash evaluates once per
       // distinct text) and derive band values
-      val np = s.sparkContext.defaultParallelism
       val clusters = docs(s, dir).groupBy(col("text"))
         .agg(min(col("doc_id")).as("rep"),
           sort_array(collect_list(col("doc_id"))).as("members"))
@@ -903,22 +931,9 @@ object Dedup {
         .join(reps.select(col("doc_id").as("doc_b"), col("text").as("text_b")), "doc_b")
         .filter(Sketches.jaccardShingles(col("text_a"), col("text_b"), 3) >= 0.8)
         .select(col("doc_a"), col("doc_b"))
-      val cross = repPairs
-        .join(clusters.select(col("rep").as("doc_a"), col("members").as("ms_a")), "doc_a")
-        .join(clusters.select(col("rep").as("doc_b"), col("members").as("ms_b")), "doc_b")
-        .repartition(np)
-        .select(explode(col("ms_a")).as("a"), col("ms_b"))
-        .select(col("a"), explode(col("ms_b")).as("b"))
-        .select(least(col("a"), col("b")).as("doc_a"),
-          greatest(col("a"), col("b")).as("doc_b"))
-      val within = explodeMemberPairs(
-          clusters
-            .filter(size(col("members")) >= 2 &&
-              size(split(col("text"), " ")) >= 3 &&
-              Sketches.jaccardShingles(col("text"), col("text"), 3) >= 0.8)
-            .select(col("members")),
-          "members", np, "doc_a", "doc_b")
-      observePairs(cross.unionByName(within),
+      observePairs(expandClassPairs(repPairs,
+          clusters.select(col("rep"), col("members")),
+          textCliques(clusters).select(col("members"))),
         "q_dedup_simhash", col("doc_a"), col("doc_b"))
     }),
 
@@ -1345,19 +1360,14 @@ object Dedup {
 
   private[graft] def embeddingRepCandidatesOf(e: DataFrame, r: Int = 4,
       b: Int = 64): (DataFrame, DataFrame) = {
-    val np = e.sparkSession.sparkContext.defaultParallelism
     val clusters = e.groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("rep"), sort_array(collect_list(col("vec_id"))).as("members"))
-    // round-robin repartition before the banding — the standing AQE
-    // lesson (r14 stage attribution): the rep frame is SMALL IN BYTES, so
-    // AQE coalesces the groupBy(embedding) exchange to one partition, and
-    // the r·b hyperplane projections per rep + band explode above it then
-    // run on ONE CORE (measured: a 5.2 s single-task stage = 75% of
+    // spread before the r·b hyperplane projections per rep + band explode
+    // (r14 stage attribution without it: a 5.2 s single-task stage = 75% of
     // q_dedup_embedding_lsh's sf0.1 wall; same stage inside
     // q_dedup_semantic(_auto) and both contrastive queries)
     val banded = bandedEmbeddings(
-        clusters.select(col("rep"), col("embedding")).repartition(np),
-        "rep", r, b)
+        spread(clusters.select(col("rep"), col("embedding"))), "rep", r, b)
       .withColumnRenamed("rep", "doc_id")
     val emb = clusters.select(col("rep").as("vec_id"), col("embedding"))
     val repPairs = bucketPairs(banded, Seq("band_idx", "band_val"))
@@ -1541,40 +1551,28 @@ object Dedup {
     * decision evidence as `observe` metrics. */
   private[graft] def minhashNearDupPairsAutoOf(
       d: DataFrame): (DataFrame, LshBandConfig) = {
-    val np = d.sparkSession.sparkContext.defaultParallelism
     val clusters = d.groupBy(col("text"))
       .agg(min(col("doc_id")).as("gid"),
         sort_array(collect_list(col("doc_id"))).as("members"))
     val reps = clusters.select(col("gid").as("doc_id"), col("text"))
     val cfg = autoBandConfigMinhash(reps)
-    (expandTextRepPairs(minhashRepPairsCfg(reps, cfg.r, cfg.b), clusters, np),
-      cfg)
+    (expandClassPairs(minhashRepPairsCfg(reps, cfg.r, cfg.b),
+      clusters.select(col("gid").as("rep"), col("members")), textCliques(clusters)), cfg)
   }
 
   private[operators] def embeddingLshPairs(s: SparkSession, dir: String): DataFrame = {
     val (clusters, repPairs) = embeddingRepCandidatesOf(Tables.load(s, dir, "embeddings"))
-    // within-cluster pairs (cos(v,v), ~1.0) emit from the clusters
-    // directly; cross-cluster pairs re-expand over cluster members
-    // (their cosines are byte-identical to the representatives').
-    // Cross-cluster expansion: |A|×|B| pairs per qualifying rep pair —
-    // exactly the true output size, no intermediate blow-up
-    val expanded = repPairs
-      .join(clusters.select(col("rep").as("vec_a"), col("members").as("ms_a")), "vec_a")
-      .join(clusters.select(col("rep").as("vec_b"), col("members").as("ms_b")), "vec_b")
-      .select(col("cos"), explode(expr(
-        """flatten(transform(ms_a, a -> transform(ms_b, b ->
-             struct(least(a, b) as vec_a, greatest(a, b) as vec_b))))""")).as("p"))
-      .select(col("p.vec_a"), col("p.vec_b"), col("cos"))
-    val within = explodeMemberPairs(
+    // within-cluster pairs score cos(v,v) (~1.0); cross-cluster pairs
+    // inherit their reps' cosines, which are byte-identical to the members'
+    expandClassPairs(
+        repPairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"), col("cos")),
+        clusters.select(col("rep"), col("members")),
         clusters.filter(size(col("members")) >= 2)
           .withColumn("cos",
             round(graft.functions.Sketches.cosineSim(col("embedding"), col("embedding")), 6))
           .filter(col("cos") >= 0.45) // zero vectors: cos is null → dropped
-          .select(col("cos"), col("members")),
-        "members", s.sessionState.conf.numShufflePartitions, "vec_a", "vec_b")
-      .select(col("vec_a"), col("vec_b"), col("cos"))
-    expanded.unionByName(within)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
+          .select(col("members"), col("cos")))
+      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"), col("cos"))
   }
 
   /** Shared by the batch and streaming semantic-admission forms —

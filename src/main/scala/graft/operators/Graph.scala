@@ -89,7 +89,7 @@ object Graph {
         val nodes = g.classes.select(col("gid"), col("m"), col("members"),
           (col("m") >= 2 &&
             Sketches.jaccardShingles(col("text"), col("text"), 3) >= 0.8).as("clique"))
-        classPageRank(nodes, eDir, k).repartition(d.sparkSession.sparkContext.defaultParallelism)
+        Dedup.spread(classPageRank(nodes, eDir, k))
           .select(explode(col("members")).as("doc_id"),
             col("deg").cast("long").as("degree"), col("pr").as("pagerank"))
     }

@@ -719,8 +719,8 @@ object Multimodal {
     (clusters, repPairs)
   }
 
-  /** The ids-only input of every codec query, round-robin spread to full
-    * shuffle width BEFORE the codec mapPartitions. Parquet split planning
+  /** The ids-only input of every codec query, round-robin spread to
+    * [[Dedup.width]] BEFORE the codec mapPartitions. Parquet split planning
     * uses TOTAL file bytes (not the projected column), so a compactly
     * written corpus yields a handful of splits and a codec-bound scan runs
     * on that handful of cores — the 1000× probe measured the 5M-doc WAV
@@ -730,8 +730,7 @@ object Multimodal {
     * exchange is redundant but stays O(ids), never payloads. */
   private def docIds(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[Long] = {
     import s.implicits._
-    Tables.load(s, dir, "documents").select(col("doc_id"))
-      .repartition(s.sessionState.conf.numShufflePartitions)
+    Dedup.spread(Tables.load(s, dir, "documents").select(col("doc_id")))
       .as[Long]
   }
 
@@ -741,8 +740,7 @@ object Multimodal {
   private def docIdsWhere(s: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): org.apache.spark.sql.Dataset[Long] = {
     import s.implicits._
-    Tables.load(s, dir, "documents").select(col("doc_id")).filter(pred)
-      .repartition(s.sessionState.conf.numShufflePartitions)
+    Dedup.spread(Tables.load(s, dir, "documents").select(col("doc_id")).filter(pred))
       .as[Long]
   }
 
@@ -866,32 +864,11 @@ object Multimodal {
     // output is the true pair set.
     "q_multimodal_perceptual" -> ((s, dir) => {
       val (clusters, repPairs) = perceptualParts(s, dir)
-      // the member-pair expansion multiplies each rep pair by |A|·|B| —
-      // on a replicated corpus that is the TRUE output size (every copy
-      // of A pairs with every copy of B; the oracle's semantics), but the
-      // rep-pair frame itself is tiny, so AQE coalesces its exchange to
-      // ~1 partition and the whole blow-up would run in ONE task (the r9
-      // sf10 probe measured exactly that: single-core for 30+ min). An
-      // EXPLICIT-width repartition is exempt from AQE coalescing and
-      // spreads the expansion; exploding side A before side B keeps the
-      // per-row array at |B| elements instead of |A|·|B|.
-      val np = s.sessionState.conf.numShufflePartitions
-      val expanded = repPairs
-        .join(clusters.select(col("rep").as("doc_a"), col("members").as("ms_a")), "doc_a")
-        .join(clusters.select(col("rep").as("doc_b"), col("members").as("ms_b")), "doc_b")
-        .repartition(np, col("doc_a"), col("doc_b"))
-        .select(col("hamming"), col("pix_dist"), explode(col("ms_a")).as("a"),
-          col("ms_b"))
-        .select(col("hamming"), col("pix_dist"), explode(
-          transform(col("ms_b"), b => struct(least(col("a"), b).as("doc_a"),
-            greatest(col("a"), b).as("doc_b")))).as("pr"))
-        .select(col("pr.doc_a"), col("pr.doc_b"), col("hamming"), col("pix_dist"))
-      val within = Dedup.explodeMemberPairs(
-          clusters.filter(size(col("members")) >= 2).select(col("members")),
-          "members", np, "doc_a", "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          lit(0L).as("hamming"), lit(0L).as("pix_dist"))
-      Dedup.observePairs(expanded.unionByName(within),
+      // copies of one raster class pair at distance 0
+      Dedup.observePairs(Dedup.expandClassPairs(repPairs,
+          clusters.select(col("rep"), col("members")),
+          clusters.filter(size(col("members")) >= 2)
+            .select(col("members"), lit(0L).as("hamming"), lit(0L).as("pix_dist"))),
         "q_multimodal_perceptual", col("doc_a"), col("doc_b"))
     }),
 

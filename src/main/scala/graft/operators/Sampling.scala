@@ -39,8 +39,7 @@ object Sampling {
     // skew probe measured a 70 s single-task tail at 1000×; the batch
     // docIds lesson). The exchange carries (doc_id, text) once.
     val w = split(lower(col("text")), " ")
-    d.select(col("doc_id"), col("text"))
-      .repartition(d.sparkSession.sessionState.conf.numShufflePartitions)
+    Dedup.spread(d.select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         explode(concat(w, zip_with(
           slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),

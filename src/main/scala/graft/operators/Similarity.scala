@@ -384,13 +384,9 @@ object Similarity {
     * (law-tested in ContrastiveSpec); cost is linear in distinct
     * embeddings + true anchor count, replication-invariant.
     *
-    * The round-robin repartition before the member fan-out is the
-    * standing AQE lesson: the tiny post-groupBy class frame would
-    * otherwise coalesce to one partition and explode corpus-sized
-    * output single-core. */
+    * The class frame is [[Dedup.spread]] before the member fan-out. */
   private[graft] def positivesQuotiented(clusters: DataFrame,
                                          repPairs: DataFrame): DataFrame = {
-    val np = clusters.sparkSession.sparkContext.defaultParallelism
     val sym = repPairs
       .select(col("vec_a").as("rep"), col("vec_b").as("partner"), col("cos"))
       .unionByName(repPairs
@@ -408,7 +404,7 @@ object Similarity {
       .select(col("members"), element_at(col("members"), 1).as("m1"),
         try_element_at(col("members"), lit(2)).as("m2"),
         col("nb"), col("self_cos"))
-      .repartition(np)
+      .transform(Dedup.spread)
       .select(explode(col("members")).as("anchor_id"), col("m1"), col("m2"),
         col("nb"), col("self_cos"))
       .withColumn("intra",
@@ -486,13 +482,10 @@ object Similarity {
       e.select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_emb")),
       "anchor_id")
     val aReps = anchors.groupBy(col("anchor_emb")).agg(min(col("anchor_id")).as("arep"))
-    // round-robin repartition before the mining expansion (the standing
-    // AQE lesson): the class frame is small in bytes, AQE coalesces it to
-    // a handful of partitions, and the |classes|·|anchors| cosine scoring
-    // above it under-parallelizes (r14: 12 s of task time on 20 tasks)
-    val np = e.sparkSession.sparkContext.defaultParallelism
-    val classes = e.groupBy(col("embedding")).agg(min(col("vec_id")).as("crep"))
-      .repartition(np)
+    // spread before the |classes|·|anchors| cosine scoring (r14 without
+    // it: 12 s of task time on 20 tasks)
+    val classes = Dedup.spread(
+      e.groupBy(col("embedding")).agg(min(col("vec_id")).as("crep")))
     val scored = classes.crossJoin(broadcast(aReps))
       .withColumn("score", round(Sketches.cosineSim(col("anchor_emb"), col("embedding")), 6))
       .filter(col("score").isNotNull && col("score") < 0.45)
@@ -593,17 +586,11 @@ object Similarity {
     val dim = muMap.size
     val mu = array((0 until dim).map(p => lit(muMap(p))): _*)
     // centered upper-triangle products × multiplicity → dim(dim+1)/2
-    // exact decimal sums. Explicit-width ROUND-ROBIN repartition before
-    // the ×2080 fan-out: AQE coalesces the tiny post-groupBy shuffle to
-    // ONE partition and the Generate then runs single-core (the standing
-    // AQE-coalesce-before-explode lesson). NB a key-based
+    // exact decimal sums, spread before the ×2080 fan-out. NB a key-based
     // repartition(n, embedding) here is ELIMINATED as redundant (the
     // groupBy already hash-distributes on the same key) and the coalesce
     // then wins — measured 7.8 s vs 2.5 s on identical unique counts
-    // purely from that; round-robin has a different distribution, so the
-    // exchange survives and is exempt from AQE coalescing
-    val triRows = uniq
-      .repartition(e.sparkSession.sparkContext.defaultParallelism)
+    val triRows = Dedup.spread(uniq)
       .select(col("nc"), zip_with(rv, mu, (x, m) => x - m).as("cv"))
       .select(col("nc"), explode(expr(
         """flatten(transform(cv, (a, p) ->

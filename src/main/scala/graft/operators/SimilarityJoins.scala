@@ -121,31 +121,15 @@ object SimilarityJoins {
       .withColumn("jaccard", jaccard(col("g_a"), col("g_b")))
       .filter(col("jaccard") >= t)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    expandClusters(repPairs, clusters, "jaccard", lit(1.0))
+    Dedup.expandClassPairs(repPairs, classReps(clusters),
+      clusters.filter(size(col("members")) >= 2)
+        .select(col("members"), lit(1.0).as("jaccard")))
   }
 
-  /** Re-expand a representative-level pair set to the full corpus:
-    * cross-cluster member pairs inherit the representative score, pairs
-    * within one cluster (exact duplicates) score `selfScore`. Output is
-    * exactly the pair set the un-collapsed join would emit. */
-  private def expandClusters(repPairs: DataFrame, clusters: DataFrame,
-                             score: String, selfScore: Column): DataFrame = {
-    val cm = clusters.select(col("members")(0).as("rep"), col("members"))
-    val cross = repPairs
-      .join(cm.select(col("rep").as("doc_a"), col("members").as("ms_a")), "doc_a")
-      .join(cm.select(col("rep").as("doc_b"), col("members").as("ms_b")), "doc_b")
-      .select(explode(col("ms_a")).as("a"), col("ms_b"), col(score))
-      .select(col("a"), explode(col("ms_b")).as("b"), col(score))
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"), col(score))
-    val intra = Dedup.explodeMemberPairs(
-        clusters.filter(size(col("members")) >= 2).select(col("members")),
-        "members",
-        clusters.sparkSession.sessionState.conf.numShufflePartitions,
-        "doc_a", "doc_b")
-      .select(col("doc_a"), col("doc_b"), selfScore.as(score))
-    cross.unionByName(intra)
-  }
+  /** [[Dedup.expandClassPairs]]' `members` frame of a (…, members)
+    * cluster frame: each class's first (smallest) member is its rep. */
+  private def classReps(clusters: DataFrame): DataFrame =
+    clusters.select(col("members")(0).as("rep"), col("members"))
 
   /** Exact edit-distance-≤-k pairs over the first `plen` chars (PassJoin).
     * Each doc indexes its k+1 segments and probes every same-length
@@ -158,10 +142,10 @@ object SimilarityJoins {
     * with probe rows through a packed-long product (primitive loop via
     * SQL transform/flatten, distinct on 8-byte longs). Exact duplicates
     * of the compared prefix collapse to one representative first and
-    * re-expand after ([[expandClusters]]), so duplicate-heavy corpora pay
-    * the index join once per distinct string, and the final explode is
-    * output-bound (measured 80.8 s → output-bound seconds at the 100×
-    * probe's planted 100-member clusters). */
+    * re-expand after ([[Dedup.expandClassPairs]]), so duplicate-heavy
+    * corpora pay the index join once per distinct string, and the final
+    * explode is output-bound (measured 80.8 s → output-bound seconds at
+    * the 100× probe's planted 100-member clusters). */
   def editDistancePairs(d: DataFrame, plen: Int, k: Int): DataFrame = {
     val nSeg = k + 1
     val segLen = plen / nSeg // plen must divide evenly; asserted by callers
@@ -215,7 +199,9 @@ object SimilarityJoins {
       .withColumn("edist", levenshtein(col("s_a"), col("s_b")).cast("long"))
       .filter(col("edist") <= k)
       .select(col("doc_a"), col("doc_b"), col("edist"))
-    expandClusters(repPairs, clusters, "edist", lit(0L))
+    Dedup.expandClassPairs(repPairs, classReps(clusters),
+      clusters.filter(size(col("members")) >= 2)
+        .select(col("members"), lit(0L).as("edist")))
   }
 
   /** Sorted-neighborhood candidate pairs: within each `lang`, sort by
@@ -380,25 +366,11 @@ object SimilarityJoins {
     // expansion with a COMPUTED self-score (see scaladoc): within-cluster
     // pairs take their representative's self-cosine
     val selfCos = vec.select(col("doc_id").as("rep"), dot("m", "m").as("self_cos"))
-    val cm = clusters.select(col("members")(0).as("rep"), col("members"))
-    val cross = repPairs
-      .join(cm.select(col("rep").as("doc_a"), col("members").as("ms_a")), "doc_a")
-      .join(cm.select(col("rep").as("doc_b"), col("members").as("ms_b")), "doc_b")
-      .select(explode(col("ms_a")).as("a"), col("ms_b"), col("cosine"))
-      .select(col("a"), explode(col("ms_b")).as("b"), col("cosine"))
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"), col("cosine"))
-    val intra = Dedup.explodeMemberPairs(
-        clusters.filter(size(col("members")) >= 2)
-          .select(col("members")(0).as("rep"), col("members"))
-          .join(selfCos, "rep")
-          .filter(col("self_cos") >= t)
-          .select(col("members"), col("self_cos")),
-        "members",
-        clusters.sparkSession.sessionState.conf.numShufflePartitions,
-        "doc_a", "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("self_cos").as("cosine"))
-    cross.unionByName(intra)
+    Dedup.expandClassPairs(repPairs, classReps(clusters),
+      classReps(clusters.filter(size(col("members")) >= 2))
+        .join(selfCos, "rep")
+        .filter(col("self_cos") >= t)
+        .select(col("members"), col("self_cos").as("cosine")))
   }
 
   val queries: Map[String, Q] = Map(

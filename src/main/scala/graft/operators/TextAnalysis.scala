@@ -178,13 +178,10 @@ object TextAnalysis {
     // as q_novelty), never quadratic.
     "q_boilerplate_strip" -> ((s, dir) => {
       val base = docs(s, dir).select(col("doc_id"), col("text"))
-      // round-robin spread after the distinct — the standing AQE-coalesce
-      // lesson (r15 stage attribution): the distinct-text frame is small
-      // in bytes, AQE coalesced its read side to ONE partition, and the
-      // gram explode + coverage + reassembly above it ran single-core
-      // (a 5.7 s task ≈ 70% of this query's wall)
-      val uniq = base.select(col("text")).distinct()
-        .repartition(Dedup.pairWidth(base))
+      // spread after the distinct (r15 stage attribution without it: the
+      // gram explode + coverage + reassembly ran single-core, a 5.7 s task
+      // ≈ 70% of this query's wall)
+      val uniq = Dedup.spread(base.select(col("text")).distinct())
         .withColumn("w", split(col("text"), " "))
       val g = uniq.filter(size(col("w")) >= 5)
         .select(col("text"), posexplode(gram5).as(Seq("s", "gram")))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.operators.Dedup
+
 /** Structured Streaming expression of the reference's orchestration-level
   * incremental processing (SURVEY.md §2.9): the reference re-reads the whole
   * glob daily under an Airflow schedule + FileSensor; the Spark-native shape
@@ -728,7 +730,6 @@ object Streams {
     * results concatenate to the global gate). */
   def semanticAdmissionStream(spark: SparkSession, dir: String,
       index: Option[graft.sources.StoreRef] = None): DataFrame = {
-    import graft.operators.Dedup
     import graft.functions.Sketches
     // store side: either the PERSISTED band index ([[graft.operators
     // .Dedup.writeBandIndex]] parquet or its bucketed-table form — fixed
@@ -1012,7 +1013,6 @@ object Streams {
     import spark.implicits._
     import graft.functions.Sketches
     import graft.operators.Multimodal
-    val np = spark.sessionState.conf.numShufflePartitions
     val store = graft.Tables.load(spark, dir, "documents")
       .filter(col("doc_id") % 10 =!= 0)
     // PERSISTED for real (r10 advice): the static side of a stream-static
@@ -1051,7 +1051,7 @@ object Streams {
         val storeIds = () => graft.Tables.load(spark, dir, "documents")
           .filter(col("doc_id") % 10 =!= 0)
           .select(col("doc_id"))
-          .repartition(np) // codec fan-out at full width (docIds lesson)
+          .transform(Dedup.spread) // codec fan-out at full width (docIds lesson)
           .as[Long]
         (storeIds()
           .mapPartitions { it =>
@@ -1090,7 +1090,7 @@ object Streams {
       .select(col("doc_id"), lit("text_neardup").as("gate"))
     val im = arriving()
       .select(col("doc_id"))
-      .repartition(np) // per micro-batch, see audioDedupStream
+      .transform(Dedup.spread) // per micro-batch, see audioDedupStream
       .as[Long]
       .mapPartitions { it =>
         it.map(id => Multimodal.MediaRow(id, "image", Multimodal.encodePng(id)))
@@ -1101,7 +1101,7 @@ object Streams {
       .select(col("doc_id"), lit("image_exact").as("gate"))
     val au = arriving()
       .select(col("doc_id"))
-      .repartition(np) // per micro-batch, see audioDedupStream
+      .transform(Dedup.spread) // per micro-batch, see audioDedupStream
       .as[Long]
       .mapPartitions { it =>
         Multimodal.audioStructure(it.map(id =>
@@ -1114,7 +1114,7 @@ object Streams {
       .select(col("doc_id"), lit("audio_struct").as("gate"))
     val vi = arriving()
       .select(col("doc_id"))
-      .repartition(np)
+      .transform(Dedup.spread)
       .as[Long]
       .mapPartitions { it =>
         Multimodal.videoFingerprint(it.map(id =>
@@ -1193,7 +1193,7 @@ object Streams {
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .select(col("doc_id"))
-      .repartition(spark.sessionState.conf.numShufflePartitions) // see audioDedupStream
+      .transform(Dedup.spread) // see audioDedupStream
       .as[Long]
     val fp = ids.mapPartitions { it =>
       graft.operators.Multimodal.perceptualHash(it.map(id =>
@@ -1222,7 +1222,7 @@ object Streams {
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .select(col("doc_id"))
-      .repartition(spark.sessionState.conf.numShufflePartitions) // see audioDedupStream
+      .transform(Dedup.spread) // see audioDedupStream
       .as[Long]
     val fp = ids.mapPartitions { it =>
       graft.operators.Multimodal.videoFingerprint(it.map(id =>
@@ -1253,7 +1253,7 @@ object Streams {
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .select(col("doc_id"))
-      .repartition(spark.sessionState.conf.numShufflePartitions)
+      .transform(Dedup.spread)
       .as[Long]
     val fp = ids.mapPartitions { it =>
       graft.operators.Multimodal.audioStructure(it.map(id =>
@@ -1385,7 +1385,7 @@ object Streams {
       // under-parallelization lesson applied per micro-batch: round-robin
       // the doc rows to full width BEFORE the explode (the r12 1000×
       // skew probe measured an 11.4 s single task here without it)
-      .repartition(spark.sessionState.conf.numShufflePartitions)
+      .transform(Dedup.spread)
       .select(explode(split(lower(col("text")), " ")).as("token"))
       .as[String]
     runToTable(

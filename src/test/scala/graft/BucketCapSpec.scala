@@ -52,7 +52,7 @@ class BucketCapSpec extends SparkSpec {
       (i.toLong, s"cls$i", members)
     } :+ (999L, "mega", (0L until 3000L).map(_ * 7).toSeq) // one hot class
     val df = spark.createDataFrame(rows).toDF("cls_id", "tag", "members")
-    val got = Dedup.explodeMemberPairs(df, "members", 8, "a", "b")
+    val got = Dedup.explodeMemberPairs(df, "members", "a", "b")
       .select(col("cls_id"), col("tag"), col("a"), col("b"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .sorted

@@ -26,6 +26,43 @@ class LayoutsSpec extends SparkSpec {
     assert(pruned.count() == expected)
   }
 
+  test("daily, 7-day range and 2-D slice read the same rows from every layout") {
+    import graft.operators.DailyTransactions.{dayCount, dayCountRange}
+    val ev = Tables.load(spark, sfDir, "events")
+    val Seq(flatDir, dateDir, zDir) =
+      Seq("flat", "bydate", "zorder").map(t => Files.createTempDirectory(s"graft_$t").toString)
+    ev.repartition(8).write.mode("overwrite").parquet(flatDir)
+    Layouts.writeDatePartitioned(ev.coalesce(2), "ts", dateDir)
+    Layouts.writeZOrdered(ev, "ts", "user_id", 8, zDir)
+    val (flat, byDate, z) =
+      (spark.read.parquet(flatDir), spark.read.parquet(dateDir), spark.read.parquet(zDir))
+    val d0 = Queries.processDate
+    def day(d: java.time.LocalDate) = lit(java.sql.Date.valueOf(d))
+    // the derived partition predicates of the day and the week
+    val dayP = byDate.filter(col("p_date") === day(d0))
+    val weekP = byDate.filter(col("p_date") >= day(d0) && col("p_date") < day(d0.plusDays(7)))
+    def week(df: org.apache.spark.sql.DataFrame) =
+      dayCountRange(df, "ts", d0, d0.plusDays(7)).orderBy("transaction_date")
+    // one week × the lowest tenth of the user range: selective on both
+    // z-ordered columns; a decimal sum, so summation order cannot differ
+    val users = ev.agg(min(col("user_id")), max(col("user_id"))).head()
+    val uCut = users.getLong(0) + (users.getLong(1) - users.getLong(0)) / 10
+    def slice(df: org.apache.spark.sql.DataFrame) = df.filter(
+        col("ts") >= lit(java.sql.Timestamp.valueOf(d0.atStartOfDay())) &&
+        col("ts") < lit(java.sql.Timestamp.valueOf(d0.plusDays(7).atStartOfDay())) &&
+        col("user_id") < uCut)
+      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,6)")).as("v"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+    val sliced = rows(slice(flat))
+    assert(sliced.head != "[0,null]", "the 2-D slice must select rows")
+    for ((tag, flatRows, laidOut) <- Seq(
+        ("daily", rows(dayCount(flat, "ts", d0)), rows(dayCount(dayP, "ts", d0))),
+        ("backfill", rows(week(flat)), rows(week(weekP))),
+        ("slice2d", sliced, rows(slice(z))))) {
+      assert(flatRows.nonEmpty && flatRows == laidOut, tag)
+    }
+  }
+
   test("co-bucketed tables join with zero shuffle exchange") {
     val li = Tables.load(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_quantity")

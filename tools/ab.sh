@@ -9,10 +9,12 @@
 # (as `graft.Probe time` takes them), e.g.
 # spark.sql.autoBroadcastJoinThreshold=-1 to keep every fixpoint round
 # distributed; the sfDir and rounds must then be given.
-# Prints, per query, each side's min over its successful runs and the number
-# of samples behind it. Alternating order cancels slow host drift; per-query
-# min cancels JIT/GC noise between JVMs. A run that exits non-zero prints a
-# FAILED line (its samples are not counted) and makes the script exit 1.
+# Prints, per query, each side's min and max over its successful runs and the
+# number of samples behind them. Alternating order cancels slow host drift;
+# per-query min cancels JIT/GC noise between JVMs, and a side's min–max
+# spread tells a regression from run-to-run noise. A run that exits non-zero
+# prints a FAILED line (its samples are not counted) and makes the script
+# exit 1.
 set -u
 A="$1"; B="$2"; Q="$3"; N="${5:-3}"
 SF=(); [ -n "${4:-}" ] && SF=("$4")
@@ -34,7 +36,8 @@ for i in $(seq 1 "$N"); do
   done
 done
 awk '
-  { k = $2 " " $1; n[k]++; if (!(k in m) || $3 < m[k]) m[k] = $3; q[$2] = 1 }
-  function side(x, s,   k) { k = x " " s; return (k in m) ? sprintf("%8.3f s (n=%d)", m[k], n[k]) : sprintf("%8s   (n=0)", "-") }
+  { k = $2 " " $1; n[k]++; if (!(k in m) || $3 < m[k]) m[k] = $3
+    if (!(k in M) || $3 > M[k]) M[k] = $3; q[$2] = 1 }
+  function side(x, s,   k) { k = x " " s; return (k in m) ? sprintf("%8.3f s max %8.3f s (n=%d)", m[k], M[k], n[k]) : sprintf("%8s   max %8s   (n=0)", "-", "-") }
   END { for (x in q) printf "%-36s A %s  B %s\n", x, side(x, "A"), side(x, "B") }' "$samples" | sort
 exit "$failed"
