@@ -12,7 +12,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   *  - `time`: the bench methodology — [[Harness.checksum]] as the action,
   *    min of 2 runs, and the two runs' checksums must be equal. The A/B
   *    instrument for conf-sensitive hypotheses (`tools/ab.sh` drives it),
-  *    e.g. `spark.graft.ingestBucketed=true` for the bucketed ingest stores.
+  *    e.g. `spark.sql.autoBroadcastJoinThreshold=-1` to keep every join and
+  *    fixpoint round distributed.
   *  - `stages`: "where do the benched seconds go" for any query, streaming
   *    ones included — two runs, the listener counting only the second
   *    (steady-state) run; stages sorted by TOTAL task time with per-stage

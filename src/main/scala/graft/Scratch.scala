@@ -57,13 +57,6 @@ object Scratch {
   val localCheckpointFileManager: String =
     "graft.streaming.NioCheckpointFileManager"
 
-  /** JVM-unique lowercase tag for run-scoped managed-table names (the
-    * table analogue of [[tempDir]]'s uniqueness: two concurrent harness
-    * sessions sharing a warehouse directory must not overwrite each
-    * other's ingest artifacts mid-query — the r12 fixed-path lesson). */
-  lazy val jvmTag: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-
   /** A fresh JVM-unique scratch directory, tmpfs-backed when available,
     * deleted on JVM exit — same placement policy as the checkpoint base. */
   def tempDir(prefix: String): String = {

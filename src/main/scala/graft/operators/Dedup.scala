@@ -1144,22 +1144,10 @@ object Dedup {
     // gate reads it with zero store-side banding work at query time.
     // Same semantics, same oracle; the in-plan variant stays as the
     // self-contained form and A/B baseline.
-    // spark.graft.ingestBucketed=true flips the persisted store to the
-    // BUCKETED managed-table layout (r13 verdict #7 — the cluster
-    // deployment's plan: candidate join reads pre-shuffled buckets, no
-    // store-side exchange); default stays path-addressed parquet
     "q_dedup_semantic_incremental_ingest" -> ((s, dir) => {
-      val ref: graft.sources.StoreRef =
-        if (s.conf.get("spark.graft.ingestBucketed", "false").toBoolean) {
-          val t = s"graft_bandidx_${graft.Scratch.jvmTag}"
-          writeBandIndexBucketed(s, dir, t)
-          graft.sources.StoreRef.Table(t)
-        } else {
-          val p = graft.Scratch.tempDir("graft_bandidx_")
-          writeBandIndex(s, dir, p)
-          graft.sources.StoreRef.Path(p)
-        }
-      semanticIncrementalAdmission(s, dir, Some(ref))
+      val p = graft.Scratch.tempDir("graft_bandidx_")
+      writeBandIndex(s, dir, p)
+      semanticIncrementalAdmission(s, dir, Some(readBandIndex(s, p)))
     }),
   )
 
@@ -1168,18 +1156,20 @@ object Dedup {
     * `_ingest` variant (store side read from the parquet band index
     * written by [[writeBandIndex]]). An arriving vector (vec_id % 10 == 0)
     * is rejected when some STORE vector sits at cosine ≥ 0.45; both sides
-    * band with the SAME seeded hyperplane family so candidates collide. */
+    * band with the SAME seeded hyperplane family so candidates collide.
+    *
+    * `index` is the store side as frames (bands, vectors): here the
+    * parquet [[writeBandIndex]] wrote, read back by [[readBandIndex]]; at
+    * cluster scale it may be `spark.table` frames of a store bucketed on
+    * the join keys. `None` builds it in plan ([[semanticStoreIndex]]). */
   def semanticIncrementalAdmission(s: SparkSession, dir: String,
-      index: Option[graft.sources.StoreRef] = None): DataFrame = {
+      index: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
     val bCls = e.filter(col("vec_id") % 10 === 0)
       .groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("rep"),
         sort_array(collect_list(col("vec_id"))).as("members"))
-    val (sBand, sVec) = index match {
-      case Some(ref) => readBandIndexRef(s, ref)
-      case None      => semanticStoreIndex(e)
-    }
+    val (sBand, sVec) = index.getOrElse(semanticStoreIndex(e))
     val cand = bandedEmbeddings(
         bCls.select(col("rep"), col("embedding")), "rep")
       .join(sBand, Seq("band_idx", "band_val"))
@@ -1216,10 +1206,7 @@ object Dedup {
     * (sid, embedding) — so every later admission pass (batch arrival
     * gate or streaming twin) probes parquet projections with ZERO
     * store-side quotienting/banding work, the fused-ingest discipline
-    * of [[graft.operators.Multimodal.writeIngestTable]]. At cluster
-    * scale the band table is additionally bucketed by (band_idx,
-    * band_val) for exchange-free candidate joins; path-addressed
-    * parquet is the portable form the tests and bench exercise. */
+    * of [[graft.operators.Multimodal.writeIngestTable]]. */
   def writeBandIndex(s: SparkSession, dir: String, outPath: String): Unit = {
     val (bands, vectors) = semanticStoreIndex(Tables.load(s, dir, "embeddings"))
     bands.write.mode("overwrite").parquet(s"$outPath/bands")
@@ -1229,34 +1216,6 @@ object Dedup {
   /** Read back the two frames [[writeBandIndex]] persisted. */
   def readBandIndex(s: SparkSession, path: String): (DataFrame, DataFrame) =
     (s.read.parquet(s"$path/bands"), s.read.parquet(s"$path/vectors"))
-
-  /** Resolve a band-index [[graft.sources.StoreRef]] to its two frames:
-    * path-addressed parquet ([[writeBandIndex]]) or the bucketed managed
-    * tables ([[writeBandIndexBucketed]], whose pre-shuffled buckets the
-    * candidate equi-join reads with no store-side exchange — the plan
-    * `PipelineSpec` pins). */
-  def readBandIndexRef(s: SparkSession,
-      ref: graft.sources.StoreRef): (DataFrame, DataFrame) = ref match {
-    case graft.sources.StoreRef.Path(p)  => readBandIndex(s, p)
-    case graft.sources.StoreRef.Table(t) =>
-      (s.table(s"${t}_bands"), s.table(s"${t}_vectors"))
-  }
-
-  /** Cluster form of [[writeBandIndex]]: the band table saved as a
-    * managed table bucketed on the candidate-join key (band_idx,
-    * band_val) and the vector table bucketed on sid, so an admission
-    * pass's band equi-join and verification join each read pre-shuffled
-    * buckets — only the (small, per-batch) arrival side exchanges.
-    * `PipelineSpec` pins the one-exchange candidate-join plan. */
-  def writeBandIndexBucketed(s: SparkSession, dir: String, table: String,
-                             nBuckets: Int = 32): Unit = {
-    val (bands, vectors) =
-      semanticStoreIndex(Tables.load(s, dir, "embeddings"))
-    graft.sources.Layouts.writeBucketed(
-      bands, s"${table}_bands", nBuckets, Seq("band_idx", "band_val"))
-    graft.sources.Layouts.writeBucketed(
-      vectors, s"${table}_vectors", nBuckets, Seq("sid"))
-  }
 
   /** SemDeDup over the exact-dup quotient graph: components, keeper
     * election and sizes all computed per DISTINCT embedding, re-expanded

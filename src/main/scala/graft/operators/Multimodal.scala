@@ -554,8 +554,8 @@ object Multimodal {
   /** One ingest-time fingerprint row per document across ALL codec
     * modalities — the factoring every downstream dedup / admission /
     * decontamination query shares: at 100 TB the payload columns are read
-    * and DECODED exactly once, the fixed-width fingerprints persist (as a
-    * bucketed table keyed by doc_id), and the per-modality gates become
+    * and DECODED exactly once, the fixed-width fingerprints persist
+    * ([[writeIngestTable]]), and the per-modality gates become
     * joins over this frame instead of re-running three codec scans each.
     * (The 1000× joint-admission probe measured the codec scans as the
     * honest dominant term — 400+ s of 627 s — precisely the cost this
@@ -607,24 +607,9 @@ object Multimodal {
 
   /** Production factoring: write the fused fingerprint table to parquet
     * once at ingest time so every downstream gate — batch or streaming —
-    * reads fingerprints with ZERO codec work at query time.
-    * Path-addressed parquet is the portable form the tests and the
-    * streaming joint-admission store side exercise; the cluster
-    * deployment is [[writeIngestTableBucketed]]. */
+    * reads fingerprints with ZERO codec work at query time. */
   def writeIngestTable(s: SparkSession, dir: String, outPath: String): Unit =
     ingestFingerprintFrame(s, dir).write.mode("overwrite").parquet(outPath)
-
-  /** Cluster form of [[writeIngestTable]] (r12 verdict #4): the
-    * fingerprint table saved as a doc_id-bucketed managed table
-    * ([[graft.sources.Layouts.writeBucketed]]), so every downstream
-    * doc_id equi-join — admission probes, fact joins back to documents —
-    * reads pre-shuffled buckets and plans with NO exchange on this side:
-    * the ingest-time write pays the fingerprint shuffle exactly once.
-    * `MultimodalSpec` pins the exchange-free plan. */
-  def writeIngestTableBucketed(s: SparkSession, dir: String, table: String,
-                               nBuckets: Int = 32): Unit =
-    graft.sources.Layouts.writeBucketed(
-      ingestFingerprintFrame(s, dir), table, nBuckets, Seq("doc_id"))
 
   /** Batched decode + feature-extract: per-partition iterator, one real
     * PNG decode per row (registry-free — see [[decodeImageBytes]]), stats
@@ -818,8 +803,8 @@ object Multimodal {
     // because four consumers read it. Oracle: the three class bijections
     // (img ⟺ mod 96, audio ⟺ mod 35, video ⟺ mod 348, each pinned in
     // MultimodalSpec) give every output column a closed form. Production
-    // persists this frame bucketed by doc_id ([[writeIngestTable]]) and
-    // the whole dedup/admission/decontamination family joins it instead
+    // persists this frame once ([[writeIngestTable]]) and the whole
+    // dedup/admission/decontamination family joins it instead
     // of re-decoding — the factoring the 1000× joint probes costed out.
     "q_multimodal_ingest" -> ((s, dir) => {
       val fp = ingestTable(s, dir)

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -116,22 +118,22 @@ object Similarity {
 
     // the PRODUCTION factorings (r13 verdict #2 — the similarity-axis
     // analogue of q_dedup_semantic_incremental_ingest): the ANN model is
-    // trained + persisted ONCE at ingest time ([[writeIvfModel]] /
-    // [[writePqModel]]), then the search pass LOADS it — zero in-query
+    // trained + persisted ONCE at ingest time ([[writeModel]]), then the
+    // search pass LOADS it ([[readModel]]) — zero in-query
     // sample collection, Lloyd iterations, or codebook fitting. Same
     // deterministic training sample ⇒ same model ⇒ same certified-exact
     // output, so each shares its in-plan twin's brute-force oracle;
     // equality of the twins is pinned in PipelineSpec.
     "q_similarity_ivf_ingest" -> ((s, dir) => {
       val p = graft.Scratch.tempDir("graft_ivfmodel_")
-      writeIvfModel(s, dir, p)
-      ivf(s, dir, model = Some(readIvfModel(s, p)))
+      writeModel(s, p, ivfModelOf(Tables.load(s, dir, "embeddings")))
+      ivf(s, dir, model = Some(readModel[IvfModel](s, p)))
     }),
 
     "q_similarity_pq_ingest" -> ((s, dir) => {
       val p = graft.Scratch.tempDir("graft_pqmodel_")
-      writePqModel(s, dir, p)
-      pq(s, dir, model = Some(readPqModel(s, p)))
+      writeModel(s, p, pqModelOf(Tables.load(s, dir, "embeddings")))
+      pq(s, dir, model = Some(readModel[PqModel](s, p)))
     }),
 
     // int8 symmetric quantization of the embedding column — 4× smaller
@@ -231,15 +233,15 @@ object Similarity {
       embedProject(Tables.load(s, dir, "embeddings"))),
 
     // production factoring of the projection: the PCA model is fitted +
-    // persisted once at ingest ([[writePcaModel]]); the projection pass
+    // persisted once at ingest ([[writeModel]]); the projection pass
     // loads (μ, v) from parquet and applies them as literals — zero
     // in-query moment passes over the corpus. Same model by determinism
     // ⇒ same oracle as q_embed_project.
     "q_embed_project_ingest" -> ((s, dir) => {
       val p = graft.Scratch.tempDir("graft_pcamodel_")
-      writePcaModel(s, dir, p)
-      embedProject(Tables.load(s, dir, "embeddings"),
-        Some(readPcaModel(s, p)))
+      val e = Tables.load(s, dir, "embeddings")
+      writeModel(s, p, pcaModelOf(e))
+      embedProject(e, Some(readModel[PcaModel](s, p)))
     }),
 
     "q_embed_quantize" -> ((s, dir) => {
@@ -647,7 +649,7 @@ object Similarity {
       model: Option[PcaModel] = None): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     // model = Some(...) skips the in-query moment passes entirely — the
-    // persisted (μ, v) enter as literals ([[writePcaModel]])
+    // persisted (μ, v) enter as literals ([[writeModel]])
     val m = model.getOrElse(pcaModelOf(e))
     val (mu, v) = (m.mu, m.v)
     val muLit = array(mu.map(lit(_)): _*)
@@ -686,7 +688,7 @@ object Similarity {
   }
 
   /** Train the IVF model from the corpus's bounded deterministic sample
-    * — the one-time ingest step [[writeIvfModel]] persists. */
+    * — the one-time ingest step [[writeModel]] persists. */
   private[graft] def ivfModelOf(e: DataFrame): IvfModel = {
     val sample = loadSample(e)
     val cb = trainCodebook(sample)
@@ -707,76 +709,24 @@ object Similarity {
     PcaModel(mu.toSeq, v.toSeq, lam, trace)
   }
 
-  /** Persist the IVF model to parquet ONCE at ingest time (r13 verdict
-    * #2 — the similarity-axis analogue of
+  /** Persist a trained model value to parquet ONCE at ingest time (r13
+    * verdict #2 — the similarity-axis analogue of
     * [[graft.operators.Dedup.writeBandIndex]]): at 100 TB the codebook is
     * trained once when the corpus lands, and every later search pass
-    * loads the k·dim-float table instead of re-collecting a sample and
-    * re-running Lloyd iterations inside the query. One row per centroid;
-    * the sample p90 residual rides along so the loaded model drives the
-    * certificate viability gate without the sample. */
-  def writeIvfModel(s: SparkSession, dir: String, outPath: String): Unit = {
-    import s.implicits._
-    val m = ivfModelOf(Tables.load(s, dir, "embeddings"))
-    m.centroids.zipWithIndex
-      .map { case (c, i) => (i, c, m.p90Residual) }
-      .toDF("cell", "centroid", "p90").coalesce(1)
-      .write.mode("overwrite").parquet(outPath)
-  }
+    * loads it instead of re-collecting a sample and re-running Lloyd
+    * iterations inside the query. One row in the case class's own
+    * encoder layout, so the file follows the model type with nothing to
+    * keep in step; an IVF or PQ model carries its sample p90 residual, so
+    * a loaded one drives the certificate viability gate without the
+    * sample. */
+  def writeModel[T <: Product : TypeTag](s: SparkSession, path: String,
+      m: T): Unit =
+    s.createDataset(Seq(m))(Encoders.product[T])
+      .write.mode("overwrite").parquet(path)
 
-  /** Read back the model [[writeIvfModel]] persisted (bounded collect:
-    * k rows). */
-  def readIvfModel(s: SparkSession, path: String): IvfModel = {
-    val rows = s.read.parquet(path)
-      .select(col("cell"), col("centroid"), col("p90"))
-      .orderBy(col("cell")).collect()
-    IvfModel(rows.map(_.getSeq[Float](1)).toSeq, rows.head.getDouble(2))
-  }
-
-  /** Persist the PQ model (M·K centroid rows + sample p90) — see
-    * [[writeIvfModel]] for the ingest-time contract. */
-  def writePqModel(s: SparkSession, dir: String, outPath: String): Unit = {
-    import s.implicits._
-    val model = pqModelOf(Tables.load(s, dir, "embeddings"))
-    (for {
-      (sub, mi) <- model.codebooks.zipWithIndex
-      (c, ci) <- sub.zipWithIndex
-    } yield (mi, ci, c, model.p90Residual))
-      .toDF("m", "c", "centroid", "p90").coalesce(1)
-      .write.mode("overwrite").parquet(outPath)
-  }
-
-  /** Read back the model [[writePqModel]] persisted (bounded collect:
-    * M·K rows). */
-  def readPqModel(s: SparkSession, path: String): PqModel = {
-    val rows = s.read.parquet(path)
-      .select(col("m"), col("c"), col("centroid"), col("p90"))
-      .orderBy(col("m"), col("c")).collect()
-    val cb = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rs) => rs.sortBy(_.getInt(1)).map(_.getSeq[Float](2)).toSeq }
-    PqModel(cb, rows.head.getDouble(3))
-  }
-
-  /** Persist the PCA model (one row per dimension: μ_p, v_p, plus the
-    * constant eigenvalue/trace) — the whitening/projection model a
-    * pipeline fits once and applies to every later scan. */
-  def writePcaModel(s: SparkSession, dir: String, outPath: String): Unit = {
-    import s.implicits._
-    val m = pcaModelOf(Tables.load(s, dir, "embeddings"))
-    m.mu.indices.map(p => (p, m.mu(p), m.v(p), m.lam, m.trace))
-      .toDF("pos", "mu", "v", "lam", "trace").coalesce(1)
-      .write.mode("overwrite").parquet(outPath)
-  }
-
-  /** Read back the model [[writePcaModel]] persisted (bounded collect:
-    * dim rows). */
-  def readPcaModel(s: SparkSession, path: String): PcaModel = {
-    val rows = s.read.parquet(path)
-      .select(col("pos"), col("mu"), col("v"), col("lam"), col("trace"))
-      .orderBy(col("pos")).collect()
-    PcaModel(rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq,
-      rows.head.getDouble(3), rows.head.getDouble(4))
-  }
+  /** Read back the model [[writeModel]] persisted (one row). */
+  def readModel[T <: Product : TypeTag](s: SparkSession, path: String): T =
+    s.read.parquet(path).as[T](Encoders.product[T]).head()
 
   /** Spherical k-means codebook, trained driver-side on the bounded
     * deterministic [[loadSample]] (constant-size regardless of corpus
@@ -849,7 +799,7 @@ object Similarity {
       nprobe: Int = 3, model: Option[IvfModel] = None): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
     // model = Some(...) is the ingest-factored path: codebook and
-    // viability signal come from the PERSISTED model ([[writeIvfModel]]),
+    // viability signal come from the PERSISTED model ([[writeModel]]),
     // zero in-query sample collection or Lloyd iterations
     val m = model.getOrElse(ivfModelOf(e))
     val cb = m.centroids
@@ -1280,7 +1230,7 @@ object Similarity {
   private[graft] def pq(s: SparkSession, dir: String,
       shortlistFactor: Int = 8, model: Option[PqModel] = None): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
-    // model = Some(...) is the ingest-factored path ([[writePqModel]]):
+    // model = Some(...) is the ingest-factored path ([[writeModel]]):
     // codebooks + viability signal load from parquet, zero in-query
     // training
     val m = model.getOrElse(pqModelOf(e))

@@ -727,19 +727,22 @@ object Streams {
     * cost + stream overhead with NO single-task tail. State: none (the
     * rejects table is per-batch parquet, overwrite-by-batchId for replay
     * idempotence; each arrival lives in exactly one batch, so per-batch
-    * results concatenate to the global gate). */
+    * results concatenate to the global gate).
+    *
+    * `index` is the store side as frames (bands, vectors): here the
+    * parquet [[graft.operators.Dedup.writeBandIndex]] wrote, read back by
+    * [[graft.operators.Dedup.readBandIndex]]; at cluster scale it may be
+    * `spark.table` frames of a store bucketed on the join keys. */
   def semanticAdmissionStream(spark: SparkSession, dir: String,
-      index: Option[graft.sources.StoreRef] = None): DataFrame = {
+      index: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     import graft.functions.Sketches
-    // store side: either the PERSISTED band index ([[graft.operators
-    // .Dedup.writeBandIndex]] parquet or its bucketed-table form — fixed
-    // projections, zero quotient/band work at admission time; no
-    // persist() needed, the storage IS the materialization) or the
-    // self-contained in-plan quotient+banding, persisted so the
-    // per-micro-batch static-side re-plan doesn't recompute it.
+    // store side: either the PERSISTED band index (fixed projections,
+    // zero quotient/band work at admission time; no persist() needed,
+    // the storage IS the materialization) or the self-contained in-plan
+    // quotient+banding, persisted so the per-micro-batch static-side
+    // re-plan doesn't recompute it.
     val (sBand, sEmb) = index match {
-      case Some(ref) =>
-        val (b, v) = Dedup.readBandIndexRef(spark, ref)
+      case Some((b, v)) =>
         (b, v.select(col("sid"), col("embedding").as("s_emb")))
       case None =>
         val (b, v) = Dedup.semanticStoreIndex(
@@ -999,17 +1002,19 @@ object Streams {
     * contaminated arrivals, never stream length; every static index is a
     * CLASS index, so probe volume is linear in distinct store content.
     *
-    * `ingestPath` switches the store side to the PRODUCTION factoring: the
-    * three codec class indexes become reads of a persisted fused-ingest
-    * fingerprint table ([[graft.operators.Multimodal.writeIngestTable]] —
-    * the `q_multimodal_ingest` frame on parquet), so admission does ZERO
-    * store-side codec work. The text indexes still derive from the
+    * `ingest` switches the store side to the PRODUCTION factoring: the
+    * three codec class indexes become projections of a persisted
+    * fused-ingest fingerprint frame — here the parquet
+    * [[graft.operators.Multimodal.writeIngestTable]] wrote (the
+    * `q_multimodal_ingest` frame), at cluster scale possibly a
+    * `spark.table` frame of a doc_id-bucketed store — so admission does
+    * ZERO store-side codec work. The text indexes still derive from the
     * documents scan either way — text is not an ingest fingerprint. A
     * 100 TB ingest pipeline runs the `Some` shape; the `None` shape
     * (in-plan codec scans, persisted for the run) remains for
     * self-contained use and as the A/B baseline. */
   def jointAdmissionStream(spark: SparkSession, dir: String,
-      ingest: Option[graft.sources.StoreRef] = None): DataFrame = {
+      ingest: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     import graft.functions.Sketches
     import graft.operators.Multimodal
@@ -1032,16 +1037,11 @@ object Streams {
     val storeSig = banded(storeTexts.select(col("text").as("text_o")),
       Seq.empty, "text_o").persist()
     val (storeImg, storeAud, storeVid) = ingest match {
-      case Some(ref) =>
+      case Some(fp) =>
         // production factoring: the codec class indexes are projections
-        // of the persisted fused-ingest fingerprint table — fixed-width
-        // columns off parquet or the doc_id-bucketed managed table, no
-        // decode anywhere on the store side
-        val ingRaw = ref match {
-          case graft.sources.StoreRef.Path(p)  => spark.read.parquet(p)
-          case graft.sources.StoreRef.Table(t) => spark.table(t)
-        }
-        val ing = ingRaw.filter(col("doc_id") % 10 =!= 0)
+        // of the persisted fused-ingest fingerprint frame — fixed-width
+        // columns, no decode anywhere on the store side
+        val ing = fp.filter(col("doc_id") % 10 =!= 0)
         (ing.select(col("img_fp")).distinct().persist(),
           ing.select(struct(col("audio_frames").as("n_frames"),
               col("audio_mask").as("silent_mask")).as("aud_cls"))
@@ -1492,20 +1492,10 @@ object Streams {
     // exit): a fixed dir.hashCode-keyed path let two concurrent sessions
     // on the same corpus overwrite each other's table mid-stream and
     // leaked the artifact (r12 advice)
-    // spark.graft.ingestBucketed=true flips the persisted fingerprint
-    // store to the doc_id-bucketed managed-table layout (r13 verdict #7)
     "q_stream_joint_rejects_ingest" -> ((s, dir) => {
-      val ref: graft.sources.StoreRef =
-        if (s.conf.get("spark.graft.ingestBucketed", "false").toBoolean) {
-          val t = s"graft_fpidx_${graft.Scratch.jvmTag}"
-          graft.operators.Multimodal.writeIngestTableBucketed(s, dir, t)
-          graft.sources.StoreRef.Table(t)
-        } else {
-          val p = graft.Scratch.tempDir("graft_ingest_")
-          graft.operators.Multimodal.writeIngestTable(s, dir, p)
-          graft.sources.StoreRef.Path(p)
-        }
-      jointAdmissionStream(s, dir, Some(ref))
+      val p = graft.Scratch.tempDir("graft_ingest_")
+      graft.operators.Multimodal.writeIngestTable(s, dir, p)
+      jointAdmissionStream(s, dir, Some(s.read.parquet(p)))
     }),
     "q_stream_semantic_rejects" -> ((s, dir) => semanticAdmissionStream(s, dir)),
     // the PRODUCTION factoring on the embedding axis (r12 verdict #1):
@@ -1514,19 +1504,10 @@ object Streams {
     // quotient/banding work at admission. Same semantics, same oracle;
     // the in-plan variant stays as the self-contained A/B baseline.
     "q_stream_semantic_rejects_ingest" -> ((s, dir) => {
-      val ref: graft.sources.StoreRef =
-        if (s.conf.get("spark.graft.ingestBucketed", "false").toBoolean) {
-          // distinct name from the batch twin's: concurrent Verify
-          // workers must never overwrite each other's table mid-query
-          val t = s"graft_bandidx_s_${graft.Scratch.jvmTag}"
-          graft.operators.Dedup.writeBandIndexBucketed(s, dir, t)
-          graft.sources.StoreRef.Table(t)
-        } else {
-          val p = graft.Scratch.tempDir("graft_bandidx_")
-          graft.operators.Dedup.writeBandIndex(s, dir, p)
-          graft.sources.StoreRef.Path(p)
-        }
-      semanticAdmissionStream(s, dir, Some(ref))
+      val p = graft.Scratch.tempDir("graft_bandidx_")
+      graft.operators.Dedup.writeBandIndex(s, dir, p)
+      semanticAdmissionStream(s, dir,
+        Some(graft.operators.Dedup.readBandIndex(s, p)))
     }),
     // streaming DSIR scoring against the persisted model — the mixture
     // axis's streaming form (see [[dsirScoreStream]])

@@ -634,8 +634,7 @@ class MultimodalSpec extends SparkSpec {
       Seq("audio_frames", "audio_mask", "doc_id", "img_fp", "video_fp"))
     assert(ing.count() == Tables.load(spark, sfDir, "documents").count())
     val fromIngest = streaming.Streams
-      .jointAdmissionStream(spark, sfDir,
-        Some(graft.sources.StoreRef.Path(out)))
+      .jointAdmissionStream(spark, sfDir, Some(ing))
       .collect().map(_.toSeq).toSet
     val inPlan = Queries.all("q_stream_joint_rejects")(spark, sfDir)
       .collect().map(_.toSeq).toSet
@@ -646,11 +645,22 @@ class MultimodalSpec extends SparkSpec {
     // the cluster deployment (r12 verdict #4): the fingerprint table is
     // bucketed by doc_id at write time, so downstream doc_id equi-joins
     // never re-shuffle it — pay the exchange once at ingest, not per gate
-    operators.Multimodal.writeIngestTableBucketed(spark, sfDir, "ingest_bkt", 4)
+    sources.Layouts.writeBucketed(
+      operators.Multimodal.ingestFingerprintFrame(spark, sfDir),
+      "ingest_bkt", 4, Seq("doc_id"))
     val ing = spark.table("ingest_bkt")
     // same rows as the path-addressed form
     val flat = operators.Multimodal.ingestTable(spark, sfDir)
     assert(ing.collect().map(_.toSeq).toSet == flat.collect().map(_.toSeq).toSet)
+    // the joint admission gate takes the table's frame as its store
+    // side and admits exactly what the in-plan variant does
+    val fromTable = streaming.Streams
+      .jointAdmissionStream(spark, sfDir, Some(ing))
+      .collect().map(_.toSeq).toSet
+    val inPlan = Queries.all("q_stream_joint_rejects")(spark, sfDir)
+      .collect().map(_.toSeq).toSet
+    assert(inPlan.nonEmpty, "gate vacuous: no rejected docs in corpus")
+    assert(fromTable == inPlan, "bucketed-table joint admission drift")
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

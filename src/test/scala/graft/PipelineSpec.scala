@@ -73,23 +73,34 @@ class PipelineSpec extends SparkSpec {
     val inPlan = Queries.all("q_dedup_semantic_incremental")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     val fromIndex = Dedup.semanticIncrementalAdmission(spark, sfDir,
-        Some(graft.sources.StoreRef.Path(p)))
+        Some((bands, vectors)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(inPlan.nonEmpty, "gate vacuous: no rejected vectors in corpus")
     assert(fromIndex == inPlan, "persisted-index batch admission drift")
     val streamFromIndex = streaming.Streams
-      .semanticAdmissionStream(spark, sfDir,
-        Some(graft.sources.StoreRef.Path(p)))
+      .semanticAdmissionStream(spark, sfDir, Some((bands, vectors)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(streamFromIndex == inPlan, "persisted-index streaming admission drift")
   }
 
-  test("ingestBucketed conf: registered _ingest gate reads the bucketed store, same rows, fewer exchanges") {
-    // the benched-session switch (r13 verdict #7): with
-    // spark.graft.ingestBucketed=true the registered query must resolve
-    // its store to the bucketed managed tables (visible in the scan), cut
-    // the store-side exchange the path-addressed layout pays, and emit
-    // identical rows
+  /** The band index as bucketed managed tables `<table>_bands` (on the
+    * candidate-join key) and `<table>_vectors` (on sid) — the cluster
+    * layout a deployment may hand the admission gates as frames. */
+  private def bucketBandIndex(table: String): Unit = {
+    val (bands, vectors) = graft.operators.Dedup.semanticStoreIndex(
+      Tables.load(spark, sfDir, "embeddings"))
+    sources.Layouts.writeBucketed(
+      bands, s"${table}_bands", 4, Seq("band_idx", "band_val"))
+    sources.Layouts.writeBucketed(vectors, s"${table}_vectors", 4, Seq("sid"))
+  }
+
+  test("bucketed band-index frames: admission gate reads the bucketed store, same rows, fewer exchanges") {
+    // the gate takes its store as frames, so a bucketed store is just
+    // spark.table frames: the plan must scan the bucketed tables, cut
+    // the store-side exchange the path-addressed parquet store pays (the
+    // registered _ingest query), and emit identical rows
+    import graft.operators.Dedup
+    bucketBandIndex("graft_bandidx_gate")
     def run() = Queries.all("q_dedup_semantic_incremental_ingest")(spark, sfDir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -101,19 +112,18 @@ class PipelineSpec extends SparkSpec {
     try {
       val pathDf = run()
       val pathRows = rows(pathDf)
-      spark.conf.set("spark.graft.ingestBucketed", "true")
-      try {
-        val bktDf = run()
-        assert(bktDf.queryExecution.executedPlan.toString
-            .contains("graft_bandidx_"),
-          "bucketed conf on, but no bucketed-table scan in the plan")
-        assert(nEx(bktDf) < nEx(pathDf),
-          s"bucketed store should plan fewer exchanges " +
-            s"(${nEx(bktDf)} vs ${nEx(pathDf)})")
-        val bktRows = rows(bktDf)
-        assert(bktRows.nonEmpty && bktRows == pathRows,
-          "bucketed-layout admission drift")
-      } finally spark.conf.set("spark.graft.ingestBucketed", "false")
+      val bktDf = Dedup.semanticIncrementalAdmission(spark, sfDir,
+        Some((spark.table("graft_bandidx_gate_bands"),
+          spark.table("graft_bandidx_gate_vectors"))))
+      assert(bktDf.queryExecution.executedPlan.toString
+          .contains("graft_bandidx_gate"),
+        "bucketed frames passed, but no bucketed-table scan in the plan")
+      assert(nEx(bktDf) < nEx(pathDf),
+        s"bucketed store should plan fewer exchanges " +
+          s"(${nEx(bktDf)} vs ${nEx(pathDf)})")
+      val bktRows = rows(bktDf)
+      assert(bktRows.nonEmpty && bktRows == pathRows,
+        "bucketed-layout admission drift")
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
@@ -124,18 +134,19 @@ class PipelineSpec extends SparkSpec {
     // persisted; a loaded model must be value-identical to an in-plan
     // fit, and each _ingest query must reproduce its twin's rows exactly
     import graft.operators.Similarity
+    import Similarity.{IvfModel, PcaModel, PqModel}
     val e = Tables.load(spark, sfDir, "embeddings")
     val pI = java.nio.file.Files.createTempDirectory("graft_ivfm_spec").toString
-    Similarity.writeIvfModel(spark, sfDir, pI)
-    assert(Similarity.readIvfModel(spark, pI) == Similarity.ivfModelOf(e),
+    Similarity.writeModel(spark, pI, Similarity.ivfModelOf(e))
+    assert(Similarity.readModel[IvfModel](spark, pI) == Similarity.ivfModelOf(e),
       "IVF model round-trip drift")
     val pP = java.nio.file.Files.createTempDirectory("graft_pqm_spec").toString
-    Similarity.writePqModel(spark, sfDir, pP)
-    assert(Similarity.readPqModel(spark, pP) == Similarity.pqModelOf(e),
+    Similarity.writeModel(spark, pP, Similarity.pqModelOf(e))
+    assert(Similarity.readModel[PqModel](spark, pP) == Similarity.pqModelOf(e),
       "PQ model round-trip drift")
     val pC = java.nio.file.Files.createTempDirectory("graft_pcam_spec").toString
-    Similarity.writePcaModel(spark, sfDir, pC)
-    assert(Similarity.readPcaModel(spark, pC) == Similarity.pcaModelOf(e),
+    Similarity.writeModel(spark, pC, Similarity.pcaModelOf(e))
+    assert(Similarity.readModel[PcaModel](spark, pC) == Similarity.pcaModelOf(e),
       "PCA model round-trip drift")
     for (name <- Seq("q_similarity_ivf", "q_similarity_pq", "q_embed_project")) {
       val inPlan = Queries.all(name)(spark, sfDir).collect().toSeq
@@ -151,7 +162,7 @@ class PipelineSpec extends SparkSpec {
     // re-shuffles the corpus-sized store side — only the per-batch
     // arrival quotient exchanges
     import graft.operators.Dedup
-    Dedup.writeBandIndexBucketed(spark, sfDir, "bandidx_bkt", 4)
+    bucketBandIndex("bandidx_bkt")
     val sBand = spark.table("bandidx_bkt_bands")
     val e = Tables.load(spark, sfDir, "embeddings")
     val bCls = e.filter(col("vec_id") % 10 === 0)

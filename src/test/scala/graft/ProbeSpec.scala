@@ -8,9 +8,9 @@ class ProbeSpec extends AnyFunSuite {
     val c = Probe.parse(Seq("time", "q_a, q_b", "/data/sf1", "a.b=1", "c=x=y", "e="))
     assert(c == Probe.Cmd("time", Seq("q_a", "q_b"), "/data/sf1",
       Map("a.b" -> "1", "c" -> "x=y", "e" -> "")))
-    val d = Probe.parse(Seq("plan", "q_a", "spark.graft.ingestBucketed=true"))
+    val d = Probe.parse(Seq("plan", "q_a", "spark.sql.autoBroadcastJoinThreshold=-1"))
     assert(d.sfDir == "perfbench/data/sf0.1")
-    assert(d.overrides == Map("spark.graft.ingestBucketed" -> "true"))
+    assert(d.overrides == Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
   }
 
   test("a malformed override, mode or query list fails instead of setting a garbage conf") {

@@ -7,9 +7,11 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Reads <verifyOutDir>/oracle_sql.json (dumped by graft.Verify), runs each
 SQL in DuckDB over the parquet tables in <sfDir>, loads the Spark result
 parquet from <verifyOutDir>/<name>/, sorts columns by name and rows by all
-columns, and compares values cell-by-cell.
+columns, and compares values cell-by-cell. Each query's line ends with the
+seconds its oracle SQL took in DuckDB and the seconds the whole check took
+(load, sort, compare); the run ends with the 10 slowest oracle queries.
 """
-import duckdb, glob, json, math, os, sys
+import duckdb, glob, json, math, os, sys, time
 
 import pandas as pd
 
@@ -40,6 +42,53 @@ def cells_equal(a, b) -> bool:
     return str(a) == str(b)
 
 
+def check(con, oracle, out_dir, name):
+    """Check one query; returns (ok, status line, DuckDB oracle seconds)."""
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    if not files:
+        return False, f"[MISS ] {name}: no spark parquet output", 0.0
+    got = canon(con.sql(
+        f"SELECT * FROM read_parquet({files!r})").df())
+    if name not in oracle:
+        return (len(got) > 0,
+                f"[ROWS ] {name}: {len(got)} rows (no oracle — rows-only check)",
+                0.0)
+    t0 = time.perf_counter()
+    sql_s = 0.0
+    try:
+        exp = con.sql(oracle[name]).df()
+        sql_s = time.perf_counter() - t0
+        exp = canon(exp)
+    except Exception as e:
+        return (False, f"[SQLER] {name}: oracle SQL failed: {e}",
+                sql_s or time.perf_counter() - t0)
+    if list(exp.columns) != list(got.columns):
+        return (False, f"[COLS ] {name}: oracle {list(exp.columns)} "
+                f"!= spark {list(got.columns)}", sql_s)
+    if len(exp) != len(got):
+        return (False, f"[NROW ] {name}: oracle {len(exp)} != spark {len(got)}",
+                sql_s)
+    bad = []
+    for c in exp.columns:
+        ev, gv = exp[c].tolist(), got[c].tolist()
+        for i, (a, b) in enumerate(zip(ev, gv)):
+            if not cells_equal(a, b):
+                bad.append((c, i, a, b))
+                if len(bad) >= 3:
+                    break
+        if len(bad) >= 3:
+            break
+    dtypes_differ = [
+        (c, str(exp[c].dtype), str(got[c].dtype))
+        for c in exp.columns if str(exp[c].dtype) != str(got[c].dtype)]
+    if bad:
+        return False, f"[FAIL ] {name}: first diffs {bad}", sql_s
+    if dtypes_differ:
+        return (True, f"[DTYPE] {name}: values match; dtypes differ "
+                f"{dtypes_differ}", sql_s)
+    return True, f"[OK   ] {name}: {len(got)} rows, {len(got.columns)} cols", sql_s
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
@@ -54,53 +103,19 @@ def main():
     dirs = {os.path.basename(d) for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d)}
     # include oracle keys whose spark dump is missing (query crashed in Verify)
     all_queries = sorted(dirs | set(oracle))
+    secs = {}  # name -> (DuckDB oracle seconds, whole-check seconds)
     for name in all_queries:
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        if not files:
-            print(f"[MISS ] {name}: no spark parquet output")
+        t0 = time.perf_counter()
+        ok, line, sql_s = check(con, oracle, out_dir, name)
+        secs[name] = (sql_s, time.perf_counter() - t0)
+        if not ok:
             n_fail += 1
-            continue
-        got = canon(con.sql(
-            f"SELECT * FROM read_parquet({files!r})").df())
-        if name not in oracle:
-            print(f"[ROWS ] {name}: {len(got)} rows (no oracle — rows-only check)")
-            if len(got) == 0:
-                n_fail += 1
-            continue
-        try:
-            exp = canon(con.sql(oracle[name]).df())
-        except Exception as e:
-            print(f"[SQLER] {name}: oracle SQL failed: {e}")
-            n_fail += 1
-            continue
-        if list(exp.columns) != list(got.columns):
-            print(f"[COLS ] {name}: oracle {list(exp.columns)} != spark {list(got.columns)}")
-            n_fail += 1
-            continue
-        if len(exp) != len(got):
-            print(f"[NROW ] {name}: oracle {len(exp)} != spark {len(got)}")
-            n_fail += 1
-            continue
-        bad = []
-        for c in exp.columns:
-            ev, gv = exp[c].tolist(), got[c].tolist()
-            for i, (a, b) in enumerate(zip(ev, gv)):
-                if not cells_equal(a, b):
-                    bad.append((c, i, a, b))
-                    if len(bad) >= 3:
-                        break
-            if len(bad) >= 3:
-                break
-        dtypes_differ = [
-            (c, str(exp[c].dtype), str(got[c].dtype))
-            for c in exp.columns if str(exp[c].dtype) != str(got[c].dtype)]
-        if bad:
-            print(f"[FAIL ] {name}: first diffs {bad}")
-            n_fail += 1
-        elif dtypes_differ:
-            print(f"[DTYPE] {name}: values match; dtypes differ {dtypes_differ}")
-        else:
-            print(f"[OK   ] {name}: {len(got)} rows, {len(got.columns)} cols")
+        print(f"{line} [duckdb {sql_s:.2f} s, total {secs[name][1]:.2f} s]",
+              flush=True)
+    print("\n10 slowest oracle queries (duckdb s, total s):")
+    for name, (sql_s, total_s) in sorted(
+            secs.items(), key=lambda kv: -kv[1][0])[:10]:
+        print(f"  {sql_s:8.2f} {total_s:8.2f}  {name}")
     print(f"\n{len(all_queries)} queries, {n_fail} failures")
     sys.exit(1 if n_fail else 0)
 
