@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, MapType}
 
 /** The one local-session factory for the harness mains (Bench, Verify,
-  * Probe, ScaleData, ProbeSkew) and the test session, plus
+  * Probe, ScaleData) and the test session, plus
   * the bench timing action ([[checksum]]).
   *
   * The session policy is applied in exactly one place; a caller that needs

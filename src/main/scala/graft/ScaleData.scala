@@ -21,9 +21,14 @@ import org.apache.spark.sql.functions._
   *    dimension tables stay single-copy (10x facts per dimension row).
   *  - events: event_ids shift; timestamps repeat (10x events per day).
   *
-  * Usage: runMain graft.ScaleData <srcSfDir> <outDir> [copies] [tables] [skewPct]
+  * Usage: tools/run.sh graft.ScaleData <srcSfDir> <outDir> [copies] [tables] [skewPct]
   * (tables = comma list to replicate a subset, e.g. "documents,embeddings"
-  * for a deep text/embedding probe without paying for 1000x events)
+  * for a deep text/embedding probe without paying for 1000x events;
+  * defaults 10 copies, all tables, no skew). The CLI runs [[write]] on a
+  * session pinned 32 wide; programs and specs call [[write]] on their own
+  * session (SkewSpec writes a 3-copy skewed corpus from sf0.001 and checks
+  * the hot-class paths against closed forms; time a large skewed corpus
+  * with `tools/run.sh graft.Probe stages <query> <outDir>`).
   *
   * skewPct > 0 plants the ADVERSARIAL-SKEW block the uniform replication
   * above cannot produce: real crawls have mega-classes (one blank image /
@@ -66,12 +71,10 @@ object ScaleData {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "args: <srcSfDir> <outDir> [copies] [tables] [skewPct]")
-    val (src, out) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 10
-    val only: Set[String] =
+    val tables: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
     val skewPct = if (args.length > 4) args(4).toInt else 0
-    require(skewPct >= 0 && skewPct < 100, s"skewPct in [0,100): $skewPct")
     // FIXED default width: derived-parquet part-file layout follows the
     // generating session's parallelism, and layout sets scan split counts
     // downstream — two corpora generated at different widths bench
@@ -80,35 +83,35 @@ object ScaleData {
     // artifact if you do; shuffle width stays 32 either way.
     val spark = Harness.session(Harness.cpusOr(32),
       Map("spark.sql.shuffle.partitions" -> "32"))
+    try write(spark, args(0), args(1), copies, tables, skewPct)
+    finally spark.stop()
+  }
+
+  /** Write the `copies`-fold corpus of `src` into `out` (see the object
+    * scaladoc): only the named `tables` (all when empty), with the planted
+    * block when `skewPct > 0`. Bad arguments fail before anything is
+    * written. */
+  def write(spark: SparkSession, src: String, out: String, copies: Int,
+            tables: Set[String], skewPct: Int): Unit = {
+    require(copies >= 1, s"copies >= 1: $copies")
+    require(tables.subsetOf(Tables.names.toSet),
+      s"unknown tables ${(tables -- Tables.names).mkString(",")} — known: " +
+        Tables.names.mkString(","))
+    require(skewPct >= 0 && skewPct < 100, s"skewPct in [0,100): $skewPct")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def replicate(name: String)(shift: (DataFrame, Int) => DataFrame): Unit = {
-      if (only.nonEmpty && !only.contains(name)) return
+      if (tables.nonEmpty && !tables.contains(name)) return
       val base = spark.read.parquet(Tables.path(src, name))
       val all = (0 until copies).map(i => shift(base, i)).reduce(_ unionAll _)
-      if (name == "events" || name == "documents") {
-        // the doc/event streaming sources glob for FILES named
-        // events.parquet / documents.parquet — write one flat file, not a
-        // directory of parts, or every stream probe silently reads ZERO
-        // rows (the pre-r8 q_stream_doc_clean sf10 rows were vacuous
-        // exactly so). Embeddings deliberately stay a parts DIRECTORY:
-        // the semantic stream is path-addressed (handles both layouts),
-        // and a flat 51 MB embeddings file serialized every BATCH
-        // embedding scan onto one split (measured 3-4× on the sf1
-        // family, r12)
-        val tmp = s"$out/.${name}_tmp"
-        all.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        val dst = new org.apache.hadoop.fs.Path(Tables.path(out, name))
-        fs.delete(dst, true)
-        fs.rename(part, dst)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      } else {
+      // Embeddings deliberately stay a parts DIRECTORY: the semantic
+      // stream is path-addressed (handles both layouts), and a flat 51 MB
+      // embeddings file serialized every BATCH embedding scan onto one
+      // split (measured 3-4× on the sf1 family, r12)
+      if (name == "events" || name == "documents")
+        Tables.writeSingleFile(all, Tables.path(out, name))
+      else
         all.write.mode(SaveMode.Overwrite).parquet(Tables.path(out, name))
-      }
       println(s"[scale] $name -> ${copies}x")
     }
 
@@ -121,9 +124,8 @@ object ScaleData {
     // id, so every planted payload is byte-identical per modality and no
     // id collides. Appended to the LAST copy so the single-file
     // documents.parquet keeps one lineage.
-    def plantedBlock(spark: SparkSession, base: DataFrame): Option[DataFrame] = {
+    def plantedBlock(base: DataFrame): Option[DataFrame] = {
       if (skewPct == 0) return None
-      import spark.implicits._
       val baseN = base.count()
       val total = baseN * copies
       // m/(total+m) = skewPct/100  ⇒  m = total*skewPct/(100-skewPct)
@@ -144,7 +146,7 @@ object ScaleData {
       val shifted = df.withColumn("doc_id", col("doc_id") + lit(i * idStep))
         .withColumn("text", translate(col("text"), vowels, rot(i)))
       if (i == copies - 1)
-        plantedBlock(spark, df).map(b => shifted.unionByName(b)).getOrElse(shifted)
+        plantedBlock(df).map(b => shifted.unionByName(b)).getOrElse(shifted)
       else shifted
     }
     // embeddings keep the CORPUS CONTRACT: vec_ids contiguous 0..N-1
@@ -183,9 +185,8 @@ object ScaleData {
       df.withColumn("l_orderkey", col("l_orderkey") + lit(i * idStep))
     }
     for (dim <- Seq("region", "nation", "customer", "supplier", "part")
-         if only.isEmpty || only.contains(dim))
+         if tables.isEmpty || tables.contains(dim))
       spark.read.parquet(Tables.path(src, dim))
         .write.mode(SaveMode.Overwrite).parquet(Tables.path(out, dim))
-    spark.stop()
   }
 }

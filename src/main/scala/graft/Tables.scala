@@ -32,6 +32,34 @@ object Tables {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
+  /** The tables of [[names]] that exist under `sfDir`, in that order
+    * (ScaleData table subsets hold only some of them). */
+  def present(spark: SparkSession, sfDir: String): Seq[String] = {
+    val fs = new org.apache.hadoop.fs.Path(sfDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    names.filter(n => fs.exists(new org.apache.hadoop.fs.Path(path(sfDir, n))))
+  }
+
+  /** Write `df` as ONE parquet file at `dst`, replacing what is there. The
+    * streaming file sources select their input by file name
+    * (`pathGlobFilter` on `events.parquet` / `documents.parquet`, or a
+    * directory of slice files), so a directory of parts there would read
+    * as ZERO rows — the pre-r8 q_stream_doc_clean sf10 rows were vacuous
+    * exactly so. `mtimeMs` stamps the file's modification time: a file
+    * source consumes oldest first, so ascending stamps fix slice order. */
+  def writeSingleFile(df: DataFrame, dst: String, mtimeMs: Option[Long] = None): Unit = {
+    val target = new org.apache.hadoop.fs.Path(dst)
+    val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    // hidden sibling: file sources skip names starting with '.'
+    val tmp = new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}_tmp")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    fs.delete(target, true)
+    fs.rename(part, target)
+    mtimeMs.foreach(fs.setTimes(target, _, -1))
+    fs.delete(tmp, true)
+  }
+
   /** Register the engine's predicate-rewrite rule (to_date unwrap + ns→µs /
     * NTZ-cast conversion pushdown, graft.plans.RewriteToDatePredicates) in
     * this session if absent — load-bearing for events queries, whose `ts` is
@@ -257,13 +285,10 @@ object Tables {
     // partial probe corpora (ScaleData table subsets) legitimately omit
     // tables; absence is logged loudly and the query that needs a missing
     // table still fails at read — only PRESENT tables are drift-gated
-    val fs = new org.apache.hadoop.fs.Path(sfDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (present, absent) =
-      names.partition(n => fs.exists(new org.apache.hadoop.fs.Path(path(sfDir, n))))
-    absent.foreach(n => StructuredLog.info("corpus_table_absent",
+    val tables = present(spark, sfDir)
+    names.diff(tables).foreach(n => StructuredLog.info("corpus_table_absent",
       "table" -> n, "dir" -> sfDir))
-    val problems = try present.flatMap(preflightTable(spark, sfDir, _))
+    val problems = try tables.flatMap(preflightTable(spark, sfDir, _))
     finally StructuredLog.removeListener(echo)
     if (problems.nonEmpty) {
       val msg = "corpus schema preflight FAILED — unhandled drift; refusing " +

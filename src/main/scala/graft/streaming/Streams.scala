@@ -77,7 +77,13 @@ object Streams {
       "ts")
   }
 
-  private[streaming] def runToTable(df: DataFrame, spark: SparkSession, mode: OutputMode): DataFrame = {
+  /** Run `df` to completion (`AvailableNow`) into a fresh memory table
+    * and return the table, read from `df`'s own session (the one the sink
+    * registers it in — a child session for the attribution joins). With
+    * a `stateEvent`, the finished query's state rows are logged under
+    * that name ([[logStateMetrics]]). */
+  private[streaming] def runToTable(df: DataFrame, mode: OutputMode,
+                                    stateEvent: Option[String] = None): DataFrame = {
     val name = freshName("graft_stream")
     val q = df.writeStream
       .format("memory")
@@ -86,7 +92,24 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(name)
+    stateEvent.foreach(logStateMetrics(_, q))
+    df.sparkSession.table(name)
+  }
+
+  /** [[runToTable]]'s distributed twin: run `df` to completion into the
+    * parquet sink at `outDir` (executors write, nothing reaches the
+    * driver), checkpointed at `checkpointDir`, in Append mode. */
+  private def runToParquet(df: DataFrame, outDir: String, checkpointDir: String,
+                           stateEvent: Option[String] = None): Unit = {
+    val q = df.writeStream
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    stateEvent.foreach(logStateMetrics(_, q))
   }
 
   /** Pipeline-1 as a stream: tumbling 1-day event-time window count — the
@@ -98,7 +121,7 @@ object Streams {
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("n_events"))
       .select(to_date(col("w.start")).as("event_day"), col("n_events"))
-    runToTable(agg, spark, OutputMode.Complete()).orderBy(col("event_day"))
+    runToTable(agg, OutputMode.Complete()).orderBy(col("event_day"))
   }
 
   /** Hopping (sliding) event-time window as a stream: width 2 h, slide
@@ -112,7 +135,7 @@ object Streams {
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
         col("n_events"))
-    runToTable(agg, spark, OutputMode.Complete()).orderBy(col("w_start"))
+    runToTable(agg, OutputMode.Complete()).orderBy(col("w_start"))
   }
 
   /** Streaming sketch aggregation: per-day event-time windows carrying a
@@ -133,7 +156,7 @@ object Streams {
         expr("percentile_approx(value, 0.9, 50000)").as("p90_value"))
       .select(to_date(col("w.start")).as("event_day"),
         col("p50_value"), col("p90_value"))
-    runToTable(agg, spark, OutputMode.Complete()).orderBy(col("event_day"))
+    runToTable(agg, OutputMode.Complete()).orderBy(col("event_day"))
   }
 
   /** Streaming exact dedup on event_id (state-store keyed dedup), then a
@@ -143,16 +166,8 @@ object Streams {
     val deduped = eventStream(spark, dir)
       .withWatermark("ts", "1 day")
       .dropDuplicates("event_id")
-    val name = freshName("graft_stream")
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    logStateMetrics("stream_dedup_state", q)
-    spark.table(name).agg(count(lit(1)).as("n_unique_events"))
+    runToTable(deduped, OutputMode.Append(), Some("stream_dedup_state"))
+      .agg(count(lit(1)).as("n_unique_events"))
   }
 
   /** Watermark-BOUNDED streaming dedup — the production form of
@@ -192,16 +207,8 @@ object Streams {
     val deduped = graft.Tables.normalizeTs(src, "ts")
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
-    val name = freshName("graft_stream")
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    logStateMetrics("stream_dedup_windowed_state", q)
-    spark.table(name).agg(count(lit(1)).as("n_unique_events"))
+    runToTable(deduped, OutputMode.Append(), Some("stream_dedup_windowed_state"))
+      .agg(count(lit(1)).as("n_unique_events"))
   }
 
   /** Idle horizon for per-user state: a user silent this long past the
@@ -250,7 +257,7 @@ object Streams {
   def userCounts(spark: SparkSession, dir: String): DataFrame = {
     val counts = userCountsStream(
       eventStream(spark, dir).withWatermark("ts", "1 day"))
-    runToTable(counts, spark, OutputMode.Update())
+    runToTable(counts, OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"))
       .orderBy(col("user_id"))
@@ -271,7 +278,7 @@ object Streams {
     *
     * ORDERING DEPENDENCY: "output-neutral" rests on FileStreamSource
     * consuming files oldest-mtime-first, which the strictly increasing
-    * `fs.setTimes` stamps (1 s apart, far above any filesystem mtime
+    * `writeSingleFile` mtime stamps (1 s apart, far above any filesystem mtime
     * granularity) pin down. If the slices ever arrived out of event-time
     * order, earlier-range rows would fall below the advanced watermark and
     * be silently dropped — which is why `WatermarkSpec` asserts equality
@@ -299,19 +306,12 @@ object Streams {
       val cuts = ev.stat.approxQuantile(
         "t", (1 until nFiles).map(_.toDouble / nFiles).toArray, 0.001)
       val bounds = (Double.NegativeInfinity +: cuts) :+ Double.PositiveInfinity
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val t0 = System.currentTimeMillis()
-      for (i <- 0 until nFiles) {
-        val slice = ev.filter(col("t") >= bounds(i) && col("t") < bounds(i + 1)).drop("t")
-        val tmp = s"$out/.slice_tmp"
-        slice.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        val dst = new org.apache.hadoop.fs.Path(f"$out/events_$i%02d.parquet")
-        fs.rename(part, dst)
-        fs.setTimes(dst, t0 + i * 1000L, -1)
-      }
+      def slice(i: Int, df: DataFrame): Unit =
+        graft.Tables.writeSingleFile(df, f"$out/events_$i%02d.parquet",
+          Some(t0 + i * 1000L))
+      for (i <- 0 until nFiles)
+        slice(i, ev.filter(col("t") >= bounds(i) && col("t") < bounds(i + 1)).drop("t"))
       // Watermark flush for OUTER joins: unmatched-row emission happens at
       // state EVICTION, which runs a batch after the watermark passes the
       // row — on a finite feed the last slices' unmatched rows would sit in
@@ -328,16 +328,9 @@ object Streams {
             (-1L - 2 * j, far, -1L - 2 * j, "purchase", 0.0, null: String),
             (-2L - 2 * j, far, -2L - 2 * j, "signup", 0.0, null: String)))
             .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          val tmp = s"$out/.slice_tmp"
-          sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-          val dst = new org.apache.hadoop.fs.Path(f"$out/events_${nFiles + j}%02d.parquet")
-          fs.rename(part, dst)
-          fs.setTimes(dst, t0 + (nFiles + j) * 1000L, -1)
+          slice(nFiles + j, sdf)
         }
       }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$out/.slice_tmp"), true)
       out
     })
   }
@@ -362,7 +355,7 @@ object Streams {
     * per-session). At production volume per batch, size partitions to
     * the batch, exactly like any shuffle. */
   private def attributionJoined(spark: SparkSession, dir: String,
-                                leftOuter: Boolean = false): (SparkSession, DataFrame) = {
+                                leftOuter: Boolean = false): DataFrame = {
     val sliced = eventsTimeSliced(spark, dir, sentinel = leftOuter)
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "8")
@@ -382,11 +375,11 @@ object Streams {
       .filter(col("event_type") === "signup")
       .select(col("user_id").as("s_user"), col("ts").as("s_ts"))
       .withWatermark("s_ts", "1 hour")
-    (s2, purchases.join(signups,
+    purchases.join(signups,
       col("user_id") === col("s_user") &&
         col("s_ts") <= col("p_ts") &&
         col("s_ts") >= col("p_ts") - expr("INTERVAL 7 DAYS"),
-      if (leftOuter) "leftOuter" else "inner"))
+      if (leftOuter) "leftOuter" else "inner")
   }
 
   private def logStateMetrics(event: String,
@@ -399,21 +392,10 @@ object Streams {
       "max_state_rows" -> (if (stateRows.isEmpty) 0L else stateRows.max),
       "last_state_rows" -> (if (stateRows.isEmpty) 0L else stateRows.last))
   }
-  private def logJoinState(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    logStateMetrics("stream_stream_join_state", q)
 
   def purchaseAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val (s2, joined) = attributionJoined(spark, dir)
-    val name = freshName("graft_stream")
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    logJoinState(q)
-    s2.table(name)
+    runToTable(attributionJoined(spark, dir), OutputMode.Append(),
+        Some("stream_stream_join_state"))
       .groupBy(col("p_id"), col("user_id"))
       .agg(count(lit(1)).as("n_signups_7d"))
       .orderBy(col("p_id"))
@@ -433,17 +415,8 @@ object Streams {
     * JOIN aggregate — COUNT(s_user) counts matches, null-extended rows
     * count 0. */
   def purchaseAttributionOuter(spark: SparkSession, dir: String): DataFrame = {
-    val (s2, joined) = attributionJoined(spark, dir, leftOuter = true)
-    val name = freshName("graft_stream")
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    logStateMetrics("stream_stream_join_outer_state", q)
-    s2.table(name)
+    runToTable(attributionJoined(spark, dir, leftOuter = true),
+        OutputMode.Append(), Some("stream_stream_join_outer_state"))
       .filter(col("p_id") >= 0)
       .groupBy(col("p_id"), col("user_id"))
       .agg(count(col("s_user")).as("n_signups_7d"))
@@ -462,19 +435,11 @@ object Streams {
   def purchaseAttributionToParquet(spark: SparkSession, dir: String,
                                    outDir: String, checkpointDir: String,
                                    leftOuter: Boolean = false): DataFrame = {
-    val (s2, joined) = attributionJoined(spark, dir, leftOuter)
-    val q = joined.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    logStateMetrics(
+    val joined = attributionJoined(spark, dir, leftOuter)
+    runToParquet(joined, outDir, checkpointDir, Some(
       if (leftOuter) "stream_stream_join_outer_state"
-      else "stream_stream_join_state", q)
-    s2.read.parquet(outDir)
+      else "stream_stream_join_state"))
+    joined.sparkSession.read.parquet(outDir)
       .filter(col("p_id") >= 0) // sentinel slices (leftOuter only)
       .groupBy(col("p_id"), col("user_id"))
       .agg(count(col("s_user")).as("n_signups_7d"))
@@ -496,14 +461,7 @@ object Streams {
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("n_events"))
       .select(to_date(col("w.start")).as("event_day"), col("n_events"))
-    val q = agg.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToParquet(agg, outDir, checkpointDir)
     spark.read.parquet(outDir)
   }
 
@@ -663,7 +621,7 @@ object Streams {
   def streamingNearDupPairs(spark: SparkSession, dir: String,
                             cap: Int = graft.operators.Dedup.bucketCap): DataFrame = {
     val cand = runToTable(nearDupCandidatePairs(spark, dir, cap),
-      spark, OutputMode.Append()).distinct()
+      OutputMode.Append()).distinct()
     verifyNearDupPairs(spark, dir, cand)
   }
 
@@ -679,14 +637,7 @@ object Streams {
   def streamingNearDupPairsToParquet(spark: SparkSession, dir: String,
                                      outDir: String, checkpointDir: String,
                                      cap: Int = graft.operators.Dedup.bucketCap): DataFrame = {
-    val q = nearDupCandidatePairs(spark, dir, cap).writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToParquet(nearDupCandidatePairs(spark, dir, cap), outDir, checkpointDir)
     verifyNearDupPairs(spark, dir, spark.read.parquet(outDir).distinct())
   }
 
@@ -888,7 +839,7 @@ object Streams {
         regexp_replace(trim(lower(col("text"))), " +", " ").as("norm_text"))
 
   def docCleanStream(spark: SparkSession, dir: String): DataFrame =
-    runToTable(cleanedDocStream(spark, dir), spark, OutputMode.Append())
+    runToTable(cleanedDocStream(spark, dir), OutputMode.Append())
       .orderBy(col("doc_id"))
 
   /** Production form of [[docCleanStream]]: the cleaned corpus streams to
@@ -901,14 +852,7 @@ object Streams {
     * placement changes. */
   def docCleanStreamToParquet(spark: SparkSession, dir: String,
                               outDir: String, checkpointDir: String): DataFrame = {
-    val q = cleanedDocStream(spark, dir).writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToParquet(cleanedDocStream(spark, dir), outDir, checkpointDir)
     spark.read.parquet(outDir)
   }
 
@@ -982,7 +926,7 @@ object Streams {
                |  CAST(0 AS BIGINT), (a, x) -> a + x.m)""".stripMargin)
           .as("n_matches"),
         max(col("jaccard")).as("max_jaccard"))
-    runToTable(rejects, spark, OutputMode.Complete()).orderBy(col("doc_id"))
+    runToTable(rejects, OutputMode.Complete()).orderBy(col("doc_id"))
   }
 
   /** Streaming JOINT multimodal admission (r9 verdict #5; r10 verdict #2
@@ -1138,7 +1082,7 @@ object Streams {
           .as("audio_struct"),
         (max(when(col("gate") === "video_seq", 1).otherwise(0)) === 1)
           .as("video_seq"))
-    val out = runToTable(rejects, spark, OutputMode.Complete())
+    val out = runToTable(rejects, OutputMode.Complete())
     // the memory sink has materialized the result; the indexes can go
     storeTexts.unpersist(); storeSig.unpersist(); storeImg.unpersist()
     storeAud.unpersist(); storeVid.unpersist()
@@ -1166,7 +1110,7 @@ object Streams {
     val scored = training.join(broadcast(bench), "gram")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared_grams"))
-    runToTable(scored, spark, OutputMode.Complete()).orderBy(col("doc_id"))
+    runToTable(scored, OutputMode.Complete()).orderBy(col("doc_id"))
   }
 
   /** Ingest-time streaming image dedup — the streaming form of the batch
@@ -1204,7 +1148,7 @@ object Streams {
       .agg(min(col("doc_id")).as("keeper_doc_id"),
         count(lit(1)).as("n_copies"))
       .select(col("keeper_doc_id"), col("n_copies"))
-    runToTable(perClass, spark, OutputMode.Complete())
+    runToTable(perClass, OutputMode.Complete())
       .orderBy(col("keeper_doc_id"))
   }
 
@@ -1233,7 +1177,7 @@ object Streams {
       .agg(min(col("doc_id")).as("keeper_doc_id"),
         count(lit(1)).as("n_copies"))
       .select(col("keeper_doc_id"), col("n_copies"))
-    runToTable(perClass, spark, OutputMode.Complete())
+    runToTable(perClass, OutputMode.Complete())
       .orderBy(col("keeper_doc_id"))
   }
 
@@ -1264,7 +1208,7 @@ object Streams {
       .agg(min(col("doc_id")).as("keeper_doc_id"),
         count(lit(1)).as("n_copies"))
       .select(col("keeper_doc_id"), col("n_copies"))
-    runToTable(perClass, spark, OutputMode.Complete())
+    runToTable(perClass, OutputMode.Complete())
       .orderBy(col("keeper_doc_id"))
   }
 
@@ -1350,7 +1294,7 @@ object Streams {
       .schema(docSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-    runToTable(domainCapFlags(spark, stream, k), spark, OutputMode.Append())
+    runToTable(domainCapFlags(spark, stream, k), OutputMode.Append())
       .orderBy(col("doc_id"))
   }
 
@@ -1391,7 +1335,7 @@ object Streams {
     runToTable(
         toks.select(new graft.operators.Stats.MisraGriesNominees(k).toColumn)
           .toDF("nominees"),
-        spark, OutputMode.Complete())
+        OutputMode.Complete())
       .head().getString(0).split("\\u0000").toSeq
   }
 
@@ -1435,7 +1379,7 @@ object Streams {
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"))
-    runToTable(agg, spark, OutputMode.Complete())
+    runToTable(agg, OutputMode.Complete())
       .orderBy(col("user_id"), col("session_start"))
   }
 
@@ -1456,7 +1400,7 @@ object Streams {
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_nationkey").as("nation_id"))
       .agg(count(lit(1)).as("n_events"))
-    runToTable(agg, spark, OutputMode.Complete()).orderBy(col("nation_id"))
+    runToTable(agg, OutputMode.Complete()).orderBy(col("nation_id"))
   }
 
   type Q = (SparkSession, String) => DataFrame

@@ -104,7 +104,7 @@ object Tws {
       ev.select(col("user_id"), col("ts"), col("event_type"))
         .as[(Long, java.sql.Timestamp, String)])
     Streams.withStateStoreProvider(spark, Streams.RocksDbProvider) {
-      Streams.runToTable(profiles.toDF(), spark, OutputMode.Update())
+      Streams.runToTable(profiles.toDF(), OutputMode.Update())
     }
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),

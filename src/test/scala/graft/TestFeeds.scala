@@ -17,21 +17,11 @@ object TestFeeds {
     val cuts = docs.stat.approxQuantile("doc_id",
       (1 until n).map(_.toDouble / n).toArray, 0.0)
     val bounds = (Double.NegativeInfinity +: cuts) :+ Double.PositiveInfinity
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val t0 = System.currentTimeMillis()
-    for (i <- 0 until n) {
-      val slice = docs.filter(
-        col("doc_id") > bounds(i) && col("doc_id") <= bounds(i + 1))
-      val tmp = s"$base/.tmp"
-      slice.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-      val dst = new org.apache.hadoop.fs.Path(f"$base/docs_$i%02d.parquet")
-      fs.rename(part, dst)
-      fs.setTimes(dst, t0 + i * 1000L, -1)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/.tmp"), true)
+    for (i <- 0 until n)
+      Tables.writeSingleFile(
+        docs.filter(col("doc_id") > bounds(i) && col("doc_id") <= bounds(i + 1)),
+        f"$base/docs_$i%02d.parquet", Some(t0 + i * 1000L))
     base
   }
 }
