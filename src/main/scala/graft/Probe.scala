@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The dev probe: runs registry queries under the EXACT bench session
   * ([[Harness.session]] with [[Bench.sessionOverrides]]) plus any session
@@ -18,11 +19,13 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   *    ones included — two runs, the listener counting only the second
   *    (steady-state) run; stages sorted by TOTAL task time with per-stage
   *    max-task, so both serialized stragglers and genuinely expensive
-  *    parallel stages surface; then per-job wall spans.
+  *    parallel stages surface; then per-job wall spans. Each stage is
+  *    named by its first `graft.` frame, or, for a stage AQE submits from
+  *    a stage future, by that of its SQL execution's call site.
   *  - `plan`: the formatted plan, then the executed plan of the
   *    checksum-wrapped query with its populated SQL metrics — attributes
   *    seconds to OPERATORS where the stage listing only attributes to
-  *    anonymous AQE futures.
+  *    call sites.
   *
   * `sfDir` defaults to the sf0.1 corpus vendored with the checkout (run
   * from the repo root, as `tools/run.sh` does).
@@ -111,7 +114,26 @@ object Probe {
     case class Agg(var n: Int = 0, var maxMs: Long = 0L, var sumMs: Long = 0L)
     val byStage = new java.util.concurrent.ConcurrentHashMap[Int, Agg]()
     val names = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    // stages that AQE submits from its stage futures carry no graft frame
+    // of their own: they take the call site of their SQL execution, found
+    // through their job's `spark.sql.execution.id` property
+    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val stageExec = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     @volatile var enabled = false
+    /** The first graft frame of a call-site stack outside the probe and
+      * the harness, else its harness frame (the checksum of the result),
+      * else "". */
+    def graftFrame(details: String): String = {
+      val frames = details.linesIterator.filter(_.contains("graft."))
+        .map(_.trim.stripPrefix("at ")).toSeq
+      frames.find(l => !l.contains("graft.Probe") && !l.contains("graft.Harness"))
+        .orElse(frames.find(_.contains("graft.Harness"))).getOrElse("")
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        execSites.put(x.executionId, graftFrame(x.details)): Unit
+      case _ =>
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       if (enabled && e.taskInfo != null) {
         val a = byStage.computeIfAbsent(e.stageId, _ => Agg())
@@ -124,10 +146,9 @@ object Probe {
       if (enabled) {
         // the callsite NAME is usually an anonymous AQE future — the first
         // graft frame in `details` is the attribution that matters (r15)
-        val site = e.stageInfo.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("graft.Probe")
-            && !l.contains("graft.Harness"))
-          .map(_.trim.stripPrefix("at ")).getOrElse("")
+        val site = Some(graftFrame(e.stageInfo.details)).filter(_.nonEmpty)
+          .orElse(Option(stageExec.get(e.stageInfo.stageId)).flatMap(x => Option(execSites.get(x))))
+          .getOrElse("")
         names.put(e.stageInfo.stageId,
           (e.stageInfo.name.linesIterator.next().take(60) + "  " + site).take(180))
       }
@@ -138,6 +159,8 @@ object Probe {
     case class J(var t0: Long = 0L, var t1: Long = 0L, var desc: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     override def onJobStart(e: SparkListenerJobStart): Unit = if (enabled) {
+      Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .foreach(id => e.stageIds.foreach(stageExec.put(_, id.toLong)))
       val j = jobs.computeIfAbsent(e.jobId, _ => J())
       j.t0 = e.time
       j.desc = e.stageInfos.map(_.name.linesIterator.next()).distinct

@@ -15,12 +15,14 @@ import org.apache.spark.sql.types.StructType
   *
   * Footer cache: a parquet read without a schema launches a one-task Spark
   * job to infer it from the footer. Every corpus read goes through
-  * [[readRaw]], which infers each table once per session and reads with
-  * `spark.read.schema(cached)` after that — no inference job. The cache
-  * stores exactly what `spark.read.parquet(path).schema` returned, keyed
-  * by the qualified path, the `FileStatus` length and modification time,
-  * and the values of the session confs parquet inference reads, so a
-  * replaced file (a regenerated corpus) is inferred again. A status with
+  * [[readRaw]], which reads each table's footer on the driver once per
+  * session ([[graft.sources.Readers.footerSchema]], no Spark job for a
+  * table file) and reads with `spark.read.schema(cached)` — so
+  * [[preflight]] and every first load run no inference job at all. The
+  * cache stores exactly what `spark.read.parquet(path).schema` returns,
+  * keyed by the qualified path, the `FileStatus` length and modification
+  * time, and the values of the session confs parquet inference reads, so a
+  * replaced file (a regenerated corpus) is read again. A status with
   * modification time 0 (object-store directories) is never cached, and a
   * missing path falls through to the plain read and its usual error. The
   * cache is held weakly per `SparkSession`: a new session starts empty.
@@ -106,7 +108,8 @@ object Tables {
   }
 
   /** The one corpus read: the raw table with the session's cached footer
-    * schema, inferring (one Spark job) only on a cache miss. */
+    * schema, reading it on the driver ([[graft.sources.Readers.footerSchema]])
+    * only on a cache miss. */
   private def readRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -116,13 +119,12 @@ object Tables {
       case Some(key) =>
         val cache = footers.synchronized(footers.computeIfAbsent(spark,
           _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]()))
-        Option(cache.get(key)) match {
-          case Some(schema) => spark.read.schema(schema).parquet(p)
-          case None =>
-            val df = spark.read.parquet(p)
-            cache.put(key, df.schema)
-            df
+        val schema = Option(cache.get(key)).getOrElse {
+          val read = graft.sources.Readers.footerSchema(spark, p)
+          cache.put(key, read)
+          read
         }
+        spark.read.schema(schema).parquet(p)
     }
   }
 

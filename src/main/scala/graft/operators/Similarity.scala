@@ -724,9 +724,13 @@ object Similarity {
     s.createDataset(Seq(m))(Encoders.product[T])
       .write.mode("overwrite").parquet(path)
 
-  /** Read back the model [[writeModel]] persisted (one row). */
-  def readModel[T <: Product : TypeTag](s: SparkSession, path: String): T =
-    s.read.parquet(path).as[T](Encoders.product[T]).head()
+  /** Read back the model [[writeModel]] persisted (one row), with the
+    * encoder's schema: the file holds exactly that layout, so loading a
+    * model runs no schema-inference job. */
+  def readModel[T <: Product : TypeTag](s: SparkSession, path: String): T = {
+    val enc = Encoders.product[T]
+    s.read.schema(enc.schema).parquet(path).as[T](enc).head()
+  }
 
   /** Spherical k-means codebook, trained driver-side on the bounded
     * deterministic [[loadSample]] (constant-size regardless of corpus

@@ -1,8 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The reference's scan surface, re-expressed (SURVEY.md §2.1 S1-S6).
   *
@@ -20,9 +25,43 @@ object Readers {
     spark.read.schema(schema).parquet(path)
 
   /** S2: footer-inferred schema of one parquet file
-    * (`calculate_top_taxi_zones.py:21-23`). */
-  def footerSchema(spark: SparkSession, path: String): StructType =
-    spark.read.parquet(path).schema
+    * (`calculate_top_taxi_zones.py:21-23`), exactly what
+    * `spark.read.parquet(path).schema` returns, read on the driver: the
+    * footer opens with `ParquetFileReader` over the session's Hadoop conf
+    * (row groups skipped) and converts with Spark's own
+    * `ParquetFileFormat.readSchemaFromFooter` and
+    * `ParquetToSparkSchemaConverter(conf)`, so the stored Spark row
+    * metadata and the session's inference confs pick the same schema and no
+    * Spark job runs. A path that names no file (a directory, a glob, a
+    * missing path) or a session with `spark.sql.parquet.mergeSchema=true`
+    * goes through Spark's inference (partition discovery, summary files and
+    * schema merging belong on the cluster), and so fails as that does. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val hp = new Path(path)
+    val file = if (conf.isParquetSchemaMergingEnabled) None
+      else try Some(hp.getFileSystem(hadoopConf).getFileStatus(hp)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    file.fold(spark.read.parquet(path).schema) { st =>
+      val options = HadoopReadOptions.builder(hadoopConf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hadoopConf), options)
+      val footer = try reader.getFooter finally reader.close()
+      nullable(ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(conf))).asInstanceOf[StructType]
+    }
+  }
+
+  /** `dt` with every field, element and map value nullable: the schema a
+    * file source reports (Spark reads every file column as nullable). */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
 
   /** S4: schema-merged scan across drifting files
     * (`spark.sql.parquet.mergeSchema`, `calculate_daily_transactions.py:119`).
@@ -83,12 +122,14 @@ object Readers {
     *
     * Scale note: the per-file loop builds one lazy plan — N scans unioned,
     * executed as one distributed job, NOT N sequential jobs like the
-    * reference's driver loop (§3.2). */
+    * reference's driver loop (§3.2); each file's schema is its
+    * [[footerSchema]], read on the driver, so building the plan runs no
+    * inference job either. */
   def readDrifted(spark: SparkSession, paths: Seq[String],
                   canonical: StructType): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     paths.map { p =>
-      val df = spark.read.parquet(p)
+      val df = spark.read.schema(footerSchema(spark, p)).parquet(p)
       val present = df.schema.fieldNames.toSet
       df.select(canonical.fields.toSeq.map { f =>
         if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)

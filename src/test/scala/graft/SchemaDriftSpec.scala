@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 import graft.sources.Readers
@@ -19,37 +16,6 @@ class SchemaDriftSpec extends SparkSpec {
     StructField("PULocationID", LongType),
     StructField("trip_miles", DoubleType),
     StructField("airport_fee", DoubleType)))
-
-  /** Spark jobs `body` launches, counted by a SparkListener on its job
-    * group. The listener bus is asynchronous; a marker job run after `body`
-    * is delivered after all of body's events, so waiting for it drains
-    * them. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-of-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(): Unit
-          case Some(g) if g == s"$group-marker" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   test("readDrifted reconciles int→long, float→double, and missing columns") {
     val dir = Files.createTempDirectory("graft_drift").toString
@@ -135,14 +101,14 @@ class SchemaDriftSpec extends SparkSpec {
     assert(lines.size == Tables.names.size, lines.mkString("\n"))
     assert(lines.forall(l => l.contains("footer=") && l.contains("fingerprint=")),
       lines.mkString("\n"))
-    // footer once per session: on a fresh corpus, preflight infers each
-    // table's schema with one job and every later load launches none
+    // footer once per session, read on the driver: on a fresh corpus,
+    // neither preflight nor any later load launches a job
     val dir = Files.createTempDirectory("graft_footer").toString
     val tables = Seq("nation", "events", "embeddings")
     tables.foreach(t =>
       Files.copy(Paths.get(Tables.path(sfDir, t)), Paths.get(Tables.path(dir, t))))
     tables.foreach(t =>
-      assert(jobsOf(Tables.preflightTable(spark, dir, t)) == 1, t))
+      assert(jobsOf(Tables.preflightTable(spark, dir, t)) == 0, t))
     tables.foreach { t =>
       assert(jobsOf(Tables.load(spark, dir, t).schema) == 0, t)
       assert(Tables.load(spark, dir, t).schema ==

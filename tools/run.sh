@@ -16,5 +16,8 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# UTF-8 stdout/stderr (JDK 17 reads the sun.std*.encoding properties), so
+# non-ASCII characters of messages print as themselves, not as '?'
 exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Dfile.encoding=UTF-8 -Dsun.stdout.encoding=UTF-8 -Dsun.stderr.encoding=UTF-8 \
   $EXTRA -Xmx"${SPARK_DRIVER_MEM:-8g}" -cp "$CP" "$@"
