@@ -26,9 +26,8 @@ import graft.functions.Sketches
   * ("what Spark would broadcast, an operator may collect") applies to that
   * RAW class graph: when its bound fits
   * `spark.sql.autoBroadcastJoinThreshold`, the graph is collected once and
-  * the pairs, clusters and ranks finish on the driver; above it they run
-  * distributed from the builder's two checkpoints, and at -1, where nothing
-  * can be collected, from its class checkpoint and lazy rep edges.
+  * the pairs, clusters and ranks finish on the driver; above it, or at -1,
+  * they run distributed from the builder's two checkpoints.
   */
 object Dedup {
   type Q = (SparkSession, String) => DataFrame
@@ -316,17 +315,11 @@ object Dedup {
 
   /** The verified near-dup class graph of a corpus, built once per call by
     * [[nearDupGraph]]: `classes` (gid, m, members, text — one row per
-    * distinct text of ≥ 3 words), localCheckpointed, `edges` (doc_a, doc_b,
-    * jaccard — the verified rep pairs between gids), localCheckpointed
-    * unless `lazyEdges`, and `local` when the graph fits the broadcast
-    * budget. */
+    * distinct text of ≥ 3 words) and `edges` (doc_a, doc_b, jaccard — the
+    * verified rep pairs between gids), both localCheckpointed, and `local`
+    * when the graph fits the broadcast budget. */
   private[graft] final case class NearDupGraph(classes: DataFrame, edges: DataFrame,
-      local: Option[LocalGraph], lazyEdges: Boolean) {
-    /** The edges for a consumer that reads them more than once: lazy edges
-      * are checkpointed here, once, instead of re-running their plan per
-      * read. */
-    def reusedEdges: DataFrame = if (lazyEdges) edges.localCheckpoint() else edges
-  }
+      local: Option[LocalGraph])
 
   /** The text-identity quotient of a (doc_id, text) frame and its verified
     * rep edges, shared by every near-dup graph operator (pairs, LSS
@@ -344,19 +337,14 @@ object Dedup {
     * and when that fits the broadcast budget (and `collect` is set) the
     * edges and the touched classes — with their within-class jaccard — are
     * collected once, so the operators finish on the driver; at sf0.1 the
-    * graph is ~31 KB against the 10 MB default. Above the budget the
-    * operators run distributed from the same two checkpoints. At a budget
-    * ≤ 0 (`spark.sql.autoBroadcastJoinThreshold=-1`) nothing can be
-    * collected, so the edges stay lazy — no checkpoint and no count; their
-    * plan runs inside the consumer's own job, and a consumer that reads
-    * them more than once takes [[NearDupGraph.reusedEdges]]. One
+    * graph is ~31 KB against the 10 MB default. Above the budget, or at -1,
+    * the operators run distributed from the same two checkpoints. One
     * `neardup_graph` event per call reports `local`, `classes`, `edges`,
-    * `bytes` (the bound) and `ms`; with lazy edges it reports
-    * `edges=uncounted` and no `bytes`. */
+    * `bytes` (the bound) and `ms`. */
   private[graft] def nearDupGraph(d: DataFrame, collect: Boolean = true): NearDupGraph = {
     val t0 = System.nanoTime()
-    val s = d.sparkSession
     val classObs = Observation()
+    val edgeObs = Observation()
     val classes = d.filter(size(split(col("text"), " ")) >= 3)
       .groupBy(col("text"))
       .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
@@ -365,31 +353,27 @@ object Dedup {
       .observe(classObs, count(lit(1)).as("n"), count(when(col("m") >= 2, 1)).as("c2"),
         coalesce(sum(when(col("m") >= 2, col("m"))), lit(0L)).as("mm"))
       .localCheckpoint()
-    val reps = minhashRepPairs(classes.select(col("gid").as("doc_id"), col("text")))
+    val edges = minhashRepPairs(classes.select(col("gid").as("doc_id"), col("text")))
+      .observe(edgeObs, count(lit(1)).as("e")).localCheckpoint()
     val cm = classObs.get
-    val lazyEdges = !Fixpoint.fitsBroadcast(s, 0L) // a budget ≤ 0: nothing is collected
-    val (edges, local, counts) = if (lazyEdges) (reps, None, Seq("edges" -> "uncounted")) else {
-      val edgeObs = Observation()
-      val edges = reps.observe(edgeObs, count(lit(1)).as("e")).localCheckpoint()
-      val e = edgeObs.get("e").asInstanceOf[Long]
-      val (c2, mm) = (cm("c2").asInstanceOf[Long], cm("mm").asInstanceOf[Long])
-      val bytes = e * edges.schema.defaultSize +
-        (2 * e + c2) * classes.schema.defaultSize + (2 * e + mm) * 8
-      val local = if (!collect || !Fixpoint.fitsBroadcast(s, bytes)) None else {
-        val es = edges.collect().map(r => RepEdge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-        val ends = es.flatMap(x => Seq(x.a, x.b)).distinct.toSeq
-        val cs = classes.filter(col("m") >= 2 || col("gid").isInCollection(ends))
-          .select(col("gid"), col("m"), col("members"),
-            Sketches.jaccardShingles(col("text"), col("text"), 3))
-          .collect().map(r =>
-            DupClass(r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray, r.getDouble(3)))
-        Some(LocalGraph(cs, es))
-      }
-      (edges, local, Seq("edges" -> e, "bytes" -> bytes))
+    val e = edgeObs.get("e").asInstanceOf[Long]
+    val (c2, mm) = (cm("c2").asInstanceOf[Long], cm("mm").asInstanceOf[Long])
+    val bytes = e * edges.schema.defaultSize +
+      (2 * e + c2) * classes.schema.defaultSize + (2 * e + mm) * 8
+    val local = if (!collect || !Fixpoint.fitsBroadcast(d.sparkSession, bytes)) None else {
+      val es = edges.collect().map(r => RepEdge(r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val ends = es.flatMap(x => Seq(x.a, x.b)).distinct.toSeq
+      val cs = classes.filter(col("m") >= 2 || col("gid").isInCollection(ends))
+        .select(col("gid"), col("m"), col("members"),
+          Sketches.jaccardShingles(col("text"), col("text"), 3))
+        .collect().map(r =>
+          DupClass(r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray, r.getDouble(3)))
+      Some(LocalGraph(cs, es))
     }
-    graft.StructuredLog.info("neardup_graph", Seq("local" -> local.isDefined,
-      "classes" -> cm("n")) ++ counts :+ ("ms" -> (System.nanoTime() - t0) / 1000000): _*)
-    NearDupGraph(classes, edges, local, lazyEdges)
+    graft.StructuredLog.info("neardup_graph", "local" -> local.isDefined,
+      "classes" -> cm("n"), "edges" -> e, "bytes" -> bytes,
+      "ms" -> (System.nanoTime() - t0) / 1000000)
+    NearDupGraph(classes, edges, local)
   }
 
   private val pairSchema = StructType(Seq(StructField("doc_a", LongType, nullable = false),
@@ -414,7 +398,7 @@ object Dedup {
     * The pairs expand on the driver when the graph was collected and the
     * exact output — Σ m_a·m_b cross pairs over the edges plus C(m, 2)
     * within each clique class — fits the broadcast budget too; otherwise
-    * distributed from the graph's frames ([[expandClassPairs]]). */
+    * distributed from the graph's checkpoints ([[expandClassPairs]]). */
   private[graft] def minhashNearDupPairsOf(d: DataFrame): DataFrame = {
     val g = nearDupGraph(d)
     val s = d.sparkSession

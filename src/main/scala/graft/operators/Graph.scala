@@ -25,9 +25,8 @@ import graft.functions.Sketches
   * edges once per call and collects them when their bound fits
   * `spark.sql.autoBroadcastJoinThreshold`. PageRank then computes degrees,
   * the node count and every round on the driver with the same arithmetic
-  * ([[pageRankOnDriver]]) and never reaches the loop; above the budget
-  * every round runs distributed from the builder's checkpoints (at -1 the
-  * builder leaves its edges lazy and PageRank checkpoints them once).
+  * ([[pageRankOnDriver]]) and never reaches the loop; above the budget, or
+  * at -1, every round runs distributed from the builder's checkpoints.
   * Triangles and k-core take their classes and rep edges from the same
   * builder and stay distributed.
   * Iterations are FIXED (k=3), not run-to-convergence: the result is a
@@ -80,8 +79,7 @@ object Graph {
           StructField("degree", LongType, nullable = false),
           StructField("pagerank", DoubleType))))
       case None =>
-        // every round joins the edges: lazy ones are checkpointed once
-        val eDir = g.reusedEdges
+        val eDir = g.edges
           .select(explode(array(
             struct(col("doc_a").as("src"), col("doc_b").as("dst")),
             struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
@@ -254,8 +252,7 @@ object Graph {
     * the sums stay below 2^53 so the double path is lossless. */
   def docTriangleCounts(docsDf: DataFrame): DataFrame = {
     val g = Dedup.nearDupGraph(docsDf.select(col("doc_id"), col("text")), collect = false)
-    // read by the neighbour sums and three times by the wedge join
-    val und = g.reusedEdges.select(col("doc_a").as("a"), col("doc_b").as("b"))
+    val und = g.edges.select(col("doc_a").as("a"), col("doc_b").as("b"))
     val w = g.classes.select(col("gid"), col("m"))
     val nb = und.select(col("a").as("i"), col("b").as("j"))
       .unionByName(und.select(col("b").as("i"), col("a").as("j")))

@@ -7,7 +7,7 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The reference's scan surface, re-expressed (SURVEY.md §2.1 S1-S6).
   *
@@ -48,19 +48,11 @@ object Readers {
         .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hadoopConf), options)
       val footer = try reader.getFooter finally reader.close()
-      nullable(ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
-        new ParquetToSparkSchemaConverter(conf))).asInstanceOf[StructType]
+      // read back as a user schema: Spark reports it as the file source
+      // does (every column nullable), listing the one file on the driver
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(conf))).parquet(path).schema
     }
-  }
-
-  /** `dt` with every field, element and map value nullable: the schema a
-    * file source reports (Spark reads every file column as nullable). */
-  private def nullable(dt: DataType): DataType = dt match {
-    case s: StructType =>
-      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
-    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
-    case other => other
   }
 
   /** S4: schema-merged scan across drifting files

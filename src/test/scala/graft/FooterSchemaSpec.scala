@@ -15,7 +15,7 @@ import graft.sources.Readers
 /** `Readers.footerSchema` reads a parquet footer on the driver and must
   * return exactly what Spark's own inference (`spark.read.parquet(p).schema`,
   * one Spark job) returns; the corpus loader reads every table's footer
-  * through it, so preflight and a cold load run no Spark job. */
+  * through it (SchemaDriftSpec counts 0 jobs for preflight and cold loads). */
 class FooterSchemaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -110,23 +110,6 @@ class FooterSchemaSpec extends SparkSpec {
     for (t <- Tables.names; nanosAsLong <- Seq("false", "true"))
       withConf("spark.sql.legacy.parquet.nanosAsLong", nanosAsLong)(
         assertSameAsSpark(Tables.path(sfDir, t), s"nanosAsLong=$nanosAsLong"))
-  }
-
-  test("preflight and a cold load run no Spark job") {
-    // fresh copies: a new path is a footer-cache miss in this session
-    def copy(src: String) = {
-      val dir = Files.createTempDirectory("graft_footer_cold")
-      Tables.names.foreach(t => Files.copy(java.nio.file.Paths.get(Tables.path(src, t)),
-        dir.resolve(s"$t.parquet")))
-      dir.toString
-    }
-    val sf01 = copy("perfbench/data/sf0.1")
-    assert(jobsOf(Tables.preflight(spark, sf01)) == 0)
-    val cold = copy(sfDir)
-    for (t <- Tables.names) {
-      assert(jobsOf(Tables.load(spark, cold, t).schema) == 0, t)
-      assert(Tables.load(spark, cold, t).schema == Tables.load(spark, sfDir, t).schema, t)
-    }
   }
 
   test("a directory and mergeSchema=true still take Spark's inference") {

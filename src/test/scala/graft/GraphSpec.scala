@@ -64,9 +64,6 @@ class GraphSpec extends SparkSpec {
     val grouped = Graph.docTriangleCounts(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(grouped == (1L to 6L).map(_ -> 10L).toMap, grouped.toString)
-    // the same census from the builder's lazy rep edges at -1
-    assert(withoutBroadcast(Graph.docTriangleCounts(docs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap) == grouped)
     // and it matches the uncollapsed pipeline on the same corpus
     val plain = Graph.triangleCounts(
       Dedup.minhashNearDupPairsOf(docs).select("doc_a", "doc_b"))
@@ -247,13 +244,12 @@ class GraphSpec extends SparkSpec {
     val (local, localGraphs) = withGraphs(finishes(fixture))
     val (dist, distGraphs) = withGraphs(withoutBroadcast(finishes(fixture)))
     assert(local == dist, s"fixture: local=$local\ndistributed=$dist")
-    // one event per builder call: collected by default; at -1, where
-    // nothing can be collected, the same classes and the edges left lazy
-    // and uncounted
+    // one event per builder call: collected by default, not at -1, the
+    // same graph either way
     assert(localGraphs.map(_ - "ms") == Seq.fill(3)(Map("event" -> "neardup_graph",
       "local" -> "true", "classes" -> "6", "edges" -> "3", "bytes" -> "640")), localGraphs)
-    assert(distGraphs.map(_ - "ms") == localGraphs.map(_ - "ms" - "bytes" +
-      ("local" -> "false") + ("edges" -> "uncounted")), distGraphs)
+    assert(distGraphs.map(_ - "ms") == localGraphs.map(_ - "ms" + ("local" -> "false")),
+      distGraphs)
     val (pairs, clusters, ranks, _) = local
     // K6 on 1..6 plus the pair and the triple's internal pairs
     assert(pairs.size == 15 + 1 + 3, pairs)
@@ -316,8 +312,6 @@ class GraphSpec extends SparkSpec {
     val expected = (1L to 6L).map(_ -> 5L).toMap ++
       Seq(10L, 11L, 12L).map(_ -> 2L).toMap
     assert(grouped == expected, grouped.toString)
-    assert(withoutBroadcast(Graph.docKCore(docs, 2).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap) == expected)
     // equality with the uncollapsed peel on the same corpus, k=2 and k=5
     for (k <- Seq(2, 5)) {
       val plain = Graph.kCore(

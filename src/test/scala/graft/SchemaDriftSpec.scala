@@ -114,6 +114,11 @@ class SchemaDriftSpec extends SparkSpec {
       assert(Tables.load(spark, dir, t).schema ==
         Tables.load(spark, sfDir, t).schema, t)
     }
+    // and a fresh copy of the whole sf0.1 corpus: ten footers, no job
+    val sf01 = Files.createTempDirectory("graft_footer_sf01").toString
+    Tables.names.foreach(t => Files.copy(Paths.get(Tables.path("perfbench/data/sf0.1", t)),
+      Paths.get(Tables.path(sf01, t))))
+    assert(jobsOf(Tables.preflight(spark, sf01)) == 0)
   }
 
   test("preflight fails loudly on unhandled drift, passes handled drift") {
