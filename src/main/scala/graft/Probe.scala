@@ -21,7 +21,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *    max-task, so both serialized stragglers and genuinely expensive
   *    parallel stages surface; then per-job wall spans. Each stage is
   *    named by its first `graft.` frame, or, for a stage AQE submits from
-  *    a stage future, by that of its SQL execution's call site.
+  *    a stage future, by that of its SQL execution's call site; each job
+  *    row ends with that execution's call site.
   *  - `plan`: the formatted plan, then the executed plan of the
   *    checksum-wrapped query with its populated SQL metrics — attributes
   *    seconds to OPERATORS where the stage listing only attributes to
@@ -159,12 +160,18 @@ object Probe {
     case class J(var t0: Long = 0L, var t1: Long = 0L, var desc: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     override def onJobStart(e: SparkListenerJobStart): Unit = if (enabled) {
-      Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-        .foreach(id => e.stageIds.foreach(stageExec.put(_, id.toLong)))
+      val exec = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+      exec.foreach(id => e.stageIds.foreach(stageExec.put(_, id)))
+      // a job AQE submits from a stage future names only anonymous stages:
+      // append its SQL execution's call site, as the stage rows do
+      val site = exec.flatMap(x => Option(execSites.get(x))).filter(_.nonEmpty)
+        .orElse(e.stageInfos.map(s => graftFrame(s.details)).find(_.nonEmpty))
+        .getOrElse("")
       val j = jobs.computeIfAbsent(e.jobId, _ => J())
       j.t0 = e.time
-      j.desc = e.stageInfos.map(_.name.linesIterator.next()).distinct
-        .mkString(" | ").take(160)
+      j.desc = (e.stageInfos.map(_.name.linesIterator.next()).distinct
+        .mkString(" | ").take(160) + "  " + site).take(260)
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = if (enabled) {
       val j = jobs.get(e.jobId); if (j != null) j.t1 = e.time

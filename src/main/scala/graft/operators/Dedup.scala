@@ -272,6 +272,21 @@ object Dedup {
   private[graft] def minhashNearDupPairs(s: SparkSession, dir: String): DataFrame =
     minhashNearDupPairsOf(docs(s, dir))
 
+  /** The one MinHash-LSH text signature: one (`keep`…, band_idx,
+    * band_hash) row per band for each `text` of ≥ 3 words — word
+    * 3-shingles, r·b permutations, b bands of r rows. Every text near-dup
+    * gate bands through it, batch and streaming, pair query and
+    * batch×store probe alike: candidates collide only between texts banded
+    * by the same rule, so a streaming gate returns its batch twin's rows
+    * only while both sides call this. */
+  private[graft] def minhashBands(df: DataFrame, text: String, keep: Seq[String],
+      r: Int = 4, b: Int = 16): DataFrame =
+    df.select(keep.map(col) :+ split(col(text), " ").as("w"): _*)
+      .filter(size(col("w")) >= 3)
+      .select(keep.map(col) :+ posexplode(Sketches.bandhashes(
+          Sketches.shingleMinhashes(col("w"), 3, r * b), r))
+        .as(Seq("band_idx", "band_hash")): _*)
+
   /** LSH candidate generation + exact-jaccard verification over a frame of
     * DISTINCT-text representatives — the rep edges of [[nearDupGraph]]. */
   private[graft] def minhashRepPairs(reps: DataFrame): DataFrame =
@@ -282,21 +297,13 @@ object Dedup {
     * the shipped k=64 recall-first config; [[autoBandConfigMinhash]] may
     * choose a coarser one on a gapped corpus. Exact-jaccard verification
     * is config-independent, so precision never varies with the config. */
-  private[graft] def minhashRepPairsCfg(reps: DataFrame, r: Int, b: Int): DataFrame = {
-    val banded = reps
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        posexplode(Sketches.bandhashes(
-          Sketches.shingleMinhashes(col("w"), 3, r * b), r))
-          .as(Seq("band_idx", "band_hash")))
-    bucketPairs(banded, Seq("band_idx", "band_hash"))
+  private[graft] def minhashRepPairsCfg(reps: DataFrame, r: Int, b: Int): DataFrame =
+    bucketPairs(minhashBands(reps, "text", Seq("doc_id"), r, b), Seq("band_idx", "band_hash"))
       .join(reps.select(col("doc_id").as("doc_a"), col("text").as("text_a")), "doc_a")
       .join(reps.select(col("doc_id").as("doc_b"), col("text").as("text_b")), "doc_b")
       .withColumn("jaccard", Sketches.jaccardShingles(col("text_a"), col("text_b"), 3))
       .filter(col("jaccard") >= 0.8)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
 
   /** One exact-dup class of the near-dup graph in driver memory: its
     * representative `gid` (the min doc_id), multiplicity `m`, sorted
@@ -835,12 +842,8 @@ object Dedup {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val corpus = d.filter(col("doc_id") % 10 =!= 0)
       val batch = d.filter(col("doc_id") % 10 === 0)
-      def banded(df: DataFrame, idCol: String) = df
-        .select(col("doc_id").as(idCol), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col(idCol), posexplode(
-          Sketches.bandhashes(Sketches.shingleMinhashes(col("w"), 3, 64), 4))
-          .as(Seq("band_idx", "band_hash")))
+      def banded(df: DataFrame, idCol: String) =
+        minhashBands(df.withColumnRenamed("doc_id", idCol), "text", Seq(idCol))
       val cand = banded(batch, "new_id")
         .join(banded(corpus, "old_id"), Seq("band_idx", "band_hash"))
         .select(col("new_id"), col("old_id")).distinct()
@@ -1381,43 +1384,14 @@ object Dedup {
       .collect()
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))
       .filter(v => v.exists(_ != 0.0)) // zero vectors have no cosine
-    var dupMin = Double.PositiveInfinity
-    var bgMax = Double.NegativeInfinity
-    var i = 0
-    while (i < sample.length) {
-      val a = sample(i)
-      val na = math.sqrt(a.map(x => x * x).sum)
-      var j = i + 1
-      while (j < sample.length) {
-        val c = {
-          val bv = sample(j)
-          var dot = 0.0; var k = 0
-          while (k < a.length) { dot += a(k) * bv(k); k += 1 }
-          dot / (na * math.sqrt(bv.map(x => x * x).sum))
-        }
-        if (c >= threshold) { if (c < dupMin) dupMin = c }
-        else if (c > bgMax) bgMax = c
-        j += 1
-      }
-      i += 1
+      .map(v => (v, math.sqrt(v.map(x => x * x).sum)))
+    def cosine(a: (Array[Double], Double), b: (Array[Double], Double)): Double = {
+      var dot = 0.0; var k = 0
+      while (k < a._1.length) { dot += a._1(k) * b._1(k); k += 1 }
+      dot / (a._2 * b._2)
     }
-    val default = LshBandConfig(4, 64, fallback = true, dupMin, bgMax,
-      missBound = math.pow(1.0 - math.pow(1.0 - math.acos(
-        math.min(1.0, threshold)) / math.Pi, 4), 64))
-    if (!dupMin.isFinite || dupMin - threshold < margin
-        || threshold - bgMax < margin) default
-    else {
-      val sEff = math.max(threshold, dupMin - margin)
-      val pEff = 1.0 - math.acos(math.min(1.0, sEff)) / math.Pi
-      Seq(16, 8).view.flatMap { r =>
-        val bNeeded = math.ceil(math.log(eps)
-          / math.log(1.0 - math.pow(pEff, r))).toInt.max(1)
-        if (r * bNeeded <= 512)
-          Some(LshBandConfig(r, bNeeded, fallback = false, dupMin, bgMax,
-            missBound = math.pow(1.0 - math.pow(pEff, r), bNeeded)))
-        else None
-      }.headOption.getOrElse(default)
-    }
+    chooseBands(sample, cosine, (4, 64),
+      s => 1.0 - math.acos(math.min(1.0, s)) / math.Pi, threshold, margin, eps)
   }
 
   /** [[semanticDedupOf]] under [[autoBandConfig]], with the chosen config
@@ -1472,36 +1446,53 @@ object Dedup {
       if (w.length < 3) Set.empty[Int]
       else w.sliding(3).map(_.mkString(" ").hashCode).toSet
     }.filter(_.nonEmpty)
+    def jaccard(a: Set[Int], b: Set[Int]): Double = {
+      val inter = if (a.size <= b.size) a.count(b) else b.count(a)
+      inter.toDouble / (a.size + b.size - inter)
+    }
+    chooseBands(shingleSets, jaccard, (4, 16), s => s, threshold, margin, eps)
+  }
+
+  /** The one band chooser behind [[autoBandConfig]] (cosine) and
+    * [[autoBandConfigMinhash]] (jaccard), which differ only in `sim`, the
+    * pairwise similarity of two sampled items; the recall-first `default`
+    * (r, b); and `collide`, the per-row collision probability of a pair at
+    * similarity s. Scans the sample's pairs for dupMin (smallest ≥
+    * threshold) and bgMax (largest below), falls back to the default
+    * unless both clear `margin`, else takes the largest r ∈ {16, 8} whose
+    * S-curve bound (1 − collide(sEff)^r)^b ≤ eps fits r·b ≤ 512 at
+    * sEff = max(threshold, dupMin − margin). */
+  private def chooseBands[A](sample: Array[A], sim: (A, A) => Double,
+      default: (Int, Int), collide: Double => Double, threshold: Double,
+      margin: Double, eps: Double): LshBandConfig = {
     var dupMin = Double.PositiveInfinity
     var bgMax = Double.NegativeInfinity
     var i = 0
-    while (i < shingleSets.length) {
-      val a = shingleSets(i)
+    while (i < sample.length) {
       var j = i + 1
-      while (j < shingleSets.length) {
-        val b = shingleSets(j)
-        val inter = if (a.size <= b.size) a.count(b) else b.count(a)
-        val jac = inter.toDouble / (a.size + b.size - inter)
-        if (jac >= threshold) { if (jac < dupMin) dupMin = jac }
-        else if (jac > bgMax) bgMax = jac
+      while (j < sample.length) {
+        val c = sim(sample(i), sample(j))
+        if (c >= threshold) { if (c < dupMin) dupMin = c }
+        else if (c > bgMax) bgMax = c
         j += 1
       }
       i += 1
     }
-    val default = LshBandConfig(4, 16, fallback = true, dupMin, bgMax,
-      missBound = math.pow(1.0 - math.pow(threshold, 4), 16))
+    val (r0, b0) = default
+    val fallback = LshBandConfig(r0, b0, fallback = true, dupMin, bgMax,
+      missBound = math.pow(1.0 - math.pow(collide(threshold), r0), b0))
     if (!dupMin.isFinite || dupMin - threshold < margin
-        || threshold - bgMax < margin) default
+        || threshold - bgMax < margin) fallback
     else {
-      val sEff = math.max(threshold, dupMin - margin)
+      val pEff = collide(math.max(threshold, dupMin - margin))
       Seq(16, 8).view.flatMap { r =>
         val bNeeded = math.ceil(math.log(eps)
-          / math.log(1.0 - math.pow(sEff, r))).toInt.max(1)
+          / math.log(1.0 - math.pow(pEff, r))).toInt.max(1)
         if (r * bNeeded <= 512)
           Some(LshBandConfig(r, bNeeded, fallback = false, dupMin, bgMax,
-            missBound = math.pow(1.0 - math.pow(sEff, r), bNeeded)))
+            missBound = math.pow(1.0 - math.pow(pEff, r), bNeeded)))
         else None
-      }.headOption.getOrElse(default)
+      }.headOption.getOrElse(fallback)
     }
   }
 

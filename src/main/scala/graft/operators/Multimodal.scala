@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -238,6 +240,16 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** The PCM bytes of a WAV payload, decoded through the resolved SPI
+    * ([[wavReader]]), after checking the format is 16-bit LE mono. */
+  private def wavPcm(r: MediaRow): Array[Byte] = {
+    val ais = wavReader.getAudioInputStream(new java.io.ByteArrayInputStream(r.payload))
+    val fmt = ais.getFormat
+    require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
+      fmt.getChannels == 1, s"unexpected WAV format for doc ${r.doc_id}")
+    ais.readAllBytes()
+  }
+
   /** Batched WAV decode + feature-extract: per-partition iterator, one
     * real WAV-SPI decode per row (direct provider call — see [[wavReader]]
     * for why not AudioSystem), features computed
@@ -245,12 +257,7 @@ object Multimodal {
     * lossless, which `MultimodalSpec` pins sample-exactly). */
   def decodeAudio(rows: Iterator[MediaRow]): Iterator[AudioFeatures] = {
     rows.map { r =>
-      val ais = wavReader.getAudioInputStream(
-        new java.io.ByteArrayInputStream(r.payload))
-      val fmt = ais.getFormat
-      require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
-        fmt.getChannels == 1, s"unexpected WAV format for doc ${r.doc_id}")
-      val raw = ais.readAllBytes()
+      val raw = wavPcm(r)
       val n = raw.length / 2
       val s = new Array[Int](n)
       var i = 0
@@ -301,12 +308,7 @@ object Multimodal {
     * way the image path bands its 64-bit aHash. */
   def audioStructure(rows: Iterator[MediaRow]): Iterator[AudioClass] = {
     rows.map { r =>
-      val ais = wavReader.getAudioInputStream(
-        new java.io.ByteArrayInputStream(r.payload))
-      val fmt = ais.getFormat
-      require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
-        fmt.getChannels == 1, s"unexpected WAV format for doc ${r.doc_id}")
-      val raw = ais.readAllBytes()
+      val raw = wavPcm(r)
       val n = raw.length / 2
       val nf = n / 256
       require(nf <= 64, s"frame count $nf overflows the 64-bit mask")
@@ -378,8 +380,7 @@ object Multimodal {
   /** Encode the doc's clip: GVID container of real PNG frames. */
   def encodeVideo(d: Long): Array[Byte] = {
     val nf = (3 + d % 6).toInt
-    val w = 2 * ((d % 6) + 2).toInt
-    val h = 2 * ((d % 4) + 2).toInt
+    val (w, h, _) = geom(d)
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
     out.writeInt(VideoMagic)
@@ -438,19 +439,22 @@ object Multimodal {
                            duration_ms: Long, mean_gray_first: Double,
                            mean_gray_last: Double)
 
+  /** The frames f ≥ 1 of a decoded clip that start a new scene: mean
+    * |Δpixel| ≥ 8 against frame f − 1, integer-exact as Σ|Δpixel| ≥ 8·w·h. */
+  private def sceneCuts(frames: Array[Array[Int]]): Seq[Int] =
+    (1 until frames.length).filter { f =>
+      val (cur, prev) = (frames(f), frames(f - 1))
+      var sumAbs = 0L
+      var i = 0
+      while (i < cur.length) { sumAbs += math.abs(cur(i) - prev(i)); i += 1 }
+      sumAbs >= 8L * cur.length
+    }
+
   def decodeVideoFeatures(rows: Iterator[MediaRow]): Iterator[VideoFeatures] = {
     rows.map { r =>
       val (w, h, frames) = decodeVideoRasters(r.payload, r.doc_id)
       val n = w * h
-      var cuts = 0
-      var f = 1
-      while (f < frames.length) {
-        var sumAbs = 0L
-        var i = 0
-        while (i < n) { sumAbs += math.abs(frames(f)(i) - frames(f - 1)(i)); i += 1 }
-        if (sumAbs >= 8L * n) cuts += 1 // mean |Δpixel| ≥ 8 ⇒ scene cut
-        f += 1
-      }
+      val cuts = sceneCuts(frames).length
       def mean(px: Array[Int]): Double = {
         var s = 0L; var i = 0
         while (i < n) { s += px(i); i += 1 }
@@ -464,33 +468,17 @@ object Multimodal {
   /** One row per detected SCENE of a decoded clip: contiguous frame runs
     * between pixel-diff cuts — the segmentation a video-curation pipeline
     * samples training frames from (one keyframe per scene beats every-Nth
-    * frame on redundancy). Cut detection is [[decodeVideoFeatures]]'s:
-    * Σ|Δpixel| ≥ 8·w·h between consecutive DECODED frames. */
+    * frame on redundancy). Cut detection is [[sceneCuts]]. */
   case class VideoScene(doc_id: Long, scene_idx: Int, start_frame: Int,
                         end_frame: Int, n_frames: Int)
 
   def videoScenes(rows: Iterator[MediaRow]): Iterator[VideoScene] = {
     rows.flatMap { r =>
-      val (w, h, frames) = decodeVideoRasters(r.payload, r.doc_id)
-      val n = w * h
-      val out = scala.collection.mutable.ArrayBuffer.empty[VideoScene]
-      var sceneIdx = 0
-      var start = 0
-      var f = 1
-      while (f < frames.length) {
-        var sumAbs = 0L
-        var i = 0
-        while (i < n) { sumAbs += math.abs(frames(f)(i) - frames(f - 1)(i)); i += 1 }
-        if (sumAbs >= 8L * n) {
-          out += VideoScene(r.doc_id, sceneIdx, start, f - 1, f - start)
-          sceneIdx += 1
-          start = f
-        }
-        f += 1
+      val (_, _, frames) = decodeVideoRasters(r.payload, r.doc_id)
+      val cuts = sceneCuts(frames)
+      (0 +: cuts).zip(cuts :+ frames.length).zipWithIndex.map { case ((start, end), i) =>
+        VideoScene(r.doc_id, i, start, end - 1, end - start)
       }
-      out += VideoScene(r.doc_id, sceneIdx, start, frames.length - 1,
-        frames.length - start)
-      out
     }
   }
 
@@ -502,17 +490,23 @@ object Multimodal {
     * base) by the pinned injectivity). */
   case class FrameFp(doc_id: Long, frame_fp: String)
 
+  /** Append a decoded frame's 8×8 nearest-neighbor resample to `buf`:
+    * cell i reads pixel ((i % 8)·w/8, (i / 8)·h/8), as [[perceptualHash]]. */
+  private def putGrid(buf: java.nio.ByteBuffer, px: Array[Int], w: Int, h: Int): Unit = {
+    var i = 0
+    while (i < 64) {
+      buf.putInt(px(((i / 8) * h / 8) * w + (i % 8) * w / 8))
+      i += 1
+    }
+  }
+
   def videoFrameFingerprints(rows: Iterator[MediaRow]): Iterator[FrameFp] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     rows.flatMap { r =>
       val (w, h, frames) = decodeVideoRasters(r.payload, r.doc_id)
       frames.map { px =>
         val buf = java.nio.ByteBuffer.allocate(64 * 4)
-        var i = 0
-        while (i < 64) {
-          buf.putInt(px(((i / 8) * h / 8) * w + (i % 8) * w / 8))
-          i += 1
-        }
+        putGrid(buf, px, w, h)
         md.reset()
         FrameFp(r.doc_id, md.digest(buf.array()).map("%02x".format(_)).mkString)
       }
@@ -539,13 +533,7 @@ object Multimodal {
       md.reset()
       val buf = java.nio.ByteBuffer.allocate(4 + frames.length * 64 * 4)
       buf.putInt(frames.length)
-      frames.foreach { px =>
-        var i = 0
-        while (i < 64) {
-          buf.putInt(px(((i / 8) * h / 8) * w + (i % 8) * w / 8))
-          i += 1
-        }
-      }
+      frames.foreach(putGrid(buf, _, w, h))
       val hex = md.digest(buf.array()).map("%02x".format(_)).mkString
       VideoClass(r.doc_id, frames.length, hex)
     }
@@ -573,9 +561,9 @@ object Multimodal {
   def ingestFingerprints(ids: Iterator[Long]): Iterator[IngestFp] = {
     val (i1, rest) = ids.duplicate
     val (i2, i3) = rest.duplicate
-    val img = imageFingerprints(i1.map(id => MediaRow(id, "image", encodePng(id))))
-    val au = audioStructure(i2.map(id => MediaRow(id, "audio", encodeWav(id))))
-    val vid = videoFingerprint(i3.map(id => MediaRow(id, "video", encodeVideo(id))))
+    val img = imageFingerprints(payloads("image")(i1))
+    val au = audioStructure(payloads("audio")(i2))
+    val vid = videoFingerprint(payloads("video")(i3))
     img.zip(au).zip(vid).map { case ((i, a), v) =>
       IngestFp(i.doc_id, i.fp_md5, i.p, i.ahash, a.n_frames, a.silent_mask,
         v.video_fp)
@@ -591,7 +579,7 @@ object Multimodal {
   def ingestFingerprintFrame(s: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column = lit(true)): DataFrame = {
     import s.implicits._
-    docIdsWhere(s, dir, pred)
+    docIds(docs(s, dir).filter(pred))
       .mapPartitions(ingestFingerprints).toDF()
       .select(col("doc_id"), col("img_fp"), col("audio_frames"),
         col("audio_mask"), col("video_fp"))
@@ -673,21 +661,11 @@ object Multimodal {
     * hamming ≤ 3 ⇒ ≥ 1 band equal ⇒ 100% recall), then the exact verify
     * (bit_count hamming ≤ 3 AND Σ|Δpixel| ≤ 512). */
   private def perceptualParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val fp = docIds(s, dir)
-      .mapPartitions { it =>
-        perceptualHash(it.map(id => MediaRow(id, "image", encodePng(id))))
-      }
-      .toDF()
+    val fp = decoded(docs(s, dir), "image")(perceptualHash)
     val clusters = fp.groupBy(col("p"), col("ahash"))
       .agg(min(col("doc_id")).as("rep"),
         sort_array(collect_list(col("doc_id"))).as("members"))
-    val banded = clusters
-      .select(col("rep").as("doc_id"), col("ahash"),
-        explode(sequence(lit(0), lit(3))).as("band_idx"))
-      .withColumn("band_val",
-        expr("shiftrightunsigned(ahash, band_idx * 16) & 65535"))
-      .select(col("doc_id"), col("band_idx"), col("band_val"))
+    val banded = ahashBands(clusters, "rep", "ahash").withColumnRenamed("rep", "doc_id")
     val reps = clusters.select(col("rep"), col("p"), col("ahash"))
     val repPairs = Dedup.bucketPairs(banded, Seq("band_idx", "band_val"))
       .join(reps.select(col("rep").as("doc_a"), col("p").as("pa"),
@@ -712,25 +690,102 @@ object Multimodal {
     * pass on ≤5 of 32 cores (542 MB file → 5 splits, ~25 min). The
     * exchange moves 8-byte ids; the codec work — the actual cost — spreads
     * to every core. At real cluster scale files outnumber cores and the
-    * exchange is redundant but stays O(ids), never payloads. */
-  private def docIds(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[Long] = {
-    import s.implicits._
-    Dedup.spread(Tables.load(s, dir, "documents").select(col("doc_id")))
-      .as[Long]
+    * exchange is redundant but stays O(ids), never payloads. A filter on
+    * `docs` (a bench slice, an arrival split) sits BELOW the exchange and
+    * the codec fan-out, so a sliced scan decodes only its slice. `docs`
+    * may be a stream: the spread then applies per micro-batch. */
+  private def docIds(docs: DataFrame): Dataset[Long] =
+    Dedup.spread(docs.select(col("doc_id"))).as[Long](Encoders.scalaLong)
+
+  /** Synthesized media arrival, the one place a payload is made per
+    * doc_id: each id becomes a `kind` ("image", "audio" or "video")
+    * [[MediaRow]] carrying [[encodePng]], [[encodeWav]] or
+    * [[encodeVideo]] of it. */
+  private[graft] def payloads(kind: String)(ids: Iterator[Long]): Iterator[MediaRow] = {
+    val encode: Long => Array[Byte] = kind match {
+      case "image" => encodePng
+      case "audio" => encodeWav
+      case "video" => encodeVideo
+      case other => throw new IllegalArgumentException(s"unknown media kind $other")
+    }
+    ids.map(id => MediaRow(id, kind, encode(id)))
   }
 
-  /** [[docIds]] restricted by a pushdown-friendly predicate — the filter
-    * sits BELOW the round-robin repartition and the codec fan-out, so a
-    * bench-slice scan decodes only its slice. */
-  private def docIdsWhere(s: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column): org.apache.spark.sql.Dataset[Long] = {
-    import s.implicits._
-    Dedup.spread(Tables.load(s, dir, "documents").select(col("doc_id")).filter(pred))
-      .as[Long]
+  /** The codec fan-out of every media query, batch and streaming:
+    * `docs`' ids spread to full width ([[docIds]]), then each partition's
+    * `kind` payloads ([[payloads]]) run through `kernel` — a decoder or
+    * fingerprinter of this object, or the identity for the raw payload. */
+  private[graft] def decoded[T <: Product : TypeTag](docs: DataFrame, kind: String)(
+      kernel: Iterator[MediaRow] => Iterator[T]): DataFrame =
+    docIds(docs).mapPartitions(it => kernel(payloads(kind)(it)))(Encoders.product[T]).toDF()
+
+  /** 4×16-bit bands of a 64-bit aHash: one (`id`, band_idx, band_val)
+    * row per band. By pigeonhole two hashes within Hamming distance 3
+    * share a band, so the band equi-join is a complete candidate set for
+    * every perceptual gate. */
+  private[graft] def ahashBands(df: DataFrame, id: String, hash: String): DataFrame =
+    df.select(col(id), col(hash).as("ahash"), explode(sequence(lit(0), lit(3))).as("band_idx"))
+      .select(col(id), col("band_idx"),
+        expr("shiftrightunsigned(ahash, band_idx * 16) & 65535").as("band_val"))
+
+  private def docs(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "documents")
+
+  /** Batch rows whose `key` also occurs on the store side, as (doc_id,
+    * true): a left-semi probe of the store's distinct-key class index. */
+  private def semiGate(batch: DataFrame, store: DataFrame,
+      key: org.apache.spark.sql.Column): DataFrame =
+    batch.select(col("doc_id"), key.as("key"))
+      .join(store.select(key.as("key")).distinct(), Seq("key"), "left_semi")
+      .select(col("doc_id"), lit(true))
+
+  /** The text gates of incremental joint admission over (doc_id, text)
+    * frames: `text_exact`, a left-semi against the store's distinct texts,
+    * and `text_neardup` — both sides quotiented by text identity, the class
+    * reps banded ([[Dedup.minhashBands]]) and band-joined batch × store
+    * only (never store × store), exact jaccard ≥ 0.8 on candidates. */
+  private def textGates(batch: DataFrame, store: DataFrame): Seq[(String, DataFrame)] = {
+    import graft.functions.Sketches
+    val bCls = batch.groupBy(col("text")).agg(min(col("doc_id")).as("bid"))
+      .select(col("bid"), col("text").as("text_b"))
+    val sCls = store.select(col("text").as("text_s")).distinct()
+      .withColumn("sid", monotonically_increasing_id())
+    val ndTexts = Dedup.minhashBands(bCls, "text_b", Seq("bid", "text_b"))
+      .join(Dedup.minhashBands(sCls, "text_s", Seq("sid", "text_s")),
+        Seq("band_idx", "band_hash"))
+      .select(col("bid"), col("text_b"), col("text_s")).distinct()
+      .filter(Sketches.jaccardShingles(col("text_b"), col("text_s"), 3) >= 0.8)
+      .select(col("bid"), col("text_b")).distinct()
+    Seq("text_exact" -> semiGate(batch, store, col("text")),
+      "text_neardup" -> batch
+        .join(ndTexts.select(col("text_b").as("text")), Seq("text"), "left_semi")
+        .select(col("doc_id"), lit(true)))
+  }
+
+  /** The audio and video gates of incremental joint admission over the
+    * two sides' fused fingerprint frames ([[ingestFingerprints]]):
+    * `audio_struct` matches the silence-structure class, `video_seq` the
+    * frame-sequence fingerprint. */
+  private def audioVideoGates(bFp: DataFrame, sFp: DataFrame): Seq[(String, DataFrame)] =
+    Seq("audio_struct" -> semiGate(bFp, sFp, struct(col("audio_frames").as("n_frames"),
+        col("audio_mask").as("silent_mask"))),
+      "video_seq" -> semiGate(bFp, sFp, col("video_fp")))
+
+  /** The admission record: one row per batch doc with each gate's flag
+    * (false where the gate's (doc_id, _) hit frame has no row), and
+    * `admitted` iff no gate fired. */
+  private def admissionRecord(batch: DataFrame, gates: Seq[(String, DataFrame)]): DataFrame = {
+    val flags = gates.map(_._1)
+    gates.foldLeft(batch.select(col("doc_id"))) { case (acc, (flag, hits)) =>
+        acc.join(hits.toDF("doc_id", flag), Seq("doc_id"), "left_outer")
+      }
+      .select(col("doc_id") +: flags.map(f => coalesce(col(f), lit(false)).as(f)): _*)
+      .withColumn("admitted", !flags.map(col).reduce(_ || _))
+      .select(col("doc_id") +: col("admitted") +: flags.map(col): _*)
+      .orderBy(col("doc_id"))
   }
 
   private def media(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents").select(
+    docs(s, dir).select(
       col("doc_id"),
       element_at(array(lit("image"), lit("audio"), lit("video")),
         (col("doc_id") % 3 + 1).cast("int")).as("kind"),
@@ -770,12 +825,7 @@ object Multimodal {
     // exactly content identity — which also pins PNG encode determinism
     // across partitions.
     "q_multimodal_dedup" -> ((s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions { it =>
-          it.map(id => MediaRow(id, "image", encodePng(id)))
-        }
-        .toDF()
+      decoded(docs(s, dir), "image")(identity)
         .select(col("doc_id"), md5(col("payload")).as("fp"))
         .groupBy(col("fp"))
         .agg(min(col("doc_id")).as("keeper_doc_id"),
@@ -889,16 +939,8 @@ object Multimodal {
     // REAL codec round-trip: synthesize PNG payloads (media arrival),
     // decode with javax.imageio, feature-extract — all partition-parallel;
     // hash-green against the closed-form DuckDB oracle below
-    "q_multimodal_features" -> ((s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions { it =>
-          it.map(id => MediaRow(id, "image", encodePng(id)))
-        }
-        .mapPartitions(decodeImages)
-        .toDF()
-        .orderBy(col("doc_id"))
-    }),
+    "q_multimodal_features" -> ((s, dir) =>
+      decoded(docs(s, dir), "image")(decodeImages).orderBy(col("doc_id"))),
 
     // audio as a first-class modality: synthesize a REAL RIFF/WAV payload
     // per doc (javax.sound.sampled encode), decode it back through the
@@ -909,12 +951,7 @@ object Multimodal {
     // mapPartitions, only the fixed-width feature row crosses any
     // exchange (the presentation sort), never the waveform.
     "q_audio_features" -> ((s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions { it =>
-          decodeAudio(it.map(id => MediaRow(id, "audio", encodeWav(id))))
-        }
-        .toDF()
+      decoded(docs(s, dir), "audio")(decodeAudio)
         .select(col("doc_id"),
           col("n_samples").cast("long").as("n_samples"),
           col("n_frames").cast("long").as("n_frames"),
@@ -938,12 +975,7 @@ object Multimodal {
     // 4 + doc_id % 7 frames), so hash-equality proves the decoded-PCM
     // detection reproduces the generator's classes exactly.
     "q_audio_dedup" -> ((s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions { it =>
-          audioStructure(it.map(id => MediaRow(id, "audio", encodeWav(id))))
-        }
-        .toDF()
+      decoded(docs(s, dir), "audio")(audioStructure)
         .groupBy(col("n_frames"), col("silent_mask"))
         .agg(min(col("doc_id")).as("keeper_doc_id"),
           count(lit(1)).as("n_copies"),
@@ -967,12 +999,7 @@ object Multimodal {
     // ids round-robin to full width before the codec fan-out, one codec
     // scan, only the fixed-width feature row crosses the exchange.
     "q_video_features" -> ((s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions { it =>
-          decodeVideoFeatures(it.map(id => MediaRow(id, "video", encodeVideo(id))))
-        }
-        .toDF()
+      decoded(docs(s, dir), "video")(decodeVideoFeatures)
         .select(col("doc_id"),
           col("n_frames").cast("long").as("n_frames"),
           col("width"), col("height"),
@@ -987,12 +1014,7 @@ object Multimodal {
     // curation (one keyframe per scene). Same codec scan shape as
     // q_video_features; output is Σ scenes rows, linear in corpus.
     "q_video_scenes" -> ((s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions { it =>
-          videoScenes(it.map(id => MediaRow(id, "video", encodeVideo(id))))
-        }
-        .toDF()
+      decoded(docs(s, dir), "video")(videoScenes)
         .select(col("doc_id"),
           col("scene_idx").cast("long").as("scene_idx"),
           col("start_frame").cast("long").as("start_frame"),
@@ -1010,12 +1032,7 @@ object Multimodal {
     // fingerprint + frame count cross the exchange (never frames or
     // payloads), hash-groupBy with map-side partial aggregation.
     "q_video_dedup" -> ((s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions { it =>
-          videoFingerprint(it.map(id => MediaRow(id, "video", encodeVideo(id))))
-        }
-        .toDF()
+      decoded(docs(s, dir), "video")(videoFingerprint)
         .groupBy(col("video_fp"))
         .agg(min(col("doc_id")).as("keeper_doc_id"),
           count(lit(1)).as("n_copies"),
@@ -1042,14 +1059,10 @@ object Multimodal {
     // contaminated training doc with its exact / perceptual bench-match
     // census and best hamming.
     "q_decontaminate_image" -> ((s, dir) => {
-      import s.implicits._
-      def fps(ids: org.apache.spark.sql.Dataset[Long]) = ids
-        .mapPartitions { it =>
-          imageFingerprints(it.map(id => MediaRow(id, "image", encodePng(id))))
-        }
-        .toDF()
-      val training = fps(docIdsWhere(s, dir, col("doc_id") >= 50))
-      val bench = fps(docIdsWhere(s, dir, col("doc_id") < 50))
+      def fps(pred: org.apache.spark.sql.Column) =
+        decoded(docs(s, dir).filter(pred), "image")(imageFingerprints)
+      val training = fps(col("doc_id") >= 50)
+      val bench = fps(col("doc_id") < 50)
       // quotient: one row per distinct training raster class (md5 is
       // class-determined — deterministic PNG encode + raster injectivity)
       val tCls = training.groupBy(col("fp_md5"))
@@ -1060,17 +1073,8 @@ object Multimodal {
           count(lit(1)).as("n_bench"))
         .select(col("fp_md5").as("bench_fp"), col("bp"), col("bhash"),
           col("n_bench"))
-      val tBand = tCls
-        .select(col("fp_md5"), col("ahash"),
-          explode(sequence(lit(0), lit(3))).as("band_idx"))
-        .withColumn("band_val",
-          expr("shiftrightunsigned(ahash, band_idx * 16) & 65535"))
-      val bBand = bCls
-        .select(col("bench_fp"), col("bhash"),
-          explode(sequence(lit(0), lit(3))).as("band_idx"))
-        .withColumn("band_val",
-          expr("shiftrightunsigned(bhash, band_idx * 16) & 65535"))
-        .select(col("bench_fp"), col("band_idx"), col("band_val"))
+      val tBand = ahashBands(tCls, "fp_md5", "ahash")
+      val bBand = ahashBands(bCls, "bench_fp", "bhash")
       val hits = tBand.join(broadcast(bBand), Seq("band_idx", "band_val"))
         .select(col("fp_md5"), col("bench_fp")).distinct()
         .join(tCls, "fp_md5")
@@ -1099,14 +1103,10 @@ object Multimodal {
     // broadcast against the training class quotient; one codec scan per
     // side, the filter below the codec fan-out.
     "q_decontaminate_audio" -> ((s, dir) => {
-      import s.implicits._
-      def structs(ids: org.apache.spark.sql.Dataset[Long]) = ids
-        .mapPartitions { it =>
-          audioStructure(it.map(id => MediaRow(id, "audio", encodeWav(id))))
-        }
-        .toDF()
-      val training = structs(docIdsWhere(s, dir, col("doc_id") >= 50))
-      val bench = structs(docIdsWhere(s, dir, col("doc_id") < 50))
+      def structs(pred: org.apache.spark.sql.Column) =
+        decoded(docs(s, dir).filter(pred), "audio")(audioStructure)
+      val training = structs(col("doc_id") >= 50)
+      val bench = structs(col("doc_id") < 50)
         .groupBy(col("n_frames"), col("silent_mask"))
         .agg(count(lit(1)).as("n_bench"))
       val tCls = training.groupBy(col("n_frames"), col("silent_mask"))
@@ -1130,14 +1130,8 @@ object Multimodal {
     // distinct count. Output: contaminated docs with their shared-frame
     // census.
     "q_decontaminate_video" -> ((s, dir) => {
-      import s.implicits._
       def frameFps(pred: org.apache.spark.sql.Column) =
-        docIdsWhere(s, dir, pred)
-          .mapPartitions { it =>
-            videoFrameFingerprints(it.map(id =>
-              MediaRow(id, "video", encodeVideo(id))))
-          }
-          .toDF()
+        decoded(docs(s, dir).filter(pred), "video")(videoFrameFingerprints)
       val bench = frameFps(col("doc_id") < 50)
         .select(col("frame_fp")).distinct()
       frameFps(col("doc_id") >= 50)
@@ -1179,7 +1173,7 @@ object Multimodal {
     // exact-recall-on-this-corpus guarantee.
     "q_dedup_joint" -> ((s, dir) => {
       import s.implicits._
-      val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
+      val d = docs(s, dir).select(col("doc_id"), col("text"))
       // ONE fused codec pass, materialized ([[ingestFingerprints]] —
       // the ingest-table factoring, applied INSIDE the query): before
       // r11 each modality frame was built by its own codec scan AND
@@ -1248,7 +1242,7 @@ object Multimodal {
     // The oracle closes over the all-pairs perceptual predicate, which
     // subsumes the class cliques at distance 0.
     "q_dedup_joint_perceptual" -> ((s, dir) => {
-      val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
+      val d = docs(s, dir).select(col("doc_id"), col("text"))
       val (pcls, pPairs) = perceptualParts(s, dir)
       val withImg = pcls.select(col("rep").as("img_rep"),
         explode(col("members")).as("doc_id"))
@@ -1293,35 +1287,9 @@ object Multimodal {
     // scan per modality per side with the split filter below the codec
     // fan-out.
     "q_dedup_joint_incremental" -> ((s, dir) => {
-      import s.implicits._
-      import graft.functions.Sketches
-      val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
+      val d = docs(s, dir).select(col("doc_id"), col("text"))
       val batch = d.filter(col("doc_id") % 10 === 0)
       val store = d.filter(col("doc_id") % 10 =!= 0)
-      // gate 1: exact text hit against the store's distinct-text index
-      val exactHits = batch
-        .join(store.select(col("text")).distinct(), Seq("text"), "left_semi")
-        .select(col("doc_id"), lit(true).as("text_exact"))
-      // gate 2: near-dup text — quotient both sides by text identity,
-      // band the class reps, verify exact jaccard on candidates only
-      def bandedCls(df: DataFrame, idCol: String, txtCol: String) = df
-        .withColumn("w", split(col(txtCol), " "))
-        .filter(size(col("w")) >= 3)
-        .select(col(idCol), col(txtCol), posexplode(Sketches.bandhashes(
-          Sketches.shingleMinhashes(col("w"), 3, 64), 4))
-          .as(Seq("band_idx", "band_hash")))
-      val bCls = batch.groupBy(col("text")).agg(min(col("doc_id")).as("bid"))
-        .select(col("bid"), col("text").as("text_b"))
-      val sCls = store.select(col("text").as("text_s")).distinct()
-        .withColumn("sid", monotonically_increasing_id())
-      val ndTexts = bandedCls(bCls, "bid", "text_b")
-        .join(bandedCls(sCls, "sid", "text_s"), Seq("band_idx", "band_hash"))
-        .select(col("bid"), col("text_b"), col("text_s")).distinct()
-        .filter(Sketches.jaccardShingles(col("text_b"), col("text_s"), 3) >= 0.8)
-        .select(col("bid"), col("text_b")).distinct()
-      val ndHits = batch
-        .join(ndTexts.select(col("text_b").as("text")), Seq("text"), "left_semi")
-        .select(col("doc_id"), lit(true).as("text_neardup"))
       // gates 3–5: image byte identity, audio silence structure, video
       // sequence fingerprint — each side's three fingerprints from ONE
       // fused codec pass ([[ingestFingerprints]]), materialized because
@@ -1338,36 +1306,9 @@ object Multimodal {
       // at admission time. Raster pruned pre-checkpoint (exact gates).
       val bFp = ingestTable(s, dir, col("doc_id") % 10 === 0)
       val sFp = ingestTable(s, dir, col("doc_id") % 10 =!= 0)
-      val imgHits = bFp.select(col("doc_id"), col("img_fp"))
-        .join(sFp.select(col("img_fp")).distinct(), Seq("img_fp"), "left_semi")
-        .select(col("doc_id"), lit(true).as("image_exact"))
-      val audCls = struct(col("audio_frames").as("n_frames"),
-        col("audio_mask").as("silent_mask")).as("aud_cls")
-      val audHits = bFp.select(col("doc_id"), audCls)
-        .join(sFp.select(audCls).distinct(), Seq("aud_cls"), "left_semi")
-        .select(col("doc_id"), lit(true).as("audio_struct"))
-      val vidHits = bFp.select(col("doc_id"), col("video_fp"))
-        .join(sFp.select(col("video_fp")).distinct(), Seq("video_fp"), "left_semi")
-        .select(col("doc_id"), lit(true).as("video_seq"))
-      batch.select(col("doc_id"))
-        .join(exactHits, Seq("doc_id"), "left_outer")
-        .join(ndHits, Seq("doc_id"), "left_outer")
-        .join(imgHits, Seq("doc_id"), "left_outer")
-        .join(audHits, Seq("doc_id"), "left_outer")
-        .join(vidHits, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("text_exact"), lit(false)).as("text_exact"),
-          coalesce(col("text_neardup"), lit(false)).as("text_neardup"),
-          coalesce(col("image_exact"), lit(false)).as("image_exact"),
-          coalesce(col("audio_struct"), lit(false)).as("audio_struct"),
-          coalesce(col("video_seq"), lit(false)).as("video_seq"))
-        .withColumn("admitted",
-          !(col("text_exact") || col("text_neardup") || col("image_exact")
-            || col("audio_struct") || col("video_seq")))
-        .select(col("doc_id"), col("admitted"), col("text_exact"),
-          col("text_neardup"), col("image_exact"), col("audio_struct"),
-          col("video_seq"))
-        .orderBy(col("doc_id"))
+      admissionRecord(batch, textGates(batch, store) ++
+        Seq("image_exact" -> semiGate(bFp, sFp, col("img_fp"))) ++
+        audioVideoGates(bFp, sFp))
     }),
 
     // incremental joint admission with a PERCEPTUAL image gate — the
@@ -1382,31 +1323,9 @@ object Multimodal {
     // gates are q_dedup_joint_incremental's, unchanged.
     "q_dedup_joint_incremental_perceptual" -> ((s, dir) => {
       import s.implicits._
-      import graft.functions.Sketches
-      val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
+      val d = docs(s, dir).select(col("doc_id"), col("text"))
       val batch = d.filter(col("doc_id") % 10 === 0)
       val store = d.filter(col("doc_id") % 10 =!= 0)
-      val exactHits = batch
-        .join(store.select(col("text")).distinct(), Seq("text"), "left_semi")
-        .select(col("doc_id"), lit(true).as("text_exact"))
-      def bandedCls(df: DataFrame, idCol: String, txtCol: String) = df
-        .withColumn("w", split(col(txtCol), " "))
-        .filter(size(col("w")) >= 3)
-        .select(col(idCol), col(txtCol), posexplode(Sketches.bandhashes(
-          Sketches.shingleMinhashes(col("w"), 3, 64), 4))
-          .as(Seq("band_idx", "band_hash")))
-      val bCls = batch.groupBy(col("text")).agg(min(col("doc_id")).as("bid"))
-        .select(col("bid"), col("text").as("text_b"))
-      val sCls = store.select(col("text").as("text_s")).distinct()
-        .withColumn("sid", monotonically_increasing_id())
-      val ndTexts = bandedCls(bCls, "bid", "text_b")
-        .join(bandedCls(sCls, "sid", "text_s"), Seq("band_idx", "band_hash"))
-        .select(col("bid"), col("text_b"), col("text_s")).distinct()
-        .filter(Sketches.jaccardShingles(col("text_b"), col("text_s"), 3) >= 0.8)
-        .select(col("bid"), col("text_b")).distinct()
-      val ndHits = batch
-        .join(ndTexts.select(col("text_b").as("text")), Seq("text"), "left_semi")
-        .select(col("doc_id"), lit(true).as("text_neardup"))
       // ALL codec gates share ONE fused scan per side, materialized
       // ([[ingestFingerprints]] — the r11 factoring): the image frame
       // alone has three consumers (exact semi-join, raster classes,
@@ -1414,81 +1333,39 @@ object Multimodal {
       // re-ran its codec scan. In production these frames are reads of
       // the persisted ingest fingerprint table, split by arrival.
       def fusedFps(pred: org.apache.spark.sql.Column) =
-        docIdsWhere(s, dir, pred)
+        docIds(docs(s, dir).filter(pred))
           .mapPartitions(ingestFingerprints).toDF().localCheckpoint()
       val bFp = fusedFps(col("doc_id") % 10 === 0)
       val sFp = fusedFps(col("doc_id") % 10 =!= 0)
-      def imgView(fp: DataFrame) = fp.select(col("doc_id"),
-        col("img_fp").as("fp_md5"), col("img_raster").as("p"),
-        col("img_ahash").as("ahash"))
-      val bImg = imgView(bFp)
-      val sImg = imgView(sFp)
-      val imgHits = bImg
-        .join(sImg.select(col("fp_md5")).distinct(), Seq("fp_md5"), "left_semi")
-        .select(col("doc_id"), lit(true).as("image_exact"))
       // perceptual: batch raster classes × store raster classes via
       // Hamming bands (pigeonhole-complete at hamming ≤ 3)
-      def rasterCls(df: DataFrame) = df
-        .groupBy(col("fp_md5")) // md5 ⟺ raster class (pinned injectivity)
-        .agg(first(col("p")).as("p"), first(col("ahash")).as("ahash"))
-      def bands(df: DataFrame, fpCol: String) = df
-        .select(col("fp_md5").as(fpCol), col("ahash"),
-          explode(sequence(lit(0), lit(3))).as("band_idx"))
-        .withColumn("band_val",
-          expr("shiftrightunsigned(ahash, band_idx * 16) & 65535"))
-        .select(col(fpCol), col("band_idx"), col("band_val"))
-      val bRc = rasterCls(bImg)
-      val sRc = rasterCls(sImg)
-      val percTrainClasses = bands(bRc, "b_fp")
-        .join(bands(sRc, "s_fp"), Seq("band_idx", "band_val"))
-        .select(col("b_fp"), col("s_fp")).distinct()
-        .join(bRc.select(col("fp_md5").as("b_fp"), col("p").as("bp"),
-          col("ahash").as("bh")), "b_fp")
-        .join(sRc.select(col("fp_md5").as("s_fp"), col("p").as("sp"),
+      def rasterCls(fp: DataFrame) = fp
+        .groupBy(col("img_fp")) // md5 ⟺ raster class (pinned injectivity)
+        .agg(first(col("img_raster")).as("p"), first(col("img_ahash")).as("ahash"))
+      val bRc = rasterCls(bFp)
+      val sRc = rasterCls(sFp)
+      val percTrainClasses = ahashBands(bRc, "img_fp", "ahash")
+        .join(ahashBands(sRc.withColumnRenamed("img_fp", "s_fp"), "s_fp", "ahash"),
+          Seq("band_idx", "band_val"))
+        .select(col("img_fp"), col("s_fp")).distinct()
+        .join(bRc.select(col("img_fp"), col("p").as("bp"), col("ahash").as("bh")), "img_fp")
+        .join(sRc.select(col("img_fp").as("s_fp"), col("p").as("sp"),
           col("ahash").as("sh")), "s_fp")
         .filter(expr("bit_count(bh ^ sh)") <= 3)
         .withColumn("pix_dist",
           aggregate(zip_with(col("bp"), col("sp"), (a, b) => abs(a - b)),
             lit(0L), (acc, x) => acc + x.cast("long")))
         .filter(col("pix_dist") <= 512)
-        .select(col("b_fp").as("fp_md5")).distinct()
-      val percHits = bImg
-        .join(percTrainClasses, Seq("fp_md5"), "left_semi")
+        .select(col("img_fp")).distinct()
+      val percHits = bFp
+        .join(percTrainClasses, Seq("img_fp"), "left_semi")
         .select(col("doc_id"), lit(true).as("image_perceptual"))
-      // audio/video gates as in q_dedup_joint_incremental (r10 verdict
-      // #2) — the perceptual form keeps the full gate superset so the
-      // "only ever rejects more" monotonicity law stays structural;
-      // both read the fused frames above, no extra codec pass
-      val audCls = struct(col("audio_frames").as("n_frames"),
-        col("audio_mask").as("silent_mask")).as("aud_cls")
-      val audHits = bFp.select(col("doc_id"), audCls)
-        .join(sFp.select(audCls).distinct(), Seq("aud_cls"), "left_semi")
-        .select(col("doc_id"), lit(true).as("audio_struct"))
-      val vidHits = bFp.select(col("doc_id"), col("video_fp"))
-        .join(sFp.select(col("video_fp")).distinct(), Seq("video_fp"), "left_semi")
-        .select(col("doc_id"), lit(true).as("video_seq"))
-      batch.select(col("doc_id"))
-        .join(exactHits, Seq("doc_id"), "left_outer")
-        .join(ndHits, Seq("doc_id"), "left_outer")
-        .join(imgHits, Seq("doc_id"), "left_outer")
-        .join(percHits, Seq("doc_id"), "left_outer")
-        .join(audHits, Seq("doc_id"), "left_outer")
-        .join(vidHits, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("text_exact"), lit(false)).as("text_exact"),
-          coalesce(col("text_neardup"), lit(false)).as("text_neardup"),
-          coalesce(col("image_exact"), lit(false)).as("image_exact"),
-          coalesce(col("image_perceptual"), lit(false)).as("image_perceptual"),
-          coalesce(col("audio_struct"), lit(false)).as("audio_struct"),
-          coalesce(col("video_seq"), lit(false)).as("video_seq"))
-        .withColumn("admitted",
-          !(col("text_exact") || col("text_neardup") || col("image_exact")
-            || col("image_perceptual") || col("audio_struct")
-            || col("video_seq")))
-        .select(col("doc_id"), col("admitted"), col("text_exact"),
-          col("text_neardup"), col("image_exact"), col("image_perceptual"),
-          col("audio_struct"), col("video_seq"))
-        .orderBy(col("doc_id"))
+      // the perceptual form keeps the full gate superset, so the "only
+      // ever rejects more" monotonicity law stays structural
+      admissionRecord(batch, textGates(batch, store) ++
+        Seq("image_exact" -> semiGate(bFp, sFp, col("img_fp")),
+          "image_perceptual" -> percHits) ++
+        audioVideoGates(bFp, sFp))
     }),
 
     // STRICT-form joint dedup: a duplicate must match on BOTH modalities —
@@ -1507,28 +1384,17 @@ object Multimodal {
     // fall out structurally: same text under different images lands in
     // different joint classes and can never band together.
     "q_dedup_joint_both" -> ((s, dir) => {
-      import s.implicits._
       import graft.functions.Sketches
-      val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
-      val img = docIds(s, dir)
-        .mapPartitions { it =>
-          it.map(id => MediaRow(id, "image", encodePng(id)))
-        }
-        .toDF()
+      val d = docs(s, dir).select(col("doc_id"), col("text"))
+      val img = decoded(docs(s, dir), "image")(identity)
         .select(col("doc_id"), md5(col("payload")).as("img_fp"))
       val cls = d.join(img, "doc_id")
         .groupBy(col("text"), col("img_fp"))
         .agg(min(col("doc_id")).as("jid"))
       val reps = cls.select(col("jid").as("doc_id"), col("text"), col("img_fp"))
-      val banded = reps
-        .select(col("doc_id"), col("img_fp"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"), col("img_fp"),
-          posexplode(Sketches.bandhashes(
-            Sketches.shingleMinhashes(col("w"), 3, 64), 4))
-            .as(Seq("band_idx", "band_hash")))
       val pairs = Dedup
-        .bucketPairs(banded, Seq("img_fp", "band_idx", "band_hash"))
+        .bucketPairs(Dedup.minhashBands(reps, "text", Seq("doc_id", "img_fp")),
+          Seq("img_fp", "band_idx", "band_hash"))
         .join(reps.select(col("doc_id").as("doc_a"), col("text").as("text_a")), "doc_a")
         .join(reps.select(col("doc_id").as("doc_b"), col("text").as("text_b")), "doc_b")
         .filter(Sketches.jaccardShingles(col("text_a"), col("text_b"), 3) >= 0.8)

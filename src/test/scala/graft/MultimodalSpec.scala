@@ -144,18 +144,6 @@ class MultimodalSpec extends SparkSpec {
     assert(!out.contains((0L, 48L)), "base-diff-16 pair leaked through")
   }
 
-  test("streaming multimodal dedup == batch byte dedup (class injectivity)") {
-    // the streaming form keys state on the perceptual raster class; the
-    // batch form groups md5-of-PNG-bytes. Both partitions coincide with
-    // the generator's (w, h, base) classes — the raster resample is
-    // injective in (w, h, base) — so keeper/copy-count sets must be equal
-    val stream = Queries.all("q_stream_multimodal_dedup")(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = Queries.all("q_multimodal_dedup")(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(stream == batch)
-  }
-
   test("perceptual clusters: partition of the corpus, consistent with pairs") {
     val cl = Queries.all("q_multimodal_perceptual_clusters")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -201,14 +189,25 @@ class MultimodalSpec extends SparkSpec {
         s"class law broken for ($a,$b)")
   }
 
-  test("streaming audio dedup == batch structural classes") {
-    import org.apache.spark.sql.functions._
-    val stream = Queries.all("q_stream_audio_dedup")(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = Queries.all("q_audio_dedup")(spark, sfDir)
+  test("streaming codec dedup == batch classes (image, audio, video)") {
+    // each stream keys state on its modality's decoded fingerprint class;
+    // its batch twin groups the same modality. Image: the stream's
+    // perceptual raster class and the batch md5-of-PNG-bytes class both
+    // coincide with the generator's (w, h, base) classes (the raster
+    // resample is injective in (w, h, base)); audio: the same silence-
+    // structure class on both sides; video: the same frame-sequence
+    // fingerprint. So keeper/copy-count sets must be equal
+    def keepers(q: String) = Queries.all(q)(spark, sfDir)
       .select(col("keeper_doc_id"), col("n_copies"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(stream == batch)
+    for ((stream, batch) <- Seq(
+        "q_stream_multimodal_dedup" -> "q_multimodal_dedup",
+        "q_stream_audio_dedup" -> "q_audio_dedup",
+        "q_stream_video_dedup" -> "q_video_dedup")) {
+      val b = keepers(batch)
+      assert(b.nonEmpty, batch)
+      assert(keepers(stream) == b, s"$stream != $batch")
+    }
   }
 
   test("joint dedup: quotiented components == ground-truth doc-level components") {
