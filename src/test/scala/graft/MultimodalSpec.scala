@@ -189,25 +189,33 @@ class MultimodalSpec extends SparkSpec {
         s"class law broken for ($a,$b)")
   }
 
-  test("streaming codec dedup == batch classes (image, audio, video)") {
-    // each stream keys state on its modality's decoded fingerprint class;
-    // its batch twin groups the same modality. Image: the stream's
-    // perceptual raster class and the batch md5-of-PNG-bytes class both
-    // coincide with the generator's (w, h, base) classes (the raster
-    // resample is injective in (w, h, base)); audio: the same silence-
-    // structure class on both sides; video: the same frame-sequence
-    // fingerprint. So keeper/copy-count sets must be equal
+  // each stream keys state on its modality's decoded fingerprint class;
+  // its batch twin groups the same modality, so keeper/copy-count sets
+  // must be equal
+  private def assertStreamEqualsBatch(stream: String, batch: String): Unit = {
     def keepers(q: String) = Queries.all(q)(spark, sfDir)
       .select(col("keeper_doc_id"), col("n_copies"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for ((stream, batch) <- Seq(
-        "q_stream_multimodal_dedup" -> "q_multimodal_dedup",
-        "q_stream_audio_dedup" -> "q_audio_dedup",
-        "q_stream_video_dedup" -> "q_video_dedup")) {
-      val b = keepers(batch)
-      assert(b.nonEmpty, batch)
-      assert(keepers(stream) == b, s"$stream != $batch")
-    }
+    val b = keepers(batch)
+    assert(b.nonEmpty, batch)
+    assert(keepers(stream) == b, s"$stream != $batch")
+  }
+
+  test("streaming multimodal dedup == batch byte dedup (class injectivity)") {
+    // the stream's perceptual raster class and the batch md5-of-PNG-bytes
+    // class both coincide with the generator's (w, h, base) classes (the
+    // raster resample is injective in (w, h, base))
+    assertStreamEqualsBatch("q_stream_multimodal_dedup", "q_multimodal_dedup")
+  }
+
+  test("streaming audio dedup == batch structural classes") {
+    // the same silence-structure class on both sides
+    assertStreamEqualsBatch("q_stream_audio_dedup", "q_audio_dedup")
+  }
+
+  test("streaming video dedup == batch frame-sequence classes") {
+    // the same frame-sequence fingerprint on both sides
+    assertStreamEqualsBatch("q_stream_video_dedup", "q_video_dedup")
   }
 
   test("joint dedup: quotiented components == ground-truth doc-level components") {
