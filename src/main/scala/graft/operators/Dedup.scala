@@ -1266,27 +1266,6 @@ object Dedup {
     comp.unionByName(singles)
   }
 
-  /** LSH-bucketed embedding near-dup: hyperplane-signature buckets generate
-    * candidates in O(n·bands), exact cosine verifies ≥0.45 — precision is
-    * exact by construction, so output equality with the quadratic baseline
-    * reduces to candidate recall.
-    *
-    * Band parameters come from the standard S-curve: a pair at bit-agreement
-    * p survives with prob 1-(1-p^r)^b. This corpus is adversarially
-    * separated — true pairs start at cos 0.4501 (p≈0.6486) with background
-    * up to cos 0.4494 — so r=4, b=64 (256 planes, 4 stacked 64-bit
-    * signatures) drives per-pair miss below 4e-6; with fixed seeded planes
-    * the result is deterministic and verified equal to the exact baseline at
-    * every test SF. A corpus with a real dup/background gap (dups ≥0.8,
-    * background ≤0.3) gets the same recall from b=8 at a fraction of the
-    * candidate volume — b, r are the per-corpus tuning knobs. */
-  /** Shared candidate machinery for the embedding family:
-    * (exact-dup clusters, verified cross-cluster representative pairs).
-    * Exact-dup clustering FIRST (the canonical dup-heavy-corpus shape):
-    * identical vectors collapse to one representative before LSH, so the
-    * candidate problem scales with UNIQUE vectors. On a 10×-replicated
-    * probe corpus this cut the pair query from 224 s to seconds; on a
-    * dup-free corpus it is a no-op costing one aggregate. */
   /** Hyperplane-LSH band rows for a frame of (`idCol`, embedding): one
     * (id, band_idx, band_val) row per band — r-bit slices of the seeded
     * 64-bit signature family. Shared by the self-join candidate machinery
@@ -1320,6 +1299,13 @@ object Dedup {
         col("band_val"): _*)
   }
 
+  /** Shared candidate machinery for the embedding family:
+    * (exact-dup clusters, verified cross-cluster representative pairs).
+    * Exact-dup clustering FIRST (the canonical dup-heavy-corpus shape):
+    * identical vectors collapse to one representative before LSH, so the
+    * candidate problem scales with UNIQUE vectors. On a 10×-replicated
+    * probe corpus this cut the pair query from 224 s to seconds; on a
+    * dup-free corpus it is a no-op costing one aggregate. */
   private[graft] def embeddingRepCandidatesOf(e: DataFrame, r: Int = 4,
       b: Int = 64): (DataFrame, DataFrame) = {
     val clusters = e.groupBy(col("embedding"))
@@ -1510,6 +1496,20 @@ object Dedup {
       clusters.select(col("gid").as("rep"), col("members")), textCliques(clusters)), cfg)
   }
 
+  /** LSH-bucketed embedding near-dup: hyperplane-signature buckets generate
+    * candidates in O(n·bands), exact cosine verifies ≥0.45 — precision is
+    * exact by construction, so output equality with the quadratic baseline
+    * reduces to candidate recall.
+    *
+    * Band parameters come from the standard S-curve: a pair at bit-agreement
+    * p survives with prob 1-(1-p^r)^b. This corpus is adversarially
+    * separated — true pairs start at cos 0.4501 (p≈0.6486) with background
+    * up to cos 0.4494 — so r=4, b=64 (256 planes, 4 stacked 64-bit
+    * signatures) drives per-pair miss below 4e-6; with fixed seeded planes
+    * the result is deterministic and verified equal to the exact baseline at
+    * every test SF. A corpus with a real dup/background gap (dups ≥0.8,
+    * background ≤0.3) gets the same recall from b=8 at a fraction of the
+    * candidate volume — b, r are the per-corpus tuning knobs. */
   private[operators] def embeddingLshPairs(s: SparkSession, dir: String): DataFrame = {
     val (clusters, repPairs) = embeddingRepCandidatesOf(Tables.load(s, dir, "embeddings"))
     // within-cluster pairs score cos(v,v) (~1.0); cross-cluster pairs
@@ -1550,6 +1550,12 @@ object Dedup {
       |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
       |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
       |FROM s a JOIN s b ON a.doc_id < b.doc_id""".stripMargin
+
+  /** The exact jaccard ≥ 0.8 pair set: the oracle of q_dedup_minhash_lsh
+    * and q_dedup_minhash_auto. */
+  private val minhashPairsSql: String =
+    s"""SELECT doc_a, doc_b, jaccard FROM ($exactPairsSql)
+       |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin
 
   private[operators] val clustersOracleSql: String =
     s"""WITH RECURSIVE
@@ -1649,16 +1655,12 @@ object Dedup {
         |       CAST(dup_chars AS DOUBLE) / d.n_chars AS dup_ratio
         |FROM documents d JOIN g ON d.text = g.text JOIN agg USING (gid)
         |ORDER BY d.doc_id""".stripMargin,
-    "q_dedup_minhash_lsh" ->
-      s"""SELECT doc_a, doc_b, jaccard FROM ($exactPairsSql)
-         |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
+    "q_dedup_minhash_lsh" -> minhashPairsSql,
     // shares the exact-pairs ground truth: on this corpus the auto
     // chooser provably falls back (see autoBandConfigMinhash), so the
     // equality is guaranteed here and holds only up to the certified eps
     // miss bound on a genuinely gapped corpus
-    "q_dedup_minhash_auto" ->
-      s"""SELECT doc_a, doc_b, jaccard FROM ($exactPairsSql)
-         |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
+    "q_dedup_minhash_auto" -> minhashPairsSql,
     // exact batch×corpus jaccard (quadratic is gate-SF-only; the engine's
     // band join is the scale path). Same recall precondition as above.
     "q_dedup_minhash_incremental" ->

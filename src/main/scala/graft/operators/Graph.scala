@@ -184,18 +184,6 @@ object Graph {
     }
   }
 
-  /** Per-node triangle counts over an undirected edge list — the local
-    * clustering signal: a doc in many triangles sits in a dense near-dup
-    * clique (template/boilerplate family), one in none is a chain artifact.
-    *
-    * Scale shape: the classic degree-ordered orientation. Every edge is
-    * directed from its lower-(degree, id) endpoint to the higher one, so
-    * each node's out-degree is O(√|E|) even on power-law graphs — the
-    * wedge join (out-list ⋈ out-list on the apex) never explodes on a
-    * hub the way the naive a<b orientation does on low-id hubs. Each
-    * triangle is generated at exactly one apex (its orientation-minimum
-    * vertex), then confirmed by one join against the undirected edge set:
-    * two hash shuffles total, no CartesianProduct. */
   /** Canonical undirected edge list (a < b, no self-loops, deduped). */
   private def canonPairs(pairs: DataFrame): DataFrame = pairs
     .select(least(col("doc_a"), col("doc_b")).as("a"),
@@ -225,6 +213,18 @@ object Graph {
       .select(col("apex"), col("d1"), col("d2"))
   }
 
+  /** Per-node triangle counts over an undirected edge list — the local
+    * clustering signal: a doc in many triangles sits in a dense near-dup
+    * clique (template/boilerplate family), one in none is a chain artifact.
+    *
+    * Scale shape: the classic degree-ordered orientation. Every edge is
+    * directed from its lower-(degree, id) endpoint to the higher one, so
+    * each node's out-degree is O(√|E|) even on power-law graphs — the
+    * wedge join (out-list ⋈ out-list on the apex) never explodes on a
+    * hub the way the naive a<b orientation does on low-id hubs. Each
+    * triangle is generated at exactly one apex (its orientation-minimum
+    * vertex), then confirmed by one join against the undirected edge set:
+    * two hash shuffles total, no CartesianProduct. */
   def triangleCounts(pairs: DataFrame): DataFrame =
     triangleTriples(canonPairs(pairs).localCheckpoint())
       .select(explode(array(col("apex"), col("d1"), col("d2"))).as("doc_id"))

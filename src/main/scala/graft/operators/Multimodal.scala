@@ -1439,6 +1439,14 @@ object Multimodal {
       |       CAST(pix_dist AS BIGINT) AS pix_dist
       |FROM pr WHERE hamming <= 3 AND pix_dist <= 512""".stripMargin
 
+  /** q_multimodal_dedup's oracle, shared by its streaming twin. */
+  private[graft] val imageClassesSql: String =
+    """SELECT CAST(min(doc_id) AS BIGINT) AS keeper_doc_id,
+      |       CAST(count(*) AS BIGINT) AS n_copies
+      |FROM documents
+      |GROUP BY doc_id % 6, doc_id % 4, doc_id % 32
+      |ORDER BY keeper_doc_id""".stripMargin
+
   val oracle: Map[String, String] = Map(
     // the generator's silence-structure classes in closed form: frame f of
     // doc_id is silent iff (doc_id + f) % 5 == 0, over 4 + doc_id % 7
@@ -1794,12 +1802,7 @@ object Multimodal {
     // the generator's content-equivalence classes: the PNG payload is a
     // pure function of (doc_id%6, doc_id%4, doc_id%32); Spark's md5-of-
     // real-bytes grouping must reproduce them exactly
-    "q_multimodal_dedup" ->
-      """SELECT CAST(min(doc_id) AS BIGINT) AS keeper_doc_id,
-        |       CAST(count(*) AS BIGINT) AS n_copies
-        |FROM documents
-        |GROUP BY doc_id % 6, doc_id % 4, doc_id % 32
-        |ORDER BY keeper_doc_id""".stripMargin,
+    "q_multimodal_dedup" -> imageClassesSql,
     // the three class bijections at once (img ⟺ mod 96 via the
     // (d%6, d%4, d%32) pattern params, audio ⟺ mod 35, video ⟺ mod 348)
     "q_multimodal_ingest" ->

@@ -313,6 +313,36 @@ object Sampling {
     }),
   )
 
+  /** The DSIR oracle: hashed unigram+bigram buckets, target (doc_id < 50)
+    * and source counts, the smoothed per-bucket log-ratio, and the summed
+    * log-weight of each doc matching `where`, ordered by `orderBy`. Shared
+    * by q_mix_dsir, its incremental form and its streaming twin. */
+  private[graft] def dsirOracleSql(where: String, orderBy: String): String =
+    s"""WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w
+       |           FROM documents),
+       |g AS (SELECT doc_id,
+       |        substr(md5(unnest(list_concat(w,
+       |          [w[i] || ' ' || w[i+1] for i in range(1, len(w))]))), 1, 3)
+       |          AS bucket
+       |      FROM t),
+       |c AS (SELECT bucket,
+       |        SUM(CASE WHEN doc_id < 50 THEN 1 ELSE 0 END) AS nt,
+       |        SUM(CASE WHEN doc_id >= 50 THEN 1 ELSE 0 END) AS ns
+       |      FROM g GROUP BY bucket),
+       |tot AS (SELECT SUM(nt) AS tt, SUM(ns) AS ts FROM c),
+       |lr AS (SELECT bucket,
+       |         CAST(round(ln((nt + 1) / (CAST(tt AS DOUBLE) + 4096.0)), 9)
+       |              AS DECIMAL(18,9))
+       |       - CAST(round(ln((ns + 1) / (CAST(ts AS DOUBLE) + 4096.0)), 9)
+       |              AS DECIMAL(18,9)) AS lr
+       |       FROM c CROSS JOIN tot)
+       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
+       |  round(CAST(SUM(lr) AS DOUBLE), 6) AS dsir_logweight
+       |FROM g JOIN lr USING (bucket)
+       |WHERE $where
+       |GROUP BY doc_id
+       |ORDER BY $orderBy""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q_time_split" ->
       """WITH m AS (SELECT max(CAST(ts AS TIMESTAMP)) AS mx FROM events),
@@ -352,57 +382,12 @@ object Sampling {
         |             * 1000000) AS BIGINT) AS budget_tokens
         |FROM p CROSS JOIN t ORDER BY lang""".stripMargin,
     "q_mix_dsir" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-        |           FROM documents),
-        |g AS (SELECT doc_id,
-        |        substr(md5(unnest(list_concat(w,
-        |          [w[i] || ' ' || w[i+1] for i in range(1, len(w))]))), 1, 3)
-        |          AS bucket
-        |      FROM t),
-        |c AS (SELECT bucket,
-        |        SUM(CASE WHEN doc_id < 50 THEN 1 ELSE 0 END) AS nt,
-        |        SUM(CASE WHEN doc_id >= 50 THEN 1 ELSE 0 END) AS ns
-        |      FROM g GROUP BY bucket),
-        |tot AS (SELECT SUM(nt) AS tt, SUM(ns) AS ts FROM c),
-        |lr AS (SELECT bucket,
-        |         CAST(round(ln((nt + 1) / (CAST(tt AS DOUBLE) + 4096.0)), 9)
-        |              AS DECIMAL(18,9))
-        |       - CAST(round(ln((ns + 1) / (CAST(ts AS DOUBLE) + 4096.0)), 9)
-        |              AS DECIMAL(18,9)) AS lr
-        |       FROM c CROSS JOIN tot)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |  round(CAST(SUM(lr) AS DOUBLE), 6) AS dsir_logweight
-        |FROM g JOIN lr USING (bucket)
-        |WHERE doc_id >= 50
-        |GROUP BY doc_id
-        |ORDER BY dsir_logweight DESC, doc_id LIMIT 100""".stripMargin,
+      dsirOracleSql("doc_id >= 50", "dsir_logweight DESC, doc_id LIMIT 100"),
     // same model chain, scoring restricted to the arrival slice — the
     // persisted-model recrawl pass in closed form
     "q_mix_dsir_incremental" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-        |           FROM documents),
-        |g AS (SELECT doc_id,
-        |        substr(md5(unnest(list_concat(w,
-        |          [w[i] || ' ' || w[i+1] for i in range(1, len(w))]))), 1, 3)
-        |          AS bucket
-        |      FROM t),
-        |c AS (SELECT bucket,
-        |        SUM(CASE WHEN doc_id < 50 THEN 1 ELSE 0 END) AS nt,
-        |        SUM(CASE WHEN doc_id >= 50 THEN 1 ELSE 0 END) AS ns
-        |      FROM g GROUP BY bucket),
-        |tot AS (SELECT SUM(nt) AS tt, SUM(ns) AS ts FROM c),
-        |lr AS (SELECT bucket,
-        |         CAST(round(ln((nt + 1) / (CAST(tt AS DOUBLE) + 4096.0)), 9)
-        |              AS DECIMAL(18,9))
-        |       - CAST(round(ln((ns + 1) / (CAST(ts AS DOUBLE) + 4096.0)), 9)
-        |              AS DECIMAL(18,9)) AS lr
-        |       FROM c CROSS JOIN tot)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |  round(CAST(SUM(lr) AS DOUBLE), 6) AS dsir_logweight
-        |FROM g JOIN lr USING (bucket)
-        |WHERE doc_id >= 50 AND doc_id % 10 = 0
-        |GROUP BY doc_id
-        |ORDER BY dsir_logweight DESC, doc_id LIMIT 100""".stripMargin,
+      dsirOracleSql("doc_id >= 50 AND doc_id % 10 = 0",
+        "dsir_logweight DESC, doc_id LIMIT 100"),
     "q_sample_split" ->
       """SELECT CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'b' THEN 'train'
         |            WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'd' THEN 'val'

@@ -2,9 +2,11 @@ package graft.operators
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType,
+  IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.Sketches
@@ -35,11 +37,9 @@ object Similarity {
   val queries: Map[String, Q] = Map(
     "q_similarity_topk" -> ((s, dir) => {
       val e = Tables.load(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("vec_id"))
-      broadcast(q).join(e, col("vec_id") =!= col("qid"))
+      broadcast(queryBatch(e)).join(e, col("vec_id") =!= col("qid"))
         .withColumn("score", round(Sketches.cosineSim(col("qv"), col("embedding")), 6))
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= topK)
@@ -88,8 +88,7 @@ object Similarity {
       val banded = bands(sig.select(col("rep_id"), col("sa"), col("sb")),
           Seq("rep_id", "sa", "sb"))
         .select(col("rep_id"), col("band_idx"), col("band_val"))
-      val qf = e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val qf = queryBatch(e)
       val qBanded = bands(qf
           .select(col("qid"),
             Sketches.rhSignature(col("qv"), 64, 64, 256).as("sa"),
@@ -98,18 +97,12 @@ object Similarity {
         .select(col("qid"), col("band_idx"), col("band_val"))
       val cand = broadcast(qBanded).join(banded, Seq("band_idx", "band_val"))
         .select(col("qid"), col("rep_id")).distinct()
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("vec_id"))
-      cand
+      rankStamp(top5(cand
         .join(sig.select(col("rep_id"), col("embedding"), col("member_ids")), "rep_id")
         .join(broadcast(qf), "qid")
         .withColumn("score", round(Sketches.cosineSim(col("qv"), col("embedding")), 6))
         .select(col("qid"), col("score"), explode(col("member_ids")).as("vec_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= topK)
-        .select(col("qid"), col("vec_id"), col("score"), col("rn"))
-        .orderBy(col("qid"), col("rn"))
+        .filter(col("vec_id") =!= col("qid"))))
     }),
 
     "q_similarity_ivf" -> ((s, dir) => ivf(s, dir)),
@@ -155,7 +148,6 @@ object Similarity {
     // ever collected. Exactness: per-dimension sums route through 9-dp
     // decimals (order-independent), mean rounds to 6 dp.
     "q_embed_centroids" -> ((s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       Tables.load(s, dir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("label"), col("pos"))
@@ -180,7 +172,6 @@ object Similarity {
     // to 6 dp and their per-label moments sum as DECIMAL(18,6) — the
     // q_zscore_outliers discipline on a derived measure.
     "q_embed_outliers" -> ((s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       val ex = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -283,7 +274,7 @@ object Similarity {
     // sound one — the highest-cosine vector that is NOT a near-dup
     // (rounded cos < 0.45, the same threshold that defines positives, so
     // a hard negative can never be a true near-dup BY CONSTRUCTION; ties
-    // → lowest vec_id). See [[contrastiveHard]] for the scale shape; the
+    // → lowest vec_id). See [[contrastiveHardFromPos]] for the scale shape; the
     // registered form draws positives from the class-level quotient
     // ([[positivesQuotiented]]) like q_contrastive_triples — the expanded
     // pair set never materializes.
@@ -321,33 +312,6 @@ object Similarity {
     }),
   )
 
-  /** Contrastive (anchor, positive, negative) training triples over the
-    * embedding corpus — the set an embedding-model trainer consumes.
-    *
-    * Positives are REAL near-duplicates: `pairs` must be the exact
-    * cosine-≥0.45 pair set (the replication-invariant LSH path,
-    * [[Dedup.embeddingLshPairs]]); the positive per anchor is its min-id
-    * partner (struct-min on (partner, cos) — partner is unique per anchor
-    * in a distinct pair set, so this is deterministic in both engines).
-    *
-    * Negatives are a deterministic pseudo-random index map: nid0 =
-    * (anchor·48271 + 7) mod N, then the first of [nid0, nid0+1, nid0+2]
-    * (mod N) that is neither the anchor nor the positive — three
-    * candidates suffice whenever N ≥ 3, so neg ≠ anchor and neg ≠ pos by
-    * construction (the r8-ADVICE collision hole).
-    *
-    * Contract: vec_ids are contiguous 0..N-1 (TESTDATA.md corpus shape).
-    * The guard is LOUD, not silent: the negative lookup is a LEFT join
-    * and a missing vec_id raises a runtime error through `raise_error`
-    * in the `neg_cos` output column (never prunable), instead of the
-    * inner join silently dropping the anchor — and the registered DuckDB
-    * oracle shares the exact formula, so any engine-side drift is a hash
-    * mismatch on top.
-    *
-    * Scale shape: the pair set is the replication-invariant LSH path, N
-    * is a 1-row broadcast, the positive reduction is a partial-
-    * aggregatable struct-min, and the negative lookup is ONE equi-join —
-    * everything linear in the pair set, no sampling-by-sort anywhere. */
   /** (anchor_id, pos_id, pos_cos): min-id near-dup partner per anchor —
     * the positive side shared by both contrastive queries. Partial-
     * aggregatable struct-min; partner is unique per anchor in a distinct
@@ -422,11 +386,38 @@ object Similarity {
   private[graft] def contrastiveTriples(e: DataFrame, pairs: DataFrame): DataFrame =
     contrastiveTriplesFromPos(e, positivesOf(pairs))
 
+  /** Contrastive (anchor, positive, negative) training triples over the
+    * embedding corpus — the set an embedding-model trainer consumes.
+    *
+    * Positives are REAL near-duplicates: `pairs` must be the exact
+    * cosine-≥0.45 pair set (the replication-invariant LSH path,
+    * [[Dedup.embeddingLshPairs]]); the positive per anchor is its min-id
+    * partner (struct-min on (partner, cos) — partner is unique per anchor
+    * in a distinct pair set, so this is deterministic in both engines).
+    *
+    * Negatives are a deterministic pseudo-random index map: nid0 =
+    * (anchor·48271 + 7) mod N, then the first of [nid0, nid0+1, nid0+2]
+    * (mod N) that is neither the anchor nor the positive — three
+    * candidates suffice whenever N ≥ 3, so neg ≠ anchor and neg ≠ pos by
+    * construction (the r8-ADVICE collision hole).
+    *
+    * Contract: vec_ids are contiguous 0..N-1 (TESTDATA.md corpus shape).
+    * The guard is LOUD, not silent: the negative lookup is a LEFT join
+    * and a missing vec_id raises a runtime error through `raise_error`
+    * in the `neg_cos` output column (never prunable), instead of the
+    * inner join silently dropping the anchor — and the registered DuckDB
+    * oracle shares the exact formula, so any engine-side drift is a hash
+    * mismatch on top.
+    *
+    * Scale shape: the pair set is the replication-invariant LSH path, N
+    * is a 1-row broadcast, the positive reduction is a partial-
+    * aggregatable struct-min, and the negative lookup is ONE equi-join —
+    * everything linear in the pair set, no sampling-by-sort anywhere. */
   private[graft] def contrastiveTriplesFromPos(e: DataFrame, pos: DataFrame): DataFrame = {
     val n = e.agg(count(lit(1)).as("n_total"))
     def cand(step: Int) =
       ((col("anchor_id") * 48271L + 7L) % col("n_total") + step) % col("n_total")
-    def ok(c: org.apache.spark.sql.Column) =
+    def ok(c: Column) =
       c =!= col("anchor_id") && c =!= col("pos_id")
     val withNeg = pos.crossJoin(broadcast(n))
       .withColumn("neg_id",
@@ -476,9 +467,6 @@ object Similarity {
     * the argmax to one candidate per (anchor-class, partition) map-side.
     * Zero vectors have no cosine (null score) → excluded on both
     * engines; anchor sets too large to broadcast batch the rep frame. */
-  private[graft] def contrastiveHard(e: DataFrame, pairs: DataFrame): DataFrame =
-    contrastiveHardFromPos(e, positivesOf(pairs))
-
   private[graft] def contrastiveHardFromPos(e: DataFrame, pos: DataFrame): DataFrame = {
     val anchors = pos.join(
       e.select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_emb")),
@@ -522,9 +510,8 @@ object Similarity {
     * to bound plan depth; at the 2–8 iterations typical for corpus
     * bucketing the lazy chain is fine. */
   private[graft] def kmeansAssign(e: DataFrame, k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(iters >= 1, "need at least one assignment pass")
-    def dist2(v: org.apache.spark.sql.Column, cv: org.apache.spark.sql.Column) =
+    def dist2(v: Column, cv: Column) =
       round(aggregate(zip_with(v, cv, (x, c) => (x - c) * (x - c)),
         lit(0.0), (acc, d) => acc + d), 6)
     def assign(cents: DataFrame): DataFrame =
@@ -551,19 +538,11 @@ object Similarity {
     (1 until iters).foldLeft(assign(c0))((a, _) => assign(recenter(a)))
   }
 
-  /** Top principal component via a one-pass upper-triangle scatter-matrix
-    * aggregate + bounded driver-side power iteration (3 unrolled steps;
-    * see the q_embed_pca registry comment for the scale shape and the
-    * cross-engine rounding protocol). The two collects are bounded by the
-    * dimensionality (dim rows of means; dim(dim+1)/2 scatter cells) —
-    * constant-size regardless of corpus size, the same legitimacy class
-    * as the k-means codebook collects below. */
   /** The bounded PCA model: per-dim means, the 3-step protocol component,
     * its eigenvalue estimate, and the scatter trace. Shared by the
     * component query and the in-scan projection query. */
   private[graft] def pcaModel(e: DataFrame)
       : (Array[Double], Array[Double], Double, Double) = {
-    import org.apache.spark.sql.types.DecimalType
     def rd(x: Double, sc: Int): Double =
       BigDecimal(x).setScale(sc, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rv = transform(col("embedding"), x => round(x.cast("double"), 9))
@@ -624,9 +603,14 @@ object Similarity {
     (Array.tabulate(dim)(muMap), v, lam, trace)
   }
 
+  /** Top principal component via a one-pass upper-triangle scatter-matrix
+    * aggregate + bounded driver-side power iteration (3 unrolled steps;
+    * see the q_embed_pca registry comment for the scale shape and the
+    * cross-engine rounding protocol). The two collects are bounded by the
+    * dimensionality (dim rows of means; dim(dim+1)/2 scatter cells) —
+    * constant-size regardless of corpus size, the same legitimacy class
+    * as the k-means codebook collects below. */
   private[graft] def embedPca(s: SparkSession, e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    import org.apache.spark.sql.Row
     import scala.jdk.CollectionConverters._
     def rd(x: Double, sc: Int): Double =
       BigDecimal(x).setScale(sc, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -647,7 +631,6 @@ object Similarity {
     * one linear scan + one vec_id-keyed decimal aggregate — no join. */
   private[graft] def embedProject(e: DataFrame,
       model: Option[PcaModel] = None): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     // model = Some(...) skips the in-query moment passes entirely — the
     // persisted (μ, v) enter as literals ([[writeModel]])
     val m = model.getOrElse(pcaModelOf(e))
@@ -692,8 +675,7 @@ object Similarity {
   private[graft] def ivfModelOf(e: DataFrame): IvfModel = {
     val sample = loadSample(e)
     val cb = trainCodebook(sample)
-    val cbN = cb.map(c => normalized(c.map(_.toDouble).toArray)).toArray
-    IvfModel(cb, p90Of(ivfSampleResiduals(sample.map(normalized), cbN)))
+    IvfModel(cb, p90Of(ivfSampleResiduals(sample.map(normalized), unitCentroids(cb))))
   }
 
   /** Train the PQ model (per-subspace codebooks + sample p90 residual). */
@@ -732,52 +714,105 @@ object Similarity {
     s.read.schema(enc.schema).parquet(path).as[T](enc).head()
   }
 
-  /** Spherical k-means codebook, trained driver-side on the bounded
-    * deterministic [[loadSample]] (constant-size regardless of corpus
-    * size; model fitting is the one legitimate driver-side loop in this
-    * module). Init = first k sample vectors; Lloyd iterations assign by
-    * cosine and recenter by mean, all deterministic, so the codebook —
-    * and every query using it — is stable across runs. */
-  private[operators] def trainCodebook(sample: Array[Array[Double]],
-      k: Int = 16, iters: Int = 8): Seq[Seq[Float]] = {
-    require(sample.length >= k, s"need ≥$k sample vectors, got ${sample.length}")
-    val dim = sample.head.length
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < dim) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) Double.NegativeInfinity
-      else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    var centroids = sample.take(k).map(_.clone)
+  /** Lloyd iterations over `points` from the centroids `init`: each point
+    * joins the centroid of highest `score` (ties → lower index), then
+    * every centroid moves to its members' mean; an empty cell keeps its
+    * centroid. The driver-side loop behind both trained codebooks —
+    * cosine for the IVF cells, negated L2 for the PQ subspaces. */
+  private def lloyd(points: Array[Array[Double]], init: Array[Array[Double]],
+      iters: Int)(score: (Array[Double], Array[Double]) => Double): Seq[Seq[Float]] = {
+    val k = init.length
+    val dim = points.head.length
+    var centroids = init
     for (_ <- 0 until iters) {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Int](k)
-      sample.foreach { v =>
+      points.foreach { v =>
         var best = 0; var bs = Double.NegativeInfinity
         var c = 0
-        while (c < k) { val sc = cos(v, centroids(c)); if (sc > bs) { bs = sc; best = c }; c += 1 }
+        while (c < k) { val sc = score(v, centroids(c)); if (sc > bs) { bs = sc; best = c }; c += 1 }
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
         counts(best) += 1
       }
       centroids = Array.tabulate(k)(c =>
-        if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
-        else sums(c).map(_ / counts(c)))
+        if (counts(c) == 0) centroids(c) else sums(c).map(_ / counts(c)))
     }
     centroids.map(_.map(_.toFloat).toSeq).toSeq
   }
 
+  /** Spherical k-means codebook, trained driver-side on the bounded
+    * deterministic [[loadSample]] (constant-size regardless of corpus
+    * size; model fitting is the one legitimate driver-side loop in this
+    * module). Init = first k sample vectors; [[lloyd]] iterations assign
+    * by cosine and recenter by mean, all deterministic, so the codebook —
+    * and every query using it — is stable across runs. */
+  private[operators] def trainCodebook(sample: Array[Array[Double]],
+      k: Int = 16, iters: Int = 8): Seq[Seq[Float]] = {
+    require(sample.length >= k, s"need ≥$k sample vectors, got ${sample.length}")
+    lloyd(sample, sample.take(k).map(_.clone), iters) { (a, b) =>
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+      if (na == 0.0 || nb == 0.0) Double.NegativeInfinity
+      else dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+  }
+
+  /** The certified-exact search shared by [[ivf]] and [[pq]] (filter,
+    * then verify): `parts` yields the per-query candidate top-5 (qid,
+    * vec_id, score) in the brute-force output order (rounded score,
+    * vec_id) and the per-query certificate `(qid, certified)`. A certified
+    * query keeps its candidates; the rest re-run brute force (the
+    * [[queries]] baseline shape: query batch broadcast, corpus streams).
+    * The result therefore equals the exact baseline on EVERY corpus — the
+    * brute-force SQL is its registered oracle — and soundness never
+    * depends on how the candidates were chosen: a bad candidate set
+    * simply fails its certificate and falls back.
+    *
+    * The viability gate: whether certification CAN succeed is predictable
+    * driver-side for free from the model's training-sample p90 residual —
+    * the exact terms each certificate adds to every excluded row's bound.
+    * Above [[certSkipResidual]] the bound cannot beat any realistic top-5
+    * margin, so `parts` never runs and the brute-force baseline runs once
+    * (the output is identical by construction — the gate is a pure
+    * performance decision, logged as `<kind>_cert_skip` via
+    * [[graft.StructuredLog]], else `<kind>_cert_attempt`). This is what
+    * bounds the fallback-dominant case on incompressible corpora: one
+    * exact pass, not candidates + certificate + brute force. */
+  private def certifiedSearch(kind: String, e: DataFrame, p90Residual: Double)(
+      parts: => (DataFrame, DataFrame)): DataFrame = {
+    val p90 = f"$p90Residual%.6f"
+    if (p90Residual > certSkipResidual) {
+      graft.StructuredLog.info(s"${kind}_cert_skip", "p90_residual" -> p90,
+        "threshold" -> certSkipResidual, "action" -> "brute_force_all")
+      rankStamp(top5(bruteScores(e, None)))
+    } else {
+      graft.StructuredLog.info(s"${kind}_cert_attempt", "p90_residual" -> p90,
+        "threshold" -> certSkipResidual)
+      val (cand, cert0) = parts
+      // ≤ nQueries rows; checkpointed so the certificate job (whose
+      // lineage the keep and fallback sides would otherwise both re-run)
+      // computes once
+      val cert = cert0.localCheckpoint()
+      val certQ = cert.filter(col("certified")).select(col("qid"))
+      val uncertQ = cert.filter(!col("certified")).select(col("qid"))
+      rankStamp(cand.join(broadcast(certQ), Seq("qid"), "left_semi")
+        .unionByName(top5(bruteScores(e, Some(uncertQ)))))
+    }
+  }
+
   /** CERTIFIED-EXACT IVF search (the PQ discipline applied to cell
-    * geometry): every vector is assigned to its nearest trained-codebook
-    * cell by the [[graft.functions.NearestCells]] expression — pure scan-
-    * stage compute, no crossed frame, no window, no shuffle (the round-1
-    * shape shuffled 16× the corpus through `row_number()` to take this
-    * argmax). The same scan emits `r` = ‖x̂ − ĉ̂_cell‖₂, the residual of
-    * the double-normalized vector to its assigned cell's NORMALIZED
-    * centroid. Queries probe their top-`nprobe` cells; candidates come
-    * from a broadcast join on cell id (corpus side streams) and are
-    * re-ranked by exact cosine in the brute-force output order (rounded
-    * score, vec_id) on [[graft.plans.TopKPerKey]] bounded heaps.
+    * geometry) through [[certifiedSearch]]: every vector is assigned to
+    * its nearest trained-codebook cell by the
+    * [[graft.functions.NearestCells]] expression — pure scan-stage
+    * compute, no crossed frame, no window, no shuffle (the round-1 shape
+    * shuffled 16× the corpus through `row_number()` to take this argmax).
+    * The same scan emits `r` = ‖x̂ − ĉ̂_cell‖₂, the residual of the
+    * double-normalized vector to its assigned cell's NORMALIZED centroid.
+    * Queries probe their top-`nprobe` cells; candidates come from a
+    * broadcast join on cell id (corpus side streams) and are re-ranked by
+    * exact cosine in the brute-force output order (rounded score, vec_id)
+    * on [[graft.plans.TopKPerKey]] bounded heaps.
     *
     * The coverage certificate, per query: for any vector x in an
     * UNPROBED cell j, Cauchy–Schwarz gives cos(q,x) = ⟨q̂, ĉ̂_j⟩ +
@@ -786,19 +821,10 @@ object Similarity {
     * ub < r5 − 2·10⁻⁶ (r5 = the 5th-best ROUNDED candidate score; the
     * margin absorbs the ≤5·10⁻⁷ round-to-6dp shift on each side plus
     * tie-breaks), no excluded vector can reach rank ≤ k and the
-    * candidate top-5 IS the exact top-5. Queries that fail certification
-    * re-run brute-force, so the output equals the exact baseline on
-    * EVERY corpus — the brute-force SQL is its registered oracle.
-    * Soundness never depends on probe-set choice: a badly probed query
-    * simply fails its certificate and falls back.
-    *
-    * Same driver-side viability gate as [[pq]]: the training sample's
-    * centroid residuals predict whether any certificate can succeed;
-    * incompressible corpora skip straight to one exact pass
-    * (`ivf_cert_skip` in the structured log). Corpus scans per certified
-    * run: one for candidates, one for the unprobed-cell bound — both
-    * against broadcast ≤k·nQueries-row query frames, partial-aggregated
-    * before the one hash exchange each. */
+    * candidate top-5 IS the exact top-5. Corpus scans per certified run:
+    * one for candidates, one for the unprobed-cell bound — both against
+    * broadcast ≤k·nQueries-row query frames, partial-aggregated before the
+    * one hash exchange each. */
   private[graft] def ivf(s: SparkSession, dir: String,
       nprobe: Int = 3, model: Option[IvfModel] = None): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
@@ -806,46 +832,24 @@ object Similarity {
     // viability signal come from the PERSISTED model ([[writeModel]]),
     // zero in-query sample collection or Lloyd iterations
     val m = model.getOrElse(ivfModelOf(e))
-    val cb = m.centroids
-    val cbN: Array[Array[Double]] =
-      cb.map(c => normalized(c.map(_.toDouble).toArray)).toArray
-    val p90 = m.p90Residual
-    if (p90 > certSkipResidual) {
-      graft.StructuredLog.info("ivf_cert_skip",
-        "p90_residual" -> f"$p90%.6f", "threshold" -> certSkipResidual,
-        "action" -> "brute_force_all")
-      return rankStamp(graft.plans.TopK.perKey(bruteScores(e, None), Seq("qid"),
-        Seq(("score", true), ("vec_id", false)), topK))
-    }
-    graft.StructuredLog.info("ivf_cert_attempt",
-      "p90_residual" -> f"$p90%.6f", "threshold" -> certSkipResidual)
-    val (short, cert) = ivfParts(s, e, cb, cbN, nprobe)
-    val certQ = cert.filter(col("certified")).select(col("qid"))
-    val uncertQ = cert.filter(!col("certified")).select(col("qid"))
-    val certTop5 = short.join(broadcast(certQ), Seq("qid"), "left_semi")
-    val bruteTop5 = graft.plans.TopK.perKey(bruteScores(e, Some(uncertQ)),
-      Seq("qid"), Seq(("score", true), ("vec_id", false)), topK)
-    rankStamp(certTop5.unionByName(bruteTop5))
+    certifiedSearch("ivf", e, m.p90Residual)(ivfParts(s, e, m.centroids, nprobe))
   }
 
   /** (candidate top-5 in brute-force output order, per-query certificate
     * frame) — the certify-path internals of [[ivf]], shared with the law
-    * tests. Both returned frames are bounded `localCheckpoint`s. */
+    * tests. The candidate top-5 is a bounded `localCheckpoint`. */
   private def ivfParts(s: SparkSession, e: DataFrame, cb: Seq[Seq[Float]],
-      cbN: Array[Array[Double]], nprobe: Int): (DataFrame, DataFrame) = {
+      nprobe: Int): (DataFrame, DataFrame) = {
     import scala.jdk.CollectionConverters._
     val k = cb.length
+    val cbN = unitCentroids(cb)
     // corpus scan: assigned cell + residual to its normalized centroid
     val cbnFlat = typedLit(cbN.flatten.toSeq)
     val dim = cbN.head.length
-    val nrm = sqrt(aggregate(col("embedding"), lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double")))
-    val nvd = when(nrm === lit(0.0), transform(col("embedding"), x => x.cast("double")))
-      .otherwise(transform(col("embedding"), x => x.cast("double") / nrm))
     val cells = e
       .withColumn("cell",
         element_at(Sketches.nearestCells(col("embedding"), cb, 1), 1))
-      .withColumn("nvec", nvd)
+      .withColumn("nvec", unitEmbedding._2)
       .withColumn("cbflat", cbnFlat)
       .withColumn("r", expr(
         s"""sqrt(aggregate(sequence(1, $dim), CAST(0.0 AS DOUBLE),
@@ -855,13 +859,9 @@ object Similarity {
     // bounded driver-side query prep (nQueries rows, like PQ's LUT build):
     // per query, cosine to every normalized centroid → probe set =
     // top-nprobe cells (ties → lower index), unprobed set carries qcos
-    val qRows = e.filter(col("vec_id") < nQueries).orderBy(col("vec_id"))
-      .select(col("vec_id"), col("embedding")).collect()
-    val probedRows = Seq.newBuilder[org.apache.spark.sql.Row]
-    val unprobedRows = Seq.newBuilder[org.apache.spark.sql.Row]
-    qRows.foreach { row =>
-      val qid = row.getLong(0)
-      val qv = row.getSeq[Float](1)
+    val probedRows = Seq.newBuilder[Row]
+    val unprobedRows = Seq.newBuilder[Row]
+    queryRows(e).foreach { case (qid, qv) =>
       val qn = normalized(qv.toArray.map(_.toDouble))
       val qcos = cbN.map { c =>
         var dot = 0.0; var i = 0
@@ -871,29 +871,22 @@ object Similarity {
       val probed = qcos.zipWithIndex.sortBy { case (sc, j) => (-sc, j) }
         .take(nprobe).map(_._2).toSet
       (0 until k).foreach { j =>
-        if (probed(j)) probedRows += org.apache.spark.sql.Row(qid, j, qv)
-        else unprobedRows += org.apache.spark.sql.Row(qid, j, qcos(j))
+        if (probed(j)) probedRows += Row(qid, j, qv)
+        else unprobedRows += Row(qid, j, qcos(j))
       }
     }
-    val probedDf = s.createDataFrame(probedRows.result().asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("qv",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
-    val unprobedDf = s.createDataFrame(unprobedRows.result().asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("qcos", org.apache.spark.sql.types.DoubleType))))
+    val probedDf = s.createDataFrame(probedRows.result().asJava, StructType(Seq(
+      StructField("qid", LongType), StructField("cell", IntegerType),
+      StructField("qv", ArrayType(FloatType)))))
+    val unprobedDf = s.createDataFrame(unprobedRows.result().asJava, StructType(Seq(
+      StructField("qid", LongType), StructField("cell", IntegerType),
+      StructField("qcos", DoubleType))))
     // candidates: members of probed cells, re-ranked in the exact output
     // order (rounded score, vec_id) — identical tie-breaks to brute force
-    val cand = cells.join(broadcast(probedDf), Seq("cell"))
+    val short = top5(cells.join(broadcast(probedDf), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("score", round(Sketches.cosineSim(col("qv"), col("embedding")), 6))
-      .select(col("qid"), col("vec_id"), col("score"))
-    val short = graft.plans.TopK.perKey(cand, Seq("qid"),
-      Seq(("score", true), ("vec_id", false)), topK).localCheckpoint()
+      .select(col("qid"), col("vec_id"), col("score"))).localCheckpoint()
     val r5 = short.groupBy(col("qid"))
       .agg(min(col("score")).as("r5"), count(lit(1)).as("nres"))
     // the unprobed-cell bound: ≤(k−nprobe) broadcast rows per query; the
@@ -906,19 +899,16 @@ object Similarity {
       .select(col("qid"),
         (col("nres") === topK &&
           (col("ub").isNull || col("ub") < col("r5") - lit(2e-6))).as("certified"))
-      .localCheckpoint()
     (short, cert)
   }
 
   /** The per-query IVF coverage certificate `(qid, certified)` — exposed
     * for the law tests (computed unconditionally; the viability gate
-    * lives in [[ivf]] only). */
+    * lives in [[certifiedSearch]] only). */
   private[graft] def ivfCertificates(s: SparkSession, dir: String,
       nprobe: Int = 3): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
-    val cb = trainCodebook(loadSample(e))
-    val cbN = cb.map(c => normalized(c.map(_.toDouble).toArray)).toArray
-    ivfParts(s, e, cb, cbN, nprobe)._2
+    ivfParts(s, e, ivfModelOf(e).centroids, nprobe)._2
   }
 
   /** Residual of each normalized sample vector to its max-cosine
@@ -954,8 +944,8 @@ object Similarity {
   /** Per-subspace L2 k-means codebooks for product quantization — same
     * bounded-deterministic training contract as [[trainCodebook]]: a
     * constant-size NORMALIZED sample (never the corpus), first-k-distinct
-    * init, Lloyd iterations; stable across runs. Returns M codebooks of K
-    * centroids of dim/M floats each. */
+    * init, [[lloyd]] iterations by negated L2 distance; stable across
+    * runs. Returns M codebooks of K centroids of dim/M floats each. */
   private[operators] def trainPqCodebooks(sample: Array[Array[Double]],
       m: Int = 8, k: Int = 16, iters: Int = 8): Seq[Seq[Seq[Float]]] = {
     require(sample.length >= k, s"need ≥$k sample vectors, got ${sample.length}")
@@ -969,27 +959,11 @@ object Similarity {
       // take ≤k values this seeds every value as a centroid, so Lloyd
       // converges to residual 0 (the PQ certificate's best case)
       val init = subs.map(_.toSeq).distinct.take(k).map(_.toArray)
-      var centroids = Array.tabulate(k)(i => init(i % init.length).clone)
-      for (_ <- 0 until iters) {
-        val sums = Array.fill(k)(new Array[Double](dsub))
-        val counts = new Array[Int](k)
-        subs.foreach { v =>
-          var best = 0; var bd = Double.PositiveInfinity
-          var c = 0
-          while (c < k) {
-            var dist = 0.0; var i = 0
-            while (i < dsub) { val df = v(i) - centroids(c)(i); dist += df * df; i += 1 }
-            if (dist < bd) { bd = dist; best = c }
-            c += 1
-          }
-          var i = 0
-          while (i < dsub) { sums(best)(i) += v(i); i += 1 }
-          counts(best) += 1
-        }
-        centroids = Array.tabulate(k)(c =>
-          if (counts(c) == 0) centroids(c) else sums(c).map(_ / counts(c)))
+      lloyd(subs, Array.tabulate(k)(i => init(i % init.length).clone), iters) { (v, c) =>
+        var dist = 0.0; var i = 0
+        while (i < dsub) { val df = v(i) - c(i); dist += df * df; i += 1 }
+        -dist
       }
-      centroids.map(_.map(_.toFloat).toSeq).toSeq
     }
   }
 
@@ -1045,6 +1019,20 @@ object Similarity {
     if (n2 == 0.0) v else { val n = math.sqrt(n2); v.map(_ / n) }
   }
 
+  /** The IVF codebook's centroids, each [[normalized]] in double. */
+  private def unitCentroids(cb: Seq[Seq[Float]]): Array[Array[Double]] =
+    cb.map(c => normalized(c.map(_.toDouble).toArray)).toArray
+
+  /** [[normalized]] as in-scan column algebra (codegen'd): the L2 norm of
+    * `embedding` and the double-precision unit vector (zero vectors pass
+    * through). */
+  private def unitEmbedding: (Column, Column) = {
+    val nrm = sqrt(aggregate(col("embedding"), lit(0.0),
+      (a, x) => a + x.cast("double") * x.cast("double")))
+    (nrm, when(nrm === lit(0.0), transform(col("embedding"), x => x.cast("double")))
+      .otherwise(transform(col("embedding"), x => x.cast("double") / nrm)))
+  }
+
   /** PQ ANN (asymmetric distance): the corpus is scanned as M-byte PQ codes
     * ([[graft.functions.PqEncode]], scan-stage, no shuffle) — at 100 TB the
     * ANN pass reads ~64× less than raw vectors. Codes quantize the L2-
@@ -1068,16 +1056,13 @@ object Similarity {
   private def adcScores(s: SparkSession, e: DataFrame,
       cb: Seq[Seq[Seq[Float]]], m: Int, kCent: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
-    // normalize in the scan (SQL column algebra, codegen'd): the encoder
-    // reads the float-cast copy (PqEncode is a float-array expression),
-    // the residual reads the double-precision one
-    val nrm = sqrt(aggregate(col("embedding"), lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double")))
+    // normalize in the scan: the encoder reads the float-cast copy
+    // (PqEncode is a float-array expression), the residual reads the
+    // double-precision one
+    val (nrm, nvd) = unitEmbedding
     val nv = when(nrm === lit(0.0), col("embedding"))
       .otherwise(transform(col("embedding"), x => (x.cast("double") / nrm).cast("float")))
-    val nvd = when(nrm === lit(0.0), transform(col("embedding"), x => x.cast("double")))
-      .otherwise(transform(col("embedding"), x => x.cast("double") / nrm))
-    val dsubC = cb.head.head.length
+    val dsub = cb.head.head.length
     // flattened codebook literal for the residual: centroid (mm, ci) dim d
     // lives at flat index (mm*kCent + ci)*dsub + d (1-based element_at)
     val cbFlat = typedLit(cb.flatten.flatten.map(_.toDouble))
@@ -1086,35 +1071,26 @@ object Similarity {
       .withColumn("cbflat", cbFlat)
       .withColumn("r", expr(
         s"""sqrt(aggregate(sequence(0, ${m - 1}), CAST(0.0 AS DOUBLE),
-           |  (acc, mm) -> acc + aggregate(sequence(1, $dsubC), CAST(0.0 AS DOUBLE),
-           |    (a, d) -> a + pow(CAST(element_at(nvec, mm * $dsubC + d) AS DOUBLE)
-           |      - element_at(cbflat, (mm * $kCent + element_at(code, mm + 1)) * $dsubC + d), 2))))"""
+           |  (acc, mm) -> acc + aggregate(sequence(1, $dsub), CAST(0.0 AS DOUBLE),
+           |    (a, d) -> a + pow(CAST(element_at(nvec, mm * $dsub + d) AS DOUBLE)
+           |      - element_at(cbflat, (mm * $kCent + element_at(code, mm + 1)) * $dsub + d), 2))))"""
           .stripMargin))
       .drop("nvec", "cbflat")
     // bounded driver-side LUT build: nQueries rows, like the codebook sample
-    val qRows = e.filter(col("vec_id") < nQueries).orderBy(col("vec_id"))
-      .select(col("vec_id"), col("embedding")).collect()
-    val dsub = cb.head.head.length
-    val lutRows = qRows.map { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Float](1).toArray
-      val qn = normalized(qv.map(_.toDouble))
+    val lutRows = queryRows(e).map { case (qid, qv) =>
+      val qn = normalized(qv.toArray.map(_.toDouble))
       val lut = Array.tabulate(m * kCent) { i =>
         val (mi, ci) = (i / kCent, i % kCent)
         var dot = 0.0; var d = 0
         while (d < dsub) { dot += qn(mi * dsub + d) * cb(mi)(ci)(d); d += 1 }
         dot
       }
-      org.apache.spark.sql.Row(qid, qv.toSeq, lut.toSeq)
+      Row(qid, qv, lut.toSeq)
     }
-    val lutSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("qv",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.types.StructField("lut",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
-    val luts = s.createDataFrame(lutRows.toSeq.asJava, lutSchema)
-    val adc = codes.crossJoin(broadcast(luts))
+    val luts = s.createDataFrame(lutRows.toSeq.asJava, StructType(Seq(
+      StructField("qid", LongType), StructField("qv", ArrayType(FloatType)),
+      StructField("lut", ArrayType(DoubleType)))))
+    codes.crossJoin(broadcast(luts))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("adc", expr(
         s"""aggregate(sequence(0, ${m - 1}), CAST(0.0 AS DOUBLE),
@@ -1122,38 +1098,8 @@ object Similarity {
           .stripMargin))
       .select(col("qid"), col("qv"), col("vec_id"), col("embedding"),
         col("adc"), col("r"))
-    adc
   }
 
-  /** Certified-exact PQ search: ADC shortlist → exact cosine re-rank →
-    * per-query coverage CERTIFICATE → brute-force fallback for queries
-    * the certificate cannot prove.
-    *
-    * The certificate: let t₅ = the 5th-best exact (unrounded) cosine
-    * inside the shortlist, and ub = max over NON-shortlisted rows of
-    * `adc + r` (an upper bound on each excluded vector's true cosine —
-    * Cauchy–Schwarz, [[adcScores]]). If ub < t₅ − 2·10⁻⁶ (two rounding
-    * ulps, so the proof survives the 6-dp output rounding and its
-    * tie-breaks), no excluded vector can reach rank ≤ k, hence the
-    * shortlist's re-ranked top-k IS the exact top-k. Queries that fail
-    * certification are re-run brute-force (the [[queries]] baseline
-    * shape: query batch broadcast, corpus streams). The result therefore
-    * equals the exact baseline on EVERY corpus — the brute-force SQL is
-    * its registered oracle — while corpora with real cluster structure
-    * (small residuals, separated neighbors) certify and skip the
-    * fallback entirely (proven in `PipelineSpec`).
-    *
-    * The short-circuit: whether certification CAN succeed is predictable
-    * driver-side for free — the training sample is already collected, and
-    * its quantization residuals ([[sampleResiduals]]) are the exact `r`
-    * terms the certificate adds to every excluded row's ADC score. When
-    * the sample's p90 residual exceeds [[certSkipResidual]] the bound
-    * cannot beat any realistic top-5 margin, so [[pq]] skips the ADC +
-    * certificate passes entirely and runs the brute-force baseline once
-    * (the output is identical by construction — the gate is a pure
-    * performance decision, logged via [[graft.StructuredLog]]). This is
-    * what bounds the fallback-dominant case on incompressible corpora:
-    * one exact pass, not ADC + certificate + brute force. */
   // m=16 subspaces of 4 dims, 16 centroids each: 16 bytes/vector (16×
   // compression); on the structure-free test corpus (top-5 at cos
   // 0.25-0.51 vs background ~0.2) coarser m=8 drops recall below 0.8
@@ -1165,14 +1111,14 @@ object Similarity {
     * (the structured-corpus certify case has residual exactly 0). */
   private val certSkipResidual = 0.01
 
-  /** (re-rankable shortlist with exact unrounded cosines, per-query
-    * certificate frame) — shared by [[pq]] and the law tests. The ADC
-    * scan executes exactly TWICE here: once to build the shortlist —
-    * materialized by `localCheckpoint` (bounded: nQueries·slf·k rows), so
-    * the exact re-rank and the t5 margin reuse it instead of re-running
-    * the scan — and once for the excluded-rows upper bound (an anti-join
-    * against the checkpointed shortlist keys; inherently a second pass,
-    * since it aggregates over every row NOT shortlisted). */
+  /** (candidate top-5 in brute-force output order, per-query certificate
+    * frame) — shared by [[pq]] and the law tests. The ADC scan executes
+    * exactly TWICE here: once to build the shortlist — materialized by
+    * `localCheckpoint` (bounded: nQueries·slf·k rows), so the exact
+    * re-rank and the t5 margin reuse it instead of re-running the scan —
+    * and once for the excluded-rows upper bound (an anti-join against the
+    * checkpointed shortlist keys; inherently a second pass, since it
+    * aggregates over every row NOT shortlisted). */
   private def pqParts(s: SparkSession, e: DataFrame, cb: Seq[Seq[Seq[Float]]],
       shortlistFactor: Int): (DataFrame, DataFrame) = {
     val adc = adcScores(s, e, cb, pqM, pqKCent)
@@ -1193,44 +1139,80 @@ object Similarity {
       .select(col("qid"),
         (col("nres") === topK &&
           (col("ub").isNull || col("ub") < col("t5") - lit(2e-6))).as("certified"))
-    (exactU, cert)
+    (top5(exactU.select(col("qid"), col("vec_id"), round(col("cos"), 6).as("score"))), cert)
   }
 
   /** The per-query coverage certificate `(qid, certified)` — exposed for
     * the law tests (computed unconditionally; the viability gate lives in
-    * [[pq]] only). */
+    * [[certifiedSearch]] only). */
   private[graft] def pqCertificates(s: SparkSession, dir: String,
       shortlistFactor: Int = 8): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
-    val cb = trainPqCodebooks(loadSample(e).map(normalized), pqM, pqKCent)
-    pqParts(s, e, cb, shortlistFactor)._2
+    pqParts(s, e, pqModelOf(e).codebooks, shortlistFactor)._2
   }
+
+  /** The query batch: the first `nQueries` vectors as (qid, qv). Every
+    * search here ranks the corpus against it. */
+  private def queryBatch(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  /** The query batch on the driver in qid order — bounded (nQueries rows),
+    * like the training sample; IVF's probe sets and PQ's lookup tables
+    * are built from it. */
+  private def queryRows(e: DataFrame): Array[(Long, Seq[Float])] =
+    queryBatch(e).orderBy(col("qid")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
 
   /** Brute-force scored pairs (the exact baseline shape: bounded query
     * batch broadcast, corpus streams), optionally restricted to a bounded
     * set of query ids. */
   private def bruteScores(e: DataFrame, onlyQ: Option[DataFrame]): DataFrame = {
-    val q0 = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val q0 = queryBatch(e)
     val q = onlyQ.fold(q0)(ids => q0.join(broadcast(ids), Seq("qid"), "left_semi"))
     broadcast(q).join(e, col("vec_id") =!= col("qid"))
       .withColumn("score", round(Sketches.cosineSim(col("qv"), col("embedding")), 6))
       .select(col("qid"), col("vec_id"), col("score"))
   }
 
+  /** The `topK` best (qid, vec_id, score) rows per query in the brute-force
+    * output order (rounded score desc, vec_id asc), on
+    * [[graft.plans.TopKPerKey]] bounded heaps. */
+  private def top5(scored: DataFrame): DataFrame =
+    graft.plans.TopK.perKey(scored, Seq("qid"),
+      Seq(("score", true), ("vec_id", false)), topK)
+
   /** Rank stamp over the ≤k survivors per query: sorted collect +
     * position, reusing TopK's hash partitioning — no Window, no extra
-    * wide exchange. Shared by [[ivf]] and [[pq]]. */
+    * wide exchange. The output tail of every ANN search here. A null
+    * score (a zero vector has no cosine) ranks last, as in the
+    * brute-force `score DESC` order; `sort_array` alone would put it
+    * first. */
   private def rankStamp(top: DataFrame): DataFrame =
     top.groupBy(col("qid"))
       .agg(sort_array(collect_list(
-        struct((-col("score")).as("neg"), col("vec_id").as("vec_id"),
-          col("score").as("score")))).as("xs"))
+        struct(col("score").isNull.as("nul"), (-col("score")).as("neg"),
+          col("vec_id").as("vec_id"), col("score").as("score")))).as("xs"))
       .select(col("qid"), posexplode(col("xs")).as(Seq("pos", "x")))
       .select(col("qid"), col("x.vec_id").as("vec_id"), col("x.score").as("score"),
         (col("pos") + 1).cast("long").as("rn"))
       .orderBy(col("qid"), col("rn"))
 
+  /** Certified-exact PQ search through [[certifiedSearch]]: ADC shortlist
+    * → exact cosine re-rank → per-query coverage CERTIFICATE → brute-force
+    * fallback for queries the certificate cannot prove.
+    *
+    * The certificate: let t₅ = the 5th-best exact (unrounded) cosine
+    * inside the shortlist, and ub = max over NON-shortlisted rows of
+    * `adc + r` (an upper bound on each excluded vector's true cosine —
+    * Cauchy–Schwarz, [[adcScores]]). If ub < t₅ − 2·10⁻⁶ (two rounding
+    * ulps, so the proof survives the 6-dp output rounding and its
+    * tie-breaks), no excluded vector can reach rank ≤ k, hence the
+    * shortlist's re-ranked top-k IS the exact top-k. Corpora with real
+    * cluster structure (small residuals, separated neighbors) certify and
+    * skip the fallback entirely (proven in `PipelineSpec`); the viability
+    * gate reads the quantization residuals of the training sample
+    * ([[sampleResiduals]]). */
   private[graft] def pq(s: SparkSession, dir: String,
       shortlistFactor: Int = 8, model: Option[PqModel] = None): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
@@ -1238,110 +1220,83 @@ object Similarity {
     // codebooks + viability signal load from parquet, zero in-query
     // training
     val m = model.getOrElse(pqModelOf(e))
-    val cb = m.codebooks
-    val p90 = m.p90Residual
-    if (p90 > certSkipResidual) {
-      // incompressible corpus: certification cannot succeed (see the
-      // class doc) — skip ADC + certificate, run the exact baseline once
-      graft.StructuredLog.info("pq_cert_skip",
-        "p90_residual" -> f"$p90%.6f", "threshold" -> certSkipResidual,
-        "action" -> "brute_force_all")
-      rankStamp(graft.plans.TopK.perKey(bruteScores(e, None), Seq("qid"),
-        Seq(("score", true), ("vec_id", false)), topK))
-    } else {
-      graft.StructuredLog.info("pq_cert_attempt",
-        "p90_residual" -> f"$p90%.6f", "threshold" -> certSkipResidual)
-      val (exactU, cert0) = pqParts(s, e, cb, shortlistFactor)
-      // ≤ nQueries rows; localCheckpoint so the certificate job (whose
-      // lineage the keep + fallback sides would otherwise both re-run)
-      // computes once
-      val cert = cert0.localCheckpoint()
-      val certQ = cert.filter(col("certified")).select(col("qid"))
-      val uncertQ = cert.filter(!col("certified")).select(col("qid"))
-      val certTop = exactU.join(broadcast(certQ), Seq("qid"), "left_semi")
-        .withColumn("score", round(col("cos"), 6))
-        .select(col("qid"), col("vec_id"), col("score"))
-      val certTop5 = graft.plans.TopK.perKey(certTop, Seq("qid"),
-        Seq(("score", true), ("vec_id", false)), topK)
-      val bruteTop5 = graft.plans.TopK.perKey(bruteScores(e, Some(uncertQ)),
-        Seq("qid"), Seq(("score", true), ("vec_id", false)), topK)
-      rankStamp(certTop5.unionByName(bruteTop5))
-    }
+    certifiedSearch("pq", e, m.p90Residual)(pqParts(s, e, m.codebooks, shortlistFactor))
   }
 
-  private val oracleBase: Map[String, String] = Map(
-    // unrolls the engine's exact three power-iteration steps in SQL over
-    // the same decimal-routed scatter matrix (the quadratic vec_id
-    // self-join is gate-SF-only; the engine builds G in one linear pass)
-    "q_embed_pca" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |x AS (SELECT vec_id, t.i - 1 AS pos, round(v[t.i], 9) AS rv
-        |      FROM e, unnest(range(1, len(v) + 1)) AS t(i)),
-        |m AS (SELECT pos, round(CAST(SUM(CAST(rv AS DECIMAL(28,9))) AS DOUBLE)
-        |              / COUNT(*), 6) AS mu
-        |      FROM x GROUP BY pos),
-        |c AS (SELECT vec_id, pos, rv - mu AS cv FROM x JOIN m USING (pos)),
-        |g AS (SELECT a.pos AS p, b.pos AS q,
-        |        SUM(CAST(round(a.cv * b.cv, 9) AS DECIMAL(28,9))) AS gd
-        |      FROM c a JOIN c b USING (vec_id) GROUP BY 1, 2),
-        |d AS (SELECT COUNT(*) AS dim FROM m),
-        |tr AS (SELECT CAST(SUM(gd) AS DOUBLE) AS trace FROM g WHERE p = q),
-        |v0 AS (SELECT pos, round(1.0 / sqrt(dim), 9) AS vv FROM m, d),
-        |y1 AS (SELECT p AS pos, CAST(SUM(CAST(round(CAST(gd AS DOUBLE) * vv, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE) AS y
-        |       FROM g JOIN v0 ON g.q = v0.pos GROUP BY p),
-        |l1 AS (SELECT round(sqrt(CAST(SUM(CAST(round(y * y, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE)), 9) AS lam FROM y1),
-        |v1 AS (SELECT pos, round(y / lam, 9) AS vv FROM y1, l1),
-        |y2 AS (SELECT p AS pos, CAST(SUM(CAST(round(CAST(gd AS DOUBLE) * vv, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE) AS y
-        |       FROM g JOIN v1 ON g.q = v1.pos GROUP BY p),
-        |l2 AS (SELECT round(sqrt(CAST(SUM(CAST(round(y * y, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE)), 9) AS lam FROM y2),
-        |v2 AS (SELECT pos, round(y / lam, 9) AS vv FROM y2, l2),
-        |y3 AS (SELECT p AS pos, CAST(SUM(CAST(round(CAST(gd AS DOUBLE) * vv, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE) AS y
-        |       FROM g JOIN v2 ON g.q = v2.pos GROUP BY p),
-        |l3 AS (SELECT round(sqrt(CAST(SUM(CAST(round(y * y, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE)), 9) AS lam FROM y3),
-        |v3 AS (SELECT pos, round(y / lam, 9) AS vv FROM y3, l3)
-        |SELECT pos, round(vv, 6) AS loading, round(lam / trace, 6) AS var_share
-        |FROM v3, l3, tr ORDER BY pos""".stripMargin,
-    // same CTE chain as q_embed_pca, then the per-vector projection
-    // against the UNROUNDED 9-dp protocol vector (the engine's literal)
-    "q_embed_project" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings),
-        |x AS (SELECT vec_id, t.i - 1 AS pos, round(v[t.i], 9) AS rv
-        |      FROM e, unnest(range(1, len(v) + 1)) AS t(i)),
-        |m AS (SELECT pos, round(CAST(SUM(CAST(rv AS DECIMAL(28,9))) AS DOUBLE)
-        |              / COUNT(*), 6) AS mu
-        |      FROM x GROUP BY pos),
-        |c AS (SELECT vec_id, pos, rv - mu AS cv FROM x JOIN m USING (pos)),
-        |g AS (SELECT a.pos AS p, b.pos AS q,
-        |        SUM(CAST(round(a.cv * b.cv, 9) AS DECIMAL(28,9))) AS gd
-        |      FROM c a JOIN c b USING (vec_id) GROUP BY 1, 2),
-        |d AS (SELECT COUNT(*) AS dim FROM m),
-        |v0 AS (SELECT pos, round(1.0 / sqrt(dim), 9) AS vv FROM m, d),
-        |y1 AS (SELECT p AS pos, CAST(SUM(CAST(round(CAST(gd AS DOUBLE) * vv, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE) AS y
-        |       FROM g JOIN v0 ON g.q = v0.pos GROUP BY p),
-        |l1 AS (SELECT round(sqrt(CAST(SUM(CAST(round(y * y, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE)), 9) AS lam FROM y1),
-        |v1 AS (SELECT pos, round(y / lam, 9) AS vv FROM y1, l1),
-        |y2 AS (SELECT p AS pos, CAST(SUM(CAST(round(CAST(gd AS DOUBLE) * vv, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE) AS y
-        |       FROM g JOIN v1 ON g.q = v1.pos GROUP BY p),
-        |l2 AS (SELECT round(sqrt(CAST(SUM(CAST(round(y * y, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE)), 9) AS lam FROM y2),
-        |v2 AS (SELECT pos, round(y / lam, 9) AS vv FROM y2, l2),
-        |y3 AS (SELECT p AS pos, CAST(SUM(CAST(round(CAST(gd AS DOUBLE) * vv, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE) AS y
-        |       FROM g JOIN v2 ON g.q = v2.pos GROUP BY p),
-        |l3 AS (SELECT round(sqrt(CAST(SUM(CAST(round(y * y, 12)
-        |              AS DECIMAL(38,12))) AS DOUBLE)), 9) AS lam FROM y3),
-        |v3 AS (SELECT pos, round(y / lam, 9) AS vv FROM y3, l3),
+  /** The exact brute-force top-5 of the query batch: the oracle of every
+    * ANN search here. */
+  private val bruteTop5Sql: String =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
+      |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
+      |scored AS (
+      |  SELECT qid, vec_id,
+      |    round(list_inner_product(qv, v)
+      |      / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(v, v))), 6) AS score
+      |  FROM q CROSS JOIN e WHERE vec_id != qid)
+      |SELECT qid, vec_id, score, rn FROM (
+      |  SELECT qid, vec_id, score,
+      |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
+      |  FROM scored)
+      |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+
+  /** The PCA oracles' opening CTEs: the 9-dp coordinates, per-dimension
+    * means, centered values, the decimal-routed scatter matrix `g` (the
+    * quadratic vec_id self-join is gate-SF-only; the engine builds G in
+    * one linear pass) and the dimensionality `d`. */
+  private val pcaScatterSql: String =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |           FROM embeddings),
+      |x AS (SELECT vec_id, t.i - 1 AS pos, round(v[t.i], 9) AS rv
+      |      FROM e, unnest(range(1, len(v) + 1)) AS t(i)),
+      |m AS (SELECT pos, round(CAST(SUM(CAST(rv AS DECIMAL(28,9))) AS DOUBLE)
+      |              / COUNT(*), 6) AS mu
+      |      FROM x GROUP BY pos),
+      |c AS (SELECT vec_id, pos, rv - mu AS cv FROM x JOIN m USING (pos)),
+      |g AS (SELECT a.pos AS p, b.pos AS q,
+      |        SUM(CAST(round(a.cv * b.cv, 9) AS DECIMAL(28,9))) AS gd
+      |      FROM c a JOIN c b USING (vec_id) GROUP BY 1, 2),
+      |d AS (SELECT COUNT(*) AS dim FROM m),
+      |""".stripMargin
+
+  /** The engine's three power-iteration steps unrolled as CTEs v0 … v3
+    * (`v3` is the 9-dp protocol component, `l3` its eigenvalue). */
+  private val pcaPowerSql: String =
+    "v0 AS (SELECT pos, round(1.0 / sqrt(dim), 9) AS vv FROM m, d),\n" +
+      (1 to 3).map { i =>
+        s"""y$i AS (SELECT p AS pos, CAST(SUM(CAST(round(CAST(gd AS DOUBLE) * vv, 12)
+           |              AS DECIMAL(38,12))) AS DOUBLE) AS y
+           |       FROM g JOIN v${i - 1} ON g.q = v${i - 1}.pos GROUP BY p),
+           |l$i AS (SELECT round(sqrt(CAST(SUM(CAST(round(y * y, 12)
+           |              AS DECIMAL(38,12))) AS DOUBLE)), 9) AS lam FROM y$i),
+           |v$i AS (SELECT pos, round(y / lam, 9) AS vv FROM y$i, l$i)""".stripMargin
+      }.mkString(",\n")
+
+  /** The pair-set and positive CTEs of both contrastive oracles, over
+    * their `e`: the exact cosine-≥0.45 pair set `p` (the LSH path's ground
+    * truth) and the min-(partner, cos) positive `pos` per anchor. */
+  private val contrastivePosSql: String =
+    """p AS (SELECT a.vec_id AS pa, b.vec_id AS pb,
+      |        round(list_inner_product(a.v, b.v)
+      |          / (sqrt(list_inner_product(a.v, a.v))
+      |             * sqrt(list_inner_product(b.v, b.v))), 6) AS cos
+      |      FROM e a JOIN e b ON a.vec_id < b.vec_id
+      |      WHERE round(list_inner_product(a.v, b.v)
+      |          / (sqrt(list_inner_product(a.v, a.v))
+      |             * sqrt(list_inner_product(b.v, b.v))), 6) >= 0.45),
+      |sym AS (SELECT pa AS anchor_id, pb AS partner, cos FROM p
+      |        UNION ALL SELECT pb, pa, cos FROM p),
+      |pos AS (SELECT anchor_id, partner AS pos_id, cos AS pos_cos FROM (
+      |          SELECT *, row_number() OVER (PARTITION BY anchor_id
+      |                      ORDER BY partner, cos) AS rn FROM sym)
+      |        WHERE rn = 1),
+      |""".stripMargin
+
+  /** q_embed_project's oracle (and its `_ingest` twin's): the q_embed_pca
+    * chain, then the per-vector projection against the UNROUNDED 9-dp
+    * protocol vector (the engine's literal). */
+  private val embedProjectSql: String =
+    pcaScatterSql + pcaPowerSql +
+      """,
         |pr AS (SELECT c.vec_id,
         |         CAST(SUM(CAST(round(cv * vv, 12) AS DECIMAL(38,12)))
         |           AS DOUBLE) AS dot,
@@ -1351,80 +1306,70 @@ object Similarity {
         |SELECT pr.vec_id, e2.label, round(dot, 6) AS score,
         |  round(sqrt(greatest(0.0, ss - dot * dot)), 6) AS residual
         |FROM pr JOIN (SELECT vec_id, label FROM embeddings) e2 USING (vec_id)
-        |ORDER BY pr.vec_id""".stripMargin,
+        |ORDER BY pr.vec_id""".stripMargin
+
+  val oracle: Map[String, String] = Map(
+    // unrolls the engine's exact three power-iteration steps in SQL over
+    // the same decimal-routed scatter matrix
+    "q_embed_pca" ->
+      (pcaScatterSql +
+        "tr AS (SELECT CAST(SUM(gd) AS DOUBLE) AS trace FROM g WHERE p = q),\n" +
+        pcaPowerSql +
+        """
+          |SELECT pos, round(vv, 6) AS loading, round(lam / trace, 6) AS var_share
+          |FROM v3, l3, tr ORDER BY pos""".stripMargin),
+    "q_embed_project" -> embedProjectSql,
+    // the _ingest twins produce identical output to their in-plan forms
+    // (same deterministic training sample ⇒ same persisted model ⇒ same
+    // result), so each registers its twin's oracle
+    "q_embed_project_ingest" -> embedProjectSql,
     // shares the engine's exact formula end-to-end: exact cosine-≥0.45
     // pair set (the LSH path's ground truth), min-(partner,cos) positive,
     // the 48271-LCG negative with the three-candidate collision stepping
     "q_contrastive_triples" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-        |           FROM embeddings),
-        |n AS (SELECT count(*) AS n_total FROM e),
-        |p AS (SELECT a.vec_id AS pa, b.vec_id AS pb,
-        |        round(list_inner_product(a.v, b.v)
-        |          / (sqrt(list_inner_product(a.v, a.v))
-        |             * sqrt(list_inner_product(b.v, b.v))), 6) AS cos
-        |      FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |      WHERE round(list_inner_product(a.v, b.v)
-        |          / (sqrt(list_inner_product(a.v, a.v))
-        |             * sqrt(list_inner_product(b.v, b.v))), 6) >= 0.45),
-        |sym AS (SELECT pa AS anchor_id, pb AS partner, cos FROM p
-        |        UNION ALL SELECT pb, pa, cos FROM p),
-        |pos AS (SELECT anchor_id, partner AS pos_id, cos AS pos_cos FROM (
-        |          SELECT *, row_number() OVER (PARTITION BY anchor_id
-        |                      ORDER BY partner, cos) AS rn FROM sym)
-        |        WHERE rn = 1),
-        |cand AS (SELECT pos.*,
-        |           (anchor_id * 48271 + 7) % n_total AS c0,
-        |           ((anchor_id * 48271 + 7) % n_total + 1) % n_total AS c1,
-        |           ((anchor_id * 48271 + 7) % n_total + 2) % n_total AS c2
-        |         FROM pos CROSS JOIN n),
-        |sel AS (SELECT anchor_id, pos_id, pos_cos,
-        |          CASE WHEN c0 <> anchor_id AND c0 <> pos_id THEN c0
-        |               WHEN c1 <> anchor_id AND c1 <> pos_id THEN c1
-        |               ELSE c2 END AS neg_id
-        |        FROM cand)
-        |SELECT s.anchor_id, ea.label AS anchor_label, s.pos_id, s.pos_cos,
-        |       s.neg_id, en.label AS neg_label,
-        |       round(list_inner_product(ea.v, en.v)
-        |         / (sqrt(list_inner_product(ea.v, ea.v))
-        |            * sqrt(list_inner_product(en.v, en.v))), 6) AS neg_cos
-        |FROM sel s
-        |JOIN e ea ON ea.vec_id = s.anchor_id
-        |JOIN e en ON en.vec_id = s.neg_id
-        |ORDER BY anchor_id""".stripMargin,
+      ("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
+         |           FROM embeddings),
+         |n AS (SELECT count(*) AS n_total FROM e),
+         |""".stripMargin + contrastivePosSql +
+        """cand AS (SELECT pos.*,
+          |           (anchor_id * 48271 + 7) % n_total AS c0,
+          |           ((anchor_id * 48271 + 7) % n_total + 1) % n_total AS c1,
+          |           ((anchor_id * 48271 + 7) % n_total + 2) % n_total AS c2
+          |         FROM pos CROSS JOIN n),
+          |sel AS (SELECT anchor_id, pos_id, pos_cos,
+          |          CASE WHEN c0 <> anchor_id AND c0 <> pos_id THEN c0
+          |               WHEN c1 <> anchor_id AND c1 <> pos_id THEN c1
+          |               ELSE c2 END AS neg_id
+          |        FROM cand)
+          |SELECT s.anchor_id, ea.label AS anchor_label, s.pos_id, s.pos_cos,
+          |       s.neg_id, en.label AS neg_label,
+          |       round(list_inner_product(ea.v, en.v)
+          |         / (sqrt(list_inner_product(ea.v, ea.v))
+          |            * sqrt(list_inner_product(en.v, en.v))), 6) AS neg_cos
+          |FROM sel s
+          |JOIN e ea ON ea.vec_id = s.anchor_id
+          |JOIN e en ON en.vec_id = s.neg_id
+          |ORDER BY anchor_id""".stripMargin),
     // hard negative = argmax rounded cosine among sub-threshold vectors
     // (ties → lowest vec_id); NULL cosines (zero vectors) fall out of the
     // `< 0.45` predicate in both engines
     "q_contrastive_hard" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-        |           FROM embeddings),
-        |p AS (SELECT a.vec_id AS pa, b.vec_id AS pb,
-        |        round(list_inner_product(a.v, b.v)
-        |          / (sqrt(list_inner_product(a.v, a.v))
-        |             * sqrt(list_inner_product(b.v, b.v))), 6) AS cos
-        |      FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |      WHERE round(list_inner_product(a.v, b.v)
-        |          / (sqrt(list_inner_product(a.v, a.v))
-        |             * sqrt(list_inner_product(b.v, b.v))), 6) >= 0.45),
-        |sym AS (SELECT pa AS anchor_id, pb AS partner, cos FROM p
-        |        UNION ALL SELECT pb, pa, cos FROM p),
-        |pos AS (SELECT anchor_id, partner AS pos_id, cos AS pos_cos FROM (
-        |          SELECT *, row_number() OVER (PARTITION BY anchor_id
-        |                      ORDER BY partner, cos) AS rn FROM sym)
-        |        WHERE rn = 1),
-        |sc AS (SELECT pos.anchor_id, pos.pos_id, pos.pos_cos, b.vec_id,
-        |         round(list_inner_product(a.v, b.v)
-        |           / (sqrt(list_inner_product(a.v, a.v))
-        |              * sqrt(list_inner_product(b.v, b.v))), 6) AS score
-        |       FROM pos
-        |       JOIN e a ON a.vec_id = pos.anchor_id
-        |       JOIN e b ON b.vec_id <> pos.anchor_id),
-        |sel AS (SELECT *, row_number() OVER (PARTITION BY anchor_id
-        |                    ORDER BY score DESC, vec_id) AS rn
-        |        FROM sc WHERE score < 0.45)
-        |SELECT anchor_id, pos_id, pos_cos, vec_id AS hard_neg_id,
-        |       score AS hard_neg_cos, round(pos_cos - score, 6) AS margin
-        |FROM sel WHERE rn = 1 ORDER BY anchor_id""".stripMargin,
+      ("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
+         |           FROM embeddings),
+         |""".stripMargin + contrastivePosSql +
+        """sc AS (SELECT pos.anchor_id, pos.pos_id, pos.pos_cos, b.vec_id,
+          |         round(list_inner_product(a.v, b.v)
+          |           / (sqrt(list_inner_product(a.v, a.v))
+          |              * sqrt(list_inner_product(b.v, b.v))), 6) AS score
+          |       FROM pos
+          |       JOIN e a ON a.vec_id = pos.anchor_id
+          |       JOIN e b ON b.vec_id <> pos.anchor_id),
+          |sel AS (SELECT *, row_number() OVER (PARTITION BY anchor_id
+          |                    ORDER BY score DESC, vec_id) AS rn
+          |        FROM sc WHERE score < 0.45)
+          |SELECT anchor_id, pos_id, pos_cos, vec_id AS hard_neg_id,
+          |       score AS hard_neg_cos, round(pos_cos - score, 6) AS margin
+          |FROM sel WHERE rn = 1 ORDER BY anchor_id""".stripMargin),
     "q_embed_centroids" ->
       """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings)
@@ -1501,77 +1446,22 @@ object Similarity {
         |    row_number() OVER (PARTITION BY vec_id ORDER BY dd, cid) AS rn
         |  FROM d1) WHERE rn = 1
         |ORDER BY vec_id""".stripMargin,
-    "q_similarity_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT qid, vec_id,
-        |    round(list_inner_product(qv, v)
-        |      / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(v, v))), 6) AS score
-        |  FROM q CROSS JOIN e WHERE vec_id != qid)
-        |SELECT qid, vec_id, score, rn FROM (
-        |  SELECT qid, vec_id, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
-        |  FROM scored)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin,
+    "q_similarity_topk" -> bruteTop5Sql,
     // certified-exact: per query, either the Cauchy–Schwarz certificate
     // proves the ADC shortlist covers the true top-5 (then the exact
     // re-rank equals brute force), or the query re-runs brute-force —
     // so the output equals the baseline on every corpus, by construction
-    "q_similarity_pq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT qid, vec_id,
-        |    round(list_inner_product(qv, v)
-        |      / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(v, v))), 6) AS score
-        |  FROM q CROSS JOIN e WHERE vec_id != qid)
-        |SELECT qid, vec_id, score, rn FROM (
-        |  SELECT qid, vec_id, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
-        |  FROM scored)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin,
+    "q_similarity_pq" -> bruteTop5Sql,
+    "q_similarity_pq_ingest" -> bruteTop5Sql,
     // certified-exact: per query, either the cell-geometry certificate
     // proves the probed cells cover the true top-5 (then the candidate
     // re-rank equals brute force), or the query re-runs brute-force —
     // so the output equals the baseline on every corpus, by construction
-    "q_similarity_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT qid, vec_id,
-        |    round(list_inner_product(qv, v)
-        |      / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(v, v))), 6) AS score
-        |  FROM q CROSS JOIN e WHERE vec_id != qid)
-        |SELECT qid, vec_id, score, rn FROM (
-        |  SELECT qid, vec_id, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
-        |  FROM scored)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin,
+    "q_similarity_ivf" -> bruteTop5Sql,
+    "q_similarity_ivf_ingest" -> bruteTop5Sql,
     // LSH candidates cover every true top-5 slot (miss ≤ 2.4e-9, fixed
     // seeded planes → deterministic) and the re-rank is exact cosine, so
     // the output equals the brute-force baseline's
-    "q_similarity_lsh" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT qid, vec_id,
-        |    round(list_inner_product(qv, v)
-        |      / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(v, v))), 6) AS score
-        |  FROM q CROSS JOIN e WHERE vec_id != qid)
-        |SELECT qid, vec_id, score, rn FROM (
-        |  SELECT qid, vec_id, score,
-        |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
-        |  FROM scored)
-        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin,
+    "q_similarity_lsh" -> bruteTop5Sql,
   )
-
-  /** The `_ingest` twins produce identical output to their in-plan forms
-    * (same deterministic training sample ⇒ same persisted model ⇒ same
-    * certified-exact result), so each registers its twin's oracle SQL
-    * verbatim. */
-  val oracle: Map[String, String] = oracleBase ++ Map(
-    "q_similarity_ivf_ingest" -> oracleBase("q_similarity_ivf"),
-    "q_similarity_pq_ingest" -> oracleBase("q_similarity_pq"),
-    "q_embed_project_ingest" -> oracleBase("q_embed_project"))
 }

@@ -280,6 +280,16 @@ object Stats {
     }),
   )
 
+  /** q_heavy_hitters' oracle, shared by its streaming twin. */
+  private[graft] val heavyHittersSql: String =
+    """WITH tf AS (SELECT unnest(string_split(lower(text), ' ')) AS token
+      |           FROM documents),
+      |tot AS (SELECT COUNT(*) AS t FROM tf)
+      |SELECT token, COUNT(*) AS n, (SELECT t FROM tot) AS total
+      |FROM tf GROUP BY token
+      |HAVING COUNT(*) * 30 > (SELECT t FROM tot)
+      |ORDER BY n DESC, token""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q_stats_agg" ->
       """WITH m AS (
@@ -309,14 +319,7 @@ object Stats {
         |  round(quantile_cont(l_quantity, 0.9), 6) AS p90_qty,
         |  round(quantile_cont(l_quantity, 0.75) - quantile_cont(l_quantity, 0.25), 6) AS iqr_qty
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_heavy_hitters" ->
-      """WITH tf AS (SELECT unnest(string_split(lower(text), ' ')) AS token
-        |           FROM documents),
-        |tot AS (SELECT COUNT(*) AS t FROM tf)
-        |SELECT token, COUNT(*) AS n, (SELECT t FROM tot) AS total
-        |FROM tf GROUP BY token
-        |HAVING COUNT(*) * 30 > (SELECT t FROM tot)
-        |ORDER BY n DESC, token""".stripMargin,
+    "q_heavy_hitters" -> heavyHittersSql,
     "q_winsorize" ->
       """WITH f AS (SELECT event_type,
         |    round(quantile_cont(value, 0.05), 6) AS p05,

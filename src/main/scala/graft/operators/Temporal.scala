@@ -269,24 +269,27 @@ object Temporal {
     }),
   )
 
+  /** q_session_window's oracle, shared by its streaming twin. */
+  private[graft] val sessionWindowSql: String =
+    """WITH x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+      |m AS (SELECT user_id, ts,
+      |        CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+      |             OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
+      |                >= INTERVAL 30 MINUTE
+      |             THEN 1 ELSE 0 END AS new_s
+      |      FROM x),
+      |s AS (SELECT user_id, ts,
+      |        SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+      |                         ROWS UNBOUNDED PRECEDING) AS sid
+      |      FROM m)
+      |SELECT user_id, MIN(ts) AS session_start,
+      |       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+      |       COUNT(*) AS n_events
+      |FROM s GROUP BY user_id, sid
+      |ORDER BY user_id, session_start""".stripMargin
+
   val oracle: Map[String, String] = Map(
-    "q_session_window" ->
-      """WITH x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |m AS (SELECT user_id, ts,
-        |        CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |             OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                >= INTERVAL 30 MINUTE
-        |             THEN 1 ELSE 0 END AS new_s
-        |      FROM x),
-        |s AS (SELECT user_id, ts,
-        |        SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                         ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM m)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-        |       COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+    "q_session_window" -> sessionWindowSql,
     "q_asof_join" ->
       """WITH s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS signup_ts
         |           FROM events WHERE event_type = 'signup'),

@@ -644,6 +644,20 @@ object TextAnalysis {
         col("containment"), col("kept"))
   }
 
+  /** q_decontaminate's oracle, shared by the bloom form and the
+    * streaming twin. */
+  private[graft] val decontaminateSql: String =
+    """WITH t AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
+      |g AS (SELECT doc_id,
+      |        unnest(list_distinct([array_to_string(w[i:i+7], ' ')
+      |                              for i in range(1, len(w)-6)])) AS gram
+      |      FROM t WHERE len(w) >= 8),
+      |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id < 50)
+      |SELECT doc_id, CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_shared_grams
+      |FROM g JOIN ev USING (gram)
+      |WHERE doc_id >= 50
+      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
   val oracle: Map[String, String] = Map(
     // doc-frequency counts DISTINCT TEXTS (not doc_ids): replication-
     // invariant by construction — an exact copy can't make its own
@@ -732,30 +746,10 @@ object TextAnalysis {
          |       THEN round(CAST(tp AS DOUBLE) / (tp + fn), 6) END AS recall
          |FROM g ORDER BY threshold""".stripMargin
     },
-    "q_decontaminate" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-        |g AS (SELECT doc_id,
-        |        unnest(list_distinct([array_to_string(w[i:i+7], ' ')
-        |                              for i in range(1, len(w)-6)])) AS gram
-        |      FROM t WHERE len(w) >= 8),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id < 50)
-        |SELECT doc_id, CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_shared_grams
-        |FROM g JOIN ev USING (gram)
-        |WHERE doc_id >= 50
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    "q_decontaminate" -> decontaminateSql,
     // identical answer to q_decontaminate: the bloom is a pure prefilter,
     // false positives die in the exact join
-    "q_decontaminate_bloom" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-        |g AS (SELECT doc_id,
-        |        unnest(list_distinct([array_to_string(w[i:i+7], ' ')
-        |                              for i in range(1, len(w)-6)])) AS gram
-        |      FROM t WHERE len(w) >= 8),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id < 50)
-        |SELECT doc_id, CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_shared_grams
-        |FROM g JOIN ev USING (gram)
-        |WHERE doc_id >= 50
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    "q_decontaminate_bloom" -> decontaminateSql,
     "q_ngram_containment" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
         |g AS (SELECT doc_id,

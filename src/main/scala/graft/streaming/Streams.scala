@@ -1351,40 +1351,14 @@ object Streams {
       """SELECT c.c_nationkey AS nation_id, COUNT(*) AS n_events
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_stream_session" ->
-      """WITH x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |m AS (SELECT user_id, ts,
-        |        CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |             OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                >= INTERVAL 30 MINUTE
-        |             THEN 1 ELSE 0 END AS new_s
-        |      FROM x),
-        |s AS (SELECT user_id, ts,
-        |        SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                         ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM m)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-        |       COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+    "q_stream_session" -> graft.operators.Temporal.sessionWindowSql,
     "q_stream_doc_clean" ->
       """SELECT doc_id, lang,
         |  regexp_replace(trim(lower(text)), ' +', ' ', 'g') AS norm_text
         |FROM documents
         |WHERE n_chars >= 100 AND n_chars <= 2000
         |ORDER BY doc_id""".stripMargin,
-    "q_stream_decontaminate" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-        |g AS (SELECT doc_id,
-        |        unnest(list_distinct([array_to_string(w[i:i+7], ' ')
-        |                              for i in range(1, len(w)-6)])) AS gram
-        |      FROM t WHERE len(w) >= 8),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id < 50)
-        |SELECT doc_id, CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_shared_grams
-        |FROM g JOIN ev USING (gram)
-        |WHERE doc_id >= 50
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    "q_stream_decontaminate" -> graft.operators.TextAnalysis.decontaminateSql,
     // the rejected slice of the batch-admission oracle (admission is
     // absence from the rejection table)
     "q_stream_neardup_rejects" ->
@@ -1414,30 +1388,8 @@ object Streams {
     // the q_mix_dsir model chain, scoring restricted to the arrival
     // slice, no selection (the stream emits every arrival's score)
     "q_stream_mix_dsir" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-        |           FROM documents),
-        |g AS (SELECT doc_id,
-        |        substr(md5(unnest(list_concat(w,
-        |          [w[i] || ' ' || w[i+1] for i in range(1, len(w))]))), 1, 3)
-        |          AS bucket
-        |      FROM t),
-        |c AS (SELECT bucket,
-        |        SUM(CASE WHEN doc_id < 50 THEN 1 ELSE 0 END) AS nt,
-        |        SUM(CASE WHEN doc_id >= 50 THEN 1 ELSE 0 END) AS ns
-        |      FROM g GROUP BY bucket),
-        |tot AS (SELECT SUM(nt) AS tt, SUM(ns) AS ts FROM c),
-        |lr AS (SELECT bucket,
-        |         CAST(round(ln((nt + 1) / (CAST(tt AS DOUBLE) + 4096.0)), 9)
-        |              AS DECIMAL(18,9))
-        |       - CAST(round(ln((ns + 1) / (CAST(ts AS DOUBLE) + 4096.0)), 9)
-        |              AS DECIMAL(18,9)) AS lr
-        |       FROM c CROSS JOIN tot)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |  round(CAST(SUM(lr) AS DOUBLE), 6) AS dsir_logweight
-        |FROM g JOIN lr USING (bucket)
-        |WHERE doc_id >= 50 AND doc_id % 10 = 0
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+      graft.operators.Sampling.dsirOracleSql(
+        "doc_id >= 50 AND doc_id % 10 = 0", "doc_id"),
     "q_stream_daily_counts" ->
       """SELECT CAST(date_trunc('day', ts) AS DATE) AS event_day,
         |       COUNT(*) AS n_events
@@ -1463,12 +1415,7 @@ object Streams {
     // perceptual raster classes are injective in (w, h, base) — see
     // codecDedupStream scaladoc — so the generator's closed-form
     // equivalence classes apply, as in the batch q_multimodal_dedup
-    "q_stream_multimodal_dedup" ->
-      """SELECT CAST(min(doc_id) AS BIGINT) AS keeper_doc_id,
-        |       CAST(count(*) AS BIGINT) AS n_copies
-        |FROM documents
-        |GROUP BY doc_id % 6, doc_id % 4, doc_id % 32
-        |ORDER BY keeper_doc_id""".stripMargin,
+    "q_stream_multimodal_dedup" -> graft.operators.Multimodal.imageClassesSql,
     // the silence-structure classes coincide exactly with doc_id mod 35
     // (n_frames = 4 + doc_id%7; the bit phase doc_id%5 is recoverable from
     // the first set mask bit or, when n_frames=4 and no bit is set,
@@ -1493,14 +1440,7 @@ object Streams {
     // identical to the batch q_heavy_hitters oracle: the MG sketch pass
     // is order/batching-invariant (superset guarantee) and the verify
     // pass is exact, so the streaming output is the same exact >n/30 set
-    "q_stream_heavy_hitters" ->
-      """WITH tf AS (SELECT unnest(string_split(lower(text), ' ')) AS token
-        |           FROM documents),
-        |tot AS (SELECT COUNT(*) AS t FROM tf)
-        |SELECT token, COUNT(*) AS n, (SELECT t FROM tot) AS total
-        |FROM tf GROUP BY token
-        |HAVING COUNT(*) * 30 > (SELECT t FROM tot)
-        |ORDER BY n DESC, token""".stripMargin,
+    "q_stream_heavy_hitters" -> graft.operators.Stats.heavyHittersSql,
     // arrival-order cap with an id-ordered feed ⟺ rank-by-id ≤ k; the
     // synthesized domain's closed form is the q_domain_caps one
     "q_stream_domain_caps" ->

@@ -70,23 +70,12 @@ class DedupAutoSpec extends SparkSpec {
     val e = gappedFixture(copies = 4)
     val cfg = Dedup.autoBandConfig(e)
     // pre-verify candidate volume = bucketPairs output size per config
-    // (the verify is fused into repPairs, so rebuild the band stage alone)
+    // (the verify is fused into repPairs, so run the shipped band stage alone)
     def candCount(r: Int, b: Int): Long = {
       val clusters = e.groupBy(col("embedding"))
         .agg(min(col("vec_id")).as("rep"))
-      val nSigs = math.max(4, (r * b + 63) / 64)
-      val sigCols = (0 until nSigs).map(i =>
-        graft.functions.Sketches.rhSignature(col("embedding"), 64, 64, i * 64).as(s"s$i"))
-      val reps = clusters.select(col("rep").as("vec_id") +: sigCols: _*)
-      val banded = reps
-        .select(col("vec_id").as("doc_id"),
-          array((0 until nSigs).map(i => col(s"s$i")): _*).as("sigs"),
-          explode(sequence(lit(0), lit(b - 1))).as("band_idx"))
-        .withColumn("band_val",
-          expr(s"""shiftrightunsigned(
-                  |  element_at(sigs, cast((band_idx * $r) div 64 as int) + 1),
-                  |  (band_idx * $r) % 64) & ${(1L << r) - 1}""".stripMargin))
-        .select(col("doc_id"), col("band_idx"), col("band_val"))
+      val banded = Dedup.bandedEmbeddings(clusters, "rep", r, b)
+        .withColumnRenamed("rep", "doc_id")
       Dedup.bucketPairs(banded, Seq("band_idx", "band_val")).count()
     }
     val candDefault = candCount(4, 64)
@@ -153,16 +142,9 @@ class DedupAutoSpec extends SparkSpec {
     assert(cfg.missBound <= 1e-6, s"certificate violated: $cfg")
     assert(cfg.dupMin >= 0.93 && cfg.bgMax <= 0.45, s"gap estimate drift: $cfg")
     // raw candidate volume = banded bucket pairs before verification
-    def candCount(r: Int, b: Int): Long = {
-      val banded = reps
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"),
-          posexplode(graft.functions.Sketches.bandhashes(
-            graft.functions.Sketches.shingleMinhashes(col("w"), 3, r * b), r))
-            .as(Seq("band_idx", "band_hash")))
-      Dedup.bucketPairs(banded, Seq("band_idx", "band_hash")).count()
-    }
+    def candCount(r: Int, b: Int): Long =
+      Dedup.bucketPairs(Dedup.minhashBands(reps, "text", Seq("doc_id"), r, b),
+        Seq("band_idx", "band_hash")).count()
     val candDefault = candCount(4, 16)
     val candAuto = candCount(cfg.r, cfg.b)
     info(s"candidates: default(4,16)=$candDefault auto(${cfg.r},${cfg.b})=$candAuto")

@@ -254,6 +254,24 @@ class PipelineSpec extends SparkSpec {
       s"missed ${(bf -- lsh).size} slots, spurious ${(lsh -- bf).size}")
   }
 
+  test("ANN searches rank zero-vector (null) scores last, as brute force does") {
+    // 3 non-zero vectors among 21 zero vectors: every query's top-5 mixes
+    // real cosines with the null scores of zero vectors, which the
+    // brute-force `score DESC` order ranks last
+    val vecs = (0 until 24).map { v =>
+      (v.toLong, Seq.tabulate(64)(j =>
+        if (v < 3) math.sin(1.3 * v + 0.7 * j + 0.2).toFloat else 0f))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_annnull").toString
+    vecs.toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+    val bf = Queries.all("q_similarity_topk")(spark, dir).collect().toSeq
+    assert(bf.exists(_.isNullAt(2)) && bf.exists(!_.isNullAt(2)),
+      "fixture must mix null and real scores")
+    for (name <- Seq("q_similarity_lsh", "q_similarity_ivf", "q_similarity_pq"))
+      assert(Queries.all(name)(spark, dir).collect().toSeq == bf,
+        s"$name: ranks differ from brute force")
+  }
+
   test("certified IVF equals brute force exactly on the test corpus") {
     // same contract as PQ: per query, either the cell-geometry
     // certificate proves probe coverage or the query falls back to brute

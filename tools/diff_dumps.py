@@ -7,10 +7,15 @@ For every query directory in either dump, checks that the two frames have
 the same schema (column names and types, in order) and the same row
 multiset (DuckDB `EXCEPT ALL` in both directions, so duplicated rows
 count). Prints one line per query that is missing from one side or
-differs, then a summary line. Exit code 0 = every frame equal, 1 = any
-query missing or different, 2 = bad arguments.
+differs, then a summary line. Then compares the two dumps'
+`oracle_sql.json` key by key: one `[SQL  ]` line per key whose text
+differs or that only one side has (a missing file counts as no keys),
+then a summary line. Exit code 0 = every frame and every oracle text
+equal, 1 = any query or oracle text missing or different, 2 = bad
+arguments.
 """
 import glob
+import json
 import os
 import sys
 
@@ -46,6 +51,31 @@ def diff(con, a: list, b: list):
     return None
 
 
+def oracle_sql(dump: str) -> dict:
+    """query name -> oracle SQL text from a dump's oracle_sql.json ({} if none)."""
+    path = os.path.join(dump, "oracle_sql.json")
+    if not os.path.isfile(path):
+        return {}
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def sql_diffs(a: dict, b: dict) -> int:
+    """Print a [SQL  ] line per key whose text differs or is on one side only."""
+    bad = 0
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            print(f"[SQL  ] {name}: only in {'A' if name in a else 'B'}")
+        elif a[name] != b[name]:
+            print(f"[SQL  ] {name}: oracle text differs")
+        else:
+            continue
+        bad += 1
+    n = len(a.keys() | b.keys())
+    print(f"{n - bad} of {n} oracle texts equal, {bad} missing or different")
+    return bad
+
+
 def main() -> int:
     if len(sys.argv) != 3 or not all(os.path.isdir(d) for d in sys.argv[1:]):
         print(__doc__.strip(), file=sys.stderr)
@@ -67,6 +97,7 @@ def main() -> int:
             bad += 1
     n = len(fa.keys() | fb.keys())
     print(f"{n - bad} of {n} frames equal, {bad} missing or different")
+    bad += sql_diffs(oracle_sql(sys.argv[1]), oracle_sql(sys.argv[2]))
     return 1 if bad else 0
 
 
